@@ -5494,9 +5494,8 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     peeling (components.k_core_delta) — a degree table decremented only
     by each round's dead frontier's edges, so total join work is
     |E| + rounds·|V| instead of the simultaneous peel's rounds·|E|
-    (parity with k_core pinned on this exact graph,
-    tests/test_round3_ops.py; measured ~10% faster at sf0.1 and the
-    asymptotically better shape at corpus scale). Output is each core
+    (parity with a plain-Python simultaneous peel pinned on this exact
+    graph, tests/test_round3_ops.py). Output is each core
     member with its in-core degree. The oracle unrolls 12 simultaneous
     peel rounds — peeling is monotone and both formulations reach the
     identical fixpoint."""

@@ -10,13 +10,14 @@ ships, as a join + aggregate per round).
 Scale design: per round the work is ONE |E| join + one |V| aggregate — no
 transitive closure is ever materialized, so hub nodes cause no row
 explosion. (Each round does pay its own exchanges: a checkpointed label
-relation exposes no partitioning for Catalyst to reuse — see the k_core
-pin note.) With ``rounds=None`` the loop probes convergence instead of
-trusting a diameter guess: each round's labels are checkpointed anyway, so
-the changed-label count is one cheap job over in-memory blocks, and the
-loop exits the first round nothing changes — exact components on any graph,
-bounded by ``max_rounds`` as a runaway guard. Fixed ``rounds`` remains for
-oracle replay (the DuckDB gate unrolls the same number of CTE rounds).
+relation exposes no partitioning for Catalyst to reuse — see the
+k_core_delta pin note.) With ``rounds=None`` the loop probes convergence
+instead of trusting a diameter guess: each round's labels are checkpointed
+anyway, so the changed-label count is one cheap job over in-memory blocks,
+and the loop exits the first round nothing changes — exact components on
+any graph, bounded by ``max_rounds`` as a runaway guard. Fixed ``rounds``
+remains for oracle replay (the DuckDB gate unrolls the same number of CTE
+rounds).
 """
 
 from __future__ import annotations
@@ -227,9 +228,10 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     higher-degree endpoint caps every out-degree by O(√m) (more
     precisely by the graph's arboricity-class bound), so hub nodes
     stop dominating — the previous id-ordered orientation left a hub's
-    full degree on the out side and cost Σ deg(v)² (the sf1-class
-    scaling leg measured that blow-up at 559s full compute;
-    SCALING_R10.md holds the after numbers). The triangle SET is
+    full degree on the out side and cost Σ deg(v)² (an sf1-class
+    scaling leg once put that blow-up at 559s full compute — a figure
+    not reproduced since; SCALING_R10.md holds the measured sf1-class
+    numbers of this orientation). The triangle SET is
     orientation-independent, so the result — and the oracle — are
     unchanged; the extra work is one degree aggregate + two joins to
     attach degrees before orienting, below the pinned edge relation.
@@ -286,98 +288,6 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     return nodes.join(per_node, "node_id", "left").select(
         "node_id",
         F.coalesce("n_triangles", F.lit(0)).cast("long").alias("n_triangles"),
-    )
-
-
-def star_components(
-    edges: DataFrame,
-    *,
-    max_rounds: int = 50,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14): converges in O(log^2 n) rounds REGARDLESS of diameter, where
-    min-label propagation needs diameter rounds — a path graph of length
-    10^6 takes ~20 star rounds vs 10^6 propagation rounds.
-
-    - large-star: every node u links each strictly-larger neighbor to the
-      minimum of its closed neighborhood m(u);
-    - small-star: every node u re-links its ≤-neighbors (its parents in
-      the forming forest) to m over that subset.
-
-    Both are ONE groupBy + generate per round over the current edge set;
-    the edge set only shrinks toward the final star forest (one hub = the
-    component's min node). Output: (node_id, component), identical to
-    :func:`label_propagation_components`'s converged labels.
-    """
-    # symmetrize, drop self-loops, orient as unordered pairs
-    fwd = edges.select(
-        F.col("parent_id").alias("u"), F.col("child_id").alias("v")
-    )
-    sym = fwd.unionByName(
-        fwd.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    e = (
-        sym.filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # node universe comes from the PRE-self-loop-filter edge set: a node
-    # whose only edges are self-loops still gets a (node, node) output row,
-    # matching label_propagation_components' converged labels
-    all_nodes = sym.select(F.col("u").alias("node_id")).distinct().localCheckpoint(
-        eager=True
-    )
-
-    def _star(cur: DataFrame, large: bool) -> DataFrame:
-        # group the symmetric neighbor lists once per round
-        neigh = cur.groupBy("u").agg(
-            F.min("v").alias("mn"), F.collect_set("v").alias("nbrs")
-        )
-        m = F.least("u", "mn")
-        # large-star re-links the strictly-larger neighbors; small-star
-        # re-links the ≤-neighbors AND u itself (dropping u here loses the
-        # u—m edge and disconnects the forming star)
-        side = (
-            F.expr("filter(nbrs, x -> x > u)")
-            if large
-            else F.expr("array_union(filter(nbrs, x -> x <= u), array(u))")
-        )
-        out = (
-            neigh.select(m.alias("m"), F.explode(side).alias("v"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # keep symmetry for the next grouping pass
-        return (
-            out.unionByName(
-                out.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-
-    for _ in range(max_rounds):
-        nxt = _star(_star(e, large=True), large=False)
-        # fixed point: identical symmetric edge sets
-        if (
-            nxt.count() == e.count()
-            and nxt.exceptAll(e).limit(1).count() == 0
-        ):
-            e = nxt
-            break
-        e = nxt
-
-    # converged: each component is a star around its min node; a node's
-    # component is its min neighbor (or itself if it IS the hub / isolated)
-    comp = (
-        e.groupBy("u")
-        .agg(F.min("v").alias("mn"))
-        .select(F.col("u").alias("node_id"), F.least("u", "mn").alias("component"))
-    )
-    return all_nodes.join(comp, "node_id", "left").select(
-        "node_id", F.coalesce("component", "node_id").alias("component")
     )
 
 
@@ -630,8 +540,8 @@ def bfs_depth(
     minimum (BFS invariant: first visit is shallowest).
 
     Join strategy is chosen from the loop's OWN runtime statistics: the
-    settled union is counted every round anyway (the convergence probe),
-    so the exact frontier and settled sizes are known before each join is
+    round's new rows are counted anyway (the convergence probe), so the
+    exact frontier and settled sizes are known before each join is
     planned. While they fit a broadcast (``broadcast_rows``, ~tens of MB
     of node ids), the frontier side of the expansion join and the settled
     side of the anti-join are broadcast — the edge relation is never
@@ -646,8 +556,8 @@ def bfs_depth(
     )
     from pyspark.sql import Observation
 
-    # the settled-count probe rides each checkpoint job via observe()
-    # (one job per round instead of checkpoint + count; see
+    # the seed-count and new-row probes ride each checkpoint job via
+    # observe() (one job per round instead of checkpoint + count; see
     # label_propagation_components for the retry-safety argument)
     obs = Observation()
     settled = (
@@ -678,17 +588,24 @@ def bfs_depth(
             .join(anti, "node_id", "left_anti")
             .withColumn("depth", F.lit(d).cast("long"))
         )
+        # the probe counts THIS round's new depth-d rows inside the one
+        # pinned job, so the exit test never compares counts from two
+        # different jobs: an over-count only delays exit by one round
+        # over an empty frontier (the identity) or pushes a guard toward
+        # the shuffle branch; an under-count cannot happen
         obs = Observation()
         merged = (
             settled.unionByName(nxt)
-            .observe(obs, F.count(F.lit(1)).alias("n"))
+            .observe(
+                obs, F.sum((F.col("depth") == d).cast("long")).alias("n_new")
+            )
             .localCheckpoint(eager=True)
         )
-        n_new = obs.get["n"] or 0
-        if n_new == n_settled:
+        n_new = obs.get["n_new"] or 0
+        if n_new == 0:
             break
-        frontier_n = n_new - n_settled
-        n_settled = n_new
+        frontier_n = n_new
+        n_settled += n_new
         settled = merged
     return settled
 
@@ -718,131 +635,6 @@ def _symmetrized(edges: DataFrame) -> DataFrame:
     )
 
 
-def k_core(
-    edges: DataFrame,
-    k: int,
-    *,
-    max_rounds: int = 100,
-    assume_distinct: bool = False,
-    broadcast_max_alive: int = 2_000_000,
-) -> DataFrame:
-    """The k-core of the undirected simple graph: iteratively peel every
-    node whose current degree is below ``k`` (all at once per round) until
-    the surviving subgraph is stable. Output: (node_id, degree) for core
-    members, with degree counted INSIDE the core — the densest-region
-    extractor used for community seeds and hub detection (the GraphX
-    ``connectedComponents``-family analytic Spark itself never shipped).
-
-    The per-round STATE is the alive-node set, not the edge set: the
-    symmetrized edge relation is checkpointed ONCE and stays static; each
-    round recomputes alive-restricted degrees with one semi-join + one
-    aggregate over it and shrinks the (much smaller) alive set. Rewriting
-    and re-pinning the full edge set every round — the naive formulation —
-    costs an |E| materialization per round and was measured 2× slower at
-    sf0.1. The loop convergence-probes (a round that drops nobody ends
-    it), bounded by ``max_rounds``; the SQL oracle unrolls a fixed round
-    count past measured convergence, which matches because peeling is
-    monotone (once stable, further rounds are identity).
-
-    ``assume_distinct``: the input rows are already distinct DIRECTED
-    edges and no reverse duplicate exists (e.g. a typed hierarchy where
-    parent and child id spaces are disjoint) — skips the symmetrized
-    3-way distinct, which is otherwise the single most expensive shuffle
-    of the whole job (measured ~half the sf0.1 wall time).
-
-    ``broadcast_max_alive``: the alive set shrinks monotonically but
-    starts near |V|; for small ``k`` it may never get small. Each round
-    already counts the alive set exactly (the convergence probe), so the
-    semi-joins broadcast only while ``n_alive <= broadcast_max_alive``
-    (~2M longs ≈ tens of MB — safely under executor/driver broadcast
-    limits) and otherwise fall back to a shuffle semi-join that reuses
-    ``e``'s hash partitioning on ``u``. At 100 TB the early
-    nearly-full-V rounds shuffle; the long tail of shrinking rounds
-    broadcasts.
-    """
-    sym = _symmetrized(edges)
-    if not assume_distinct:
-        sym = sym.distinct()
-    # compact into defaultParallelism balanced blocks before pinning.
-    # What this buys (interleaved A/B at sf0.1): every round scans fewer,
-    # even-sized in-memory blocks than the raw input layout (~15% total).
-    # What it does NOT buy: Catalyst never reuses the hash partitioning —
-    # a groupBy/join over repartition(key).localCheckpoint still plans an
-    # Exchange (checkpointed blocks expose no partitioning; verified).
-    # Keyed, not round-robin: repartition(n) without a key adds a
-    # determinism sort to every map task, measured slower than the
-    # hash-keyed write.
-    parts = edges.sparkSession.sparkContext.defaultParallelism
-    e = sym.repartition(parts, "u").localCheckpoint(eager=True)
-    # round 0 runs on the full node set, so the plain degree aggregate IS
-    # the alive-restricted degree — no semi-joins, and the node set never
-    # needs its own distinct pass
-    alive = (
-        e.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-        .filter(F.col("deg") >= k)
-        .select(F.col("u").alias("node_id"))
-        .localCheckpoint(eager=True)
-    )
-    n_alive = alive.count()
-
-    def _alive_restrict(edge_rel: DataFrame, alive_rel: DataFrame,
-                        n: int) -> DataFrame:
-        # a dead endpoint cannot revive (its row is dropped by the
-        # semi-join); broadcast only when the alive set is provably small
-        # (n is the exact count from the convergence probe), else let the
-        # planner run a shuffle semi-join
-        small = n <= broadcast_max_alive
-        v_side = alive_rel.select(F.col("node_id").alias("v"))
-        u_side = alive_rel.select(F.col("node_id").alias("u"))
-        if small:
-            v_side, u_side = F.broadcast(v_side), F.broadcast(u_side)
-        return (
-            edge_rel.join(v_side, "v", "left_semi")
-            .join(u_side, "u", "left_semi")
-        )
-
-    converged = False
-    for _ in range(max_rounds - 1):
-        # degree counting only edges whose far endpoint is still alive
-        deg = (
-            _alive_restrict(e, alive, n_alive)
-            .groupBy("u")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        nxt = (
-            deg.filter(F.col("deg") >= k)
-            .select(F.col("u").alias("node_id"))
-            .localCheckpoint(eager=True)
-        )
-        m = nxt.count()
-        if m == n_alive:
-            converged = True
-            break
-        alive, n_alive = nxt, m
-    if not converged and n_alive > 0:
-        # an unconverged peel would silently return a superset of the
-        # core (some returned degrees below k) — fail loudly instead
-        raise RuntimeError(
-            f"k_core: peeling did not stabilize within max_rounds="
-            f"{max_rounds}; raise max_rounds (each round peels at least "
-            "one node, so |V| rounds always suffice)"
-        )
-    return (
-        _alive_restrict(e, alive, n_alive)
-        .groupBy("u")
-        .agg(F.count(F.lit(1)).cast("long").alias("degree"))
-        .withColumnRenamed("u", "node_id")
-    )
-
-
-# rewrite-vs-tail pivot for k_core_delta: a rewrite round moves
-# O(n_alive) rows through one shuffle+sort+pin, a tail round touches
-# ≤ Σ edeg(frontier) candidate rows through broadcast joins (both pay
-# the flat edge scan) — switch to tail rounds once the candidate
-# fringe is this factor smaller than the alive table
-_KCORE_TAIL_FACTOR = 8
-
-
 def k_core_delta(
     edges: DataFrame,
     k: int,
@@ -851,75 +643,58 @@ def k_core_delta(
     assume_distinct: bool = False,
     broadcast_max_dead: int = 2_000_000,
 ) -> DataFrame:
-    """Frontier-delta formulation of :func:`k_core` (parity-tested
-    equivalent): instead of re-scanning the full alive-restricted edge
-    set every round, maintain a degree table and propagate only the
-    DELTAS — each round joins the edge set against the nodes that died
-    LAST round and decrements their surviving neighbors' degrees.
+    """The k-core of the undirected simple graph: iteratively peel every
+    node whose current degree is below ``k`` (all at once per round) until
+    the surviving subgraph is stable. Output: (node_id, degree) for core
+    members, with degree counted INSIDE the core — the densest-region
+    extractor used for community seeds and hub detection (the GraphX
+    ``connectedComponents``-family analytic Spark itself never shipped).
 
-    Cost shape per round: |dead_frontier ⋈ E| (frontier-bounded, like
-    BFS) plus an O(|V_alive|) degree-table rewrite — vs the simultaneous
-    peel's O(|E_alive|) rescan. On graphs where peeling runs many rounds
-    and each round kills few nodes (the long-tail regime at corpus
-    scale, where |E| >> |V|), the delta form does asymptotically less
-    work; the gated query (`graph_kcore`) runs THIS formulation, with
-    :func:`k_core` kept as the simpler reference both are parity-pinned
-    against (the same coexistence as label-prop vs
-    :func:`star_components`).
+    Frontier-delta formulation: instead of re-scanning the full
+    alive-restricted edge set every round, maintain a degree table and
+    propagate only the DELTAS — each round joins the static edge set
+    against the nodes that died LAST round and decrements their surviving
+    neighbors' degrees. Cost per round: |dead_frontier ⋈ E|
+    (frontier-bounded, like BFS) plus one O(|V_alive|) degree-table
+    rewrite — vs a simultaneous peel's O(|E_alive|) rescan. The loop
+    convergence-probes (a round that kills nobody ends it), bounded by
+    ``max_rounds``; the SQL oracle unrolls a fixed round count past
+    measured convergence, which matches because peeling is monotone
+    (once stable, further rounds are identity). Parity against a
+    plain-Python peel is pinned in tests/test_round3_ops.py.
 
     A node dies exactly once (new deaths are computed among the alive
     set only), so each edge to a dead endpoint is decremented exactly
     once and the final degree equals the degree within the surviving
-    core — identical output columns (node_id, degree).
+    core.
 
-    ``broadcast_max_dead``: the convergence probe counts each round's
-    dead frontier exactly, so the frontier join broadcasts the dead
-    side only while ``n_dead <= broadcast_max_dead`` (~2M ids ≈ tens of
-    MB) and otherwise lets the planner shuffle — the same guarded
-    pattern as :func:`k_core`'s ``broadcast_max_alive``. Without the
-    hint the checkpointed edge blocks expose no partitioning, so the
-    round-0 frontier join (the one big frontier: every initially-
-    under-k node) re-shuffles the FULL edge relation; broadcasting the
-    frontier keeps every round's scan exchange-free (interleaved A/B at
-    sf0.1: ~8.6s → ~5.4s end to end, identical output).
+    ``assume_distinct``: the input rows are already distinct DIRECTED
+    edges and no reverse duplicate exists (e.g. a typed hierarchy where
+    parent and child id spaces are disjoint) — skips the symmetrized
+    distinct, otherwise the single most expensive shuffle of the job.
 
-    Round-10 restructure (measured round anatomy at sf0.1: the
-    O(|V_alive|) shuffle+sort+re-pin of the degree table cost
-    0.65–1.0 s/round even for a 40-node frontier, while the frontier
-    work itself was milliseconds): the loop now runs two round shapes,
-    chosen per round from its OWN runtime statistics. While the dying
-    fringe is of the same order as the table (``Σ edeg(frontier) ·
-    _KCORE_TAIL_FACTOR > n_alive``, e.g. the first peel of a
-    leaf-heavy graph where half of V dies at once), a REWRITE round
-    re-pins the alive degree table — the old shape, optimal when most
-    rows change. Once the fringe is an order smaller (the long
-    shrinking-frontier tail, the common peel profile), a TAIL round
-    pins ONE candidate table — ``(u, deg, edeg, dec)`` for the ≤ Σ
-    edeg(frontier) nodes adjacent to the frontier — built from
-    broadcast joins over pinned blocks only: current degree =
-    ``base.deg − Σ tail decs``, and decrements only lower it, so a
-    node dead once stays dead with no dead-set bookkeeping. ``edeg``
-    (each node's degree in the STATIC symmetrized edge relation) rides
-    along through rewrites because ``Σ edeg(frontier)`` — returned by
-    each round's single probe aggregate, together with the frontier
-    count — is an EXACT upper bound on the next round's candidate
-    count: every broadcast is gated on it BEFORE the round is planned
-    (the same runtime-stats-guard pattern as :func:`bfs_depth`), and
-    past ``broadcast_max_dead`` the loop simply consolidates with a
-    rewrite round. Candidates already dead before a tail round are
-    dropped from its pinned table: their accumulated decrements put
-    them permanently under k at their death round, so the final ≥ k
-    filter never resurrects them and no later round consults their
-    cum. At 100 TB the tail — however long — pays O(|frontier
-    neighborhood|) per round plus the flat edge scan, never
-    rounds × |V|."""
+    ``broadcast_max_dead``: each round's probe counts the next dead
+    frontier, so the frontier join broadcasts the dead side only while
+    ``n_front <= broadcast_max_dead`` (~2M ids ≈ tens of MB) and
+    otherwise lets the planner shuffle. Without the hint the checkpointed
+    edge blocks expose no partitioning, so the round-0 frontier join (the
+    one big frontier: every initially-under-k node) re-shuffles the FULL
+    edge relation; broadcasting the frontier keeps every round's scan
+    exchange-free (interleaved A/B at sf0.1: ~8.6s → ~5.4s end to end,
+    identical output). SCALING_R10.md holds the sf0.1 and sf1-class
+    measurements of this loop."""
     sym = _symmetrized(edges)
     if not assume_distinct:
         sym = sym.distinct()
-    # balanced-block pin, keyed on v — same physical story as k_core's
-    # pin (balanced blocks help every round's scan; Catalyst cannot
-    # reuse the partitioning itself; keyed beats round-robin's
-    # determinism sort — all three A/B-measured at sf0.1)
+    # Pin note: compact into defaultParallelism balanced blocks, keyed on
+    # v. What this buys (interleaved A/B at sf0.1): every round scans
+    # fewer, even-sized in-memory blocks than the raw input layout (~15%
+    # total). What it does NOT buy: Catalyst never reuses the hash
+    # partitioning — a groupBy/join over repartition(key).localCheckpoint
+    # still plans an Exchange (checkpointed blocks expose no
+    # partitioning; verified). Keyed, not round-robin: repartition(n)
+    # without a key adds a determinism sort to every map task, measured
+    # slower than the hash-keyed write.
     parts = edges.sparkSession.sparkContext.defaultParallelism
 
     def _pin_e() -> DataFrame:
@@ -927,33 +702,24 @@ def k_core_delta(
 
     from pyspark.sql import Observation
 
-    dead0 = F.col("deg") < k
+    dead, alive = F.col("deg") < k, F.col("deg") >= k
 
-    def _probe_aggs():
-        # frontier count, Σ edeg over it (the broadcast-safety bound for
-        # the next candidate set), and the alive count (the rewrite-vs-
-        # tail pivot). Rides the pin job via observe() — no separate
-        # probe scan; retry over-counts only push the guards toward the
-        # conservative (shuffle / rewrite) branch
-        return (
-            F.sum(dead0.cast("long")).alias("n_front"),
-            F.sum(F.when(dead0, F.col("edeg"))).alias("bound"),
-            F.sum((~dead0).cast("long")).alias("n_alive"),
+    def _pin_deg(src: DataFrame, obs: Observation) -> DataFrame:
+        # the frontier count (the broadcast guard and the exit test)
+        # rides the pin job via observe() — no separate probe scan. A
+        # retry over-count only pushes the guard toward the shuffle
+        # branch or adds one round over an empty frontier, the identity
+        return src.observe(
+            obs, F.sum(dead.cast("long")).alias("n_front")
+        ).localCheckpoint(eager=True)
+
+    def _pin_base(src: DataFrame, obs: Observation) -> DataFrame:
+        return _pin_deg(
+            src.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("deg")),
+            obs,
         )
 
-    def _pin_base(src: DataFrame) -> tuple[DataFrame, "Observation"]:
-        # base carries (deg = current degree, edeg = degree in the
-        # static edge relation e). Initially equal; rewrites update deg.
-        obs = Observation()
-        pinned = (
-            src.groupBy("u")
-            .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-            .withColumn("edeg", F.col("deg"))
-            .observe(obs, *_probe_aggs())
-            .localCheckpoint(eager=True)
-        )
-        return pinned, obs
-
+    obs = Observation()
     if assume_distinct:
         # the two setup pins are independent jobs over the same input —
         # overlap them (guide §2.6) instead of serializing two full
@@ -963,174 +729,47 @@ def k_core_delta(
 
         with ThreadPoolExecutor(max_workers=2) as pool:
             f_e = pool.submit(_pin_e)
-            f_base = pool.submit(_pin_base, sym)
-            e, (base, obs0) = f_e.result(), f_base.result()
+            f_base = pool.submit(_pin_base, sym, obs)
+            e, base = f_e.result(), f_base.result()
     else:
         e = _pin_e()
-        base, obs0 = _pin_base(e)
-    st = obs0.get
-    n_front = st["n_front"] or 0
-    bound = st["bound"] or 0
-    n_alive = st["n_alive"] or 0
-    # frontier = nodes that died exactly this round (round 0: initial
-    # degree below k) — always a lazy filter over pinned blocks
-    frontier = base.filter(dead0).select("u")
-    # pinned (u, dec) relations of the tail rounds since the last
-    # rewrite; base.deg minus their sum is the current degree
-    decs: list[DataFrame] = []
-    dec_rows = 0
-    rounds_left = max_rounds
-
-    def _cum(rels: list[DataFrame], rows: int):
-        cur = rels[0]
-        for d in rels[1:]:
-            cur = cur.unionByName(d)
-        cum = cur.groupBy("u").agg(F.sum("dec").cast("long").alias("cum"))
-        # total decrement rows were exactly counted, so the full-table
-        # join can stream the pinned base blocks against a broadcast —
-        # no |V| shuffle
-        return F.broadcast(cum) if rows <= broadcast_max_dead else cum
-
-    def _degrees():
-        if not decs:
-            return base
-        return base.join(_cum(decs, dec_rows), "u", "left").select(
-            "u",
-            (F.col("deg") - F.coalesce("cum", F.lit(0))).alias("deg"),
-            "edeg",
+        base = _pin_base(e, obs)
+    n_front = obs.get["n_front"] or 0
+    for _ in range(max_rounds):
+        if n_front == 0:
+            break
+        # decrements: surviving neighbors of the nodes that died last
+        # round (round 0: initial degree below k), a lazy filter over the
+        # pinned degree table
+        front_v = base.filter(dead).select(F.col("u").alias("v"))
+        if n_front <= broadcast_max_dead:
+            front_v = F.broadcast(front_v)
+        dec = (
+            e.join(front_v, "v")
+            .groupBy("u")
+            .agg(F.count(F.lit(1)).cast("long").alias("dec"))
         )
-
-    while n_front > 0 and rounds_left > 0:
-        rounds_left -= 1
-        if bound <= broadcast_max_dead and bound * _KCORE_TAIL_FACTOR <= n_alive:
-            # TAIL round: the candidate table (nodes adjacent to the
-            # frontier, ≤ bound rows by the probe's exact Σ edeg) is
-            # built with broadcast joins only and pinned in ONE job —
-            # the decrement kernel is ONE reused broadcast (ReuseExchange
-            # dedupes the second reference), so the edge relation is
-            # scanned once and nothing |V|-sized is shuffled or re-pinned
-            dec = F.broadcast(
-                e.join(
-                    F.broadcast(frontier.select(F.col("u").alias("v"))),
-                    "v",
-                )
-                .groupBy("u")
-                .agg(F.count(F.lit(1)).cast("long").alias("dec"))
-            )
-            cand = base.join(dec, "u")
-            if decs:
-                prior = decs[0]
-                for d in decs[1:]:
-                    prior = prior.unionByName(d)
-                # restrict the prior-decrement sum to this round's
-                # candidates through the SAME broadcast (so the
-                # aggregate is candidate-sized), and let the left join
-                # ride the pin job's exchanges — both sides are
-                # candidate-sized, and a broadcast build here would be
-                # one more driver-side job per round for no byte saving
-                prev_c = (
-                    prior.select("u", F.col("dec").alias("pdec"))
-                    .join(dec, "u")
-                    .groupBy("u")
-                    .agg(F.sum("pdec").cast("long").alias("cum"))
-                )
-                cand = cand.join(prev_c, "u", "left")
-            else:
-                cand = cand.withColumn("cum", F.lit(None).cast("long"))
-            # a candidate dies now iff this round's decrements push it
-            # under k (pre ≥ k is already guaranteed by the row filter);
-            # the probe rides the pin job via observe()
-            died = F.col("pre") - F.col("dec") < k
-            robs = Observation()
-            roundtbl = (
-                cand.select(
-                    "u",
-                    "deg",
-                    "edeg",
-                    "dec",
-                    (F.col("deg") - F.coalesce("cum", F.lit(0))).alias(
-                        "pre"
-                    ),
-                )
-                # candidates already dead before this round carry no
-                # information (see docstring) — drop them so every
-                # later prior-scan and the final cum join stay
-                # alive-candidate-sized
-                .filter(F.col("pre") >= k)
-                .observe(
-                    robs,
-                    F.count(F.lit(1)).alias("m"),
-                    F.sum(died.cast("long")).alias("n_new"),
-                    F.sum(F.when(died, F.col("edeg"))).alias("bound"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            st = robs.get
-            m, n_new, bound = st["m"] or 0, st["n_new"] or 0, st["bound"] or 0
-            n_alive -= n_new
-            n_front = n_new
-            frontier = roundtbl.filter(died).select("u")
-            decs.append(roundtbl.select("u", "dec"))
-            dec_rows += m
-            if len(decs) > 16:
-                # compact: one pinned (u, Σdec) relation keeps the
-                # per-round union (and its plan) bounded on long peels
-                prior = decs[0]
-                for d in decs[1:]:
-                    prior = prior.unionByName(d)
-                cobs = Observation()
-                compacted = (
-                    prior.groupBy("u")
-                    .agg(F.sum("dec").cast("long").alias("dec"))
-                    .observe(cobs, F.count(F.lit(1)).alias("n"))
-                    .localCheckpoint(eager=True)
-                )
-                dec_rows = cobs.get["n"] or 0
-                decs = [compacted]
-        else:
-            # REWRITE round: most of the table is changing (or the
-            # candidate set may not fit a broadcast) — consolidate any
-            # accumulated decs and re-pin the alive degree table with
-            # one O(|V_alive|) shuffle round, the optimal shape when
-            # the fringe is of the table's order
-            front_v = frontier.select(F.col("u").alias("v"))
-            if n_front <= broadcast_max_dead:
-                front_v = F.broadcast(front_v)
-            dec = (
-                e.join(front_v, "v")
-                .groupBy("u")
-                .agg(F.count(F.lit(1)).cast("long").alias("dec"))
-            )
-            alive = _degrees().filter(F.col("deg") >= k)
-            robs = Observation()
-            base = (
-                alive.join(dec, "u", "left")
-                .select(
-                    "u",
-                    (F.col("deg") - F.coalesce(F.col("dec"), F.lit(0)))
-                    .alias("deg"),
-                    "edeg",
-                )
-                .observe(robs, *_probe_aggs())
-                .localCheckpoint(eager=True)
-            )
-            decs, dec_rows = [], 0
-            st = robs.get
-            n_front = st["n_front"] or 0
-            bound = st["bound"] or 0
-            n_alive = st["n_alive"] or 0
-            frontier = base.filter(dead0).select("u")
+        obs = Observation()
+        base = _pin_deg(
+            base.filter(alive)
+            .join(dec, "u", "left")
+            .select(
+                "u",
+                (F.col("deg") - F.coalesce(F.col("dec"), F.lit(0)))
+                .alias("deg"),
+            ),
+            obs,
+        )
+        n_front = obs.get["n_front"] or 0
     if n_front > 0:
         # a pending dead frontier means surviving degrees were never
         # decremented for those deaths — returning would be silently
-        # wrong AND diverge from k_core; fail loudly (same contract)
+        # wrong; fail loudly
         raise RuntimeError(
             f"k_core_delta: peeling did not stabilize within max_rounds="
             f"{max_rounds}; raise max_rounds (each round peels at least "
             "one node, so |V| rounds always suffice)"
         )
-    return (
-        _degrees()
-        .filter(F.col("deg") >= k)
-        .select(F.col("u").alias("node_id"), F.col("deg").alias("degree"))
+    return base.filter(alive).select(
+        F.col("u").alias("node_id"), F.col("deg").alias("degree")
     )

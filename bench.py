@@ -341,14 +341,17 @@ def main() -> None:
     # depends on a truncated artifact (BENCH_LOCAL.json is committed each
     # round; see ROTATION.md round-4 plan)
     try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "BENCH_LOCAL.json"),
-            "w",
-        ) as fh:
+        with open(bench_local_path(), "w") as fh:
             fh.write(payload + "\n")
     except OSError:
         pass
+
+
+def bench_local_path() -> str:
+    """The BENCH_LOCAL.json side file main() writes: next to this script."""
+    return os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"
+    )
 
 
 if __name__ == "__main__":

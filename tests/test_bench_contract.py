@@ -51,7 +51,7 @@ def _run_main(monkeypatch, tmp_path, sf_dir="/root/testdata/sf0.1"):
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
     # keep the BENCH_LOCAL.json side write away from the repo
     monkeypatch.setattr(
-        bench.os.path, "dirname", lambda p: str(tmp_path), raising=True
+        bench, "bench_local_path", lambda: str(tmp_path / "BENCH_LOCAL.json")
     )
     buf = io.StringIO()
     with redirect_stdout(buf):

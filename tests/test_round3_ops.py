@@ -63,6 +63,42 @@ def test_bfs_depth_min_hop_and_early_exit(spark):
     assert out == {1: 0, 3: 0, 2: 1, 5: 1, 4: 1, 6: 2}
 
 
+def test_bfs_depth_exit_survives_probe_overcount(spark, monkeypatch):
+    # observe() metrics may over-count under task retries; the exit test
+    # must not turn an over-count into an early stop. Skew the FIRST
+    # round probe (the second Observation made) by +1: on the chain
+    # 0->1->...->5 an exit test that compares counts across jobs stops at
+    # depth 1, the per-round new-row probe still reaches depth 5.
+    import pyspark.sql
+
+    from assemblagedb_spark.operators.components import bfs_depth
+
+    real = pyspark.sql.Observation
+    made = []
+
+    class _OverCounting(real):
+        def __init__(self, *a, **kw):
+            super().__init__(*a, **kw)
+            made.append(self)
+
+        @property
+        def get(self):
+            vals = super().get
+            if len(made) > 1 and self is made[1]:
+                return {k: (v or 0) + 1 for k, v in vals.items()}
+            return vals
+
+    monkeypatch.setattr(pyspark.sql, "Observation", _OverCounting)
+    e = spark.createDataFrame(
+        [(i, i + 1) for i in range(5)], "parent_id long, child_id long"
+    )
+    seeds = spark.createDataFrame([(0,)], "node_id long")
+    out = {r["node_id"]: r["depth"]
+           for r in bfs_depth(e, seeds, max_depth=10).collect()}
+    assert len(made) >= 2
+    assert out == {i: i for i in range(6)}
+
+
 def test_ngram_containment_detects_subdocument(spark):
     from assemblagedb_spark.operators.dedup import ngram_containment_pairs
 
@@ -208,8 +244,25 @@ def test_hll_rollup_merge_equals_direct(spark):
         hll_rollup(df, "user", [["typ"], ["typ", "day"]], m=32)
 
 
+def _py_k_core(rows, k):
+    """Reference peel over a collected (parent_id, child_id) edge list:
+    drop every node under degree k at once until stable. Returns sorted
+    (node_id, in-core degree) pairs of the undirected simple graph."""
+    adj: dict = {}
+    for a, b in rows:
+        if a != b:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+    alive = set(adj)
+    while True:
+        keep = {u for u in alive if len(adj[u] & alive) >= k}
+        if keep == alive:
+            return sorted((u, len(adj[u] & alive)) for u in alive)
+        alive = keep
+
+
 def test_k_core_peels_to_stable_core(spark):
-    from assemblagedb_spark.operators.components import k_core
+    from assemblagedb_spark.operators.components import k_core_delta
 
     # triangle 1-2-3 (the 2-core) + a tail 3-4-5-6 that peels away one
     # node per round (exercises multi-round convergence), + isolated pair
@@ -217,57 +270,33 @@ def test_k_core_peels_to_stable_core(spark):
         [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (10, 11)],
         "parent_id long, child_id long",
     )
-    out = {r["node_id"]: r["degree"] for r in k_core(e, k=2).collect()}
+    out = {r["node_id"]: r["degree"] for r in k_core_delta(e, k=2).collect()}
     assert out == {1: 2, 2: 2, 3: 2}
     # k=1 keeps everything with at least one neighbor
-    k1 = {r["node_id"] for r in k_core(e, k=1).collect()}
+    k1 = {r["node_id"] for r in k_core_delta(e, k=1).collect()}
     assert k1 == {1, 2, 3, 4, 5, 6, 10, 11}
     # k high enough empties the graph
-    assert k_core(e, k=3).count() == 0
-
-
-def test_k_core_shuffle_semijoin_fallback_parity(spark):
-    # broadcast_max_alive=0 forces the over-threshold branch (shuffle
-    # semi-joins instead of broadcasting the alive set — the path a 100 TB
-    # small-k run takes, ADVICE r3): identical core, and no broadcast of
-    # the alive relation in the final plan
-    from assemblagedb_spark.operators.components import k_core
-    from assemblagedb_spark.plans.explain import formatted_plan
-
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (10, 11),
-         (6, 4), (11, 12), (12, 10)],
-        "parent_id long, child_id long",
-    )
-    for k in (1, 2, 3):
-        bc = sorted(map(tuple, k_core(e, k=k).collect()))
-        sh_df = k_core(e, k=k, broadcast_max_alive=0)
-        assert bc == sorted(map(tuple, sh_df.collect()))
-    plan = formatted_plan(k_core(e, k=2, broadcast_max_alive=0))
-    assert "BroadcastHashJoin" not in plan
+    assert k_core_delta(e, k=3).count() == 0
 
 
 def test_k_core_delta_parity(spark, sf_dir):
-    # the frontier-delta formulation must equal the simultaneous peel on
-    # every (graph, k): the hand-built multi-round fixture, k sweep, AND
-    # the real harness graph the gate runs on
+    # the frontier-delta formulation must equal a plain simultaneous peel
+    # on every (graph, k): the hand-built multi-round fixture, k sweep,
+    # AND the real harness graph the gate runs on
     from assemblagedb_spark.harness import _shared_graph_edges
-    from assemblagedb_spark.operators.components import k_core, k_core_delta
+    from assemblagedb_spark.operators.components import k_core_delta
 
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (10, 11),
-         (6, 4), (11, 12), (12, 10)],
-        "parent_id long, child_id long",
-    )
+    rows = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (10, 11),
+            (6, 4), (11, 12), (12, 10)]
+    e = spark.createDataFrame(rows, "parent_id long, child_id long")
     for k in (1, 2, 3):
-        a = sorted(map(tuple, k_core(e, k=k).collect()))
         b = sorted(map(tuple, k_core_delta(e, k=k).collect()))
-        assert a == b, f"delta parity broken at k={k}"
+        assert _py_k_core(rows, k) == b, f"delta parity broken at k={k}"
 
     g = _shared_graph_edges(spark, sf_dir)
-    a = sorted(map(tuple, k_core(g, k=2, assume_distinct=True).collect()))
+    a = _py_k_core([(r["parent_id"], r["child_id"]) for r in g.collect()], 2)
     b = sorted(map(tuple, k_core_delta(g, k=2, assume_distinct=True).collect()))
-    assert a == b
+    assert a and a == b
 
     # seeded random graphs across density regimes — long peel cascades,
     # isolated nodes, and multi-round partial deaths all occur here
@@ -278,37 +307,29 @@ def test_k_core_delta_parity(spark, sf_dir):
         rows = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
         re_ = spark.createDataFrame(rows, "parent_id long, child_id long")
         for k in (2, 3):
-            a = sorted(map(tuple, k_core(re_, k=k).collect()))
             b = sorted(map(tuple, k_core_delta(re_, k=k).collect()))
-            assert a == b, f"seed={seed} k={k}"
+            assert _py_k_core(rows, k) == b, f"seed={seed} k={k}"
 
 
-def test_k_core_delta_mode_parity(spark, monkeypatch):
-    # the round-10 hybrid picks rewrite vs tail rounds from runtime
-    # stats (_KCORE_TAIL_FACTOR pivot; broadcast_max_dead cap). Force
-    # each mode across the full seeded sweep: factor so large the tail
-    # never engages (pure rewrite — the old shape), factor 0 with a big
-    # cap (tail whenever the broadcast fits), and broadcast_max_dead=0
-    # (every broadcast gate off → pure rewrite with shuffle joins).
-    # All three must emit identical cores.
+def test_k_core_delta_mode_parity(spark):
+    # the frontier join's broadcast is chosen from the probe's runtime
+    # frontier count; broadcast_max_dead=0 turns it off (shuffle joins
+    # every round) — both plans must emit identical cores across the
+    # full seeded sweep
     import random
 
-    from assemblagedb_spark.operators import components as C
+    from assemblagedb_spark.operators.components import k_core_delta
 
     for seed, n, m in ((3, 60, 50), (5, 60, 90), (9, 40, 200)):
         rng = random.Random(seed)
         rows = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
         e = spark.createDataFrame(rows, "parent_id long, child_id long")
         for k in (2, 3):
-            monkeypatch.setattr(C, "_KCORE_TAIL_FACTOR", 10**9)
-            rewrite_only = sorted(map(tuple, C.k_core_delta(e, k=k).collect()))
-            monkeypatch.setattr(C, "_KCORE_TAIL_FACTOR", 0)
-            tail_always = sorted(map(tuple, C.k_core_delta(e, k=k).collect()))
+            default = sorted(map(tuple, k_core_delta(e, k=k).collect()))
             no_broadcast = sorted(
-                map(tuple, C.k_core_delta(e, k=k, broadcast_max_dead=0).collect())
+                map(tuple, k_core_delta(e, k=k, broadcast_max_dead=0).collect())
             )
-            assert rewrite_only == tail_always, f"seed={seed} k={k}"
-            assert rewrite_only == no_broadcast, f"seed={seed} k={k}"
+            assert default == no_broadcast, f"seed={seed} k={k}"
 
 
 def test_k_core_raises_on_nonconvergence(spark):
@@ -316,16 +337,15 @@ def test_k_core_raises_on_nonconvergence(spark):
     # not silently return a superset core with sub-k degrees
     import pytest as _pytest
 
-    from assemblagedb_spark.operators.components import k_core, k_core_delta
+    from assemblagedb_spark.operators.components import k_core_delta
 
     e = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "parent_id long, child_id long"
     )
-    for fn in (k_core, k_core_delta):
-        with _pytest.raises(RuntimeError, match="did not stabilize"):
-            fn(e, k=2, max_rounds=2)
-        # with budget, the acyclic path peels fully to an empty core
-        assert fn(e, k=2, max_rounds=50).count() == 0
+    with _pytest.raises(RuntimeError, match="did not stabilize"):
+        k_core_delta(e, k=2, max_rounds=2)
+    # with budget, the acyclic path peels fully to an empty core
+    assert k_core_delta(e, k=2, max_rounds=50).count() == 0
 
 
 def test_weighted_sample_per_row_rates(spark):

@@ -394,29 +394,27 @@ def test_bloom_no_false_negatives_and_prefilter_exact(spark):
 
 
 # ---------------------------------------------------------------------------
-# large-star/small-star components (log-round convergence)
+# convergence-probed label propagation on a long chain
 # ---------------------------------------------------------------------------
 
-def test_star_components_long_chain_and_parity(spark):
+def test_label_propagation_long_chain_converges(spark):
     from assemblagedb_spark.operators.components import (
         label_propagation_components,
-        star_components,
     )
 
     # chain longer than any reasonable fixed round budget + triangle + pair
-    # + a node whose ONLY edge is a self-loop (must still get a label row,
-    # matching label propagation)
+    # + a node whose ONLY edge is a self-loop (must still get a label row)
     rows = ([(i, i + 1) for i in range(80)]
             + [(500, 501), (501, 502), (502, 500), (900, 901), (950, 950)])
     e = spark.createDataFrame(rows, "parent_id long, child_id long")
-    star = sorted((r["node_id"], r["component"])
-                  for r in star_components(e).collect())
-    prop = sorted((r["node_id"], r["component"])
-                  for r in label_propagation_components(
-                      e, rounds=None, max_rounds=200).collect())
-    assert star == prop
-    assert {c for _, c in star} == {0, 500, 900, 950}
-    assert (950, 950) in star
+    prop = [(r["node_id"], r["component"])
+            for r in label_propagation_components(
+                e, rounds=None, max_rounds=200).collect()]
+    expected = {n: 0 for n in range(81)}
+    expected.update({500: 500, 501: 500, 502: 500, 900: 900, 901: 900,
+                     950: 950})
+    assert len(prop) == len(expected) and dict(prop) == expected
+    assert {c for _, c in prop} == {0, 500, 900, 950}
 
 
 def test_contracted_components_parity(spark):
@@ -425,9 +423,9 @@ def test_contracted_components_parity(spark):
         label_propagation_components,
     )
 
-    # chain + triangle + pair + self-loop-only node, same fixture the star
-    # parity uses; repartition(16) scatters the chain so the finisher, not
-    # just the contraction, is exercised
+    # chain + triangle + pair + self-loop-only node, same fixture the
+    # long-chain label-propagation test uses; repartition(16) scatters the
+    # chain so the finisher, not just the contraction, is exercised
     rows = ([(i, i + 1) for i in range(80)]
             + [(500, 501), (501, 502), (502, 500), (900, 901), (950, 950)])
     e = spark.createDataFrame(rows, "parent_id long, child_id long")
