@@ -613,14 +613,6 @@ def _color_planes(a, gray: bool):
     return [y - 128.0, cb - 128.0, cr - 128.0]
 
 
-def _encode_plane(writer, plane, qtable, dc_codes, ac_codes):
-    """FDCT + quantize + entropy-code one component plane (non-interleaved
-    path used for grayscale)."""
-    prev = 0
-    for row in _plane_zigzag(plane, qtable):
-        prev = encode_block(writer, row, prev, dc_codes, ac_codes)
-
-
 # --------------------------------------------------------------------------
 # Vectorized baseline entropy coder — bit-identical to the encode_block /
 # _BitWriter loop above (pinned by test_vectorized_entropy_matches_scalar),

@@ -343,51 +343,6 @@ def ngram_jaccard_pairs(
 # ---------------------------------------------------------------------------
 
 
-def _simhash_arrow(
-    docs: DataFrame, *, id_col: str, text_col: str, bits: int, seed: int
-) -> DataFrame:
-    """Vectorized simhash kernel: per Arrow batch, each document's distinct
-    4-grams (UTF-8 BYTE windows with 3-zero padding — identical to
-    grams_array_arrow, index_text and the byte-exact SQL form, on every
-    Unicode plane; property-pinned) are mix32-hashed as whole numpy
-    arrays and the bit votes as one (grams × bits) popcount matrix —
-    bit-identical to the jvm/HOF form."""
-    import numpy as np
-    import pandas as pd
-
-    from assemblagedb_spark.functions.core import (
-        KNUTH_MULT, MIX32_MOD, MIX32_MULT,
-    )
-
-    def fp(batches):
-        shifts = np.arange(bits, dtype=np.int64)
-        for pdf in batches:
-            out = np.empty(len(pdf), dtype=np.int64)
-            for row, s in enumerate(pdf["__s"]):
-                c = np.frombuffer(
-                    (s or "").encode("utf-8"), dtype=np.uint8
-                ).astype(np.int64)
-                p = np.concatenate((np.zeros(3, np.int64), c, np.zeros(3, np.int64)))
-                g = np.unique(
-                    (p[:-3] << 24) + (p[1:-2] << 16) + (p[2:-1] << 8) + p[3:]
-                )
-                h = ((g & 0x7FFFFFFF) * KNUTH_MULT + seed) % MIX32_MOD
-                for _ in range(2):
-                    h = ((h ^ (h >> 16)) * MIX32_MULT) % MIX32_MOD
-                h ^= h >> 16
-                ones = ((h[:, None] >> shifts) & 1).sum(0)
-                bits_set = (2 * ones > len(g)).astype(np.int64)
-                out[row] = int((bits_set << shifts).sum())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "simhash": out})
-
-    return (
-        docs.select(
-            F.col(id_col).alias("doc_id"), F.coalesce(text_col, F.lit("")).alias("__s")
-        )
-        .mapInPandas(fp, "doc_id long, simhash long")
-    )
-
-
 def simhash_fingerprints(
     docs: DataFrame,
     *,
@@ -395,7 +350,6 @@ def simhash_fingerprints(
     text_col: str = "text",
     bits: int = 32,
     seed: int = 12345,
-    impl: str = "jvm",
 ) -> DataFrame:
     """(doc_id, simhash BIGINT): bit i is set iff the sum over distinct
     shingles g of sign(bit_i(h(g))) is positive, h(g) = mix32(g, seed).
@@ -404,18 +358,16 @@ def simhash_fingerprints(
     (a·g+b) mod (2^31−1) left bit 31 permanently zero (a dead band slice)
     and fed structured low bits; the avalanche mixer fixes both.
 
-    ``impl='jvm'`` (default): pure Catalyst higher-order functions — the
-    replayable-in-SQL form the DuckDB oracle mirrors, no Python in the
-    hot path. The gram array is hashed ONCE up front (``transform`` to a
-    hash array), then the vote fold reads plain lambda variables:
+    Pure Catalyst higher-order functions — the replayable-in-SQL form the
+    DuckDB oracle mirrors, no Python in the hot path. The gram array is
+    hashed ONCE up front (``transform`` to a hash array), then the vote
+    fold reads plain lambda variables:
     inlining the mixer text into the per-bit CASE instead re-evaluates
     it bits×(its ~8x textual self-expansion) ≈ 256 times per gram —
     interpreted HOF lambdas get no common-subexpression elimination, and
-    that exact shape measured ~6x slower end-to-end at sf0.1 (warm A/B:
-    jvm ~0.3s vs arrow ~0.5s per 1k docs — worker round-trips cost more
-    than the interpreted fold at ~2 KB/doc; prefer ``impl='arrow'`` for
-    corpora of wide documents, where the numpy vote matrix amortizes).
-    ``impl='arrow'``: vectorized numpy kernel, property-tested equal.
+    that exact shape measured ~6x slower end-to-end at sf0.1. A numpy
+    Arrow kernel is slower here (warm A/B: ~0.5s vs ~0.3s per 1k docs):
+    at ~2 KB/doc the worker round-trips cost more than the fold.
     """
     # NULL text has no shingle set: no fingerprint row (the SQL twin's
     # gram CTE unnests nothing for it; empty text '' keeps its 3
@@ -426,10 +378,6 @@ def simhash_fingerprints(
     # ngram_overlap_pairs): a corpus file small in bytes parks the whole
     # CPU-bound projection in ONE task otherwise
     docs = _spread_for_fold(docs, id_col)
-    if impl == "arrow":
-        return _simhash_arrow(
-            docs, id_col=id_col, text_col=text_col, bits=bits, seed=seed
-        )
     from assemblagedb_spark.functions.core import mix32_spark_text
 
     h = mix32_spark_text("g", seed)

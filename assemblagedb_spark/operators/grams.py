@@ -6,8 +6,9 @@ a block's gram sequence is the grams of its chain-concatenated descendant
 texts (the 3-gram boundary splice at ``index.rs:722-743`` is equivalent to
 concatenate-then-gram, see SURVEY §7 "What's hard" #4).
 
-Scale design: grams are produced by a Catalyst-only expression (no Python),
-exploded, and aggregated with a map-side-combining ``groupBy``. At 100 TB the
+Scale design: one Arrow kernel per batch grams each block's UTF-8 bytes
+and aggregates them to (distinct gram, count) inside the row, so the build
+is scan → project → explode with no shuffle. At 100 TB the
 ``grams`` table is written partitioned/bucketed by ``gram`` so ad-hoc search
 (a broadcast join of a tiny query-gram set against postings) prunes to the
 touched buckets and never shuffles the index.
@@ -25,31 +26,6 @@ from assemblagedb_spark.functions.core import spark_grams_array_expr
 def grams_array(text_col: str) -> Column:
     """ARRAY<BIGINT> gram column for a string column (JVM-side)."""
     return F.expr(spark_grams_array_expr(text_col))
-
-
-def grams_array_arrow(text_col: str) -> Column:
-    """Arrow-vectorized gram column (numpy sliding windows) — ~2-3× faster
-    than the JVM expression on gram-dominated jobs, at the cost of Python
-    workers in the stage. Byte-exact (operates on UTF-8 bytes, so it is also
-    correct for non-ASCII text, unlike the codepoint-based SQL form)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, LongType
-
-    @pandas_udf(ArrayType(LongType()))
-    def _grams(s: pd.Series) -> pd.Series:
-        w = np.array([1 << 24, 1 << 16, 1 << 8, 1], dtype=np.int64)
-        out = []
-        for t in s:
-            if t is None:
-                out.append(None)  # NULL text indexes nothing (SQL twin)
-                continue
-            b = np.frombuffer(
-                bytes(3) + t.encode("utf-8") + bytes(3), dtype=np.uint8
-            ).astype(np.int64)
-            out.append((np.lib.stride_tricks.sliding_window_view(b, 4) @ w).tolist())
-        return pd.Series(out)
-
-    return _grams(text_col)
 
 
 def gram_multiset_arrow(text_col: str) -> Column:
@@ -97,8 +73,6 @@ def block_grams(
     blocks: DataFrame,
     id_col: str = "node_id",
     text_col: str = "text",
-    *,
-    impl: str = "arrow",
 ) -> DataFrame:
     """(block_id, text) → inverted index rows (node_id, gram, occurrences).
 
@@ -106,38 +80,29 @@ def block_grams(
     count, which the search kernel needs for min(q_occ, m_occ) accumulation
     (reference ``index.rs:219-226``).
 
-    ``impl='arrow'`` (default): the whole per-block aggregation happens
-    inside the Arrow kernel (``np.unique`` per row), so the plan is scan →
-    project → explode — zero shuffles; the raw gram stream (~1 row per text
-    byte) never materializes. Byte-exact on non-ASCII (operates on UTF-8
-    bytes). ``impl='jvm'`` keeps the build pure-SQL (no Python workers):
-    explode + map-side-combining groupBy, one shuffle.
+    The whole per-block aggregation happens inside the Arrow kernel
+    (``np.unique`` per row), so the plan is scan → project → explode —
+    zero shuffles; the raw gram stream (~1 row per text byte) never
+    materializes. Byte-exact on non-ASCII (operates on UTF-8 bytes).
 
-    Precondition: one row per ``id_col`` value. The arrow kernel aggregates
+    Precondition: one row per ``id_col`` value. The kernel aggregates
     within each input row, so duplicate ids would yield duplicate
-    (node_id, gram) rows, while the jvm path's groupBy would merge them —
-    pre-aggregate (concat text per id) before calling if ids can repeat.
+    (node_id, gram) rows — pre-aggregate (concat text per id) before
+    calling if ids can repeat.
     """
-    if impl == "arrow":
-        return (
-            blocks.select(
-                F.col(id_col).alias("node_id"),
-                gram_multiset_arrow(text_col).alias("m"),
-            )
-            .select(
-                "node_id", F.explode(F.arrays_zip("m.grams", "m.counts")).alias("z")
-            )
-            .select(
-                "node_id",
-                F.col("z.grams").alias("gram"),
-                F.col("z.counts").alias("occurrences"),
-            )
-        )
     return (
-        blocks.select(F.col(id_col).alias("node_id"), grams_array(text_col).alias("grams"))
-        .select("node_id", F.explode("grams").alias("gram"))
-        .groupBy("node_id", "gram")
-        .agg(F.count(F.lit(1)).cast("int").alias("occurrences"))
+        blocks.select(
+            F.col(id_col).alias("node_id"),
+            gram_multiset_arrow(text_col).alias("m"),
+        )
+        .select(
+            "node_id", F.explode(F.arrays_zip("m.grams", "m.counts")).alias("z")
+        )
+        .select(
+            "node_id",
+            F.col("z.grams").alias("gram"),
+            F.col("z.counts").alias("occurrences"),
+        )
     )
 
 

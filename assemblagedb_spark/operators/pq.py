@@ -13,11 +13,14 @@ full-precision, a per-query (m × k) distance table against the codebook is
 precomputed ONCE, and each corpus vector's approximate distance is m table
 lookups — no float math per corpus row.
 
-Scale shape mirrors the rest of the vector stack: training is the
-broadcast-assign/merge-state k-means loop per subspace; encoding is ONE
-corpus scan joined to the broadcast codebook; ADC scoring is one scan of
-the (vec_id, subspace, code) table against a broadcast distance table with
-a (query, vec) partial-sum aggregate. All arithmetic runs on the quantized
+Scale shape mirrors the rest of the vector stack: training
+(:func:`pq_train_arrow`) is a merge-state k-means loop whose rounds are
+one Arrow-kernel corpus scan each; encoding (:func:`pq_encode_arrow`) is
+ONE corpus scan with the codebook in the kernel's closure; ADC scoring is
+one scan of the (vec_id, subspace, code) table against a broadcast
+distance table with a (query, vec) partial-sum aggregate, and IVFADC
+(:func:`ivfpq_adc_topk_residual`) restricts that scan to the probed
+cells' residual codes. All arithmetic runs on the quantized
 integer grid (floor(v * scale)), so codes and ADC scores are bit-identical
 on any engine/partitioning — the same oracle-parity discipline as
 kmeans_train (vectors.py).
@@ -38,96 +41,6 @@ def _qv_body(scale: int | None) -> str:
     return f"CAST(floor(CAST(v AS DOUBLE) * {scale}) AS BIGINT)"
 
 
-def pq_train(
-    embeddings: DataFrame,
-    *,
-    m: int = 8,
-    sub_dim: int = 8,
-    k: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int | None = 1000,
-) -> DataFrame:
-    """Train ``m`` independent subspace codebooks: subspace s covers
-    components [s*sub_dim, (s+1)*sub_dim). Returns the union of per-
-    subspace k-means merge states: (subspace, label, pos, sum_q, n_vecs)
-    with pos LOCAL to the subspace.
-
-    All m codebooks train in ONE combined Lloyd loop: the corpus explodes
-    once into (vec_id, subspace, qvec) and every round is a single
-    broadcast-assign scan + a single (subspace, label, pos) merge-state
-    groupBy — per-round cost is independent of m (m sequential kmeans
-    loops would cost m corpus scans per round). Results are identical to
-    independent per-subspace training: subspaces never interact (the
-    argmin is per (vec_id, subspace), the state keys on subspace).
-
-    Seeds mirror kmeans_train (vectors.py): label j = j-th lowest vec_id,
-    the same k seed vectors in every subspace — deterministic and
-    oracle-replayable.
-    """
-    sub = embeddings.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("vec_id"),
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}), s -> "
-                f"transform(slice({vec_col}, s * {sub_dim} + 1, {sub_dim}), "
-                f"v -> {_qv_body(scale)}))"
-            )
-        ).alias("subspace", "qvec"),
-    ).withColumn("subspace", F.col("subspace").cast("long")).localCheckpoint(
-        eager=True
-    )
-
-    seed_ids = [
-        r[0]
-        for r in embeddings.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("vec_id"))
-        .orderBy("vec_id").limit(k).collect()
-    ]
-    id_type = embeddings.schema[id_col].dataType.simpleString()
-    seeds = embeddings.sparkSession.createDataFrame(
-        [(v, i) for i, v in enumerate(seed_ids)],
-        f"vec_id {id_type}, label long",
-    )
-    state = (
-        seeds.join(sub, "vec_id")
-        .select("subspace", "label", F.posexplode("qvec").alias("pos", "sum_q"))
-        .withColumn("n_vecs", F.lit(1).cast("long"))
-        .withColumn("sum_q", F.col("sum_q").cast("long"))
-    )
-
-    dist = F.expr(
-        "aggregate(zip_with(qvec, cvec, (a, b) -> (a - b) * (a - b)), "
-        "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-    )
-    for _ in range(iters):
-        cent = _codebook_vectors(state)
-        assigned = (
-            sub.join(F.broadcast(cent), "subspace")
-            .select("vec_id", "subspace", "label", dist.alias("dist"))
-            .groupBy("vec_id", "subspace")
-            .agg(F.min(F.struct("dist", "label")).alias("b"))
-            .select("vec_id", "subspace", F.col("b.label").alias("label"))
-        )
-        state = (
-            assigned.join(sub, ["vec_id", "subspace"])
-            .select(
-                "subspace", "label", F.posexplode("qvec").alias("pos", "qv")
-            )
-            .groupBy("subspace", "label", "pos")
-            .agg(
-                F.sum("qv").cast("long").alias("sum_q"),
-                F.count(F.lit(1)).cast("long").alias("n_vecs"),
-            )
-            .localCheckpoint(eager=True)  # ≤ m×k×sub_dim rows
-        )
-    return state.select(
-        "subspace", F.col("label").cast("long").alias("label"),
-        F.col("pos").cast("long").alias("pos"), "sum_q", "n_vecs"
-    )
-
-
 def _codebook_vectors(codebook: DataFrame) -> DataFrame:
     """(subspace, label, cvec): integer centroid vectors from merge state."""
     return (
@@ -145,9 +58,6 @@ def _codebook_vectors(codebook: DataFrame) -> DataFrame:
             ).alias("cvec"),
         )
     )
-
-
-_ENCODE_LITERAL_MAX_CELLS = 65_536  # m*k codebook entries foldable inline
 
 
 def _codebook_literal(codebook: DataFrame) -> dict[int, list[list[int]]]:
@@ -171,121 +81,6 @@ def _codebook_literal(codebook: DataFrame) -> dict[int, list[list[int]]]:
             for l in sorted(labels)
         ]
     return out
-
-
-def pq_encode(
-    embeddings: DataFrame,
-    codebook: DataFrame,
-    *,
-    m: int = 8,
-    sub_dim: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int | None = 1000,
-) -> DataFrame:
-    """Encode every vector as ``m`` codes: (vec_id, subspace, code).
-
-    A pure PROJECTION: the codebook (bounded at m × k rows by
-    construction) folds into the encode expression as literals, so each
-    row computes its m argmin codes inline — one corpus scan, zero
-    shuffle, zero aggregation (the previous explode + groupBy argmin
-    moved n·m scored rows through an exchange for the same answer).
-    Being stateless, the same expression encodes a STREAM per
-    micro-batch (streaming/ann.py). Tie-break: lowest label on equal
-    distance — identical to the merge-state argmin and the oracle's
-    ``row_number() OVER (ORDER BY dist, label)``.
-
-    Falls back to the broadcast-join + partial-agg plan when the codebook
-    exceeds the literal-folding budget (never at sane m·k; the guard is
-    for misuse, not scale)."""
-    codes_expr = encode_codes_column(
-        codebook, m=m, sub_dim=sub_dim, vec_col=vec_col, scale=scale
-    )
-    if codes_expr is None:
-        # oversized codebook, or a subspace with no trained labels (the
-        # join path simply emits no code row for it — keep that behavior)
-        return _pq_encode_agg(
-            embeddings, codebook, m=m, sub_dim=sub_dim,
-            id_col=id_col, vec_col=vec_col, scale=scale,
-        )
-    return embeddings.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("vec_id"), F.posexplode(codes_expr).alias("subspace", "code")
-    ).select("vec_id", F.col("subspace").cast("long").alias("subspace"), "code")
-
-
-def encode_codes_column(
-    codebook: DataFrame,
-    *,
-    m: int = 8,
-    sub_dim: int = 8,
-    vec_col: str = "embedding",
-    scale: int | None = 1000,
-):
-    """The literal-folded encode expression: an ``array<bigint>`` of the
-    row's m argmin codes (index = subspace). A stateless projection, so
-    it would encode a STREAM per micro-batch unchanged (the streaming
-    ingest now uses the faster fused Arrow kernel instead —
-    streaming/ann.py). Returns ``None`` when the codebook exceeds the
-    literal budget or a subspace trained no labels — callers fall back
-    to :func:`_pq_encode_agg`."""
-    cb = _codebook_literal(codebook)
-    n_cells = sum(len(v) for v in cb.values())
-    if n_cells > _ENCODE_LITERAL_MAX_CELLS or any(
-        not cb.get(sp) for sp in range(m)
-    ):
-        return None
-    per_subspace = []
-    for sp in range(m):
-        dists = ", ".join(
-            f"named_struct('dist', aggregate(zip_with("
-            f"transform(slice({vec_col}, {sp * sub_dim} + 1, {sub_dim}), "
-            f"v -> {_qv_body(scale)}), "
-            f"array({', '.join(f'CAST({c} AS BIGINT)' for c in cvec)}), "
-            f"(a, b) -> (a - b) * (a - b)), CAST(0 AS BIGINT), "
-            f"(acc, x) -> acc + x), 'label', CAST({label} AS BIGINT))"
-            for label, cvec in cb[sp]
-        )
-        per_subspace.append(f"array_min(array({dists})).label")
-    return F.expr(f"array({', '.join(per_subspace)})")
-
-
-def _pq_encode_agg(
-    embeddings: DataFrame,
-    codebook: DataFrame,
-    *,
-    m: int,
-    sub_dim: int,
-    id_col: str,
-    vec_col: str,
-    scale: int | None,
-) -> DataFrame:
-    """Broadcast-join + argmin-aggregate encode (the pre-literal plan,
-    kept as the oversized-codebook fallback and the parity reference)."""
-    sub = embeddings.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("vec_id"),
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}), s -> "
-                f"transform(slice({vec_col}, s * {sub_dim} + 1, {sub_dim}), "
-                f"v -> {_qv_body(scale)}))"
-            )
-        ).alias("subspace", "qvec"),
-    ).withColumn("subspace", F.col("subspace").cast("long"))
-    cent = _codebook_vectors(codebook)
-    dist = F.expr(
-        "aggregate(zip_with(qvec, cvec, (a, b) -> (a - b) * (a - b)), "
-        "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-    )
-    scored = (
-        sub.join(F.broadcast(cent), "subspace")
-        .select("vec_id", "subspace", "label", dist.alias("dist"))
-    )
-    best = scored.groupBy("vec_id", "subspace").agg(
-        F.min(F.struct("dist", "label")).alias("b")
-    )
-    return best.select(
-        "vec_id", "subspace", F.col("b.label").cast("long").alias("code")
-    )
 
 
 def _adc_distance_table(
@@ -372,53 +167,6 @@ def pq_adc_topk(
     return _adc_rank(scored, k)
 
 
-def ivfpq_adc_topk(
-    cell_codes: DataFrame,
-    codebook: DataFrame,
-    queries: DataFrame,
-    probes: DataFrame,
-    *,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = 8,
-    sub_dim: int = 8,
-    scale: int | None = 1000,
-) -> DataFrame:
-    """IVFADC serving (Jégou et al. TPAMI'11 §V: coarse quantizer +
-    per-cell PQ codes — the FAISS ``IVFPQ`` layout): each query ADC-scores
-    ONLY the vectors whose coarse cell it probes, instead of the whole code
-    table.
-
-    ``cell_codes``: (vec_id, subspace, code, cell) — the PQ code table
-    carrying each vector's coarse-cell assignment, i.e. the inverted lists.
-    At scale this relation is written partitioned/bucketed BY CELL, so a
-    probe touches only its cells' files (partition pruning); the query-side
-    join below keeps that shape — the big table is scanned, never shuffled.
-    ``probes``: (q_id, cell) — each query's nprobe nearest cells
-    (:func:`assemblagedb_spark.operators.similarity.ivf_probes`).
-
-    Per-scan work is Σ_q Σ_{probed cells} |cell| · m code lookups — the
-    nprobe/nlist fraction of :func:`pq_adc_topk` — with the same exact
-    integer arithmetic, self-exclusion and (adc_dist, neighbor_id) tie
-    order. A corpus vector appears in exactly one cell, so no distinct is
-    needed on the candidate pairs."""
-    dtable = _adc_distance_table(
-        codebook, queries, id_col=id_col, vec_col=vec_col,
-        m=m, sub_dim=sub_dim, scale=scale,
-    )
-    scored = (
-        cell_codes.join(
-            F.broadcast(probes.withColumnRenamed("q_id", "query_id")), "cell"
-        )
-        .join(F.broadcast(dtable), ["query_id", "subspace", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("d").cast("long").alias("adc_dist"))
-    )
-    return _adc_rank(scored, k)
-
-
 def _codebook_matrices(cb: dict[int, list[tuple[int, list[int]]]], m: int):
     """(labs, mats) per subspace from a collected
     :func:`_codebook_literal`: label vectors (ascending) and int64
@@ -436,13 +184,24 @@ def _codebook_matrices(cb: dict[int, list[tuple[int, list[int]]]], m: int):
     return labs, mats
 
 
+def _grid_matrix(vectors, scale: int | None):
+    """(n, dim) int64 rows on the integer grid — the numpy form of
+    :func:`_qv_body`: floor(v * scale), or the values as-is when
+    ``scale is None``."""
+    import numpy as np
+
+    V = np.stack([np.asarray(v, dtype=np.float64) for v in vectors])
+    if scale is None:
+        return V.astype(np.int64)
+    return np.floor(V * scale).astype(np.int64)
+
+
 def _argmin_codes(Q, labs, mats, m: int, sub_dim: int):
     """(n, m) int64 argmin codes for integer-grid rows ``Q``: per
     subspace, squared distance to every centroid, first minimum wins —
     labs is label-ascending and ``np.argmin`` returns the FIRST min, so
-    ties break to the lowest label, identical to the
-    ``min(struct(dist, label))`` tie-break of the expression and
-    aggregate forms. The single definition both the batch encode and the
+    ties break to the lowest label, identical to the oracle's
+    ``ORDER BY dist, label`` tie-break. The single definition both the batch encode and the
     streaming ingest call — a fix here fixes both sides of the
     batch ≡ stream parity gate."""
     import numpy as np
@@ -467,18 +226,14 @@ def pq_encode_arrow(
     scale: int | None = 1000,
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Vectorized encode kernel: per Arrow batch, ONE numpy distance pass
-    per subspace against the closure-held codeword matrices — same
-    integer grid, argmin and lowest-label tie-break as the literal-folded
-    expression (:func:`pq_encode`), parity-pinned bit-identical.
+    """Encode every vector as ``m`` codes: (vec_id, subspace, code).
 
-    Why it exists: at m=32 the folded expression evaluates m×k
-    interpreted HOF distance terms per row and Catalyst gives lambdas no
-    common-subexpression elimination — the cost class the round-4 simhash
-    fix measured ~6-12x (review follow-up, round 4 verdict item 3). Here
-    the same arithmetic runs as (batch × k × sub_dim) vectorized int64
-    ops. Still a stateless projection: one corpus scan, zero shuffle,
-    streaming-safe per micro-batch.
+    Per Arrow batch, ONE numpy distance pass per subspace against the
+    closure-held codeword matrices (:func:`_argmin_codes`): integer grid,
+    argmin with the lowest label winning ties — the oracle's
+    ``row_number() OVER (ORDER BY dist, label)``. A stateless
+    projection: one corpus scan, zero shuffle, streaming-safe per
+    micro-batch.
 
     ``carry_cols``: extra input columns copied through unchanged (e.g.
     the coarse ``cell`` of an IVFADC build — emitting the serving layout
@@ -487,22 +242,19 @@ def pq_encode_arrow(
     import numpy as np
     import pandas as pd
 
+    id_type = embeddings.schema[id_col].dataType.simpleString()
+    carry_schema = "".join(
+        f", {c} {dict(embeddings.dtypes)[c]}" for c in carry_cols
+    )
+    out_schema = f"vec_id {id_type}, subspace long, code long{carry_schema}"
     cb = _codebook_literal(codebook)
     if not cb:
-        # a NEVER-trained codebook (empty corpus) encodes nothing — the
-        # aggregate path's broadcast join against zero codebook rows
-        # yields the same empty relation
-        id_type = embeddings.schema[id_col].dataType.simpleString()
-        carry_schema = "".join(
-            f", {c} {dict(embeddings.dtypes)[c]}" for c in carry_cols
-        )
-        return embeddings.sparkSession.createDataFrame(
-            [], f"vec_id {id_type}, subspace long, code long{carry_schema}"
-        )
+        # a NEVER-trained codebook (empty corpus) encodes nothing
+        return embeddings.sparkSession.createDataFrame([], out_schema)
     if any(not cb.get(sp) for sp in range(m)):
         raise ValueError(
-            "pq_encode_arrow needs every subspace trained; use "
-            "_pq_encode_agg for codebooks with empty subspaces"
+            "pq_encode_arrow needs every subspace trained; the codebook "
+            "has a subspace with no labels"
         )
     labs, mats = _codebook_matrices(cb, m)
 
@@ -511,15 +263,9 @@ def pq_encode_arrow(
             n = len(pdf)
             if n == 0:
                 continue
-            V = np.stack(
-                [np.asarray(x, dtype=np.float64) for x in pdf["__vec"]]
+            codes = _argmin_codes(
+                _grid_matrix(pdf["__vec"], scale), labs, mats, m, sub_dim
             )
-            Q = (
-                np.floor(V * scale).astype(np.int64)
-                if scale is not None
-                else V.astype(np.int64)
-            )
-            codes = _argmin_codes(Q, labs, mats, m, sub_dim)
             out = {
                 "vec_id": np.repeat(pdf["vec_id"].to_numpy(), m),
                 "subspace": np.tile(np.arange(m, dtype=np.int64), n),
@@ -529,18 +275,11 @@ def pq_encode_arrow(
                 out[c] = np.repeat(pdf[c].to_numpy(), m)
             yield pd.DataFrame(out)
 
-    id_type = embeddings.schema[id_col].dataType.simpleString()
-    carry_schema = "".join(
-        f", {c} {dict(embeddings.dtypes)[c]}" for c in carry_cols
-    )
     return embeddings.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("__vec"),
         *[F.col(c) for c in carry_cols],
-    ).mapInPandas(
-        kernel,
-        f"vec_id {id_type}, subspace long, code long{carry_schema}",
-    )
+    ).mapInPandas(kernel, out_schema)
 
 
 def coarse_centroid_vectors(state: DataFrame) -> DataFrame:
@@ -641,8 +380,8 @@ def ivfpq_adc_topk_residual(
     from the query's residual in that cell.
 
     ``cell_codes``: (vec_id, subspace, code, cell) residual inverted
-    lists (build: :func:`residual_vectors` → :func:`pq_encode` /
-    :func:`pq_encode_arrow` with ``scale=None``). ``q_resid``:
+    lists (build: :func:`residual_vectors` → :func:`pq_encode_arrow`
+    with ``scale=None``). ``q_resid``:
     (query_id, cell, rvec) from :func:`query_residuals` — its (query,
     cell) pairs ARE the probe list, so the distance-table join below
     both routes probes and scores them: one broadcast hash join against
@@ -690,23 +429,21 @@ def pq_train_arrow(
     vec_col: str = "embedding",
     scale: int | None = 1000,
 ) -> DataFrame:
-    """Vectorized :func:`pq_train`: identical seeds, rounds, integer
-    arithmetic and tie-breaks (parity-pinned bit-identical), with each
-    Lloyd round running as ONE corpus scan whose Arrow kernel assigns
-    codes in numpy and pre-aggregates the merge state per batch — the
-    shuffle per round carries only (tasks × m × k × sub_dim) partial
-    rows instead of the n·m scored rows of the join+groupBy plan, and
-    the corpus-sized assigned⋈sub join disappears entirely (manual
-    map-side combine; the tiny state collects driver-side between
-    rounds exactly like the encode codebook literal).
+    """Train ``m`` independent subspace codebooks: subspace s covers
+    components [s*sub_dim, (s+1)*sub_dim). Returns the per-subspace
+    k-means merge states (subspace, label, pos, sum_q, n_vecs) with pos
+    LOCAL to the subspace.
 
-    Why: at sf0.1 the expression train costs ~5-9s of which almost all
-    is the per-round broadcast-join fan-out (n·m·k rows through an
-    exchange) plus the second corpus join to rebuild state; this form
-    measured ~4-8x faster and is the better 100 TB shape (the only
-    all-corpus stages are bare scans). The final state returns as a
-    DataFrame built from the last round's partial aggregation, so the
-    output is plan-compatible with :func:`pq_train`."""
+    Seeds mirror kmeans_train (vectors.py): label j = j-th lowest vec_id,
+    the same seed vectors in every subspace (fewer than ``k`` labels when
+    the corpus has fewer than ``k`` non-null vectors). All m codebooks
+    train in ONE Lloyd loop on the integer grid: each round is ONE corpus
+    scan whose Arrow kernel assigns codes in numpy (lowest label wins
+    ties) and pre-aggregates the merge state per batch, so the shuffle
+    per round carries only (tasks × m × k × sub_dim) partial rows and the
+    tiny state collects driver-side between rounds. Centroids are
+    floor(sum_q / n_vecs); a cluster that loses every vector is dropped —
+    the oracle's unrolled Lloyd chain replays all of it exactly."""
     import numpy as np
     import pandas as pd
 
@@ -723,21 +460,14 @@ def pq_train_arrow(
             [], "subspace long, label long, pos long, sum_q long, n_vecs long"
         )
 
-    def quant(rows):
-        V = np.stack([np.asarray(r, dtype=np.float64) for r in rows])
-        return (
-            np.floor(V * scale).astype(np.int64)
-            if scale is not None
-            else V.astype(np.int64)
-        )
-
-    seed_q = quant([r[1] for r in seed_rows])  # (k, dim), label = row index
+    seed_q = _grid_matrix([r[1] for r in seed_rows], scale)  # (≤k, dim), label = row index
+    n_seeds = len(seed_rows)
     # state[sp] = (labels asc, sums (k', sd) int64, counts (k',) int64)
     state = {
         sp: (
-            np.arange(k, dtype=np.int64),
+            np.arange(n_seeds, dtype=np.int64),
             seed_q[:, sp * sub_dim : (sp + 1) * sub_dim].copy(),
-            np.ones(k, dtype=np.int64),
+            np.ones(n_seeds, dtype=np.int64),
         )
         for sp in range(m)
     }
@@ -746,32 +476,26 @@ def pq_train_arrow(
         "subspace long, label long, pos long, sum_q long, n_vecs long"
     )
 
-    def round_kernel(cvs):
-        """cvs[sp] = (labels, centroid matrix) — floor(sum/n) per state."""
+    def round_kernel(labs, mats):
+        """labs[sp] / mats[sp]: label-ascending labels and their
+        floor(sum/n) centroids — the encode kernel's argmin inputs."""
 
         def kernel(batches):
             for pdf in batches:
-                n = len(pdf)
-                if n == 0:
+                if len(pdf) == 0:
                     continue
-                Q = quant(pdf["__vec"].values)
+                Q = _grid_matrix(pdf["__vec"], scale)
+                codes = _argmin_codes(Q, labs, mats, m, sub_dim)
                 out_sp, out_lab, out_pos, out_sum, out_cnt = [], [], [], [], []
                 for sp in range(m):
-                    labs, C = cvs[sp]
                     X = Q[:, sp * sub_dim : (sp + 1) * sub_dim]
-                    d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(2)
-                    a = np.argmin(d, axis=1)  # first min = lowest label
-                    for j in range(len(labs)):
-                        mask = a == j
-                        cnt = int(mask.sum())
-                        if not cnt:
-                            continue
-                        s = X[mask].sum(0)
+                    for label in np.unique(codes[:, sp]):
+                        mask = codes[:, sp] == label
                         out_sp.extend([sp] * sub_dim)
-                        out_lab.extend([int(labs[j])] * sub_dim)
+                        out_lab.extend([int(label)] * sub_dim)
                         out_pos.extend(range(sub_dim))
-                        out_sum.extend(int(v) for v in s)
-                        out_cnt.extend([cnt] * sub_dim)
+                        out_sum.extend(int(v) for v in X[mask].sum(0))
+                        out_cnt.extend([int(mask.sum())] * sub_dim)
                 yield pd.DataFrame(
                     {
                         "subspace": np.array(out_sp, dtype=np.int64),
@@ -789,12 +513,13 @@ def pq_train_arrow(
     )
     state_df = None
     for _ in range(iters):
-        cvs = {
-            sp: (labs, sums // counts[:, None])
-            for sp, (labs, sums, counts) in state.items()
+        labs = {sp: labels for sp, (labels, _, _) in state.items()}
+        mats = {
+            sp: sums // counts[:, None]
+            for sp, (_, sums, counts) in state.items()
         }
         state_df = (
-            src.mapInPandas(round_kernel(cvs), partial_schema)
+            src.mapInPandas(round_kernel(labs, mats), partial_schema)
             .groupBy("subspace", "label", "pos")
             .agg(
                 F.sum("sum_q").cast("long").alias("sum_q"),
@@ -811,11 +536,11 @@ def pq_train_arrow(
             ent[1] = r["n_vecs"]
         state = {}
         for sp, labels in nxt.items():
-            labs = np.array(sorted(labels), dtype=np.int64)
+            order = np.array(sorted(labels), dtype=np.int64)
             state[sp] = (
-                labs,
-                np.stack([labels[l][0] for l in labs]),
-                np.array([labels[l][1] for l in labs], dtype=np.int64),
+                order,
+                np.stack([labels[l][0] for l in order]),
+                np.array([labels[l][1] for l in order], dtype=np.int64),
             )
     if state_df is not None:
         # lineage of the returned frame: the LAST round's single scan +

@@ -1,18 +1,22 @@
 """Similarity search over embedding columns (ARRAY<FLOAT>).
 
-Two paths, per the standard ANN playbook:
+The paths of the standard ANN playbook:
 
-- ``cosine_topk``: exact brute force — a (queries × corpus) join with the
-  dot product evaluated as a JVM higher-order fold. Correctness baseline;
-  viable when the query side is small (it broadcasts) even on a huge corpus.
-- ``lsh_bucketed_topk``: random-hyperplane LSH — sign-bit sketches bucket
-  the corpus so each query only scores its bucket neighborhood. The 100 TB
-  path: corpus sketch is precomputed once, bucket join replaces the cross
-  join. Recall is tunable by bands/bits.
+- ``cosine_topk_arrow``: exact brute force — the query matrix rides in
+  every task's closure and each corpus partition is scored with one
+  matmul. Correctness baseline; viable when the query side is small even
+  on a huge corpus.
+- ``lsh_bucketed_topk``: random-hyperplane LSH — sign-bit sketches
+  (``hyperplane_sketch_arrow``) bucket the corpus so each query only
+  scores its bucket neighborhood. The corpus sketch is precomputed once
+  and a bucket join replaces the cross join. Recall is tunable by
+  bands/bits.
+- ``ivf_topk``: coarse-cell (IVF) probing, with deterministic or trained
+  centroids; ``exact_rerank_topk`` re-scores any shortlist exactly.
 
-All float math is double-precision, folded left-to-right in element order,
-so results are reproducible (and comparable against the DuckDB oracle, which
-evaluates the same sequential fold).
+All float math is double-precision. ``with_cosine`` folds left-to-right
+in element order — the same sequential fold the DuckDB oracle evaluates;
+the numpy paths differ from it only in the last ulps.
 """
 
 from __future__ import annotations
@@ -45,49 +49,6 @@ def with_cosine(pairs: DataFrame, vec_a: str = "vec_a", vec_b: str = "vec_b") ->
     )
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k cosine neighbors per query (self excluded).
-
-    Returns (query_id, neighbor_id, rank) — rank 1 = nearest. The query side
-    is broadcast; the corpus streams through one stage; per-query top-k is a
-    rank window partitioned by query (bounded state: k rows per query).
-    """
-    # norms are per-ROW, so compute them before the join: evaluating them
-    # per pair would redo 2/3 of the higher-order-function work |Q|×|C| times
-    # (bit-identical arithmetic either way — same dot/(na*nb) expression)
-    # NULL vectors neither query nor match (their NULL cosine would
-    # rank nondeterministically) — excluded like the SQL twin
-    q = queries.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("vec_a"),
-        _norm(vec_col).alias("norm_a"),
-    )
-    c = corpus.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("vec_b"),
-        _norm(vec_col).alias("norm_b"),
-    )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", _dot("vec_a", "vec_b") / (F.col("norm_a") * F.col("norm_b")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
-
-
 def cosine_topk_arrow(
     corpus: DataFrame,
     queries: DataFrame,
@@ -99,8 +60,8 @@ def cosine_topk_arrow(
 ) -> DataFrame:
     """Exact brute-force cosine top-k, Arrow/numpy execution path.
 
-    Same semantics as :func:`cosine_topk` (self excluded, rank 1 = nearest,
-    ties broken by ascending neighbor id) but the scoring runs as a
+    Self excluded, rank 1 = nearest, ties broken by ascending neighbor
+    id; NULL vectors neither query nor match. The scoring runs as a
     vectorized ``mapInPandas`` stage: the query matrix rides along in the
     task closure, each corpus partition is scored with one BLAS matmul, and
     only each partition's local top-k survives to the shuffle — the global
@@ -196,8 +157,8 @@ def exact_rerank_topk(
     fidelity (recall approaches the candidate ceiling as R grows —
     measured in RECALL.md).
 
-    Cosine is the same sequential double fold as :func:`cosine_topk`,
-    so the DuckDB oracle replays it bit-for-bit; ties break by
+    Cosine is the sequential double fold of :func:`with_cosine`, so the
+    DuckDB oracle replays it bit-for-bit; ties break by
     ascending neighbor id.
     """
     pairs = shortlist.select("query_id", "neighbor_id")
@@ -243,8 +204,7 @@ HYP_DIM_STRIDE = 4096
 
 def _mix_hyperplanes(bits: int, dim: int, seed: int):
     """±1 hyperplane matrix H[i, d]: sign = parity of mix32(i·stride + d,
-    seed) — the same mixer formula the SQL sketch path and the DuckDB
-    oracles evaluate (bit-identical across engines).
+    seed) — the same mixer formula the DuckDB oracles evaluate (bit-identical across engines).
 
     History: this was an LCG-parity formula, ((i·A + d·(2·seed+1)) % M)
     % 2 — degenerate, because d·(2·seed+1) never wraps the modulus for
@@ -271,8 +231,10 @@ def hyperplane_sketch_arrow(
     bits: int = 16,
     seed: int = 7,
 ) -> DataFrame:
-    """Vectorized :func:`hyperplane_sketch`: one matmul per Arrow batch
-    against the closure-held hyperplane matrix, bit-identical sketch ints
+    """Random-hyperplane sign sketch: bit i = (v · h_i) > 0 with the
+    pseudo-random ±1 hyperplanes of :func:`_mix_hyperplanes` — no stored
+    hyperplane matrix, reproducible everywhere. One matmul per Arrow
+    batch; NULL vectors sketch nothing. Sketch ints match the oracle's
     (sign flips would need a |v·h| below ~1e-12 — not observed on any
     corpus; the oracle's unordered SQL SUM carries the same tolerance)."""
     weights = (1 << np.arange(bits, dtype=np.int64))
@@ -285,43 +247,6 @@ def hyperplane_sketch_arrow(
 
     return df.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("vec_id"), F.col(vec_col), sk(vec_col).alias("sketch")
-    )
-
-
-def hyperplane_sketch(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bits: int = 16,
-    seed: int = 7,
-) -> DataFrame:
-    """Random-hyperplane sign sketch: bit i = (v · h_i) > 0 with
-    pseudo-random ±1 hyperplanes from the portable mix32 avalanche mixer
-    — no stored hyperplane matrix, reproducible everywhere (see
-    :func:`_mix_hyperplanes` for why a plain LCG is NOT enough).
-
-    This SQL form is the replayable reference;
-    :func:`hyperplane_sketch_arrow` is the production path (one matmul
-    per Arrow batch). The per-(i, d) mixer evaluates ONCE per cell:
-    ``mix32_spark_text`` is the folded-aggregate form (review finding,
-    round 4 — the earlier textual expansion re-ran the chain ~8x per
-    cell inside these interpreted lambdas)."""
-    from assemblagedb_spark.functions.core import mix32_spark_text
-
-    # h_i[d] = +1 if mix32(i*stride + d) even else -1
-    mix = mix32_spark_text(f"i * {HYP_DIM_STRIDE} + d", seed)
-    expr = (
-        f"aggregate(sequence(0, {bits - 1}), CAST(0 AS BIGINT), (acc, i) -> acc + "
-        f"CASE WHEN aggregate(zip_with({vec_col}, sequence(0, size({vec_col}) - 1), "
-        f"(x, d) -> CAST(x AS DOUBLE) * (CASE WHEN ({mix}) % 2 = 0 "
-        f"THEN 1.0 ELSE -1.0 END)), CAST(0 AS DOUBLE), (s, v) -> s + v) > 0 "
-        f"THEN shiftleft(CAST(1 AS BIGINT), i) ELSE CAST(0 AS BIGINT) END)"
-    )
-    # NULL vectors sketch nothing (same exclusion as the arrow path and
-    # every other vector consumer)
-    return df.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col), F.expr(expr).alias("sketch")
     )
 
 

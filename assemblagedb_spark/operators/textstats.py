@@ -1,9 +1,10 @@
 """Text analysis operators: token stats, quality scoring, language ID,
 document fingerprinting.
 
-All pure Catalyst expressions (split/filter/aggregate higher-order
-functions) — single-pass, no shuffle, no Python. Formulas are arithmetic on
-integers wherever outputs feed the correctness gate.
+Catalyst expressions (split/filter/aggregate higher-order functions)
+except ``winnowing_fingerprints``, which runs one numpy Arrow kernel.
+Formulas are arithmetic on integers wherever outputs feed the correctness
+gate.
 """
 
 from __future__ import annotations
@@ -144,18 +145,6 @@ LANG_TRIGRAMS: dict[str, list[str]] = {
 }
 
 
-def _lang_norm(text_col: str) -> F.Column:
-    """' ' + lowercased whitespace-collapsed text + ' ' — the padded form
-    trigram profiles are counted against."""
-    return F.concat(
-        F.lit(" "),
-        F.regexp_replace(
-            F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))), r"\s+", " "
-        ),
-        F.lit(" "),
-    )
-
-
 def language_id_ngram(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -237,20 +226,39 @@ def fingerprints(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     return docs.select(F.col(id_col).alias("doc_id"), F.md5(norm).alias("fingerprint"))
 
 
-def _winnowing_arrow(
+def winnowing_fingerprints(
     docs: DataFrame,
     *,
-    id_col: str,
-    text_col: str,
-    k: int,
-    window: int,
-    base: int,
-    mod: int,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    k: int = 5,
+    window: int = 4,
+    base: int = 257,
+    mod: int = 1_000_000_007,
 ) -> DataFrame:
-    """Vectorized winnowing kernel: per Arrow batch, each document's k-gram
-    hashes are k shifted-array passes over the codepoint array (utf-32
-    decode ≡ the SQL form's per-character ``ascii()``) and the window
-    minima one stride-tricks view — bit-identical to the jvm impl."""
+    """Winnowing document fingerprints (Schleimer et al., SIGMOD'03 — the
+    MOSS algorithm): polynomial rolling hashes of the text's k-grams, one
+    selected minimum per sliding window of ``window`` consecutive hashes,
+    deduplicated. The selected set is what plagiarism/near-copy detection
+    stores per document: shift-tolerant (an insertion far from a region
+    leaves that region's selected hashes intact) with guaranteed detection
+    of shared substrings of length >= window + k - 1.
+
+    Everything is integer arithmetic on the whitespace-normalized
+    lower-cased text's codepoints, and the identical formula runs in
+    DuckDB for the oracle. Per Arrow batch, each document's k-gram hashes
+    are k shifted-array passes over the codepoint array (utf-32 decode ≡
+    the oracle's per-character ``ord()``) and the window minima one
+    stride-tricks view ``.min()``; the plan is scan → project →
+    MapInPandas, zero shuffles. Selecting window minima BY VALUE (then
+    distinct) sidesteps the rightmost-vs-leftmost tie rule entirely — the
+    output set is identical under either convention. Docs shorter than
+    ``window + k - 1`` normalized chars yield no fingerprints (no full
+    window exists).
+
+    Returns (doc_id, fingerprint BIGINT) — one row per distinct selected
+    hash.
+    """
     import numpy as np
     import pandas as pd
     from numpy.lib.stride_tricks import sliding_window_view
@@ -278,70 +286,6 @@ def _winnowing_arrow(
         docs.select(F.col(id_col).alias("doc_id"), norm.alias("__s"))
         .filter(F.length("__s") >= k + window - 1)
         .mapInPandas(fp, "doc_id long, fingerprint long")
-    )
-
-
-def winnowing_fingerprints(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    window: int = 4,
-    base: int = 257,
-    mod: int = 1_000_000_007,
-    impl: str = "arrow",
-) -> DataFrame:
-    """Winnowing document fingerprints (Schleimer et al., SIGMOD'03 — the
-    MOSS algorithm): polynomial rolling hashes of the text's k-grams, one
-    selected minimum per sliding window of ``window`` consecutive hashes,
-    deduplicated. The selected set is what plagiarism/near-copy detection
-    stores per document: shift-tolerant (an insertion far from a region
-    leaves that region's selected hashes intact) with guaranteed detection
-    of shared substrings of length >= window + k - 1.
-
-    Everything is integer arithmetic on the whitespace-normalized
-    lower-cased text inside one Catalyst expression (transform/aggregate
-    higher-order functions — no explode of the raw hash stream, no Python,
-    no shuffle), and the identical formula runs in DuckDB for the oracle.
-    Selecting window minima BY VALUE (then distinct) sidesteps the
-    rightmost-vs-leftmost tie rule entirely — the output set is identical
-    under either convention. Docs shorter than ``window + k - 1``
-    normalized chars yield no fingerprints (no full window exists).
-
-    Returns (doc_id, fingerprint BIGINT) — one row per distinct selected
-    hash.
-
-    ``impl='arrow'`` (default): vectorized numpy kernel — the k-gram
-    hashes for a whole document compute as k shifted array passes and the
-    window minima as one stride-tricks view ``.min()``; plan is scan →
-    project → explode, zero shuffles. ``impl='jvm'``: the same formula as
-    pure Catalyst higher-order functions (no Python workers) — O(len·k)
-    interpreted lambda steps per row, the replayable-in-SQL form the
-    DuckDB oracle mirrors; property-tested equal to the arrow kernel.
-    """
-    if impl == "arrow":
-        return _winnowing_arrow(
-            docs, id_col=id_col, text_col=text_col, k=k, window=window,
-            base=base, mod=mod,
-        )
-    hashes = (
-        f"transform(sequence(1, length(__s) - {k - 1}), i -> "
-        f"aggregate(sequence(i, i + {k - 1}), CAST(0 AS BIGINT), "
-        f"(acc, j) -> (acc * {base} + ascii(substr(__s, j, 1))) % {mod}))"
-    )
-    mins = (
-        f"array_distinct(transform(sequence(1, size(__h) - {window - 1}), j -> "
-        f"array_min(slice(__h, j, {window}))))"
-    )
-    norm = F.trim(
-        F.regexp_replace(F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"\s+", " ")
-    )
-    return (
-        docs.select(F.col(id_col).alias("doc_id"), norm.alias("__s"))
-        .filter(F.length("__s") >= k + window - 1)
-        .select("doc_id", F.expr(hashes).alias("__h"))
-        .select("doc_id", F.explode(F.expr(mins)).alias("fingerprint"))
     )
 
 

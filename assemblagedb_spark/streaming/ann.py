@@ -33,7 +33,6 @@ from assemblagedb_spark.operators.pq import (
     _argmin_codes,
     _codebook_literal,
     _codebook_matrices,
-    _pq_encode_agg,
 )
 from assemblagedb_spark.operators.similarity import centroid_matrix
 
@@ -61,11 +60,8 @@ def ivfpq_ingest(
     append-mode safe with zero exchanges): the cosine cell assignment is
     the same matmul + lexsort as `similarity._nearest_cells` (float-
     identical), the residual is exact int64 arithmetic, and the PQ
-    argmin is `pq.pq_encode_arrow`'s vectorized form — which replaced
-    the literal-folded HOF expression this path used before round 6
-    (the m×k interpreted distance terms per row were the dominant cost
-    of the whole ingest gate; the batch build measured the same fix at
-    ~4×). Parity is pinned by the gate (state after N batches ≡ batch
+    argmin is `pq._argmin_codes`, the kernel `pq.pq_encode_arrow` runs.
+    Parity is pinned by the gate (state after N batches ≡ batch
     build) and tests/test_streaming_ann.py."""
     # ONE codebook collect serves both the never-trained check and the
     # encode matrices (an eager count() job here would block the
@@ -86,8 +82,7 @@ def ivfpq_ingest(
     if any(not cb.get(sp) for sp in range(m)):
         raise ValueError(
             "ivfpq_ingest needs every subspace trained: an untrained "
-            "subspace cannot encode a stream (the batch aggregate "
-            f"fallback is {_pq_encode_agg.__name__})."
+            "subspace cannot encode a stream."
         )
     labs, mats = _codebook_matrices(cb, m)
     # ONE centroid collect serves both the float cosine matrix (cell

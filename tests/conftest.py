@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import math
 import os
 import sys
 
@@ -22,3 +23,70 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+# -- plain-Python references for the vector kernels -------------------------
+# rows are (vec_id, vector) pairs as collected from Spark, so float32 inputs
+# arrive as the same doubles the kernels see; NULL vectors are skipped.
+
+
+def _grid(v, scale):
+    """floor(v * scale) per component, or the integers as-is (scale=None)."""
+    return [int(x) if scale is None else math.floor(x * scale) for x in v]
+
+
+def _nearest(x, cents):
+    """Label of the closest (label, cvec) by squared distance; lowest label
+    wins ties."""
+    return min(cents, key=lambda c: (sum((a - b) ** 2 for a, b in zip(x, c[1])), c[0]))[0]
+
+
+def py_pq_train(rows, *, m, sub_dim, k, iters, scale=1000):
+    """Sorted (subspace, label, pos, sum_q, n_vecs) PQ merge state: label j
+    seeds from the j-th lowest id, centroids are floor(sum / n), and a
+    cluster that loses every vector is dropped."""
+    q = sorted((i, _grid(v, scale)) for i, v in rows if v is not None)
+    cut = lambda v, sp: v[sp * sub_dim:(sp + 1) * sub_dim]  # noqa: E731
+    state = [{j: (cut(v, sp), 1) for j, (_, v) in enumerate(q[:k])} for sp in range(m)]
+    for _ in range(iters):
+        nxt = [{} for _ in range(m)]
+        for sp in range(m):
+            cents = [(l, [s // n for s in sums]) for l, (sums, n) in sorted(state[sp].items())]
+            for _, v in q:
+                x = cut(v, sp)
+                label = _nearest(x, cents)
+                sums, n = nxt[sp].get(label, ([0] * sub_dim, 0))
+                nxt[sp][label] = ([a + b for a, b in zip(sums, x)], n + 1)
+        state = nxt
+    return sorted((sp, l, p, s, n) for sp in range(m)
+                  for l, (sums, n) in state[sp].items() for p, s in enumerate(sums))
+
+
+def py_pq_encode(rows, book, *, m, sub_dim, scale=1000):
+    """Sorted (vec_id, subspace, code) against a merge-state codebook."""
+    cents: dict = {}
+    for sp, l, _, s, n in sorted(book):
+        cents.setdefault(sp, {}).setdefault(l, []).append(s // n)
+    return sorted(
+        (i, sp, _nearest(_grid(v, scale)[sp * sub_dim:(sp + 1) * sub_dim], sorted(cents[sp].items())))
+        for i, v in rows if v is not None for sp in range(m)
+    )
+
+
+def py_cosine_topk(rows, query_ids, *, k):
+    """{(query_id, neighbor_id, rank)}: exact cosine as a sequential
+    left-to-right double fold, self excluded, ties to the lower id."""
+    def dot(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += x * y
+        return acc
+
+    vecs = {i: v for i, v in rows if v is not None}
+    out = set()
+    for q in (q for q in query_ids if q in vecs):
+        a = vecs[q]
+        ranked = sorted((-dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))), i)
+                        for i, b in vecs.items() if i != q)
+        out |= {(q, i, r) for r, (_, i) in enumerate(ranked[:k], 1)}
+    return out

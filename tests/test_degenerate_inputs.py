@@ -42,7 +42,7 @@ DuckDB's INT32 arithmetic and, via the minhash product, int64 under
 Spark ANSI mode, and deviating from the reference's UTF-8 byte-gram
 unit on any non-ASCII text. The SQL forms now derive true UTF-8 bytes
 arithmetically from codepoints on both engines (identical to
-grams_array_arrow / index_text on every plane), minhash reduces grams
+the gram-index kernel / index_text on every plane), minhash reduces grams
 mod P before the universal hash, simhash shingles are byte windows, and
 the multimodal oracles measure bytes (strlen) and hash hex renderings
 (BLOBs are not SQL-sliceable).

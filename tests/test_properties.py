@@ -129,22 +129,23 @@ def test_spark_grams_equal_driver_grams(spark, texts):
     )
 )
 def test_arrow_grams_equal_driver_grams(spark, texts):
-    """The numpy sliding-window gram kernel equals byte-exact index_text on
+    """The production gram-index build (block_grams) emits, per text, the
+    exact (gram, occurrences) multiset of byte-exact index_text on
     arbitrary unicode (it grams the UTF-8 bytes, like the reference)."""
-    from pyspark.sql import functions as F
+    from collections import Counter
 
-    from assemblagedb_spark.operators.grams import grams_array_arrow
+    from assemblagedb_spark.operators.grams import block_grams
 
     texts = [t.replace("\x00", " ") for t in texts]
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "i int, text string"
     )
-    got = {
-        r["i"]: r["g"]
-        for r in df.select("i", grams_array_arrow("text").alias("g")).collect()
-    }
+    got: dict[int, dict] = {}
+    for r in block_grams(df, id_col="i").collect():
+        assert r["gram"] not in got.setdefault(r["node_id"], {})
+        got[r["node_id"]][r["gram"]] = r["occurrences"]
     for i, t in enumerate(texts):
-        assert got[i] == index_text(t), repr(t)
+        assert got.get(i) == dict(Counter(index_text(t))), repr(t)
 
 
 @settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.too_slow])
@@ -235,58 +236,82 @@ def test_pagerank_rounds_match_python_reference(spark, pairs):
 
 
 def test_hyperplane_sketch_arrow_equals_jvm(spark):
-    """The Catalyst-HOF hyperplane sketch (the SQL-replayable twin the
-    DuckDB oracles mirror) and the numpy matmul path must emit identical
-    sketch integers — otherwise the HOF form is a silently-drifting
-    reference."""
+    """The numpy matmul sketch equals a per-cell replay of the formula the
+    DuckDB oracles evaluate: bit i set iff the sequential sum of
+    v[d] * (+1 if mix32(i*stride + d, seed) is even else -1) is > 0."""
     import random
 
+    from assemblagedb_spark.functions.core import mix32_py
     from assemblagedb_spark.operators.similarity import (
-        hyperplane_sketch,
+        HYP_DIM_STRIDE,
         hyperplane_sketch_arrow,
     )
+
+    def replay(v, bits, seed=7):
+        out = 0
+        for i in range(bits):
+            acc = 0.0
+            for d, x in enumerate(v):
+                acc += x * (1.0 if mix32_py(i * HYP_DIM_STRIDE + d, seed) % 2 == 0 else -1.0)
+            out += (1 << i) if acc > 0 else 0
+        return out
 
     rng = random.Random(3)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(40)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     a = {r["vec_id"]: r["sketch"]
          for r in hyperplane_sketch_arrow(df, bits=12).collect()}
-    j = {r["vec_id"]: r["sketch"]
-         for r in hyperplane_sketch(df, bits=12).collect()}
-    assert a == j
+    assert a == {i: replay(v, 12) for i, v in rows}
+
+
+# edge texts for the fingerprint kernels: unicode, empty, NULL,
+# single-char, repeated-gram and mixed-whitespace inputs
+_EDGE_TEXTS = [
+    "the quick brown fox jumps over the lazy dog",
+    "", None, "a", "aa", "ab",
+    "Ünïcødé tëxt with ümlaut déjà vu",
+    "x" * 500,
+    "the quick brown fox jumps over the lazy cat",
+    # supplementary-plane (non-BMP) codepoints: Spark strings and DuckDB
+    # both index by codepoint and the kernels decode UTF-8/UTF-32, so
+    # parity must hold on every Unicode plane, not just the BMP
+    "a\U0001F600b",                     # lone emoji between ascii
+    "\U0001F600\U0001F601\U0001F602",   # consecutive non-BMP
+    "\U00010348 h\U0001D11Ello",        # Gothic hwair + musical G clef
+    "mixedé\U0001F600中\U0010FFFF",  # BMP + max codepoint
+    "Grüße aus Köln — äöü ßharfes",
+    "aaaaaaaaaaaaaaaaaa",
+    "mixed   WHITESPACE  and CASE",
+    "tiny",
+]
+
+
+def _edge_docs_vs_oracle(spark, oracle_sql):
+    """(Spark documents frame, oracle rows) over _EDGE_TEXTS: the gate's
+    DuckDB oracle runs on the same texts registered as ``documents``."""
+    import duckdb
+    import pandas as pd
+
+    rows = list(enumerate(_EDGE_TEXTS))
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    want = {tuple(r) for r in con.execute(oracle_sql).fetchall()}
+    con.close()
+    return docs, want
 
 
 def test_simhash_arrow_equals_jvm(spark):
-    """The numpy simhash kernel and the Catalyst HOF form must produce
-    bit-identical fingerprints — unicode, empty, null, single-char and
-    repeated-gram texts included (the winnowing-kernel parity pattern)."""
+    """simhash_fingerprints equals the dedup_simhash gate's DuckDB oracle
+    bit for bit — unicode (every plane), empty, NULL, single-char and
+    repeated-gram texts included."""
+    from assemblagedb_spark import harness
     from assemblagedb_spark.operators.dedup import simhash_fingerprints
 
-    texts = [
-        "the quick brown fox jumps over the lazy dog",
-        "", None, "a", "aa", "ab",
-        "Ünïcødé tëxt with ümlaut déjà vu",
-        "x" * 500,
-        "the quick brown fox jumps over the lazy cat",
-        # supplementary-plane (non-BMP) codepoints: Spark's split('') +
-        # ascii() keeps surrogate pairs together and returns the full
-        # codepoint (verified empirically on Spark 4.1), DuckDB's
-        # substring/ascii and the kernel's utf-32 decode agree — parity
-        # holds per CODEPOINT on every Unicode plane, not just the BMP
-        # (review finding, round 4)
-        "a\U0001F600b",                     # lone emoji between ascii
-        "\U0001F600\U0001F601\U0001F602",   # consecutive non-BMP
-        "\U00010348 h\U0001D11Ello",        # Gothic hwair + musical G clef
-        "mixedé\U0001F600中\U0010FFFF",  # BMP + max codepoint
-    ]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    a = {r["doc_id"]: r["simhash"]
-         for r in simhash_fingerprints(docs, impl="arrow").collect()}
-    j = {r["doc_id"]: r["simhash"]
-         for r in simhash_fingerprints(docs, impl="jvm").collect()}
-    assert a == j
+    docs, want = _edge_docs_vs_oracle(spark, harness.O_DEDUP_SIMHASH)
+    got = {(r["doc_id"], r["simhash"])
+           for r in simhash_fingerprints(docs, bits=32).collect()}
+    assert got == want and len(got) == len(_EDGE_TEXTS) - 1  # NULL: no row
 
 
 @given(
@@ -384,7 +409,7 @@ def test_language_id_ngram_matches_python_replay(spark):
 
 
 def test_winnowing_matches_python_replay_and_shift_tolerance(spark):
-    """The Catalyst winnowing fingerprints equal a direct python replay,
+    """The winnowing fingerprints equal a direct python replay,
     and inserting text at the END leaves the original region's selected
     hashes present (the shift-tolerance that motivates winnowing)."""
     import re
@@ -428,30 +453,21 @@ def test_winnowing_matches_python_replay_and_shift_tolerance(spark):
 
 
 def test_winnowing_arrow_equals_jvm(spark):
-    """The vectorized arrow winnowing kernel and the pure-Catalyst form
-    produce identical (doc_id, fingerprint) sets, incl. non-ASCII text
-    (codepoint arithmetic on both paths)."""
+    """winnowing_fingerprints at the gate's parameters equals the
+    text_winnowing gate's DuckDB oracle on the edge texts, incl. non-ASCII
+    and non-BMP text (codepoint arithmetic on both sides)."""
+    from assemblagedb_spark import harness
     from assemblagedb_spark.operators.textstats import winnowing_fingerprints
 
-    texts = [
-        "the quick brown fox jumps over the lazy dog",
-        "Grüße aus Köln — äöü ßharfes",
-        "aaaaaaaaaaaaaaaaaa",
-        "mixed   WHITESPACE  and CASE",
-        "tiny",
-    ]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    a = {
+    docs, want = _edge_docs_vs_oracle(spark, harness.O_TEXT_WINNOWING)
+    got = {
         (r["doc_id"], r["fingerprint"])
-        for r in winnowing_fingerprints(docs, impl="arrow").collect()
+        for r in winnowing_fingerprints(
+            docs, k=harness._WINNOW_K, window=harness._WINNOW_W,
+            base=harness._WINNOW_B, mod=harness._WINNOW_M,
+        ).collect()
     }
-    j = {
-        (r["doc_id"], r["fingerprint"])
-        for r in winnowing_fingerprints(docs, impl="jvm").collect()
-    }
-    assert a == j and a
+    assert got == want and got
 
 
 def test_chunking_matches_python_replay(spark):

@@ -5,10 +5,10 @@ paths return well-formed per-query rankings."""
 from __future__ import annotations
 
 from assemblagedb_spark.operators.similarity import (
-    cosine_topk,
     ivf_topk,
     lsh_bucketed_topk,
 )
+from tests.conftest import py_cosine_topk, py_pq_encode, py_pq_train
 
 # deterministic "embeddings": 20 vectors of dim 8, values from a tiny LCG
 DIM = 8
@@ -31,12 +31,20 @@ def _emb(spark):
     return spark.createDataFrame(_vecs(), "vec_id long, embedding array<float>")
 
 
+def _rows(df, vec_col="embedding"):
+    """(vec_id, vector) pairs as Spark holds them (float32 -> double)."""
+    return [(r["vec_id"], r[vec_col]) for r in df.collect()]
+
+
+def _ids(df):
+    return [r["vec_id"] for r in df.collect()]
+
+
 def test_ivf_full_probe_equals_exact(spark):
     emb = _emb(spark)
     queries = emb.filter("vec_id % 4 = 0")
     exact = {
-        (r.query_id, r.rank): r.neighbor_id
-        for r in cosine_topk(emb, queries, k=5).collect()
+        (q, rank): n for q, n, rank in py_cosine_topk(_rows(emb), _ids(queries), k=5)
     }
     ivf = {
         (r.query_id, r.rank): r.neighbor_id
@@ -71,7 +79,6 @@ def test_lsh_ranks_dense_and_self_excluded(spark):
 
 
 def test_ivf_topk_with_trained_centroids(spark):
-    from assemblagedb_spark.operators.similarity import cosine_topk, ivf_topk
     from assemblagedb_spark.operators.vectors import kmeans_train
 
     # three well-separated direction clusters; within-cluster neighbors are
@@ -86,10 +93,8 @@ def test_ivf_topk_with_trained_centroids(spark):
     state = kmeans_train(emb, k=3, iters=3)
     queries = emb.filter("vec_id % 8 = 0")
     ivf = ivf_topk(emb, queries, k=3, nprobe=1, centroids=state)
-    exact = cosine_topk(emb, queries, k=3)
     got = {(r["query_id"], r["neighbor_id"], r["rank"]) for r in ivf.collect()}
-    want = {(r["query_id"], r["neighbor_id"], r["rank"]) for r in exact.collect()}
-    assert got == want
+    assert got == py_cosine_topk(_rows(emb), _ids(queries), k=3)
 
 
 def test_cosine_topk_arrow_query_cap_raises(spark):
@@ -110,8 +115,11 @@ def test_cosine_topk_arrow_query_cap_raises(spark):
 
 
 def test_pq_adc_recovers_separated_clusters(spark):
-    from assemblagedb_spark.operators.pq import pq_adc_topk, pq_encode, pq_train
-    from assemblagedb_spark.operators.similarity import cosine_topk
+    from assemblagedb_spark.operators.pq import (
+        pq_adc_topk,
+        pq_encode_arrow,
+        pq_train_arrow,
+    )
 
     # three well-separated clusters in 8 dims; PQ with 2 subspaces of 4.
     # ADC top-k within a cluster must match exact cosine top-k: quantization
@@ -127,86 +135,29 @@ def test_pq_adc_recovers_separated_clusters(spark):
             v = [base[0] + j * 0.01, base[1] - j * 0.01] * 4
             rows.append((vid, v))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    book = pq_train(emb, m=2, sub_dim=4, k=3, iters=3)
-    codes = pq_encode(emb, book, m=2, sub_dim=4)
+    book = pq_train_arrow(emb, m=2, sub_dim=4, k=3, iters=3)
+    codes = pq_encode_arrow(emb, book, m=2, sub_dim=4)
     assert codes.count() == len(rows) * 2
     queries = emb.filter("vec_id < 3")
     adc = pq_adc_topk(codes, book, queries, k=3, m=2, sub_dim=4)
     got = {(r["query_id"], r["neighbor_id"]) for r in adc.collect()}
-    exact = {(r["query_id"], r["neighbor_id"])
-             for r in cosine_topk(emb, queries, k=3).collect()}
+    exact = {(q, n) for q, n, _ in py_cosine_topk(_rows(emb), _ids(queries), k=3)}
     # same neighbor SETS per query (ADC distance ordering within a cluster
     # can permute ranks by quantization, membership cannot change)
     assert got == exact
 
 
-def test_ivfpq_adc_consistent_with_full_adc_on_candidates(spark):
-    # IVFADC ≡ full ADC restricted to probed-cell candidates: for every
-    # query, the ivfpq result is exactly the top-k of the full ADC scores
-    # over pairs sharing a probed cell — cell bounding changes WHICH pairs
-    # score, never their adc_dist or tie order
-    from pyspark.sql import functions as F
-
-    from assemblagedb_spark.operators.pq import (
-        ivfpq_adc_topk,
-        pq_adc_topk,
-        pq_encode,
-        pq_train,
-    )
-    from assemblagedb_spark.operators.similarity import ivf_assign, ivf_probes
-    from assemblagedb_spark.operators.vectors import kmeans_train
-
-    rows = [(i, [float((i * 7 + j * 3) % 13) + (1.0 if i % 3 == j % 3 else 0.0)
-                 for j in range(8)])
-            for i in range(36)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    state = kmeans_train(emb, k=4, iters=2)
-    book = pq_train(emb, m=2, sub_dim=4, k=4, iters=2)
-    codes = pq_encode(emb, book, m=2, sub_dim=4)
-    assign = ivf_assign(emb, centroids=state).withColumnRenamed("c_id", "vec_id")
-    cell_codes = codes.join(assign, "vec_id")
-    queries = emb.filter("vec_id % 6 = 0")
-    probes = ivf_probes(queries, nprobe=2, centroids=state)
-
-    got = sorted(map(tuple, ivfpq_adc_topk(
-        cell_codes, book, queries, probes, k=3, m=2, sub_dim=4
-    ).collect()))
-
-    # reference: full ADC scores, manually restricted to candidate pairs
-    cand = (
-        probes.withColumnRenamed("q_id", "query_id")
-        .join(assign.select("vec_id", "cell"), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-    full = pq_adc_topk(codes, book, queries, k=10**6, m=2, sub_dim=4)
-    from pyspark.sql import Window
-
-    restricted = (
-        full.join(cand, ["query_id", "neighbor_id"])
-        .withColumn("rank", F.row_number().over(
-            Window.partitionBy("query_id")
-            .orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "neighbor_id", "adc_dist",
-                F.col("rank").cast("long").alias("rank"))
-    )
-    want = sorted(map(tuple, restricted.collect()))
-    assert got == want and len(got) > 0
-
-
 def test_residual_ivfpq_consistent_with_all_cell_scan(spark):
     # residual IVFADC ≡ its own all-cells scan restricted to probed-cell
     # candidates: probing changes WHICH pairs score, never their
-    # residual adc_dist or tie order (the residual twin of the raw-layout
-    # consistency pin above)
+    # residual adc_dist or tie order
     from pyspark.sql import Window, functions as F
 
     from assemblagedb_spark.operators.pq import (
         coarse_centroid_vectors,
         ivfpq_adc_topk_residual,
         pq_encode_arrow,
-        pq_train,
+        pq_train_arrow,
         query_residuals,
         residual_vectors,
     )
@@ -221,8 +172,8 @@ def test_residual_ivfpq_consistent_with_all_cell_scan(spark):
     coarse = coarse_centroid_vectors(state)
     assign = ivf_assign(emb, centroids=state).withColumnRenamed("c_id", "vec_id")
     resid = residual_vectors(emb, assign, coarse)
-    book = pq_train(resid, m=2, sub_dim=4, k=4, iters=2,
-                    vec_col="rvec", scale=None)
+    book = pq_train_arrow(resid, m=2, sub_dim=4, k=4, iters=2,
+                          vec_col="rvec", scale=None)
     cell_codes = pq_encode_arrow(resid, book, m=2, sub_dim=4,
                                  vec_col="rvec", scale=None,
                                  carry_cols=("cell",))
@@ -262,71 +213,107 @@ def test_residual_ivfpq_consistent_with_all_cell_scan(spark):
     assert got == want and len(got) > 0
 
 
-def test_pq_train_arrow_matches_expression(spark):
-    # the per-round numpy merge-state trainer must reproduce the
-    # join+groupBy Lloyd loop EXACTLY — same seeds, assignments,
-    # integer sums and dropped-cluster behavior — on the raw grid and on
-    # a pre-quantized residual grid (negative components exercise the
-    # floor-division parity)
+def _residual_frame(emb):
     from assemblagedb_spark.operators.pq import (
         coarse_centroid_vectors,
-        pq_train,
-        pq_train_arrow,
         residual_vectors,
     )
     from assemblagedb_spark.operators.similarity import ivf_assign
     from assemblagedb_spark.operators.vectors import kmeans_train
 
-    rows = [(i, [float((i * 7 + j * 3) % 13) for j in range(8)])
-            for i in range(48)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    a = sorted(map(tuple, pq_train(emb, m=2, sub_dim=4, k=4, iters=2).collect()))
-    b = sorted(map(tuple, pq_train_arrow(emb, m=2, sub_dim=4, k=4, iters=2).collect()))
-    assert a == b and len(a) > 0
-
     state = kmeans_train(emb, k=3, iters=1)
     coarse = coarse_centroid_vectors(state)
     assign = ivf_assign(emb, centroids=state).withColumnRenamed("c_id", "vec_id")
-    resid = residual_vectors(emb, assign, coarse)
-    c = sorted(map(tuple, pq_train(
-        resid, m=2, sub_dim=4, k=4, iters=3, vec_col="rvec", scale=None
-    ).collect()))
+    return residual_vectors(emb, assign, coarse)
+
+
+def test_pq_train_arrow_matches_expression(spark):
+    # the per-round numpy merge-state trainer must reproduce the plain
+    # Python Lloyd loop EXACTLY — same seeds, assignments, integer sums
+    # and dropped-cluster behavior — on the raw grid, on a pre-quantized
+    # residual grid (negative components exercise the floor-division
+    # parity) and on a tie-heavy lattice (lowest label wins)
+    from assemblagedb_spark.operators.pq import pq_train_arrow
+
+    rows = [(i, [float((i * 7 + j * 3) % 13) for j in range(8)])
+            for i in range(48)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    a = py_pq_train(_rows(emb), m=2, sub_dim=4, k=4, iters=2)
+    b = sorted(map(tuple, pq_train_arrow(emb, m=2, sub_dim=4, k=4, iters=2).collect()))
+    assert a == b and len(a) > 0
+
+    resid = _residual_frame(emb)
+    c = py_pq_train(_rows(resid, "rvec"), m=2, sub_dim=4, k=4, iters=3, scale=None)
     d = sorted(map(tuple, pq_train_arrow(
         resid, m=2, sub_dim=4, k=4, iters=3, vec_col="rvec", scale=None
     ).collect()))
     assert c == d and len(c) > 0
 
+    ties = spark.createDataFrame(
+        [(i, [float((i * 5 + j) % 3) for j in range(8)]) for i in range(50)],
+        "vec_id long, embedding array<float>",
+    )
+    # seeds 0 and 3 are the same vector, so round 1 ties every one of its
+    # vectors between labels 0 and 3
+    for iters in (1, 2):
+        e = py_pq_train(_rows(ties), m=2, sub_dim=4, k=4, iters=iters)
+        f = sorted(map(tuple, pq_train_arrow(
+            ties, m=2, sub_dim=4, k=4, iters=iters).collect()))
+        assert e == f and len(e) > 0
+
+
+def test_pq_train_arrow_fewer_vectors_than_k(spark):
+    # a corpus with fewer non-null vectors than k seeds only that many
+    # labels (the oracle's `seeds ... LIMIT k` does the same); the seed
+    # state must be sized by the seeds, not by k
+    from assemblagedb_spark.operators.pq import pq_encode_arrow, pq_train_arrow
+
+    for n in (1, 3):
+        rows = [(i, [float((i * 7 + j * 3) % 13) / 10 for j in range(8)])
+                for i in range(n)] + [(n, None)]
+        emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        for iters in (0, 2):
+            want = py_pq_train(_rows(emb), m=2, sub_dim=4, k=4, iters=iters)
+            book = pq_train_arrow(emb, m=2, sub_dim=4, k=4, iters=iters)
+            assert sorted(map(tuple, book.collect())) == want, (n, iters)
+            assert len(want) == 2 * n * 4
+            codes = sorted(map(tuple, pq_encode_arrow(emb, book, m=2, sub_dim=4).collect()))
+            assert codes == py_pq_encode(_rows(emb), want, m=2, sub_dim=4)
+
 
 def test_pq_encode_arrow_matches_literal_fold(spark):
-    # the numpy encode kernel and the literal-folded expression must emit
-    # bit-identical codes — raw grid, pre-quantized residual grid, and a
-    # tie-heavy lattice (argmin-first vs struct-min tie-break)
-    from assemblagedb_spark.operators.pq import (
-        coarse_centroid_vectors,
-        pq_encode,
-        pq_encode_arrow,
-        pq_train,
-        residual_vectors,
-    )
-    from assemblagedb_spark.operators.similarity import ivf_assign
-    from assemblagedb_spark.operators.vectors import kmeans_train
+    # the numpy encode kernel must emit exactly the plain Python argmin
+    # codes — tie-heavy lattice (argmin-first = lowest label) and
+    # pre-quantized residual grid — as a pure projection (zero exchanges)
+    from assemblagedb_spark.operators.pq import pq_encode_arrow, pq_train_arrow
+    from assemblagedb_spark.plans.explain import count_exchanges
 
     # tie-heavy: few distinct values -> many equidistant codewords
     rows = [(i, [float((i * 5 + j) % 3) for j in range(8)]) for i in range(50)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    book = pq_train(emb, m=2, sub_dim=4, k=4, iters=2)
-    a = sorted(map(tuple, pq_encode(emb, book, m=2, sub_dim=4).collect()))
-    b = sorted(map(tuple, pq_encode_arrow(emb, book, m=2, sub_dim=4).collect()))
+    book = pq_train_arrow(emb, m=2, sub_dim=4, k=4, iters=2)
+    a = py_pq_encode(_rows(emb), book.collect(), m=2, sub_dim=4)
+    enc = pq_encode_arrow(emb, book, m=2, sub_dim=4)
+    b = sorted(map(tuple, enc.collect()))
     assert a == b and len(a) == 100
+    assert count_exchanges(enc) == 0
+    # the seed codebook holds one vector under labels 0 and 3: exact ties
+    seedbook = pq_train_arrow(emb, m=2, sub_dim=4, k=4, iters=0)
+    assert sorted(map(tuple, pq_encode_arrow(emb, seedbook, m=2, sub_dim=4).collect())) \
+        == py_pq_encode(_rows(emb), seedbook.collect(), m=2, sub_dim=4)
 
-    state = kmeans_train(emb, k=3, iters=1)
-    coarse = coarse_centroid_vectors(state)
-    assign = ivf_assign(emb, centroids=state).withColumnRenamed("c_id", "vec_id")
-    resid = residual_vectors(emb, assign, coarse)
-    rbook = pq_train(resid, m=2, sub_dim=4, k=4, iters=2,
-                     vec_col="rvec", scale=None)
-    c = sorted(map(tuple, pq_encode(
-        resid, rbook, m=2, sub_dim=4, vec_col="rvec", scale=None).collect()))
+    raw = spark.createDataFrame(
+        [(i, [float((i * 7 + j * 3) % 13) for j in range(8)]) for i in range(48)],
+        "vec_id long, embedding array<float>",
+    )
+    rawbook = pq_train_arrow(raw, m=2, sub_dim=4, k=4, iters=2)
+    assert sorted(map(tuple, pq_encode_arrow(raw, rawbook, m=2, sub_dim=4).collect())) \
+        == py_pq_encode(_rows(raw), rawbook.collect(), m=2, sub_dim=4)
+
+    resid = _residual_frame(emb)
+    rbook = pq_train_arrow(resid, m=2, sub_dim=4, k=4, iters=2,
+                           vec_col="rvec", scale=None)
+    c = py_pq_encode(_rows(resid, "rvec"), rbook.collect(), m=2, sub_dim=4, scale=None)
     d = sorted(map(tuple, pq_encode_arrow(
         resid, rbook, m=2, sub_dim=4, vec_col="rvec", scale=None
     ).collect()))
@@ -337,51 +324,23 @@ def test_pq_encode_arrow_matches_literal_fold(spark):
     assert sorted(map(tuple, e.select("vec_id", "subspace", "code").collect())) == c
 
 
-def test_pq_encode_projection_matches_agg_path_and_never_shuffles(spark):
-    # the literal-folded encode is a pure projection: same codes as the
-    # broadcast-join + argmin-aggregate plan (incl. tie-breaks on a grid
-    # with many equidistant points), zero exchanges
-    from assemblagedb_spark.operators.pq import (
-        _pq_encode_agg,
-        pq_encode,
-        pq_train,
-    )
-    from assemblagedb_spark.plans.explain import count_exchanges
-
-    rows = [(i, [float((i * 5 + j) % 4) for j in range(8)])
-            for i in range(60)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    book = pq_train(emb, m=2, sub_dim=4, k=4, iters=2)
-    proj = pq_encode(emb, book, m=2, sub_dim=4)
-    agg = _pq_encode_agg(emb, book, m=2, sub_dim=4,
-                         id_col="vec_id", vec_col="embedding", scale=1000)
-    assert sorted(map(tuple, proj.collect())) == sorted(map(tuple, agg.collect()))
-    assert count_exchanges(proj) == 0
-    assert proj.schema.simpleString() == agg.schema.simpleString()
-
-
-def test_pq_encode_budget_fallback_and_ingest_guard(spark, monkeypatch):
-    # over the literal budget pq_encode silently takes the join+agg plan
-    # (same codes). ivfpq_ingest's fused Arrow kernel carries the
-    # codebook in its closure, so the literal budget does NOT bind it —
-    # its genuine can't-encode condition is an untrained subspace, which
-    # must REFUSE (an aggregate fallback is not append-mode ingest)
-    import assemblagedb_spark.operators.pq as pq
+def test_pq_encode_budget_fallback_and_ingest_guard(spark):
+    # ivfpq_ingest's fused Arrow kernel carries the codebook in its
+    # closure; its genuine can't-encode condition is an untrained
+    # subspace, which must REFUSE (an aggregate fallback is not
+    # append-mode ingest)
+    from assemblagedb_spark.operators.pq import pq_train_arrow
     from assemblagedb_spark.operators.vectors import kmeans_train
     from assemblagedb_spark.streaming.ann import ivfpq_ingest
 
     rows = [(i, [float((i * 7 + j * 3) % 13) for j in range(8)])
             for i in range(30)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    book = pq.pq_train(emb, m=2, sub_dim=4, k=4, iters=1)
-    normal = sorted(map(tuple, pq.pq_encode(emb, book, m=2, sub_dim=4).collect()))
-    monkeypatch.setattr(pq, "_ENCODE_LITERAL_MAX_CELLS", 1)
-    fallback = sorted(map(tuple, pq.pq_encode(emb, book, m=2, sub_dim=4).collect()))
-    assert normal == fallback
+    book = pq_train_arrow(emb, m=2, sub_dim=4, k=4, iters=1)
 
     state = kmeans_train(emb, k=4, iters=1)
-    # budget-independent: the fused ingest still encodes (batch frame
-    # stands in for the stream — the kernel is the same projection)
+    # the batch frame stands in for the stream — the kernel is the same
+    # projection
     ingested = ivfpq_ingest(emb, book, state, m=2, sub_dim=4)
     assert ingested.count() == 30 * 2
 
@@ -394,16 +353,16 @@ def test_pq_encode_budget_fallback_and_ingest_guard(spark, monkeypatch):
 
 
 def test_pq_codes_partition_invariant(spark):
-    from assemblagedb_spark.operators.pq import pq_encode, pq_train
+    from assemblagedb_spark.operators.pq import pq_encode_arrow, pq_train_arrow
 
     rows = [(i, [float((i * 7 + j * 3) % 13) for j in range(8)])
             for i in range(40)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    book = pq_train(emb, m=2, sub_dim=4, k=4, iters=2)
-    a = sorted(map(tuple, pq_encode(emb, book, m=2, sub_dim=4).collect()))
-    b = sorted(map(tuple, pq_encode(
-        emb.repartition(11), pq_train(emb.repartition(7), m=2, sub_dim=4,
-                                      k=4, iters=2), m=2, sub_dim=4
+    book = pq_train_arrow(emb, m=2, sub_dim=4, k=4, iters=2)
+    a = sorted(map(tuple, pq_encode_arrow(emb, book, m=2, sub_dim=4).collect()))
+    b = sorted(map(tuple, pq_encode_arrow(
+        emb.repartition(11), pq_train_arrow(emb.repartition(7), m=2, sub_dim=4,
+                                            k=4, iters=2), m=2, sub_dim=4
     ).collect()))
     # integer-grid training + encoding: identical codes on any partitioning
     assert a == b

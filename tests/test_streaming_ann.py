@@ -5,17 +5,15 @@ serving layout."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from assemblagedb_spark.operators.pq import (
     coarse_centroid_vectors,
-    pq_encode,
-    pq_train,
+    pq_train_arrow,
     residual_vectors,
 )
 from assemblagedb_spark.operators.similarity import ivf_assign
 from assemblagedb_spark.operators.vectors import kmeans_train
 from assemblagedb_spark.streaming.ann import ivfpq_ingest
+from tests.conftest import py_pq_encode
 
 
 def _emb_rows(ids):
@@ -30,7 +28,7 @@ def _residual_index(full, state):
         "c_id", "vec_id"
     )
     resid = residual_vectors(full, assign, coarse)
-    book = pq_train(
+    book = pq_train_arrow(
         resid, m=2, sub_dim=4, k=4, iters=2, vec_col="rvec", scale=None
     )
     return resid, book
@@ -72,10 +70,17 @@ def test_streaming_ingest_matches_batch_index_build(spark, tmp_path):
     got = sorted(map(tuple, spark.read.parquet(out).select(
         "vec_id", "subspace", "code", "cell").collect()))
 
-    codes = pq_encode(resid, book, m=2, sub_dim=4, vec_col="rvec", scale=None)
-    want = sorted(map(tuple, codes.join(
-        resid.select("vec_id", "cell"), "vec_id"
-    ).select("vec_id", "subspace", "code", "cell").collect()))
+    # the batch side is the plain Python encode: ivfpq_ingest and
+    # pq_encode_arrow share one argmin kernel, so neither can check the other
+    rrows = resid.collect()
+    cell = {r["vec_id"]: r["cell"] for r in rrows}
+    want = sorted(
+        (vid, sp, code, cell[vid])
+        for vid, sp, code in py_pq_encode(
+            [(r["vec_id"], r["rvec"]) for r in rrows], book.collect(),
+            m=2, sub_dim=4, scale=None,
+        )
+    )
     assert got == want and len(got) == 40 * 2
 
 

@@ -52,7 +52,7 @@ PICKS = [
     ("text_chunk_dedup", "one tokenize+chunk pass; chunk doc-frequency equi-join; per-doc sorted fold reassembly"),
     ("text_surprisal", "one tokenize pass; term-frequency equi-join; corpus total rides as a single-row broadcast"),
     ("tpch_q3", "global top-k via TakeOrderedAndProject (per-partition heaps), rank window only over the k survivors"),
-    ("ann_pq_codes", "one exploded corpus scan joined to the broadcast m x k codebook; integer zip_with distances; corpus never shuffled"),
+    ("ann_pq_codes", "one corpus scan into an Arrow encode kernel holding the m x k codebook in its closure; integer numpy argmin; zero exchanges"),
     ("events_rollup_cascade", "raw scanned once at the finest bucket; coarser levels re-aggregate the previous level's merge state"),
     ("embedding_quantize", "map-only int8 PTQ: per-row abs-max + posexplode, zero exchanges"),
     ("ann_pq_adc", "ADC serving: per-query distance table broadcast against the code table; corpus scored by m integer lookups, partial-sum aggregate"),
