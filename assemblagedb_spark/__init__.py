@@ -7,7 +7,7 @@ re-expresses those capabilities — plus the large-scale training-data-pipeline
 operators (dedup, similarity search, text analysis, multimodal plumbing) — as
 idiomatic Spark DataFrame programs designed for 100 TB scale:
 
-- ``schema``     table schemas (nodes/edges/grams/overlaps/... per SURVEY §1.3)
+- ``schema``     table schemas (nodes/edges per SURVEY §1.3)
 - ``session``    SparkSession factory with scale-tuned defaults
 - ``sources``    parquet table loaders + graph construction + episode export/import
 - ``functions``  pure Catalyst column expressions (gram index, xor ids, hashes)

@@ -655,7 +655,11 @@ class AssemblageDb:
 
     def overlaps(self, id: str):
         """Materialized symmetric overlaps of a block (index.rs:187-192,
-        302-347), recomputed via the Spark set-similarity join."""
+        302-347), recomputed via the Spark set-similarity join, in the
+        reference's total Overlap order: (intersection, a, b) DESC
+        (data.rs:588-596), partner id ascending on a full tie."""
+        from pyspark.sql import functions as F
+
         from assemblagedb_spark.operators.grams import block_grams, gram_counts
         from assemblagedb_spark.operators.overlaps import overlap_pairs
 
@@ -663,7 +667,9 @@ class AssemblageDb:
         pairs = overlap_pairs(g, gram_counts(g))
         rows = (
             pairs.filter(pairs.src_id == id)
-            .orderBy("intersection", ascending=False)
+            .orderBy(
+                F.desc("intersection"), F.desc("a"), F.desc("b"), F.asc("dst_id")
+            )
             .collect()
         )
         return [

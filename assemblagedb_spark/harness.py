@@ -2334,7 +2334,7 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads JVM-side from each doc_id (binary concat/unhex projection,
     width/height/color-type functions of the id), then
     `decode_image_features` PARSES the bytes back with the production
-    decode path (stdlib header parser — fake=False, no stub). The oracle
+    decode path (stdlib header parser). The oracle
     predicts the dimensions arithmetically from doc_id, so a hash match
     proves the parser extracts exactly what the bytes encode — byte
     construction and byte parsing check each other."""
@@ -5352,7 +5352,8 @@ def _pq_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         emb = load_table(spark, sf_dir, "embeddings")
         # train runs the per-round numpy merge-state kernel — measured
         # interleaved A/B at sf0.1: ~0.9s vs ~3.2s for the join+groupBy
-        # Lloyd rounds; bit-identical state (test_pq_train_arrow parity)
+        # Lloyd rounds; bit-identical to the plain-Python reference
+        # (test_pq_train_arrow_matches_python_reference)
         book = pq_train_arrow(
             emb, m=_PQ_M, sub_dim=_PQ_SUBDIM, k=_PQ_K, iters=_PQ_ITERS
         )
@@ -5361,10 +5362,10 @@ def _pq_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         # bench cold-times a rebuild (unpersist is a no-op on checkpoint
         # blocks); the tiny codebook stays checkpoint-pinned to truncate
         # the Lloyd-loop lineage. Encode runs the Arrow kernel — measured
-        # interleaved A/B at sf0.1: 0.4s vs 1.7s for the literal-folded
+        # interleaved A/B at sf0.1: 0.4s vs 1.7s for a literal-folded
         # expression (m=32 evaluates 256 interpreted HOF distance terms
-        # per row, no lambda CSE); parity-pinned bit-identical
-        # (test_pq_encode_arrow_matches_literal_fold)
+        # per row, no lambda CSE); bit-identical to the plain-Python
+        # argmin reference (test_pq_encode_arrow_matches_python_reference)
         codes = pq_encode_arrow(emb, book, m=_PQ_M, sub_dim=_PQ_SUBDIM).persist()
         _PQ_CACHE[key] = (book, codes)
     return _PQ_CACHE[key]
@@ -5655,7 +5656,7 @@ def _ivfpq_index(
     code, cell) inverted lists, repartitioned by cell (the layout that
     is written partitioned BY CELL at scale, so probes partition-prune)
     and persisted. Encode runs the Arrow kernel (pq_encode_arrow —
-    parity-pinned vs the literal-fold expression), which also carries
+    pinned to the plain-Python argmin reference), which also carries
     the cell through the same scan."""
     from assemblagedb_spark.operators.pq import (
         coarse_centroid_vectors,

@@ -271,7 +271,14 @@ def jaccard_from_overlap(
 
 
 def containment_from_overlap(overlap: DataFrame) -> DataFrame:
-    """Asymmetric-containment projection of :func:`ngram_overlap_pairs`."""
+    """Asymmetric-containment projection of :func:`ngram_overlap_pairs`:
+    ``containment_a = |A∩B| / |A|`` and ``containment_b = |A∩B| / |B|``.
+
+    Jaccard under-scores a small document wholly quoted inside a big one;
+    containment is the sub-document/quotation detector a dedup pipeline
+    runs next to jaccard (reference analogue: the asymmetric
+    ``AsymmetricBasedOnSourceOnly`` mode of `find`,
+    assemblage_db/src/index.rs:230-236)."""
     return overlap.select(
         "id_a", "id_b", "inter", "n_a", "n_b",
         (F.col("inter") / F.col("n_a")).alias("containment_a"),
@@ -570,32 +577,4 @@ def fingerprint_near_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
-    )
-
-
-def ngram_containment_pairs(
-    docs: DataFrame,
-    candidates: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Exact ASYMMETRIC containment over distinct 4-gram shingle sets for
-    the given candidate pairs: ``containment_a = |A∩B| / |A|`` and
-    ``containment_b = |A∩B| / |B|``.
-
-    Jaccard under-scores a small document wholly quoted inside a big one
-    (the intersection is dwarfed by the big doc's union); containment is
-    the sub-document/quotation detector a dedup pipeline runs NEXT TO
-    jaccard (reference score analogue: the asymmetric
-    ``AsymmetricBasedOnSourceOnly`` mode of `find`,
-    assemblage_db/src/index.rs:230-236, where the denominator is one
-    side's gram count).
-
-    Scale shape: a pure projection of :func:`ngram_overlap_pairs` (see
-    there for the candidate-below-gram-join ordering and the DISTINCT
-    candidates contract).
-    """
-    return containment_from_overlap(
-        ngram_overlap_pairs(docs, candidates, id_col=id_col, text_col=text_col)
     )

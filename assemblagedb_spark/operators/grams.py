@@ -132,16 +132,6 @@ def gram_diff(before: DataFrame, after: DataFrame) -> DataFrame:
     )
 
 
-def apply_gram_diff(grams: DataFrame, diff: DataFrame) -> DataFrame:
-    """MERGE the delta into the postings (store_grams, index.rs:286-300):
-    delete 0-count rows, upsert the rest. Expressed as anti-join + union —
-    the DataFrame equivalent of Delta's MERGE INTO."""
-    keys = ["node_id", "gram"]
-    untouched = grams.join(diff.select(*keys), keys, "left_anti")
-    upserts = diff.filter(F.col("occurrences") > 0)
-    return untouched.unionByName(upserts)
-
-
 def gram_counts(grams: DataFrame) -> DataFrame:
     """Per-block total gram count (slot 3 ``Count``, ``index.rs:349-356``).
 

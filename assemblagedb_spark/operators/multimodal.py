@@ -16,9 +16,7 @@ for PNG (functions/png.py: full encode/decode/resize), baseline JPEG
 YUV4MPEG2 video (functions/y4m.py: container parse + per-frame luma) —
 each gate-checked end to end against arithmetic DuckDB oracles. PIL /
 ffmpeg, when the environment ships them, extend coverage to the
-remaining compressed formats (12-bit/arithmetic JPEG, H.26x video);
-``fake=True`` selects the deterministic payload-hash stub kept for the
-replayable text-payload harness tables.
+remaining compressed formats (12-bit/arithmetic JPEG, H.26x video).
 """
 
 from __future__ import annotations
@@ -27,42 +25,8 @@ import hashlib
 from typing import Iterator
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image | audio | video
-        T.StructField("payload", T.BinaryType(), True),  # opaque bytes
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("mime", T.StringType(), True),
-                    T.StructField("n_bytes", T.LongType(), True),
-                    T.StructField("source", T.StringType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
-
-IMAGE_FEATURES_SCHEMA = (
-    "media_id long, width int, height int, n_channels int, sha256 string"
-)
 
 FRAME_SAMPLE_SCHEMA = "media_id long, frame_idx int, frame_sha256 string"
-
-
-def _fake_decode(payload: bytes) -> tuple[int, int, int]:
-    """Deterministic fake decoder: dimensions derived from the payload hash.
-    Replace with PIL.Image.open when the codec is available."""
-    h = hashlib.sha256(payload or b"").digest()
-    width = 16 + h[0] % 240
-    height = 16 + h[1] % 240
-    channels = 1 + h[2] % 3
-    return width, height, channels
 
 
 try:  # optional wider-format codec, used when the environment provides it
@@ -129,18 +93,14 @@ def _header_decode(payload: bytes) -> tuple[int, int, int] | None:
     return None
 
 
-def decode_image(payload: bytes, fake: bool = False) -> tuple[int, int, int]:
+def decode_image(payload: bytes) -> tuple[int, int, int]:
     """(width, height, channels) of an encoded image payload.
 
-    With ``fake=True``: the deterministic stub (payload-hash-derived dims) —
-    what the harness gates use for replayability. Otherwise the stdlib
-    header parser decodes PNG/GIF/JPEG directly (no pixel decode — the
-    same lazy read PIL performs for these fields); PIL, when importable
-    (``HAS_IMAGE_CODEC``), covers any remaining container formats.
-    Raises ``NotImplementedError`` only for payloads neither path
+    The stdlib header parser decodes PNG/GIF/JPEG directly (no pixel
+    decode — the same lazy read PIL performs for these fields); PIL, when
+    importable (``HAS_IMAGE_CODEC``), covers any remaining container
+    formats. Raises ``NotImplementedError`` only for payloads neither path
     recognizes."""
-    if fake:
-        return _fake_decode(payload)
     dims = _header_decode(payload or b"")
     if dims is not None:
         return dims
@@ -183,8 +143,8 @@ def png_media_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 def decode_image_features(media: DataFrame) -> DataFrame:
     """REAL-decode feature extraction: (media_id, width, height,
-    n_channels) via :func:`decode_image` with ``fake=False`` — the
-    production path (header parser, PIL fallback) over Arrow batches.
+    n_channels) via :func:`decode_image` — the header parser with its PIL
+    fallback — over Arrow batches.
     Unrecognized payloads surface as NULL dims rather than failing the
     batch (scan-time tolerance a 100 TB ingest needs)."""
 
@@ -354,95 +314,32 @@ def media_table(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def image_features(media: DataFrame, batch_hint: int | None = None) -> DataFrame:
-    """Decode + feature-extract via mapInPandas (Arrow batches).
+def _pixel_codec(codec: str):
+    """(decode, encode, mime) of a pixel codec :func:`resize_images`
+    supports: lossless PNG (functions/png.py) or lossy baseline JPEG
+    (functions/jpeg.py, quality 50 re-encode)."""
+    if codec == "png":
+        from assemblagedb_spark.functions.png import png_decode, png_encode
 
-    Partitioning note for scale: media payloads are large — repartition so a
-    batch of rows fits executor memory (``spark.sql.execution.arrow.
-    maxRecordsPerBatch`` bounds rows/batch; set it with ``batch_hint``).
-    """
-    if batch_hint:
-        media.sparkSession.conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_hint)
-        )
-
-    def extract(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                w, h, c = decode_image(data, fake=True)
-                rows.append(
-                    (media_id, w, h, c, hashlib.sha256(data).hexdigest())
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "n_channels", "sha256"]
-            )
-
-    return media.select("media_id", "payload").mapInPandas(extract, IMAGE_FEATURES_SCHEMA)
-
-
-def resize_images(
-    media: DataFrame, width: int, height: int, codec: str = "fake"
-) -> DataFrame:
-    """Resize transform: payload -> payload.
-
-    ``codec="png"`` is the REAL lossless pixel path: each payload decodes
-    with the stdlib PNG codec (functions/png.py), resizes by the exact
-    nearest-neighbor integer map, and re-encodes — decode, transform,
-    re-encode inside one Arrow batch loop, the shape every pixel-level
-    training transform takes at scale. ``codec="jpeg"`` is the REAL lossy
-    path through the pure-numpy baseline codec (functions/jpeg.py,
-    quality 50 re-encode). ``codec="fake"`` keeps the identity-payload
-    stub for other media formats and for the replayable text-payload
-    harness tables."""
-
-    def resize_fake(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["meta_mime"] = "image/fake"
-            pdf["width"] = width
-            pdf["height"] = height
-            yield pdf[["media_id", "payload", "meta_mime", "width", "height"]]
-
-    def resize_png(batches):
-        import pandas as pd
-
-        from assemblagedb_spark.functions.png import (
-            png_decode,
-            png_encode,
-            resize_nearest,
-        )
-
-        for pdf in batches:
-            out = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    if payload is None:
-                        raise ValueError("NULL payload")
-                    arr = resize_nearest(
-                        png_decode(bytes(payload)),
-                        width=width, height=height,
-                    )
-                    resized = png_encode(arr)
-                except ValueError:
-                    # NULL or non-PNG payload passes through as a NULL
-                    # payload row — schema kept, task alive
-                    resized = None
-                out.append((media_id, resized, "image/png", width, height))
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "payload", "meta_mime", "width", "height"],
-            )
-
-    def resize_jpeg(batches):
-        import pandas as pd
-
+        return png_decode, png_encode, "image/png"
+    if codec == "jpeg":
         from assemblagedb_spark.functions.jpeg import jpeg_decode, jpeg_encode
+
+        return jpeg_decode, lambda arr: jpeg_encode(arr, quality=50), "image/jpeg"
+    raise ValueError(f"unknown pixel codec {codec!r}")
+
+
+def resize_images(media: DataFrame, width: int, height: int, codec: str) -> DataFrame:
+    """Resize transform: payload -> payload. Each payload decodes with
+    ``codec`` ("png" or "jpeg"), resizes by the exact nearest-neighbor
+    integer map, and re-encodes — decode, transform, re-encode inside one
+    Arrow batch loop, the shape every pixel-level training transform takes
+    at scale."""
+    decode, encode, mime = _pixel_codec(codec)
+
+    def resize(batches):
+        import pandas as pd
+
         from assemblagedb_spark.functions.png import resize_nearest
 
         for pdf in batches:
@@ -452,23 +349,21 @@ def resize_images(
                     if payload is None:
                         raise ValueError("NULL payload")
                     arr = resize_nearest(
-                        jpeg_decode(bytes(payload)),
-                        width=width, height=height,
+                        decode(bytes(payload)), width=width, height=height
                     )
-                    resized = jpeg_encode(arr, quality=50)
+                    resized = encode(arr)
                 except ValueError:
-                    # NULL or non-JPEG payload passes through as a NULL
+                    # NULL or undecodable payload passes through as a NULL
                     # payload row — schema kept, task alive
                     resized = None
-                out.append((media_id, resized, "image/jpeg", width, height))
+                out.append((media_id, resized, mime, width, height))
             yield pd.DataFrame(
                 out,
                 columns=["media_id", "payload", "meta_mime", "width", "height"],
             )
 
-    kernel = {"fake": resize_fake, "png": resize_png, "jpeg": resize_jpeg}[codec]
     return media.select("media_id", "payload").mapInPandas(
-        kernel,
+        resize,
         "media_id long, payload binary, meta_mime string, width int, height int",
     )
 

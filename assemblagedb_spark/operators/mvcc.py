@@ -92,19 +92,6 @@ def live_keys(
     return current(df, keys, ts, removed, tiebreak).select(*keys)
 
 
-def merge_compact(
-    df: DataFrame,
-    keys: Sequence[str],
-    ts: str = "ts",
-    removed: str = "is_removed",
-    tiebreak: Sequence[str] = (),
-) -> DataFrame:
-    """Compaction ("empty trash", kv lib.rs:233-277): keep only the latest
-    version of each key and drop tombstoned keys entirely. The caller
-    overwrites the table with this frame (Delta OPTIMIZE-style rewrite)."""
-    return current(df, keys, ts, removed, tiebreak)
-
-
 def last_updated(df: DataFrame, ts: str = "ts") -> DataFrame:
     """Max commit timestamp (kv lib.rs:435-443)."""
     return df.agg(F.max(ts).alias("last_updated"))

@@ -781,14 +781,3 @@ def store_overlaps(
                 "src_id",
             )
     return out
-
-
-def merge_overlaps(existing: DataFrame, recomputed: DataFrame, changed: DataFrame) -> DataFrame:
-    """Replace all overlap rows touching a changed block with the recomputed
-    set (the batch equivalent of the reference's per-write set-diff merge,
-    index.rs:314-347)."""
-    ch = changed.select(F.col("node_id"))
-    keep = existing.join(
-        F.broadcast(ch.withColumnRenamed("node_id", "src_id")), "src_id", "left_anti"
-    ).join(F.broadcast(ch.withColumnRenamed("node_id", "dst_id")), "dst_id", "left_anti")
-    return keep.select(recomputed.columns).unionByName(recomputed)

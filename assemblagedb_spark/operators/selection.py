@@ -79,18 +79,6 @@ def _two_phase_prefix(
     )
 
 
-def global_running_sum(
-    df: DataFrame,
-    order: Sequence[Column],
-    value: Column,
-    out_col: str = "running_sum",
-    num_partitions: int | None = None,
-    pin: bool = True,
-) -> DataFrame:
-    """Inclusive global running sum of ``value`` over the total order."""
-    return _two_phase_prefix(df, order, value, out_col, num_partitions, pin)
-
-
 def global_row_number(
     df: DataFrame,
     order: Sequence[Column],
@@ -125,12 +113,6 @@ def select_token_budget(
         docs, order, F.col(token_col), "cum_tokens", num_partitions, pin
     )
     return ranked.filter(F.col("cum_tokens") <= budget)
-
-
-# Knuth's multiplicative constant (2654435761 = floor(2^32/phi)); the
-# product of any int64 id stays within int64 for ids < 2^33.
-_KNUTH = 2654435761
-_MOD = 2**32
 
 
 def training_order(
@@ -227,34 +209,6 @@ def boilerplate_ngram_stats(
                 .otherwise(F.lit(0))
             ).cast("long").alias("n_boiler_grams"),
         )
-    )
-
-
-def write_training_shards(
-    docs: DataFrame,
-    path: str,
-    *,
-    shard_size: int,
-    order_col: str = "order_idx",
-) -> None:
-    """Materialize a training order (:func:`training_order` output) as
-    contiguous parquet shards: shard k holds order positions
-    [k*shard_size+1, (k+1)*shard_size], rows sorted within the shard.
-
-    A trainer then streams shard directories in shard-number order and
-    gets the exact epoch permutation without any runtime sort; shards are
-    the unit of resume/checkpoint. One range-shuffle on the shard id; each
-    shard is written by the task that owns it.
-    """
-    sharded = docs.withColumn(
-        "shard", ((F.col(order_col) - 1) / F.lit(shard_size)).cast("long")
-    )
-    (
-        sharded.repartition("shard")
-        .sortWithinPartitions("shard", order_col)
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
     )
 
 

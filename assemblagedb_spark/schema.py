@@ -41,49 +41,3 @@ EDGES = T.StructType(
         T.StructField("is_removed", T.BooleanType(), False),
     ]
 )
-
-# Inverted byte-4-gram index at *block* granularity (index.rs:826-835, 745-748).
-GRAMS = T.StructType(
-    [
-        T.StructField("gram", T.LongType(), False),  # u32 big-endian window
-        T.StructField("node_id", T.StringType(), False),
-        T.StructField("occurrences", T.IntegerType(), False),
-    ]
-)
-
-GRAM_COUNTS = T.StructType(
-    [
-        T.StructField("node_id", T.StringType(), False),
-        T.StructField("gram_count", T.IntegerType(), False),
-    ]
-)
-
-# Materialized symmetric similarity edges (index.rs:302-347; data.rs:512-596).
-OVERLAPS = T.StructType(
-    [
-        T.StructField("src_id", T.StringType(), False),
-        T.StructField("dst_id", T.StringType(), False),
-        T.StructField("a", T.IntegerType(), False),  # 255*src/max (u8 range)
-        T.StructField("b", T.IntegerType(), False),
-        T.StructField("intersection", T.IntegerType(), False),
-    ]
-)
-
-BROADCASTS = T.StructType(
-    [
-        T.StructField("broadcast_id", T.StringType(), False),
-        T.StructField("root_id", T.StringType(), False),
-        T.StructField("exported", T.ArrayType(T.StringType()), False),
-        T.StructField("token", T.StringType(), True),
-        T.StructField("last_updated", T.LongType(), False),
-        T.StructField("expiration", T.LongType(), True),
-    ]
-)
-
-SUBSCRIPTIONS = T.StructType(
-    [
-        T.StructField("broadcast_id", T.StringType(), False),
-        T.StructField("namespace", T.StringType(), False),
-        T.StructField("last_updated", T.LongType(), False),
-    ]
-)

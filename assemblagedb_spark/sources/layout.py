@@ -112,19 +112,3 @@ def write_zordered(
         .write.mode("overwrite")
         .parquet(path)
     )
-
-
-def zorder_key_n_col(cols, bits: int = 10):
-    """Morton interleave of N non-negative int columns (column j owns bit
-    positions j, j+N, j+2N, ...) — the n-dimensional generalization of
-    :func:`zorder_key_col` for layouts clustered on 3+ predicates."""
-    from pyspark.sql import functions as F
-
-    n = len(cols)
-    z = F.lit(0).cast("long")
-    for k in range(bits):
-        for j, c in enumerate(cols):
-            z = z + F.shiftleft(
-                F.shiftright(c, k).bitwiseAND(F.lit(1)), k * n + j
-            )
-    return z.cast("long")

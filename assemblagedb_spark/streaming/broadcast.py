@@ -119,24 +119,3 @@ def subscribe_stream(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Standard streaming aggregation: tumbling-window counts with a
-    watermark for late data (the batch-equivalent oracle is
-    harness.q_events_tumbling). ``events`` may be a streaming or batch frame
-    with a timestamp column."""
-    from pyspark.sql import functions as F
-
-    df = events
-    if watermark and df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
-    return df.groupBy(F.window(ts_col, window), "event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_value_cents"),
-    )

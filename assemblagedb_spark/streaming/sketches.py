@@ -1,13 +1,13 @@
-"""Streaming sketch maintenance: keep HLL registers / count-min counters
-current over an unbounded stream with a foreachBatch merge.
+"""Streaming sketch maintenance: keep HLL registers current over an
+unbounded stream with a foreachBatch merge.
 
 The batch operators in :mod:`assemblagedb_spark.operators.sketches` emit
-MERGE STATE (registers merge with MAX, counters with SUM) — precisely the
-shape an incremental sink needs: each micro-batch computes its own tiny
-sketch (one partial aggregate over new rows only), then folds it into the
-stored state with a key-wise MAX/SUM. Cost per batch is O(batch + state
-size), never O(stream length); the stored sketch answers cardinality /
-frequency queries at any moment without rescanning history.
+MERGE STATE (registers merge with MAX) — precisely the shape an
+incremental sink needs: each micro-batch computes its own tiny sketch (one
+partial aggregate over new rows only), then folds it into the stored state
+with a key-wise MAX. Cost per batch is O(batch + state size), never
+O(stream length); the stored sketch answers cardinality queries at any
+moment without rescanning history.
 
 This is the foreachBatch pattern (not ``applyInPandasWithState``) because
 the state is a small RELATION, not per-key session data — merging two
@@ -23,19 +23,15 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 class SketchStore:
     """In-memory (or parquet-backed) merge target for streaming sketches.
 
-    ``merge_hll`` / ``merge_countmin`` are idempotence-friendly: replaying
-    a batch can only re-assert the same MAX (HLL is replay-safe);
-    count-min SUM requires exactly-once batches (foreachBatch provides
-    batch ids for dedup if the sink needs it).
+    ``merge_hll`` is idempotence-friendly: replaying a batch can only
+    re-assert the same MAX (HLL is replay-safe).
     """
 
     def __init__(self, spark: SparkSession, path: str | None = None):
         self.spark = spark
         self.path = path
         self._hll: DataFrame | None = None
-        self._cm: DataFrame | None = None
 
-    # -- HLL ---------------------------------------------------------------
     def merge_hll(self, batch_regs: DataFrame) -> None:
         """Fold a micro-batch's (group..., bucket, register) rows into the
         stored registers with key-wise MAX."""
@@ -56,23 +52,6 @@ class SketchStore:
         assert self._hll is not None, "no batches merged yet"
         return self._hll
 
-    # -- count-min ---------------------------------------------------------
-    def merge_countmin(self, batch_counters: DataFrame) -> None:
-        """Fold (row, col, counter) with key-wise SUM."""
-        if self._cm is None:
-            merged = batch_counters
-        else:
-            merged = (
-                self._cm.unionByName(batch_counters)
-                .groupBy("row", "col")
-                .agg(F.sum("counter").cast("long").alias("counter"))
-            )
-        self._cm = merged.localCheckpoint(eager=True)
-
-    def countmin(self) -> DataFrame:
-        assert self._cm is not None, "no batches merged yet"
-        return self._cm
-
 
 def hll_sink(
     store: SketchStore,
@@ -90,21 +69,5 @@ def hll_sink(
         store.merge_hll(
             hll_registers(batch_df, key_col, group_cols, m=m, seed=seed)
         )
-
-    return sink
-
-
-def countmin_sink(
-    store: SketchStore,
-    item_col: str,
-    *,
-    d: int = 2,
-    w: int = 1024,
-):
-    """foreachBatch function maintaining count-min counters over a stream."""
-    from assemblagedb_spark.operators.sketches import countmin_counters
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        store.merge_countmin(countmin_counters(batch_df, item_col, d=d, w=w))
 
     return sink

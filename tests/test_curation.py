@@ -8,9 +8,9 @@ from pyspark.sql import Window, functions as F
 from assemblagedb_spark.operators.decontam import decontaminate, gram_set
 from assemblagedb_spark.operators.pii import pii_scrub
 from assemblagedb_spark.operators.selection import (
+    _two_phase_prefix,
     boilerplate_ngram_stats,
     global_row_number,
-    global_running_sum,
     select_token_budget,
     training_order,
 )
@@ -129,7 +129,7 @@ def test_global_running_sum_matches_single_partition_window(spark):
         F.col("id").alias("k"),
         (F.pmod(F.col("id") * 7919, F.lit(1000))).alias("v"),
     ).repartition(13)
-    got = global_running_sum(
+    got = _two_phase_prefix(
         df, [F.col("k").asc()], F.col("v"), "rs", num_partitions=8
     )
     w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, 0)
@@ -215,9 +215,9 @@ def test_fixed_size_sample_deterministic_and_layout_invariant(spark):
 
 def test_two_phase_prefix_empty_and_single_row(spark):
     empty = spark.createDataFrame([], "k long, v long")
-    assert global_running_sum(empty, [F.col("k")], F.col("v"), "rs").count() == 0
+    assert _two_phase_prefix(empty, [F.col("k")], F.col("v"), "rs", None).count() == 0
     one = spark.createDataFrame([(1, 42)], "k long, v long")
-    assert global_running_sum(one, [F.col("k")], F.col("v"), "rs").first()["rs"] == 42
+    assert _two_phase_prefix(one, [F.col("k")], F.col("v"), "rs", None).first()["rs"] == 42
 
 
 def test_mixture_sample_targets_and_determinism(spark):

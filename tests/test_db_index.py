@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from assemblagedb_spark.db import AssemblageDb
@@ -118,6 +120,28 @@ def test_overlaps_symmetric(spark):
     bar_overlaps = db.overlaps(bar)
     assert [o["id"] for o in bar_overlaps] == [foo]
     assert bar_overlaps[0]["score"] == pytest.approx(foo_overlaps[0]["score"])
+
+
+def test_overlaps_total_order_on_tied_intersection(spark, monkeypatch):
+    # data.rs:588-596: partners sharing an intersection order by (a, b)
+    # DESC, and identical partners by id. Ids count down, so every partner
+    # is added in reverse of its expected position.
+    ids = iter(range(1000, 0, -1))
+    monkeypatch.setattr(uuid, "uuid4", lambda: uuid.UUID(int=next(ids)))
+    db = AssemblageDb(spark)
+    src = db.add(Node.text_node("This is a sentence about foo."))
+    # (intersection, a, b) vs src: fo (215, 255, 239), ff. (215, 255, 247),
+    # fff. (215, 255, 255)
+    fo2, fo1, ff, fff = (
+        db.add(Node.text_node(t))
+        for t in ["This is a sentence about fo", "This is a sentence about fo",
+                  "This is a sentence about ff.", "This is a sentence about fff."]
+    )
+    for block in (src, fo2, fo1, ff, fff):
+        db.add(Node.list(PAGE, [Child.lazy(block)]))
+    got = db.overlaps(src)
+    assert {o["intersection"] for o in got} == {215}
+    assert [o["id"] for o in got] == [fff, ff, fo1, fo2]
 
 
 def test_overlaps_identical_text_score_one(spark):

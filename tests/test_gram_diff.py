@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from assemblagedb_spark.operators.grams import apply_gram_diff, block_grams, gram_diff
+from assemblagedb_spark.operators.grams import block_grams, gram_diff
 
 
 def idx(spark, rows):
@@ -25,13 +25,20 @@ def test_gram_diff_insert_update_delete(spark):
 
 
 def test_apply_gram_diff_reaches_after_state(spark):
+    # store_grams (index.rs:286-300): a 0-count row deletes an existing
+    # posting, every other row upserts — applied to the before-state the
+    # diff must reach the after-state exactly
     before = idx(spark, [("a", "foo"), ("b", "bar")])
     after = idx(spark, [("a", "food"), ("c", "new")])
-    diff = gram_diff(before, after)
-    merged = apply_gram_diff(before, diff)
-    got = {(r["node_id"], r["gram"], r["occurrences"]) for r in merged.collect()}
-    want = {(r["node_id"], r["gram"], r["occurrences"]) for r in after.collect()}
-    assert got == want
+    state = {(r["node_id"], r["gram"]): r["occurrences"] for r in before.collect()}
+    for r in gram_diff(before, after).collect():
+        key = (r["node_id"], r["gram"])
+        if r["occurrences"]:
+            state[key] = r["occurrences"]
+        else:
+            del state[key]
+    want = {(r["node_id"], r["gram"]): r["occurrences"] for r in after.collect()}
+    assert state == want
 
 
 def test_gram_diff_empty_for_identical_states(spark):

@@ -147,32 +147,6 @@ def test_write_zordered_files_cover_disjoint_z_ranges(spark, tmp_path):
         assert hi1 < lo2  # disjoint z segments file-to-file
 
 
-def test_zorder_key_n_col_generalizes_2d(spark):
-    # n=2 must agree with the dedicated 2-d key (x owns even bits, y odd),
-    # and n=3 must round-trip each coordinate's bits
-    from pyspark.sql import functions as F
-
-    from assemblagedb_spark.sources.layout import zorder_key_col, zorder_key_n_col
-
-    rows = [(x, y, (x * 7 + y) % 8) for x in range(16) for y in range(16)]
-    df = spark.createDataFrame(rows, "x int, y int, w int")
-    two = df.select(
-        zorder_key_col(F.col("x"), F.col("y"), 4).alias("a"),
-        zorder_key_n_col([F.col("x"), F.col("y")], 4).alias("b"),
-    )
-    assert two.filter(F.col("a") != F.col("b")).count() == 0
-
-    three = df.select(
-        "x", "y", "w",
-        zorder_key_n_col([F.col("x"), F.col("y"), F.col("w")], 4).alias("z"),
-    ).collect()
-    for r in three:
-        x = sum(((r["z"] >> (3 * k)) & 1) << k for k in range(4))
-        y = sum(((r["z"] >> (3 * k + 1)) & 1) << k for k in range(4))
-        w = sum(((r["z"] >> (3 * k + 2)) & 1) << k for k in range(4))
-        assert (x, y, w) == (r["x"], r["y"], r["w"] & 15)
-
-
 def test_unbucketed_join_needs_exchanges(spark, no_broadcast):
     # control: the same join without bucketing shuffles both sides
     edges = spark.createDataFrame(

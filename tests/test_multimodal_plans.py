@@ -2,17 +2,15 @@
 
 from __future__ import annotations
 
-import hashlib
-
 import pytest
 from pyspark.sql import functions as F
 
 from assemblagedb_spark.operators.multimodal import (
     decode_image,
-    image_features,
     media_table,
     resize_images,
     sample_frames,
+    synthetic_png_media,
 )
 from assemblagedb_spark.plans.explain import (
     count_exchanges,
@@ -31,9 +29,6 @@ def _media(spark, sf_dir):
 def test_decode_stub_contract():
     with pytest.raises(NotImplementedError):
         decode_image(b"bytes")
-    w, h, c = decode_image(b"bytes", fake=True)
-    assert decode_image(b"bytes", fake=True) == (w, h, c)  # deterministic
-    assert 16 <= w < 256 and 16 <= h < 256 and 1 <= c <= 3
 
 
 def test_media_table_schema(spark, sf_dir):
@@ -44,26 +39,13 @@ def test_media_table_schema(spark, sf_dir):
     assert row["kind"] == "image"
 
 
-def test_image_features_batches(spark, sf_dir):
-    m = _media(spark, sf_dir)
-    feats = image_features(m, batch_hint=8)
-    rows = feats.collect()
-    assert len(rows) == 20
-    # features match a driver-side recomputation (Arrow batch fidelity)
-    payloads = {r["media_id"]: bytes(r["payload"]) for r in m.collect()}
-    for r in rows:
-        w, h, c = decode_image(payloads[r["media_id"]], fake=True)
-        assert (r["width"], r["height"], r["n_channels"]) == (w, h, c)
-        assert r["sha256"] == hashlib.sha256(payloads[r["media_id"]]).hexdigest()
-    # the decode stage must be Arrow-batched Python, not row-at-a-time
-    assert set(python_stages(feats)) == {"MapInPandas"}
-
-
 def test_resize_and_frame_sampling_shapes(spark, sf_dir):
     m = _media(spark, sf_dir)
-    resized = resize_images(m, 224, 224)
+    pngs = synthetic_png_media(load_table(spark, sf_dir, "documents").limit(20))
+    resized = resize_images(pngs, 224, 224, codec="png")
     r = resized.first()
     assert (r["width"], r["height"]) == (224, 224)
+    assert r["payload"] is not None and r["meta_mime"] == "image/png"
 
     frames = sample_frames(m, every_n_bytes=64, max_frames=4)
     pdf = frames.toPandas()
@@ -117,7 +99,7 @@ def test_minhash_stays_jvm_side(spark, sf_dir):
 
 
 def test_decode_image_real_codec_contract():
-    # Contract for the REAL decode path (no fake=True): the stdlib header
+    # Contract for the REAL decode path: the stdlib header
     # parser answers (width, height, channels) for actual PNG/GIF/JPEG
     # bytes — the same lazy header read PIL performs for these fields —
     # so this runs in codec-less containers too (closes VERDICT r5

@@ -235,7 +235,7 @@ def test_pagerank_rounds_match_python_reference(spark, pairs):
     assert got == rank
 
 
-def test_hyperplane_sketch_arrow_equals_jvm(spark):
+def test_hyperplane_sketch_matches_formula_replay(spark):
     """The numpy matmul sketch equals a per-cell replay of the formula the
     DuckDB oracles evaluate: bit i set iff the sequential sum of
     v[d] * (+1 if mix32(i*stride + d, seed) is even else -1) is > 0."""
@@ -301,7 +301,7 @@ def _edge_docs_vs_oracle(spark, oracle_sql):
     return docs, want
 
 
-def test_simhash_arrow_equals_jvm(spark):
+def test_simhash_matches_gate_oracle(spark):
     """simhash_fingerprints equals the dedup_simhash gate's DuckDB oracle
     bit for bit — unicode (every plane), empty, NULL, single-char and
     repeated-gram texts included."""
@@ -452,7 +452,7 @@ def test_winnowing_matches_python_replay_and_shift_tolerance(spark):
     assert replay(base) <= replay(base + " with an appended tail of text")
 
 
-def test_winnowing_arrow_equals_jvm(spark):
+def test_winnowing_matches_gate_oracle(spark):
     """winnowing_fingerprints at the gate's parameters equals the
     text_winnowing gate's DuckDB oracle on the edge texts, incl. non-ASCII
     and non-BMP text (codepoint arithmetic on both sides)."""
@@ -797,7 +797,7 @@ def test_duckdb_grams_select_matches_spark_grams(spark):
 def test_merge_compact_keeps_latest_drops_tombstoned(spark):
     """Compaction (kv lib.rs:233-277): latest version per key survives,
     tombstoned keys vanish entirely."""
-    from assemblagedb_spark.operators.mvcc import merge_compact
+    from assemblagedb_spark.operators.mvcc import current
 
     df = spark.createDataFrame(
         [
@@ -810,7 +810,7 @@ def test_merge_compact_keeps_latest_drops_tombstoned(spark):
         "key string, ts long, is_removed boolean, value string",
     )
     got = {r["key"]: (r["ts"], r["value"])
-           for r in merge_compact(df, ["key"]).collect()}
+           for r in current(df, ["key"]).collect()}
     assert got == {"k1": (2, "b"), "k3": (5, "d")}
 
 

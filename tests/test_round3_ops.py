@@ -100,7 +100,10 @@ def test_bfs_depth_exit_survives_probe_overcount(spark, monkeypatch):
 
 
 def test_ngram_containment_detects_subdocument(spark):
-    from assemblagedb_spark.operators.dedup import ngram_containment_pairs
+    from assemblagedb_spark.operators.dedup import (
+        containment_from_overlap,
+        ngram_overlap_pairs,
+    )
 
     small = "the quick brown fox"
     big = small + " jumps over the lazy dog and keeps running far away"
@@ -108,7 +111,7 @@ def test_ngram_containment_detects_subdocument(spark):
         [(1, small), (2, big)], "doc_id long, text string"
     )
     cand = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    r = ngram_containment_pairs(docs, cand).first()
+    r = containment_from_overlap(ngram_overlap_pairs(docs, cand)).first()
     # every 4-gram of the small doc except its end-padding boundary grams
     # appears in the big doc: containment_a is near 1, containment_b is not
     assert r["containment_a"] > 0.8
@@ -377,8 +380,9 @@ def test_weighted_sample_per_row_rates(spark):
 
 def test_candidate_verify_equals_allpairs_restricted(spark):
     from assemblagedb_spark.operators.dedup import (
-        ngram_containment_pairs,
+        containment_from_overlap,
         ngram_jaccard_pairs,
+        ngram_overlap_pairs,
     )
 
     # the candidate-bounded plan (pair list BELOW the gram join) must be
@@ -404,7 +408,8 @@ def test_candidate_verify_equals_allpairs_restricted(spark):
     # containment consistency on the same pairs: same inter/sizes, and
     # containment_a,b = inter/n_a, inter/n_b exactly
     cont = {(r["id_a"], r["id_b"]): r
-            for r in ngram_containment_pairs(docs, cand).collect()}
+            for r in containment_from_overlap(
+                ngram_overlap_pairs(docs, cand)).collect()}
     assert set(cont) == set(fast)
     for k, (inter, na, nb) in fast.items():
         r = cont[k]

@@ -227,7 +227,7 @@ def _residual_frame(emb):
     return residual_vectors(emb, assign, coarse)
 
 
-def test_pq_train_arrow_matches_expression(spark):
+def test_pq_train_arrow_matches_python_reference(spark):
     # the per-round numpy merge-state trainer must reproduce the plain
     # Python Lloyd loop EXACTLY — same seeds, assignments, integer sums
     # and dropped-cluster behavior — on the raw grid, on a pre-quantized
@@ -281,7 +281,7 @@ def test_pq_train_arrow_fewer_vectors_than_k(spark):
             assert codes == py_pq_encode(_rows(emb), want, m=2, sub_dim=4)
 
 
-def test_pq_encode_arrow_matches_literal_fold(spark):
+def test_pq_encode_arrow_matches_python_reference(spark):
     # the numpy encode kernel must emit exactly the plain Python argmin
     # codes — tie-heavy lattice (argmin-first = lowest label) and
     # pre-quantized residual grid — as a pure projection (zero exchanges)
@@ -324,7 +324,7 @@ def test_pq_encode_arrow_matches_literal_fold(spark):
     assert sorted(map(tuple, e.select("vec_id", "subspace", "code").collect())) == c
 
 
-def test_pq_encode_budget_fallback_and_ingest_guard(spark):
+def test_ivfpq_ingest_encodes_and_refuses_untrained_subspace(spark):
     # ivfpq_ingest's fused Arrow kernel carries the codebook in its
     # closure; its genuine can't-encode condition is an untrained
     # subspace, which must REFUSE (an aggregate fallback is not

@@ -530,23 +530,6 @@ def test_personalized_pagerank_mass_concentrates_near_seeds(spark):
     assert r[1] == max(r.values())
 
 
-def test_write_training_shards_contiguous(spark, tmp_path):
-    from assemblagedb_spark.operators.selection import (
-        training_order,
-        write_training_shards,
-    )
-
-    docs = spark.createDataFrame([(i,) for i in range(100)], "doc_id long")
-    ordered = training_order(docs, num_partitions=4)
-    out = str(tmp_path / "shards")
-    write_training_shards(ordered, out, shard_size=25)
-    back = spark.read.parquet(out)
-    rows = back.select("shard", "order_idx").collect()
-    assert sorted(r["order_idx"] for r in rows) == list(range(1, 101))
-    for r in rows:
-        assert r["shard"] == (r["order_idx"] - 1) // 25
-
-
 def test_countmin_join_estimate_upper_bounds_true_size(spark):
     from assemblagedb_spark.operators.sketches import (
         countmin_counters,

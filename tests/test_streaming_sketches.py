@@ -1,14 +1,10 @@
-"""Streaming sketch maintenance: foreachBatch HLL / count-min merges over
-micro-batches equal the one-shot batch sketch over the union."""
+"""Streaming sketch maintenance: foreachBatch HLL merges over micro-batches
+equal the one-shot batch sketch over the union."""
 
 from __future__ import annotations
 
-from assemblagedb_spark.operators.sketches import countmin_counters, hll_registers
-from assemblagedb_spark.streaming.sketches import (
-    SketchStore,
-    countmin_sink,
-    hll_sink,
-)
+from assemblagedb_spark.operators.sketches import hll_registers
+from assemblagedb_spark.streaming.sketches import SketchStore, hll_sink
 
 
 def _keys_df(spark, keys):
@@ -34,29 +30,4 @@ def test_streaming_hll_merge_equals_batch(spark, tmp_path):
 
     got = sorted(store.hll().collect())
     want = sorted(hll_registers(_keys_df(spark, all_keys), "user_id", m=64).collect())
-    assert got == want
-
-
-def test_streaming_countmin_merge_equals_batch(spark, tmp_path):
-    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
-    s1 = ["a"] * 10 + ["b"] * 3 + [f"x{i}" for i in range(20)]
-    s2 = ["a"] * 5 + [f"y{i}" for i in range(15)]
-    for s in (s1, s2):
-        spark.createDataFrame([(t,) for t in s], "term string").coalesce(
-            1
-        ).write.mode("append").parquet(src)
-
-    store = SketchStore(spark)
-    stream = spark.readStream.schema("term string").parquet(src)
-    q = (
-        stream.writeStream.foreachBatch(countmin_sink(store, "term", d=2, w=64))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = sorted(store.countmin().collect())
-    both = spark.createDataFrame([(t,) for t in s1 + s2], "term string")
-    want = sorted(countmin_counters(both, "term", d=2, w=64).collect())
     assert got == want
