@@ -655,18 +655,19 @@ class AssemblageDb:
 
     def overlaps(self, id: str):
         """Materialized symmetric overlaps of a block (index.rs:187-192,
-        302-347), recomputed via the Spark set-similarity join, in the
-        reference's total Overlap order: (intersection, a, b) DESC
-        (data.rs:588-596), partner id ascending on a full tie."""
+        302-347), recomputed through the ``store_overlaps`` front door for
+        this one block's row, in the reference's total Overlap order:
+        (intersection, a, b) DESC (data.rs:588-596), partner id ascending
+        on a full tie."""
         from pyspark.sql import functions as F
 
-        from assemblagedb_spark.operators.grams import block_grams, gram_counts
-        from assemblagedb_spark.operators.overlaps import overlap_pairs
+        from assemblagedb_spark.operators.grams import block_grams
+        from assemblagedb_spark.operators.overlaps import store_overlaps
 
         g = block_grams(self._blocks_df())
-        pairs = overlap_pairs(g, gram_counts(g))
+        changed = self.spark.createDataFrame([(id,)], "node_id string")
         rows = (
-            pairs.filter(pairs.src_id == id)
+            store_overlaps(g, changed=changed, both_directions=False)
             .orderBy(
                 F.desc("intersection"), F.desc("a"), F.desc("b"), F.asc("dst_id")
             )

@@ -681,11 +681,10 @@ def q_overlaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric materialized overlaps, score > 0.5, self excluded
     (index.rs:302-347), over the doc_id % 5 == 0 block subset.
 
-    Routed through the density-dispatched front door (round-9): on this
-    closed-vocabulary corpus the dispatcher picks the dense matrix kernel
-    — result-identical to the pre-front-door inline dispatch (the
-    dispatch-vacuity pytest pins that the OPEN corpus takes the other
-    branch)."""
+    Routed through the store_overlaps front door: the subset's postings
+    fit the broadcast budget, so it takes the broadcast-CSR kernel — the
+    same route the `overlaps_sparse` gate forces (the front-door pytests
+    pin that every route returns the same relation)."""
     from assemblagedb_spark.operators.overlaps import store_overlaps
 
     # filter the memoized persisted index — the self-join reads the gram
@@ -795,9 +794,9 @@ def q_overlaps_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     g = _doc_gram_index(spark, sf_dir).filter(F.col("node_id") % 5 == 0)
     changed = g.select("node_id").filter(F.col("node_id") % 20 == 0).distinct()
-    # front door: dense-regime strategy on this corpus (only the changed
-    # matrix rows scan the full matrix); over the dense budget it routes
-    # the changed-side-bounded sparse postings join. Per-block totals are
+    # front door: the broadcast-CSR kernel scans only the changed rows
+    # against the whole index; over its budget it routes the
+    # changed-side-bounded postings join. Per-block totals are
     # subset-independent, so reuse the memoized stored counts (slot 3)
     # instead of re-aggregating the postings twice.
     counts = _doc_gram_counts(spark, sf_dir).filter(F.col("node_id") % 5 == 0)

@@ -7,23 +7,47 @@ reverse edge on each affected partner. A node never overlaps its own
 ancestors/descendants (``tests/overlap_add.rs:65-115``) — block granularity
 plus an ancestor anti-join produce this.
 
-Scale design: the naive postings self-join explodes on frequent grams
-(a gram shared by d blocks yields d² join rows). ``overlap_pairs`` therefore
-supports *candidate capping by document frequency*: grams with df above a
-cap are excluded from candidate generation, and the exact intersection is
-then recomputed only for surviving candidate pairs. Because a score > 0.5
-pair shares > half its grams, any such pair still shares at least one gram
-below the cap unless >half its grams are globally frequent — the cap is set
-high enough (default off) that the exact path is used at harness scale; at
-100 TB a MinHash-LSH prefilter (operators/dedup.py) feeds this the candidate
-pairs instead.
+Physical plans, chosen by the one front door :func:`store_overlaps`:
+
+- :func:`overlap_pairs_sparse` — the postings collected to broadcast CSR
+  arrays and scanned one block row at a time with an integer gather; no
+  shuffle. Used whenever the expanded postings fit the broadcast budget.
+- :func:`overlap_pairs_prefix` — the exact prefix+positional-filtered
+  candidate plan, all key-partitioned equi-joins, for an index that
+  outgrows any broadcast.
+- :func:`overlap_pairs` with ``changed`` — the postings join restricted to
+  changed blocks, for incremental maintenance past the broadcast budget.
+
+Every plan returns the same exact relation: both directions, u8-floored
+scores per ``data.rs:521-529`` (:func:`search.overlap_columns`).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from assemblagedb_spark.operators.search import OVERLAP_MIN_SCORE
+from assemblagedb_spark.operators.search import OVERLAP_MIN_SCORE, overlap_columns
+
+_SCAN_CHUNK = 8  # rows per work unit; chunking amortizes Arrow round-trips
+
+
+def _mirror(out: DataFrame, *, distinct: bool) -> DataFrame:
+    """Add the reverse edge of every overlap row (index.rs:302-347 keeps
+    both). Pins ``out`` first: the union reads it twice, and unpinned the
+    whole pair computation would run once per branch. ``distinct`` drops
+    the duplicates a changed subset produces, whose changed-changed pairs
+    are computed from both ends."""
+    out = out.localCheckpoint(eager=True)
+    rev = out.select(
+        F.col("dst_id").alias("src_id"),
+        F.col("src_id").alias("dst_id"),
+        F.col("b").alias("a"),
+        F.col("a").alias("b"),
+        "intersection",
+        "score",
+    )
+    out = out.unionByName(rev)
+    return out.distinct() if distinct else out
 
 
 def overlap_pairs(
@@ -32,18 +56,17 @@ def overlap_pairs(
     *,
     min_score: float = OVERLAP_MIN_SCORE,
     changed: DataFrame | None = None,
-    excluded_pairs: DataFrame | None = None,
-    both_directions: bool = True,
-    broadcast_grams: bool = False,
 ) -> DataFrame:
-    """All block pairs with overlap score > ``min_score``.
+    """All block pairs with overlap score > ``min_score``, both directions,
+    from the postings self-join on ``gram``.
 
     grams: (node_id, gram, occurrences); counts: (node_id, gram_count).
     ``changed`` (optional, column ``node_id``) restricts the *source* side —
     the incremental-maintenance path (reference recomputes only changed
-    blocks' overlaps). ``excluded_pairs`` (src_id, dst_id) is anti-joined
-    (ancestor/descendant exclusion). Returns
-    (src_id, dst_id, a, b, intersection, score).
+    blocks' overlaps); the changed postings are broadcast, so the index side
+    stays in its scan partitions, and the reverse edges onto untouched
+    partners are mirrored. Returns (src_id, dst_id, a, b, intersection,
+    score).
     """
     left = grams
     if changed is not None:
@@ -55,31 +78,20 @@ def overlap_pairs(
         "gram",
         F.col("occurrences").alias("occ_a"),
     )
+    if changed is not None:
+        l = F.broadcast(l)
     r = grams.select(
         F.col("node_id").alias("dst_id"),
         "gram",
         F.col("occurrences").alias("occ_b"),
     )
-    if broadcast_grams:
-        # small-index regime: broadcast the smaller relation so the other
-        # side stays in its scan partitions and the pair partial-aggregation
-        # combines locally per partition instead of per gram-shuffle slice.
-        # With a ``changed`` subset the changed-block postings are the small
-        # side; in the full self-join it's the probe copy. At large scale
-        # leave this off — the gram-key shuffle join is the plan that
-        # survives a corpus that doesn't fit one executor.
-        if changed is not None:
-            l = F.broadcast(l)
-        else:
-            r = F.broadcast(r)
     # When both sides are the whole index the result is symmetric: compute
     # only ordered pairs (half the join/aggregation volume) and mirror at
     # the end. With a ``changed`` subset the sides differ, so keep both
-    # orientations (reverse-edge maintenance adds the mirrors).
-    symmetric_halving = changed is None
+    # orientations; the mirror then adds the partners' reverse edges.
     pair_filter = (
         (F.col("src_id") < F.col("dst_id"))
-        if symmetric_halving
+        if changed is None
         else (F.col("src_id") != F.col("dst_id"))
     )
     inter = (
@@ -90,211 +102,11 @@ def overlap_pairs(
     )
     ca = counts.select(F.col("node_id").alias("src_id"), F.col("gram_count").alias("source_count"))
     cb = counts.select(F.col("node_id").alias("dst_id"), F.col("gram_count").alias("match_count"))
-    scored = (
-        inter.join(ca, "src_id")
-        .join(cb, "dst_id")
-        .withColumn("a", F.expr("(255 * source_count) div greatest(source_count, match_count)").cast("int"))
-        .withColumn("b", F.expr("(255 * match_count) div greatest(source_count, match_count)").cast("int"))
-        .withColumn(
-            "intersection",
-            F.expr("(255 * intersection_raw) div greatest(source_count, match_count)").cast("int"),
-        )
-        .withColumn("score", F.col("intersection") / F.least("a", "b"))
-        .filter(F.col("score") > min_score)
+    scored = overlap_columns(inter.join(ca, "src_id").join(cb, "dst_id")).filter(
+        F.col("score") > min_score
     )
-    if excluded_pairs is not None:
-        scored = scored.join(excluded_pairs, ["src_id", "dst_id"], "left_anti")
     out = scored.select("src_id", "dst_id", "a", "b", "intersection", "score")
-    if (symmetric_halving or changed is not None) and both_directions:
-        # mirror: symmetric halving restores the (dst, src) rows; with a
-        # changed subset this is the reverse-edge maintenance of
-        # index.rs:302-347 (partners get the mirrored overlap row).
-        rev = out.select(
-            F.col("dst_id").alias("src_id"),
-            F.col("src_id").alias("dst_id"),
-            F.col("b").alias("a"),
-            F.col("a").alias("b"),
-            "intersection",
-            "score",
-        )
-        out = out.unionByName(rev)
-        if changed is not None:
-            out = out.distinct()
-    return out
-
-
-_DENSE_CHUNK = 8  # rows per work unit; chunking amortizes Arrow round-trips
-
-
-def _u8_scores(c_i, c, i_raw, rng, i, min_score):
-    """Shared u8-floored scoring for the broadcast kernels: one block's raw
-    intersections against every block → (keep, a, b, intersection, score)
-    per data.rs:521-529. SINGLE-SOURCED so the dense and sparse kernels
-    cannot drift apart in score semantics (route invariance is a pinned
-    contract of the front door)."""
-    import numpy as np
-
-    mx = np.maximum(c_i, c)
-    mx_safe = np.where(mx == 0, 1, mx)
-    a = 255 * c_i // mx_safe
-    b = 255 * c // mx_safe
-    inter = 255 * i_raw // mx_safe
-    mn = np.minimum(a, b)
-    score = np.where(mn == 0, 0.0, inter / np.where(mn == 0, 1, mn))
-    keep = (score > min_score) & (rng != i)
-    return keep, a, b, inter, score
-
-
-def _emit_pairs_batch(acc, idl):
-    """Assemble one Arrow batch from accumulated per-row keeps (the shared
-    tail of both broadcast kernels); per-row yields cost more in
-    serialization than the whole numpy pass."""
-    import numpy as np
-    import pandas as pd
-
-    return pd.DataFrame(
-        {
-            "src_id": np.concatenate([np.repeat(idl[t[0]], len(t[2])) for t in acc]),
-            "dst_id": np.concatenate([idl[t[1]] for t in acc]),
-            "a": np.concatenate([t[2] for t in acc]).astype("int32"),
-            "b": np.concatenate([t[3] for t in acc]).astype("int32"),
-            "intersection": np.concatenate([t[4] for t in acc]).astype("int32"),
-            "score": np.concatenate([t[5] for t in acc]),
-        }
-    )
-
-
-def _mirror_changed_distinct(out: DataFrame) -> DataFrame:
-    """Reverse-edge maintenance for the broadcast kernels' changed path:
-    pin the kernel output (the union reads it twice), mirror, and distinct
-    (changed-changed pairs are computed from both ends)."""
-    out = out.localCheckpoint(eager=True)
-    rev = out.select(
-        F.col("dst_id").alias("src_id"),
-        F.col("src_id").alias("dst_id"),
-        F.col("b").alias("a"),
-        F.col("a").alias("b"),
-        "intersection",
-        "score",
-    )
-    return out.unionByName(rev).distinct()
-
-
-def overlap_pairs_dense(
-    grams: DataFrame,
-    *,
-    min_score: float = OVERLAP_MIN_SCORE,
-    max_dense_cells: int = 64_000_000,
-    max_nnz: int = 8_000_000,
-    changed: DataFrame | None = None,
-    precounted_nnz: int | None = None,
-) -> DataFrame | None:
-    """Dense-regime physical strategy for the symmetric overlap self-join.
-
-    When the corpus sits in the *dense-overlap regime* — few distinct grams,
-    most block pairs sharing most of their grams — the postings join emits
-    ~sum(df²) rows and the inverted index is the wrong plan (at harness
-    scale: 1156 distinct grams × 1000 blocks → 77M join rows for 615k output
-    pairs). Here the multiset intersection has a closed form over dense count
-    vectors::
-
-        sum_g min(a_g, b_g) = (|a| + |b| - L1(a - b)) / 2
-
-    so the whole self-join collapses to pairwise L1 over a (blocks × vocab)
-    count matrix. The matrix is collected and broadcast exactly like the
-    build side of a broadcast-hash join, and each task computes its slice of
-    rows against the full matrix with vectorized numpy (Arrow-batched
-    ``mapInPandas``) — no shuffle at all.
-
-    Returns ``None`` when the matrix exceeds the broadcast budget; callers
-    then use :func:`overlap_pairs`, the plan that survives a 100 TB corpus
-    (vocab 2^32, sparse overlap). Same exact integer semantics as
-    ``overlap_pairs`` (u8 normalization per ``data.rs:521-529``), both
-    directions emitted.
-
-    ``changed`` (column ``node_id``) restricts the *source* rows of the L1
-    pass — the incremental-maintenance regime (index.rs:302-347 recomputes
-    only changed blocks' overlaps). Only |changed| matrix rows are scanned
-    against the full matrix; the reverse edges onto affected partners are
-    mirrored from the computed half, exactly like the sparse path.
-    """
-    import numpy as np
-    import pandas as pd
-
-    # one cheap count() guards the collect; vocab/block sizes are derived
-    # from the collected batch itself (a countDistinct pre-pass costs more
-    # than the whole kernel). The front door passes its stats aggregate's
-    # row count through ``precounted_nnz`` so the guard costs no extra job.
-    nnz = grams.count() if precounted_nnz is None else precounted_nnz
-    if nnz > max_nnz:
-        return None
-
-    spark = grams.sparkSession
-    # Arrow transfer + factorize: the collect is the build side of a
-    # broadcast join, not a driver-side compute loop
-    pdf = grams.select("node_id", "gram", "occurrences").toArrow().to_pandas()
-    if len(pdf) == 0:
-        return None
-    node_codes, id_index = pd.factorize(pdf["node_id"])
-    gram_codes, _ = pd.factorize(pdf["gram"])
-    if len(id_index) * (gram_codes.max() + 1) > max_dense_cells:
-        return None
-    occ = pdf["occurrences"].to_numpy()
-    # int16 halves-again the memory traffic of the L1 pass; per-block gram
-    # counts beyond int16 range force the sparse path (never at block scale:
-    # a block is one paragraph)
-    if occ.max() >= 2**15:
-        return None
-    mat = np.zeros((len(id_index), gram_codes.max() + 1), dtype=np.int16)
-    mat[node_codes, gram_codes] = occ
-    id_list = id_index.to_numpy()
-    tot = mat.sum(axis=1, dtype=np.int64)  # gram_count per block
-    if changed is None:
-        sel = np.arange(len(id_list))
-    else:
-        # bounded by the same budget as the matrix collect (a subset of its
-        # row ids); scan only changed rows against the full matrix
-        ch = changed.select("node_id").toArrow().to_pandas()["node_id"].to_numpy()
-        sel = np.flatnonzero(np.isin(id_list, ch))
-    b_mat = spark.sparkContext.broadcast((mat, tot, id_list, sel))
-
-    id_type = dict(grams.dtypes)["node_id"]
-    out_schema = (
-        f"src_id {id_type}, dst_id {id_type}, a int, b int, "
-        "intersection int, score double"
-    )
-
-    def kernel(batches):
-        m, c, idl, sl = b_mat.value
-        n = len(c)
-        rng = np.arange(n)
-        for pdf_in in batches:
-            acc = []
-            for start_i in pdf_in["i"].to_numpy():
-                for i in sl[start_i : start_i + _DENSE_CHUNK]:
-                    l1 = np.abs(m - m[i]).sum(axis=1, dtype=np.int64)
-                    i_raw = (c[i] + c - l1) // 2
-                    keep, a, b, inter, score = _u8_scores(
-                        c[i], c, i_raw, rng, i, min_score
-                    )
-                    if keep.any():
-                        acc.append((i, keep, a[keep], b[keep], inter[keep], score[keep]))
-            if not acc:
-                continue
-            yield _emit_pairs_batch(acc, idl)
-
-    starts = list(range(0, len(sel), _DENSE_CHUNK))
-    if not starts:
-        return spark.createDataFrame([], out_schema)
-    par = min(spark.sparkContext.defaultParallelism, len(starts))
-    idx = spark.createDataFrame([(s,) for s in starts], "i int")
-    out = idx.repartition(par).mapInPandas(kernel, out_schema)
-    if changed is not None:
-        # an unpinned mapInPandas would re-run the dense L1 pass for each
-        # union branch — exactly the work the changed-row restriction
-        # exists to avoid (review finding, round 4); the helper pins first
-        out = _mirror_changed_distinct(out)
-    return out
+    return _mirror(out, distinct=changed is not None)
 
 
 def overlap_pairs_sparse(
@@ -303,12 +115,11 @@ def overlap_pairs_sparse(
     min_score: float = OVERLAP_MIN_SCORE,
     max_sparse_nnz: int = 64_000_000,
     changed: DataFrame | None = None,
-    precounted_expanded: int | None = None,
 ) -> DataFrame | None:
-    """Open-vocabulary sibling of :func:`overlap_pairs_dense`: the same
-    broadcast + chunked-scan strategy, but over a COMPRESSED SPARSE
-    representation, for corpora whose vocabulary blows the dense matrix
-    budget while the postings themselves still fit a broadcast.
+    """Broadcast-CSR strategy for the symmetric overlap self-join: the
+    postings are collected and broadcast like the build side of a
+    broadcast-hash join, and each task scans its slice of block rows
+    against them with vectorized numpy (Arrow-batched ``mapInPandas``).
 
     Identity that makes the sparse kernel exact: expanding each block's
     gram multiset to (gram, copy) elements (copy k present iff
@@ -321,23 +132,23 @@ def overlap_pairs_sparse(
     corpus grows, which is exactly the regime where the round-8 exact
     batch was a structural DNF (the postings JOIN materialized the same
     mass as shuffled rows; this scan keeps it in a per-task integer
-    gather).
+    gather). On the closed-vocabulary gate corpus it also beats a dense
+    count-matrix L1 kernel at sf0.1 and sf1-class (SCALING_R10.md).
 
     Returns ``None`` when the expanded postings exceed ``max_sparse_nnz``
     (broadcast budget ~8 bytes/element); callers fall back to the
-    distributed prefix plan. Output/semantics identical to
-    :func:`overlap_pairs_dense` (both directions, u8-floored score,
-    ``changed`` restricts scanned rows with mirrored reverse edges).
+    distributed plans. Emits both directions, u8-floored scores;
+    ``changed`` (column ``node_id``) restricts the scanned rows — the
+    incremental-maintenance regime — and the scan itself emits the reverse
+    edge onto every partner no row of the scan covers, so the output needs
+    no mirror pass or distinct.
     """
     import numpy as np
     import pandas as pd
 
-    if precounted_expanded is not None:
-        expanded = precounted_expanded
-    else:
-        expanded = grams.agg(
-            F.sum("occurrences").cast("long").alias("n")
-        ).collect()[0]["n"]
+    expanded = grams.agg(
+        F.sum("occurrences").cast("long").alias("n")
+    ).collect()[0]["n"]
     if expanded is not None and expanded > max_sparse_nnz:
         return None
     spark = grams.sparkSession
@@ -357,14 +168,13 @@ def overlap_pairs_sparse(
     # on the driver for up to max_sparse_nnz elements
     rep = np.repeat(np.arange(len(pdf)), occ)
     starts = np.cumsum(occ) - occ
-    copy = np.arange(rep.size, dtype=np.int64) - starts[rep] + 1
+    copy = np.arange(rep.size, dtype=np.int64) - starts[rep]  # 0-based
     node_codes, id_index = pd.factorize(pdf["node_id"])
-    blocks = rep  # row index per incidence
-    elem_keys = pd.MultiIndex.from_arrays(
-        [pdf["gram"].to_numpy()[rep], copy]
-    )
-    elem_codes, _ = pd.factorize(elem_keys)
-    bid = node_codes[blocks]
+    gram_codes, _ = pd.factorize(pdf["gram"])
+    # one int64 key per (gram, copy): factorizing it is ~10x faster than
+    # a MultiIndex of the pairs (3.3 s → 0.2 s at sf1-class, one thread)
+    elem_codes, _ = pd.factorize(gram_codes[rep] * np.int64(occ.max()) + copy)
+    bid = node_codes[rep]
     # CSR by element: postings[eptr[e]:eptr[e+1]] = block ids holding e
     order = np.argsort(elem_codes, kind="stable")
     postings = bid[order].astype(np.int32)
@@ -391,11 +201,15 @@ def overlap_pairs_sparse(
     def kernel(batches):
         post, ep, be, bp, c, idl, sl = b_csr.value
         n = len(c)
-        rng = np.arange(n)
+        scanned = np.zeros(n, dtype=bool)
+        scanned[sl] = True
         for pdf_in in batches:
+            # per scanned row: (src, dst, a, b, intersection, score) arrays,
+            # concatenated into one Arrow batch (per-row yields cost more
+            # in serialization than the whole numpy pass)
             acc = []
             for start_i in pdf_in["i"].to_numpy():
-                for i in sl[start_i : start_i + _DENSE_CHUNK]:
+                for i in sl[start_i : start_i + _SCAN_CHUNK]:
                     es = be[bp[i] : bp[i + 1]]
                     if len(es) == 0:
                         continue
@@ -403,24 +217,48 @@ def overlap_pairs_sparse(
                         [post[ep[e] : ep[e + 1]] for e in es]
                     )
                     i_raw = np.bincount(gathered, minlength=n).astype(np.int64)
-                    keep, a, b, inter, score = _u8_scores(
-                        c[i], c, i_raw, rng, i, min_score
-                    )
-                    if keep.any():
-                        acc.append((i, keep, a[keep], b[keep], inter[keep], score[keep]))
+                    d = np.flatnonzero(i_raw)
+                    d = d[d != i]
+                    # u8 floors of overlap_columns; c[i] ≥ 1 since es is
+                    # non-empty, and a zero min(a, b) scores NULL there
+                    mx = np.maximum(c[i], c[d])
+                    a = 255 * c[i] // mx
+                    b = 255 * c[d] // mx
+                    inter = 255 * i_raw[d] // mx
+                    mn = np.minimum(a, b)
+                    score = inter / np.where(mn == 0, 1, mn)
+                    k = (mn > 0) & (score > min_score)
+                    if k.any():
+                        acc.append(
+                            (np.full(k.sum(), i), d[k], a[k], b[k], inter[k], score[k])
+                        )
+                    # reverse edges (index.rs:302-347) onto unscanned
+                    # partners; a scanned partner emits its own row
+                    r = k & ~scanned[d]
+                    if r.any():
+                        acc.append(
+                            (d[r], np.full(r.sum(), i), b[r], a[r], inter[r], score[r])
+                        )
             if not acc:
                 continue
-            yield _emit_pairs_batch(acc, idl)
+            src, dst, a, b, inter, score = (np.concatenate(x) for x in zip(*acc))
+            yield pd.DataFrame(
+                {
+                    "src_id": idl[src],
+                    "dst_id": idl[dst],
+                    "a": a.astype("int32"),
+                    "b": b.astype("int32"),
+                    "intersection": inter.astype("int32"),
+                    "score": score,
+                }
+            )
 
-    starts = list(range(0, len(sel), _DENSE_CHUNK))
+    starts = list(range(0, len(sel), _SCAN_CHUNK))
     if not starts:
         return spark.createDataFrame([], out_schema)
     par = min(spark.sparkContext.defaultParallelism, len(starts))
     idx = spark.createDataFrame([(s,) for s in starts], "i int")
-    out = idx.repartition(par).mapInPandas(kernel, out_schema)
-    if changed is not None:
-        out = _mirror_changed_distinct(out)
-    return out
+    return idx.repartition(par).mapInPandas(kernel, out_schema)
 
 
 def overlap_pairs_prefix(
@@ -428,13 +266,12 @@ def overlap_pairs_prefix(
     counts: DataFrame | None = None,
     *,
     min_score: float = OVERLAP_MIN_SCORE,
-    excluded_pairs: DataFrame | None = None,
     both_directions: bool = True,
 ) -> DataFrame:
     """EXACT symmetric overlaps via prefix-filtered candidates — the plan
-    for corpora whose vocabulary is too large for the dense matrix and
-    whose Zipf head makes the naive postings self-join ~B² (every pair
-    shares head grams). Same output as :func:`overlap_pairs` with
+    for corpora whose postings are too large for any broadcast and whose
+    Zipf head makes the naive postings self-join ~B² (every pair shares
+    head grams). Same output as :func:`overlap_pairs` with
     ``changed=None``; only the physical strategy differs.
 
     The filter (ppjoin-family, Xiao et al. WWW'08, adapted to this
@@ -483,8 +320,8 @@ def overlap_pairs_prefix(
     in 631s. Partition sizing, not the plan; a real cluster runs with
     thousands of shuffle partitions and AQE does this sizing by default.
     The 46x gap vs the sparse kernel's 13.6s on the same subset is why
-    the front door prefers the broadcast kernels whenever they fit; on
-    corpora both too large for every broadcast AND this dense, exact
+    the front door prefers the broadcast kernel whenever it fits; on
+    corpora both too large for the broadcast AND this dense, exact
     all-pairs overlap is intrinsically candidate-bound — route
     maintenance through ``changed`` (incremental) or the candidate-
     bounded LSH family instead.
@@ -623,33 +460,12 @@ def overlap_pairs_prefix(
                 "0L, (acc, v) -> acc + v)"
             ),
         )
-        .withColumn("a", F.expr("(255 * source_count) div greatest(source_count, match_count)").cast("int"))
-        .withColumn("b", F.expr("(255 * match_count) div greatest(source_count, match_count)").cast("int"))
-        .withColumn(
-            "intersection",
-            F.expr("(255 * intersection_raw) div greatest(source_count, match_count)").cast("int"),
-        )
-        .withColumn("score", F.col("intersection") / F.least("a", "b"))
-        .filter(F.col("score") > min_score)
     )
-    if excluded_pairs is not None:
-        scored = scored.join(excluded_pairs, ["src_id", "dst_id"], "left_anti")
-    out = scored.select("src_id", "dst_id", "a", "b", "intersection", "score")
+    out = overlap_columns(scored).filter(F.col("score") > min_score).select(
+        "src_id", "dst_id", "a", "b", "intersection", "score"
+    )
     if both_directions:
-        # pin before mirroring: the union reads `out` once directly and
-        # once through `rev`; unpinned, the candidate+verify pipeline
-        # would execute twice (same reasoning as overlap_pairs_dense's
-        # changed path)
-        out = out.localCheckpoint(eager=True)
-        rev = out.select(
-            F.col("dst_id").alias("src_id"),
-            F.col("src_id").alias("dst_id"),
-            F.col("b").alias("a"),
-            F.col("a").alias("b"),
-            "intersection",
-            "score",
-        )
-        out = out.unionByName(rev)
+        out = _mirror(out, distinct=False)
     return out
 
 
@@ -661,113 +477,67 @@ def store_overlaps(
     changed: DataFrame | None = None,
     excluded_pairs: DataFrame | None = None,
     both_directions: bool = True,
-    max_dense_cells: int = 64_000_000,
-    max_nnz: int = 8_000_000,
     max_sparse_nnz: int = 64_000_000,
     dispatch_out: dict | None = None,
 ) -> DataFrame:
     """THE front door for materialized overlaps (round-8 verdict #3): one
     entry with the reference's exact semantics (score > 0.5, reverse
     edges, exclusion anti-join; ``assemblage_db/src/index.rs:302-347``),
-    dispatching the physical strategy by measured corpus density instead
-    of leaving the choice to each caller.
+    choosing the physical strategy instead of leaving it to each caller.
 
-    Route, from ONE cheap stats aggregate over the gram relation
-    (rows / distinct grams / distinct blocks):
+    Routes:
 
-    - ``dense`` — the broadcast count-matrix L1 kernel
-      (:func:`overlap_pairs_dense`), when blocks × vocab fits the
-      broadcast budget: the closed-vocabulary regime, where the postings
-      join would emit ~sum(df²) rows for output that a vectorized scan
-      computes shuffle-free.
     - ``sparse`` — the broadcast-CSR bincount kernel
-      (:func:`overlap_pairs_sparse`), when the vocabulary outgrows the
-      dense matrix but the expanded postings still fit a broadcast: the
-      open-vocabulary single-machine-index regime — the round-8 50k-doc
-      open corpus, a structural DNF for the exact postings JOIN, computes
-      here in seconds because the same pair-sharing mass is an integer
-      gather instead of a shuffle.
+      (:func:`overlap_pairs_sparse`), whenever the expanded postings fit
+      ``max_sparse_nnz``: the single-machine-index regime, closed or open
+      vocabulary — the round-8 50k-doc open corpus, a structural DNF for
+      the exact postings JOIN, computes here in seconds because the same
+      pair-sharing mass is an integer gather instead of a shuffle.
     - ``prefix`` — the exact prefix+positional-filtered candidate plan
-      (:func:`overlap_pairs_prefix`), when the index outgrows any
+      (:func:`overlap_pairs_prefix`), when the index outgrows the
       broadcast: the fully distributed plan; candidates collapse on
       corpora whose rare elements are discriminative, and degrade toward
       ALL-PAIRS when block multisets are long and share mid-rank
       elements (measured, round 9: 10k 500-word Zipfian blocks → 29.6M
       candidates = 59% of all pairs for 610k true output — see the
       density note in :func:`overlap_pairs_prefix`). The route ordering
-      encodes that measurement: broadcast kernels are always preferred
-      while they fit.
-    - ``sparse-incremental`` — the df-bounded postings join restricted to
+      encodes that measurement: the broadcast kernel is always preferred
+      while it fits.
+    - ``sparse-incremental`` — the postings join restricted to
       ``changed`` blocks (:func:`overlap_pairs`), when a changed set is
-      given and no broadcast kernel fits: only changed-block postings
+      given and the broadcast does not fit: only changed-block postings
       probe the index.
 
     ``dispatch_out`` (optional dict) receives ``{"route": <name>}`` —
-    the branch-vacuity hook (tests pin that both corpus families actually
-    take different branches).
+    the branch-vacuity hook (tests pin that the budget moves the route).
 
     ``excluded_pairs`` and ``both_directions`` are applied HERE, after the
     chosen kernel, never inside it: the kernels differ in which
-    orientation they compute first (dense/sparse emit both directions,
-    the join plans mirror a canonical half), so a kernel-side anti-join
-    would make exclusion orientation-sensitive per route — the front
-    door's route-invariance contract forbids that. Post-kernel, exclusion
-    removes exactly the listed (src, dst) orientations on every route,
-    and ``both_directions=False`` keeps the same canonical half on every
-    route (src < dst for the full self-join; the changed-side orientation
-    in incremental mode).
+    orientation they compute first (the sparse kernel emits both
+    directions, the join plans mirror a canonical half), so a kernel-side
+    anti-join would make exclusion orientation-sensitive per route — the
+    front door's route-invariance contract forbids that. Post-kernel,
+    exclusion removes exactly the listed (src, dst) orientations on every
+    route, and ``both_directions=False`` keeps the same canonical half on
+    every route (src < dst for the full self-join; the changed-side
+    orientation in incremental mode).
     """
-    stats = grams.agg(
-        F.count(F.lit(1)).alias("nnz"),
-        F.countDistinct("gram").alias("vocab"),
-        F.countDistinct("node_id").alias("blocks"),
-        F.sum("occurrences").cast("long").alias("expanded"),
-    ).collect()[0]
-    dense_ok = (
-        stats["nnz"] <= max_nnz
-        and stats["blocks"] * stats["vocab"] <= max_dense_cells
+    out = overlap_pairs_sparse(
+        grams, min_score=min_score, max_sparse_nnz=max_sparse_nnz, changed=changed
     )
-    out = None
-    if dense_ok:
-        out = overlap_pairs_dense(
-            grams,
-            min_score=min_score,
-            max_dense_cells=max_dense_cells,
-            max_nnz=max_nnz,
-            changed=changed,
-            precounted_nnz=stats["nnz"],
-        )
-        if out is not None and dispatch_out is not None:
-            dispatch_out["route"] = "dense"
-    if out is None:
-        out = overlap_pairs_sparse(
-            grams,
-            min_score=min_score,
-            max_sparse_nnz=max_sparse_nnz,
-            changed=changed,
-            precounted_expanded=stats["expanded"],
-        )
-        if out is not None and dispatch_out is not None:
-            dispatch_out["route"] = "sparse"
-    if out is None:
+    route = "sparse"
+    if out is None and changed is None:
+        route = "prefix"
+        out = overlap_pairs_prefix(grams, counts, min_score=min_score)
+    elif out is None:
+        route = "sparse-incremental"
         if counts is None:
             counts = grams.groupBy("node_id").agg(
                 F.sum("occurrences").cast("long").alias("gram_count")
             )
-        if changed is not None:
-            if dispatch_out is not None:
-                dispatch_out["route"] = "sparse-incremental"
-            out = overlap_pairs(
-                grams,
-                counts,
-                min_score=min_score,
-                changed=changed,
-                broadcast_grams=True,
-            )
-        else:
-            if dispatch_out is not None:
-                dispatch_out["route"] = "prefix"
-            out = overlap_pairs_prefix(grams, counts, min_score=min_score)
+        out = overlap_pairs(grams, counts, min_score=min_score, changed=changed)
+    if dispatch_out is not None:
+        dispatch_out["route"] = route
     if excluded_pairs is not None:
         out = out.join(excluded_pairs, ["src_id", "dst_id"], "left_anti")
     if not both_directions:

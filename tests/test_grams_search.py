@@ -114,14 +114,14 @@ def test_gram_counts(spark):
     assert gram_counts(g).collect()[0]["gram_count"] == len("foobar") + 3
 
 
-def test_overlap_pairs_dense_matches_shuffle_path(spark):
-    # the dense L1-identity kernel is a physical strategy, not a new
+def test_overlap_pairs_sparse_matches_shuffle_path(spark):
+    # the broadcast-CSR kernel is a physical strategy, not a new
     # operator: same pairs, same exact u8-normalized ints as the postings
     # join, both directions
     from assemblagedb_spark.operators.grams import gram_counts
     from assemblagedb_spark.operators.overlaps import (
         overlap_pairs,
-        overlap_pairs_dense,
+        overlap_pairs_sparse,
     )
 
     texts = [
@@ -132,28 +132,28 @@ def test_overlap_pairs_dense_matches_shuffle_path(spark):
         ("e", ""),
     ]
     g = block_grams(blocks_df(spark, texts))
-    sparse = {
+    shuffle = {
         (r["src_id"], r["dst_id"]): (r["a"], r["b"], r["intersection"])
         for r in overlap_pairs(g, gram_counts(g)).collect()
     }
-    dense_df = overlap_pairs_dense(g)
-    assert dense_df is not None
-    dense = {
+    kernel_df = overlap_pairs_sparse(g)
+    assert kernel_df is not None
+    kernel = {
         (r["src_id"], r["dst_id"]): (r["a"], r["b"], r["intersection"])
-        for r in dense_df.collect()
+        for r in kernel_df.collect()
     }
-    assert sparse == dense
-    assert ("a", "d") in dense  # identical text pair present, both ways
-    assert ("d", "a") in dense
+    assert shuffle == kernel
+    assert ("a", "d") in kernel  # identical text pair present, both ways
+    assert ("d", "a") in kernel
 
 
-def test_overlap_pairs_dense_incremental_matches_shuffle_path(spark):
-    # changed-subset regime: dense kernel scans only changed rows, mirrors
+def test_overlap_pairs_sparse_incremental_matches_shuffle_path(spark):
+    # changed-subset regime: the kernel scans only changed rows, mirrors
     # reverse edges — identical to overlap_pairs(changed=...) incl. scores
     from assemblagedb_spark.operators.grams import gram_counts
     from assemblagedb_spark.operators.overlaps import (
         overlap_pairs,
-        overlap_pairs_dense,
+        overlap_pairs_sparse,
     )
 
     texts = [
@@ -168,30 +168,30 @@ def test_overlap_pairs_dense_incremental_matches_shuffle_path(spark):
     changed = g.sparkSession.createDataFrame(
         [("a",), ("e",), ("f",)], "node_id string"
     )
-    sparse = {
+    shuffle = {
         (r["src_id"], r["dst_id"]): (r["a"], r["b"], r["intersection"], r["score"])
         for r in overlap_pairs(g, gram_counts(g), changed=changed).collect()
     }
-    dense_df = overlap_pairs_dense(g, changed=changed)
-    assert dense_df is not None
-    dense = {
+    kernel_df = overlap_pairs_sparse(g, changed=changed)
+    assert kernel_df is not None
+    kernel = {
         (r["src_id"], r["dst_id"]): (r["a"], r["b"], r["intersection"], r["score"])
-        for r in dense_df.collect()
+        for r in kernel_df.collect()
     }
-    assert sparse == dense
-    assert len(dense) > 0
+    assert shuffle == kernel
+    assert len(kernel) > 0
     # reverse edge onto an untouched partner is present
-    assert ("d", "a") in dense
+    assert ("d", "a") in kernel
     # untouched-pair overlaps (b,d etc.) are never rescored
-    assert all("a" in p or "e" in p for p in dense)
+    assert all("a" in p or "e" in p for p in kernel)
 
 
-def test_overlap_pairs_dense_incremental_empty_changed(spark):
-    from assemblagedb_spark.operators.overlaps import overlap_pairs_dense
+def test_overlap_pairs_sparse_incremental_empty_changed(spark):
+    from assemblagedb_spark.operators.overlaps import overlap_pairs_sparse
 
     g = block_grams(blocks_df(spark, [("a", "foo bar baz"), ("b", "foo bar baz")]))
     changed = g.sparkSession.createDataFrame([], "node_id string")
-    out = overlap_pairs_dense(g, changed=changed)
+    out = overlap_pairs_sparse(g, changed=changed)
     assert out is not None and out.count() == 0
 
 
@@ -236,8 +236,8 @@ def test_merge_overlaps_equals_full_recompute_after_edit(spark):
     assert recomputed != stale
 
 
-def test_overlap_pairs_dense_guard_returns_none(spark):
-    from assemblagedb_spark.operators.overlaps import overlap_pairs_dense
+def test_overlap_pairs_sparse_guard_returns_none(spark):
+    from assemblagedb_spark.operators.overlaps import overlap_pairs_sparse
 
     g = block_grams(blocks_df(spark, [("a", "foo"), ("b", "bar")]))
-    assert overlap_pairs_dense(g, max_nnz=1) is None
+    assert overlap_pairs_sparse(g, max_sparse_nnz=1) is None

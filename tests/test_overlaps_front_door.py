@@ -1,14 +1,14 @@
 """store_overlaps front door (round-9, verdict #3): one entry point for
-materialized overlaps that dispatches the physical strategy by measured
-corpus density. The pins here are the two properties the front door must
-never lose:
+materialized overlaps that picks the physical strategy by the broadcast
+budget. The pins here are the two properties the front door must never
+lose:
 
-1. ROUTE INVARIANCE — every route (dense matrix, sparse CSR kernel,
-   distributed prefix plan, changed-restricted incremental) returns the
-   SAME exact relation on the same input. Exactness is the reference's
-   contract (index.rs:302-347); the route is only a physical choice.
+1. ROUTE INVARIANCE — every route (broadcast-CSR kernel, distributed
+   prefix plan, changed-restricted incremental) returns the SAME exact
+   relation on the same input. Exactness is the reference's contract
+   (index.rs:302-347); the route is only a physical choice.
 2. DISPATCH VACUITY — the dispatcher actually takes different branches as
-   the corpus density crosses the budgets (a front door that always picks
+   the expanded postings cross the budget (a front door that always picks
    one branch is decoration).
 """
 
@@ -48,25 +48,23 @@ def test_route_invariance(spark, grams):
     routes = {}
     frames = {}
     for name, kwargs in (
-        ("dense", {}),
-        ("sparse", {"max_dense_cells": 0}),
-        ("prefix", {"max_dense_cells": 0, "max_sparse_nnz": 0}),
+        ("sparse", {}),
+        ("prefix", {"max_sparse_nnz": 0}),
     ):
         disp = {}
         out = store_overlaps(grams, counts, dispatch_out=disp, **kwargs)
         routes[name] = disp["route"]
         frames[name] = _frame(out)
-    assert routes == {"dense": "dense", "sparse": "sparse", "prefix": "prefix"}
-    assert len(frames["dense"]) > 0, "vacuous fixture: no overlapping pairs"
-    pd.testing.assert_frame_equal(frames["dense"], frames["sparse"])
-    pd.testing.assert_frame_equal(frames["dense"], frames["prefix"])
-    # and all three equal the naive reference plan (overlap_pairs)
+    assert routes == {"sparse": "sparse", "prefix": "prefix"}
+    assert len(frames["sparse"]) > 0, "vacuous fixture: no overlapping pairs"
+    pd.testing.assert_frame_equal(frames["sparse"], frames["prefix"])
+    # and both equal the naive reference plan (overlap_pairs)
     naive = _frame(
         overlap_pairs(grams, counts).select(
             "src_id", "dst_id", "a", "b", "intersection", "score"
         )
     )
-    pd.testing.assert_frame_equal(frames["dense"], naive)
+    pd.testing.assert_frame_equal(frames["sparse"], naive)
 
 
 def test_route_invariance_changed(spark, grams):
@@ -74,9 +72,8 @@ def test_route_invariance_changed(spark, grams):
     changed = grams.select("node_id").filter(F.col("node_id") % 20 == 0).distinct()
     outs = {}
     for name, kwargs in (
-        ("dense", {}),
-        ("sparse", {"max_dense_cells": 0}),
-        ("sparse-incremental", {"max_dense_cells": 0, "max_sparse_nnz": 0}),
+        ("sparse", {}),
+        ("sparse-incremental", {"max_sparse_nnz": 0}),
     ):
         disp = {}
         out = store_overlaps(
@@ -84,9 +81,8 @@ def test_route_invariance_changed(spark, grams):
         )
         assert disp["route"] == name
         outs[name] = _frame(out)
-    assert len(outs["dense"]) > 0
-    pd.testing.assert_frame_equal(outs["dense"], outs["sparse"])
-    pd.testing.assert_frame_equal(outs["dense"], outs["sparse-incremental"])
+    assert len(outs["sparse"]) > 0
+    pd.testing.assert_frame_equal(outs["sparse"], outs["sparse-incremental"])
 
 
 def test_exclusion_applied_on_every_route(spark, grams):
@@ -102,7 +98,7 @@ def test_exclusion_applied_on_every_route(spark, grams):
     s, d = one[0]["src_id"], one[0]["dst_id"]
     excl = spark.createDataFrame([(s, d)], "src_id long, dst_id long")
     mirror = spark.createDataFrame([(d, s)], "src_id long, dst_id long")
-    for kwargs in ({}, {"max_dense_cells": 0}, {"max_dense_cells": 0, "max_sparse_nnz": 0}):
+    for kwargs in ({}, {"max_sparse_nnz": 0}):
         out = store_overlaps(grams, counts, excluded_pairs=excl, **kwargs)
         assert out.join(excl, ["src_id", "dst_id"]).count() == 0
         assert out.join(mirror, ["src_id", "dst_id"]).count() == 1
@@ -128,9 +124,8 @@ def test_changed_single_direction_and_exclusion_are_route_invariant(spark, grams
     excl = spark.createDataFrame([(s, d)], "src_id long, dst_id long")
     frames = {}
     for name, kwargs in (
-        ("dense", {}),
-        ("sparse", {"max_dense_cells": 0}),
-        ("sparse-incremental", {"max_dense_cells": 0, "max_sparse_nnz": 0}),
+        ("sparse", {}),
+        ("sparse-incremental", {"max_sparse_nnz": 0}),
     ):
         out = store_overlaps(
             grams, counts, changed=changed, both_directions=False,
@@ -140,27 +135,24 @@ def test_changed_single_direction_and_exclusion_are_route_invariant(spark, grams
         assert all(r["src_id"] in ch_ids for r in rows), name
         assert all((r["src_id"], r["dst_id"]) != (s, d) for r in rows), name
         frames[name] = _frame(out)
-    assert len(frames["dense"]) > 0
-    pd.testing.assert_frame_equal(frames["dense"], frames["sparse"])
-    pd.testing.assert_frame_equal(frames["dense"], frames["sparse-incremental"])
+    assert len(frames["sparse"]) > 0
+    pd.testing.assert_frame_equal(frames["sparse"], frames["sparse-incremental"])
 
 
 def test_single_direction_is_route_invariant(spark, grams):
     # both_directions=False returns the SAME canonical half (src < dst)
-    # on every route, even though dense/sparse kernels natively emit both
+    # on every route, even though the sparse kernel natively emits both
     counts = h.gram_counts(grams)
     frames = {}
     for name, kwargs in (
-        ("dense", {}),
-        ("sparse", {"max_dense_cells": 0}),
-        ("prefix", {"max_dense_cells": 0, "max_sparse_nnz": 0}),
+        ("sparse", {}),
+        ("prefix", {"max_sparse_nnz": 0}),
     ):
         out = store_overlaps(grams, counts, both_directions=False, **kwargs)
         assert out.filter(F.col("src_id") >= F.col("dst_id")).count() == 0
         frames[name] = _frame(out)
-    assert len(frames["dense"]) > 0
-    pd.testing.assert_frame_equal(frames["dense"], frames["sparse"])
-    pd.testing.assert_frame_equal(frames["dense"], frames["prefix"])
+    assert len(frames["sparse"]) > 0
+    pd.testing.assert_frame_equal(frames["sparse"], frames["prefix"])
 
 
 def test_sparse_kernel_multiset_exactness(spark):
@@ -189,19 +181,17 @@ def test_sparse_kernel_multiset_exactness(spark):
 
 
 def test_dispatcher_budget_is_density_not_rowcount(spark, grams):
-    # the dense budget is blocks x vocab cells: the SAME postings with the
-    # cell budget shrunk below the fixture's footprint must route away
-    # from dense without changing results — i.e. the dispatch reads the
-    # stats aggregate, not a hardcoded branch
+    # the broadcast budget counts EXPANDED (gram, copy) elements, not
+    # postings rows: the SAME postings with the budget one element below
+    # the fixture's footprint must route away from the kernel, and at the
+    # footprint must take it — i.e. the dispatch reads the kernel's own
+    # occurrence sum, not a hardcoded branch
     counts = h.gram_counts(grams)
-    stats = grams.agg(
-        F.countDistinct("gram").alias("v"),
-        F.countDistinct("node_id").alias("b"),
-    ).collect()[0]
-    cells = stats["v"] * stats["b"]
+    expanded = grams.agg(F.sum("occurrences").alias("n")).collect()[0]["n"]
+    assert expanded > grams.count(), "vacuous fixture: no repeated gram"
     disp = {}
-    store_overlaps(grams, counts, max_dense_cells=cells - 1, dispatch_out=disp)
-    assert disp["route"] != "dense"
+    store_overlaps(grams, counts, max_sparse_nnz=expanded - 1, dispatch_out=disp)
+    assert disp["route"] == "prefix"
     disp2 = {}
-    store_overlaps(grams, counts, max_dense_cells=cells, dispatch_out=disp2)
-    assert disp2["route"] == "dense"
+    store_overlaps(grams, counts, max_sparse_nnz=expanded, dispatch_out=disp2)
+    assert disp2["route"] == "sparse"

@@ -154,8 +154,8 @@ def decade_up(sf1_dir: str, out_md: str, keys: list | None = None) -> None:
         "round 8 to nlist ≈ √N (RECALL.md nlist sweep), whose sf1 times "
         "sit near flat here. `overlaps` is exact ALL-PAIRS block overlap "
         "on a corpus where every block pair genuinely shares grams: the "
-        "dense-regime kernel is B²-intrinsic (pairwise L1 over the "
-        "broadcast count matrix — no plan fixes an output-complete "
+        "broadcast-CSR kernel's gather is B²-intrinsic here (every block "
+        "row meets every other — no plan fixes an output-complete "
         "quadratic), and the open-vocabulary section below adjudicates "
         "both corpus regimes in depth; the engine's open-web shapes for "
         "the same job are the candidate-bounded dedup family and "
@@ -198,7 +198,7 @@ OPEN_KEYS = [
 # structural DNF, so only 2 points ran. Round 9's store_overlaps front
 # door routes that corpus to the broadcast-CSR bincount kernel
 # (overlap_pairs_sparse) — exact, measured in seconds — so all 3 points
-# run now; the cap remains the guard if a future corpus outgrows every
+# run now; the cap remains the guard if a future corpus outgrows the
 # broadcast kernel (the row then pads DNF).
 OVERLAPS_OPEN_MAX = 3  # first N open dirs
 
@@ -352,18 +352,16 @@ def open_vocab_mode(out_md: str, open_root: str = "/tmp") -> None:
     )
     lines += [
         "",
-        "`overlaps` here is the round-9 store_overlaps FRONT DOOR "
-        "(density-dispatched): on the closed corpus it routes the "
-        "dense-matrix kernel (~1k distinct grams); on the open corpus "
-        "the ~250k distinct grams exceed the dense budget (2.5B cells) "
-        "and it routes the broadcast-CSR bincount kernel "
+        "`overlaps` here is the store_overlaps FRONT DOOR: on both "
+        "corpora the expanded postings fit the broadcast budget, so it "
+        "routes the broadcast-CSR bincount kernel "
         "(overlap_pairs_sparse) — EXACT multiset intersections via the "
         "(gram, copy) binary expansion, no shuffle, no join. Round-8 "
         "history: the exact postings JOIN made the 50k open point a "
         "structural DNF (df ≈ n_blocks on every Zipf-head gram → df² "
         "join rows); the same pair-sharing mass as a per-task integer "
         "gather completes in seconds, so the row now carries a real "
-        "measured 50k point. Past any broadcast kernel's budget the "
+        "measured 50k point. Past the broadcast kernel's budget the "
         "front door falls to the distributed prefix+positional plan "
         "(exact, all equi-joins) and, for maintenance, "
         "overlaps_incremental — only changed blocks rescored; the "
