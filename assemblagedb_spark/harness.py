@@ -433,10 +433,7 @@ def q_graph_descendants(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _graph_edges(spark, sf_dir, include_lineitem=False)
     roots = spark.createDataFrame([("R0",)], "node_id string")
     # the FK hierarchy is a leveled forest (every node one parent, one path)
-    # — the visited anti-join and per-level distinct would be dead weight
-    return descendants(
-        e, roots, max_depth=3, assume_forest=True, broadcast_frontier=True
-    ).select(
+    return descendants(e, roots, max_depth=3).select(
         "node_id", F.col("depth").cast("long")
     )
 
@@ -457,17 +454,15 @@ def q_graph_descendants_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     but never expanded. Links = nation→customer edges whose customer key is
     divisible by 4 — those customers appear in the closure, their orders do
     not."""
-    from assemblagedb_spark.operators.traversal import descendants_until_links
-
     e = _graph_edges(spark, sf_dir, include_lineitem=False).withColumn(
         "is_link",
         F.col("child_id").startswith("C")
         & (F.regexp_extract("child_id", r"^C(\d+)$", 1).cast("long") % 4 == 0),
     )
     roots = spark.createDataFrame([("R1",)], "node_id string")
-    return descendants_until_links(
-        e, roots, max_depth=3, broadcast_frontier=True
-    ).select("node_id", F.col("depth").cast("long"))
+    return descendants(e, roots, max_depth=3, link_col="is_link").select(
+        "node_id", F.col("depth").cast("long")
+    )
 
 
 O_GRAPH_DESCENDANTS_LINKS = f"""
@@ -496,9 +491,7 @@ def q_graph_ancestor_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    return ancestors(
-        e, starts, exact_depth=4, assume_forest=True, broadcast_frontier=True
-    ).select(
+    return ancestors(e, starts, depth=4).select(
         "start_id", "ancestor_id", F.col("depth").cast("long")
     )
 
@@ -532,9 +525,7 @@ def q_view_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    anc = ancestors(
-        e, starts, exact_depth=4, assume_forest=True, broadcast_frontier=True
-    )
+    anc = ancestors(e, starts, depth=4)
     path = F.array_join(
         F.transform(
             F.array_sort(F.collect_list(F.struct("depth", "ancestor_id"))),
@@ -2233,12 +2224,15 @@ def q_graph_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orphan reachability (the distributed form of the swap obsolete-subtree
     fixpoint, core.rs:440-471): graph nodes NOT reachable from the region
     roots — closure BFS then anti-join. Seeded by dropping region R0's edge,
-    so nation/customer/order nodes under R0 orphan."""
+    so nation/customer/order nodes under R0 orphan. The closure is the
+    cycle-safe multi-source ``bfs_depth``."""
+    from assemblagedb_spark.operators.components import bfs_depth
+
     e = _graph_edges(spark, sf_dir, include_lineitem=False).filter(
         F.col("parent_id") != "R0"
     )
     roots = spark.createDataFrame([(f"R{i}",) for i in range(5)], "node_id string")
-    reachable = descendants(e, roots, max_depth=3).select("node_id")
+    reachable = bfs_depth(e, roots, max_depth=3).select("node_id")
     all_nodes = (
         e.select(F.col("child_id").alias("node_id"))
         .unionByName(e.select(F.col("parent_id").alias("node_id")))
@@ -3240,7 +3234,7 @@ def q_graph_blank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderkey") % 25 == 0)
         .select(F.concat(F.lit("O"), F.col("o_orderkey")).alias("node_id"))
     )
-    return is_blank_roots(edges, roots, blanks, max_depth=1, assume_forest=True)
+    return is_blank_roots(edges, roots, blanks, max_depth=1)
 
 
 O_GRAPH_BLANK = """

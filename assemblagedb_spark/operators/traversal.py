@@ -3,246 +3,113 @@
 Reference semantics re-expressed over an ``edges(parent_id, child_id, idx)``
 relation:
 
-- ``descendants`` (``assemblage_db/src/lib.rs:695-797``): transitive closure
-  downward, cycle-safe via a visited set.
-- ``ancestors`` (``lib.rs:552-639``): walk upward; the reference's
-  ``ancestor_path`` stops when a node has 0 or >1 parents or a cycle closes.
+- ``descendants`` (``assemblage_db/src/lib.rs:695-797``): bounded closure
+  downward; with a link column, a child reached through a link edge is
+  included but never expanded (``descendants_until_links``).
+- ``ancestors`` (``lib.rs:552-639``): bounded walk upward over a forest;
+  ``AssemblageDb.ancestor_path`` holds the reference's general-graph stop
+  rules (0 or >1 parents, a closed cycle).
+- ``subtree_closure``: per-root closure behind ``has_shared_descendants``,
+  ``is_cyclic``, ``is_blank`` and ``preview`` (``lib.rs:389-509,805-831``).
 - ``before``/``after`` (``core.rs:152-299``): nearest non-blank sibling per
   direction within the same parent.
 
-Scale design: BFS is a loop of hash joins on ``parent_id``; each iteration
-shuffles only the *frontier* (small after the first hops), the edges side
-stays partitioned by ``parent_id`` and is reused across iterations via
-``persist``. Cycle safety = anti-join against the accumulated visited set —
-the DataFrame equivalent of the reference's ``HashSet`` guard. Frontiers are
-``localCheckpoint``-ed every few rounds so the lineage (and thus the task
-binary) does not grow unboundedly — the standard iterative-algorithm pattern
-on Spark (GraphX does the same internally).
+Scale design: each walk is a loop of equi-joins on the parent (or child)
+key, one join per level. ``descendants`` and ``ancestors`` are point walks
+from a handful of roots: each level's frontier is broadcast, so the edge
+relation is only scanned, never shuffled, and pinned with an eager
+``localCheckpoint``, so level d is one probe of the edge relation instead
+of a re-derivation of levels 1..d (O(d²/2) scans). A shallow
+``subtree_closure`` over a forest stays one lazy plan; otherwise its levels
+are persisted and every few rounds checkpointed, with cycle safety from an
+anti-join against the per-root visited set — the DataFrame equivalent of
+the reference's ``HashSet`` guard.
+
+Side effect of the eager pins: these calls run Spark jobs while the
+DataFrame is built, and checkpointed blocks are not recomputable if an
+executor is lost. For long walks on an unreliable cluster, swap in a
+reliable ``checkpoint()`` at the same call sites.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+# zero-padded width of each child idx in a subtree_closure path string
+_PATH_PAD = 10
+# subtree_closure: levels between lineage-truncating checkpoints, and the
+# deepest forest walk left as one lazy plan
+_CHECKPOINT_EVERY = 4
+
 
 def descendants(
     edges: DataFrame,
     roots: DataFrame,
     *,
-    max_depth: int | None = None,
-    checkpoint_every: int = 8,
-    assume_forest: bool = False,
-    broadcast_frontier: bool = False,
+    max_depth: int,
+    link_col: str | None = None,
 ) -> DataFrame:
-    """Transitive closure downward from ``roots`` (one column ``node_id``).
+    """Bounded closure downward from ``roots`` (one column ``node_id``):
+    (node_id, depth), roots at depth 0, for every node within ``max_depth``
+    hops.
 
-    Returns (node_id, depth) with depth = shortest hop distance from any
-    root (roots themselves at depth 0). Cycle-safe: a node already visited
-    at a smaller depth is never re-expanded.
+    Forest contract: the caller guarantees every node is reachable along
+    one path (a leveled FK hierarchy, a tree), so the walk needs no
+    per-level distinct and no visited anti-join — each level is one join.
+    With ``link_col`` (a boolean edge column) a child reached through a
+    link edge IS included but never expanded: the reference's
+    ``descendants_until_links`` stops descending at block-inside-span
+    boundaries.
 
-    ``assume_forest``: caller guarantees every node is reachable along
-    exactly one path (leveled FK hierarchies, trees) — the per-level
-    distinct and the visited anti-join are then provably no-ops and are
-    skipped, leaving one join per level as the whole plan. This is the
-    shape that matters at scale: for a leveled 100 TB graph the anti-join
-    against an ever-growing visited set would be the dominant shuffle.
-
-    ``broadcast_frontier``: caller guarantees every frontier stays small
-    (point lookups from a handful of roots) — hint each level's join to
-    broadcast the frontier so the edge relation is never shuffled, only
-    scanned. Without the hint Catalyst sort-merge-joins both sides because
-    the frontier's size estimate is unknown mid-iteration.
-
-    Side effect: the per-level ``localCheckpoint(eager=True)`` runs Spark
-    jobs DURING DataFrame construction (calls are not lazy), and
-    checkpointed blocks are not recomputable if an executor is lost. For
-    very long walks on an unreliable cluster, swap in reliable
-    ``checkpoint()`` against a checkpoint dir (same call sites) — the lazy
-    alternative costs O(d²/2) re-derived joins.
+    Each level's frontier is broadcast and pinned with an eager
+    ``localCheckpoint`` (see the module docstring).
     """
-    if assume_forest and max_depth is not None:
-        # bounded forest walk: each level eagerly materialized
-        # (localCheckpoint) so level d is ONE probe of the edge relation;
-        # left lazy, the union's depth-d branch would re-derive joins 1..d
-        # (O(d²/2) edge scans for the whole walk)
-        e = edges.select("parent_id", "child_id")
-        frontier = roots.select("node_id").distinct()
-        out = frontier.withColumn("depth", F.lit(0))
-        for depth in range(1, max_depth + 1):
-            f = frontier.withColumnRenamed("node_id", "parent_id")
-            if broadcast_frontier:
-                f = F.broadcast(f)
-            frontier = (
-                e.join(f, "parent_id")
-                .select(F.col("child_id").alias("node_id"))
-                .localCheckpoint(eager=True)
-            )
-            out = out.unionByName(frontier.withColumn("depth", F.lit(depth)))
-        return out
-
-    e = edges.select("parent_id", "child_id")
-    if not broadcast_frontier:
-        # big-frontier regime: each level sort-merge-joins on parent_id,
-        # so co-partition the edge cache once — an InMemoryRelation keeps
-        # its outputPartitioning, leaving only the frontier side to
-        # shuffle per level (with a broadcast frontier the edge side is
-        # never shuffled, so the upfront exchange would be pure cost)
-        parts = edges.sparkSession.sparkContext.defaultParallelism
-        e = e.repartition(parts, "parent_id")
-    e = e.persist()
-    visited = roots.select("node_id").distinct().withColumn("depth", F.lit(0))
-    frontier = visited
-    depth = 0
-    persisted = []
-    while True:
-        if max_depth is not None and depth >= max_depth:
-            break
-        f = frontier.withColumnRenamed("node_id", "parent_id").select("parent_id")
-        if broadcast_frontier:
-            f = F.broadcast(f)
-        nxt = e.join(f, "parent_id").select(F.col("child_id").alias("node_id"))
-        if not assume_forest:
-            nxt = nxt.distinct().join(visited.select("node_id"), "node_id", "left_anti")
-        nxt = nxt.withColumn("depth", F.lit(depth + 1))
-        if (depth + 1) % checkpoint_every == 0:
-            nxt = nxt.localCheckpoint(eager=True)  # truncate lineage
-        else:
-            nxt = nxt.persist()
-            persisted.append(nxt)
-        # with a known depth bound the loop is exact — skip the per-level
-        # empty-frontier probe (each probe is a full Spark job)
-        if max_depth is None and nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-        depth += 1
-    # materialize the closure before releasing the per-level caches
-    out = visited.localCheckpoint(eager=True)
-    e.unpersist()
-    for df in persisted:
-        df.unpersist()
+    link = [F.col(link_col).alias("__link")] if link_col else []
+    e = edges.select("parent_id", "child_id", *link)
+    frontier = roots.select("node_id").distinct()
+    out = frontier.withColumn("depth", F.lit(0))
+    for depth in range(1, max_depth + 1):
+        f = F.broadcast(frontier.withColumnRenamed("node_id", "parent_id"))
+        step = (
+            e.join(f, "parent_id")
+            .select(F.col("child_id").alias("node_id"), *(["__link"] if link else []))
+            .localCheckpoint(eager=True)
+        )
+        out = out.unionByName(step.select("node_id").withColumn("depth", F.lit(depth)))
+        frontier = step.filter(~F.col("__link")).select("node_id") if link else step
     return out
 
 
-def ancestors(
-    edges: DataFrame,
-    starts: DataFrame,
-    *,
-    single_parent_only: bool = True,
-    max_depth: int = 64,
-    exact_depth: int | None = None,
-    assume_forest: bool = False,
-    broadcast_frontier: bool = False,
-) -> DataFrame:
-    """Upward walk from each start node (column ``node_id``).
+def ancestors(edges: DataFrame, starts: DataFrame, *, depth: int) -> DataFrame:
+    """Upward walk from each start node (column ``node_id``):
+    (start_id, ancestor_id, depth) for the first ``depth`` ancestors,
+    depth = 1 for the immediate parent.
 
-    Returns (start_id, ancestor_id, depth), depth = 1 for the immediate
-    parent. With ``single_parent_only`` (the reference's ``ancestor_path``,
-    lib.rs:552-639) a walk stops when the current node has 0 or >1 parents
-    or revisits a node on its own path (cycle guard). ``exact_depth`` (a
-    schema-known walk length) skips the per-level empty-frontier probe —
-    one Spark job per level saved. ``assume_forest`` (caller guarantees the
-    edge relation is deduped with one parent per child and acyclic) skips
-    both the parent-uniqueness aggregation over the full edge relation and
-    the per-row path arrays of the cycle guard. ``broadcast_frontier``:
-    walk frontiers are small (|starts| rows, one per live walk) — hint the
-    per-level join to broadcast them so the parent relation is only ever
-    scanned in place, never shuffled.
+    Forest contract: the caller guarantees ``edges`` holds one parent per
+    child, no duplicate edge and no cycle (a leveled FK hierarchy), so the
+    walk needs neither a parent-uniqueness aggregate nor a cycle guard.
+    The reference's ``ancestor_path`` (lib.rs:552-639) on a general graph
+    — stop at a node with 0 or >1 parents or when the path closes a cycle —
+    is ``AssemblageDb.ancestor_path``.
+
+    Frontiers are |starts| rows: each level's is broadcast and pinned with
+    an eager ``localCheckpoint`` (see the module docstring).
     """
-    if assume_forest and exact_depth is not None:
-        # bounded forest walk: each level's frontier is eagerly materialized
-        # (localCheckpoint — frontiers are |starts| rows), so level d is ONE
-        # probe of the parent relation. Left lazy, the union's depth-d branch
-        # would re-derive joins 1..d and the walk would cost O(d²/2) edge
-        # scans instead of d.
-        parent_of = edges.select("child_id", "parent_id")
-        frontier = starts.select(
-            F.col("node_id").alias("start_id"), F.col("node_id").alias("current_id")
-        )
-        out = None
-        for depth in range(1, exact_depth + 1):
-            step = (
-                (F.broadcast(frontier) if broadcast_frontier else frontier)
-                .join(parent_of.withColumnRenamed("child_id", "current_id"), "current_id")
-                .select("start_id", F.col("parent_id").alias("ancestor_id"))
-                .localCheckpoint(eager=True)
-            )
-            found = step.withColumn("depth", F.lit(depth))
-            out = found if out is None else out.unionByName(found)
-            frontier = step.select("start_id", F.col("ancestor_id").alias("current_id"))
-        return out
-
-    if assume_forest:
-        parent_of = edges.select("child_id", "parent_id")
-    elif single_parent_only:
-        # scalar aggregate instead of collect_set+explode: no array building
-        # over the full edge relation, same (child, unique parent) rows
-        parent_of = (
-            edges.groupBy("child_id")
-            .agg(
-                F.max("parent_id").alias("parent_id"),
-                F.countDistinct("parent_id").alias("np"),
-            )
-            .filter(F.col("np") == 1)
-            .select("child_id", "parent_id")
-        )
-    else:
-        parent_of = edges.select("child_id", "parent_id").distinct()
-    if not broadcast_frontier:
-        # big-frontier regime: every level joins parent_of on child_id
-        # (ProjectExec is alias-aware, so the current_id rename keeps the
-        # partitioning) — co-partition the cache once instead of
-        # re-shuffling it per level (see descendants)
-        parts = edges.sparkSession.sparkContext.defaultParallelism
-        parent_of = parent_of.repartition(parts, "child_id")
-    parent_of = parent_of.persist()
-
+    parent_of = edges.select("child_id", "parent_id")
     frontier = starts.select(
-        F.col("node_id").alias("start_id"),
-        F.col("node_id").alias("current_id"),
-        *([] if assume_forest else [F.array(F.col("node_id")).alias("path")]),
+        F.col("node_id").alias("start_id"), F.col("node_id").alias("current_id")
     )
     out = None
-    persisted = []
-    probe_empty = exact_depth is None
-    limit = exact_depth if exact_depth is not None else max_depth
-    for depth in range(1, limit + 1):
-        step = (F.broadcast(frontier) if broadcast_frontier else frontier).join(
-            parent_of.withColumnRenamed("child_id", "current_id"), "current_id"
+    for level in range(1, depth + 1):
+        step = (
+            F.broadcast(frontier)
+            .join(parent_of.withColumnRenamed("child_id", "current_id"), "current_id")
+            .select("start_id", F.col("parent_id").alias("ancestor_id"))
+            .localCheckpoint(eager=True)
         )
-        if assume_forest:
-            step = step.select("start_id", F.col("parent_id").alias("ancestor_id"))
-        else:
-            step = (
-                # cycle guard: stop a walk that revisits its own path
-                step.filter(~F.array_contains("path", F.col("parent_id"))).select(
-                    "start_id",
-                    F.col("parent_id").alias("ancestor_id"),
-                    F.concat("path", F.array("parent_id")).alias("path"),
-                )
-            )
-        if depth % 8 == 0:
-            step = step.localCheckpoint(eager=True)
-        else:
-            step = step.persist()
-            persisted.append(step)
-        if probe_empty and step.isEmpty():
-            break
-        found = step.select("start_id", "ancestor_id").withColumn("depth", F.lit(depth))
+        found = step.withColumn("depth", F.lit(level))
         out = found if out is None else out.unionByName(found)
-        frontier = step.select(
-            "start_id",
-            F.col("ancestor_id").alias("current_id"),
-            *([] if assume_forest else ["path"]),
-        )
-    if out is None:
-        parent_of.unpersist()
-        schema = "start_id string, ancestor_id string, depth int"
-        return starts.sparkSession.createDataFrame([], schema)
-    out = out.localCheckpoint(eager=True)
-    parent_of.unpersist()
-    for df in persisted:
-        df.unpersist()
+        frontier = step.select("start_id", F.col("ancestor_id").alias("current_id"))
     return out
 
 
@@ -252,8 +119,6 @@ def subtree_closure(
     *,
     max_depth: int,
     with_path: bool = False,
-    pad: int = 10,
-    checkpoint_every: int = 4,
     assume_forest: bool = False,
     broadcast_frontier: bool = False,
 ) -> DataFrame:
@@ -271,45 +136,28 @@ def subtree_closure(
     first (shallowest) level. Cycle-safe via the per-root visited anti-join;
     ``assume_forest`` (caller guarantees single-path reachability) drops the
     dedup + anti-join shuffles and reduces each level to one join.
+    ``broadcast_frontier`` (caller guarantees small frontiers) broadcasts
+    each level's frontier so the edge relation is never shuffled.
     """
-    if assume_forest and max_depth <= checkpoint_every:
-        # bounded forest walk — lineage stays shallow, no probes fire: one
-        # lazy plan, no per-level caching or checkpoint copies
-        e = edges.select("parent_id", "child_id", *(["idx"] if with_path else []))
-        frontier = roots.select(F.col("node_id").alias("root_id"), F.col("node_id"))
-        if with_path:
-            frontier = frontier.withColumn("path", F.lit(""))
-        out = None
-        for depth in range(1, max_depth + 1):
-            f = frontier.withColumnRenamed("node_id", "parent_id")
-            nxt = e.join(F.broadcast(f) if broadcast_frontier else f, "parent_id")
-            if with_path:
-                nxt = nxt.select(
-                    "root_id",
-                    F.col("child_id").alias("node_id"),
-                    F.concat(
-                        "path", F.lit("/"), F.lpad(F.col("idx").cast("string"), pad, "0")
-                    ).alias("path"),
-                )
-            else:
-                nxt = nxt.select("root_id", F.col("child_id").alias("node_id"))
-            level = nxt.withColumn("depth", F.lit(depth))
-            out = level if out is None else out.unionByName(level)
-            frontier = nxt
-        return out
-
+    # a shallow forest walk has a shallow lineage and needs no probe: one
+    # lazy plan, no per-level caching or checkpoint copies
+    lazy = assume_forest and max_depth <= _CHECKPOINT_EVERY
     e = edges.select("parent_id", "child_id", *(["idx"] if with_path else []))
-    if not broadcast_frontier:
-        # co-partition the per-level join key once (see descendants)
-        parts = edges.sparkSession.sparkContext.defaultParallelism
-        e = e.repartition(parts, "parent_id")
-    e = e.persist()
+    persisted = []
+    if not lazy:
+        if not broadcast_frontier:
+            # each level sort-merge-joins on parent_id: co-partition the
+            # edge cache once — an InMemoryRelation keeps its
+            # outputPartitioning, so only the frontier side shuffles per level
+            parts = edges.sparkSession.sparkContext.defaultParallelism
+            e = e.repartition(parts, "parent_id")
+        e = e.persist()
+        persisted.append(e)
     frontier = roots.select(F.col("node_id").alias("root_id"), F.col("node_id"))
     if with_path:
         frontier = frontier.withColumn("path", F.lit(""))
     visited = frontier.select("root_id", "node_id")
     out = None
-    persisted = [e]
     for depth in range(1, max_depth + 1):
         f = frontier.withColumnRenamed("node_id", "parent_id")
         nxt = e.join(F.broadcast(f) if broadcast_frontier else f, "parent_id")
@@ -318,7 +166,7 @@ def subtree_closure(
                 "root_id",
                 F.col("child_id").alias("node_id"),
                 F.concat(
-                    "path", F.lit("/"), F.lpad(F.col("idx").cast("string"), pad, "0")
+                    "path", F.lit("/"), F.lpad(F.col("idx").cast("string"), _PATH_PAD, "0")
                 ).alias("path"),
             )
             if not assume_forest:
@@ -338,12 +186,12 @@ def subtree_closure(
         # through `visited`, so the logical plan doubles per iteration —
         # unchecked, the driver OOMs just printing it by depth ~10. Every
         # checkpoint buys a cheap empty-frontier probe (early exit once a
-        # cycle closes); shallow fixed-depth walks pay neither cost.
-        if depth % checkpoint_every == 0:
+        # cycle closes).
+        if not lazy and depth % _CHECKPOINT_EVERY == 0:
             nxt = nxt.localCheckpoint(eager=True)
             if nxt.isEmpty():
                 break
-        else:
+        elif not lazy:
             nxt = nxt.persist()
             persisted.append(nxt)
         level = nxt.withColumn("depth", F.lit(depth))
@@ -358,6 +206,8 @@ def subtree_closure(
         for df in persisted:
             df.unpersist()
         return roots.sparkSession.createDataFrame([], schema)
+    if lazy:
+        return out
     out = out.localCheckpoint(eager=True)
     for df in persisted:
         df.unpersist()
@@ -488,7 +338,6 @@ def is_blank_roots(
     blanks: DataFrame,
     *,
     max_depth: int,
-    assume_forest: bool = False,
 ) -> DataFrame:
     """Per root: does the subtree contain only blank renderable nodes
     (reference ``is_blank``, ``assemblage_db/src/lib.rs:389-416``)?
@@ -620,9 +469,7 @@ def siblings_escalated(
     )
 
 
-def display_class(
-    nodes: DataFrame, *, max_iter: int = 8, strategy: str = "doubling"
-) -> DataFrame:
+def display_class(nodes: DataFrame, *, max_iter: int = 8) -> DataFrame:
     """Resolve the reference's display-class recursion (``is_span`` /
     ``is_block``, assemblage_db/src/lib.rs:347-380) over a node relation
     ``(node_id, kind, child_id)``.
@@ -636,13 +483,11 @@ def display_class(
     nesting than the bound) falls back to block, matching the reference's
     cycle guard. A dangling child pointer also classifies as block.
 
-    ``strategy='doubling'`` (default) is pointer doubling / path
-    compression: compose the one-step relation with itself, so a
-    ``max_iter`` of 2^k costs k+1 joins instead of 2^k — ceil(log2) shuffle
-    rounds at 100 TB. ``max_iter`` is decomposed in binary, so any bound is
-    scanned EXACTLY (no overshoot past the cycle guard).
-    ``strategy='chase'`` is the literal per-hop loop: more rounds, but each
-    round only carries the shrinking unresolved set.
+    Pointer doubling / path compression: compose the one-step relation
+    with itself, so a ``max_iter`` of 2^k costs k+1 joins instead of 2^k —
+    ceil(log2) shuffle rounds at 100 TB. ``max_iter`` is decomposed in
+    binary, so any bound is scanned EXACTLY (no overshoot past the cycle
+    guard).
     """
     base = (
         F.when(F.col("kind").isin("text", "chain"), F.lit("span"))
@@ -650,102 +495,42 @@ def display_class(
     )
     lut = nodes.select("node_id", base.alias("dc"), "child_id")
 
-    if strategy == "doubling":
-        # T_k(x): scan the k-node chain x, child(x), ... — dc = class of the
-        # first non-wrapper found (null if all wrappers), cur = the pointer
-        # after k nodes (to continue composition). T_{a+b} = T_a then T_b.
-        def compose(a: DataFrame, b: DataFrame) -> DataFrame:
-            bb = b.select(
-                F.col("node_id").alias("cur"),
-                F.col("dc").alias("dc_b"),
-                F.col("cur").alias("cur_b"),
-            )
-            return a.join(bb, "cur", "left").select(
-                "node_id",
-                F.coalesce("dc", "dc_b").alias("dc"),
-                F.when(F.col("dc").isNotNull(), F.col("cur"))
-                .otherwise(F.col("cur_b"))
-                .alias("cur"),
-            )
-
-        t1 = lut.select("node_id", "dc", F.col("child_id").alias("cur"))
-        total, power = None, t1
-        k = max_iter
-        first = True
-        while k:
-            if k & 1:
-                total = power if first else compose(total, power)
-                first = False
-            k >>= 1
-            if k:
-                power = compose(power, power)
-        # wrapper w scans its CHILD chain: look T_{max_iter} up at child_id
-        chain = total.select(
-            F.col("node_id").alias("child_id"), F.col("dc").alias("chain_dc")
+    # T_k(x): scan the k-node chain x, child(x), ... — dc = class of the
+    # first non-wrapper found (null if all wrappers), cur = the pointer
+    # after k nodes (to continue composition). T_{a+b} = T_a then T_b.
+    def compose(a: DataFrame, b: DataFrame) -> DataFrame:
+        bb = b.select(
+            F.col("node_id").alias("cur"),
+            F.col("dc").alias("dc_b"),
+            F.col("cur").alias("cur_b"),
         )
-        out = lut.join(chain, "child_id", "left").select(
+        return a.join(bb, "cur", "left").select(
             "node_id",
-            F.coalesce("dc", "chain_dc", F.lit("block")).alias("dc"),
-        )
-        return nodes.join(out, "node_id", "left").select(
-            *nodes.columns, F.coalesce("dc", F.lit("block")).alias("display_class")
+            F.coalesce("dc", "dc_b").alias("dc"),
+            F.when(F.col("dc").isNotNull(), F.col("cur"))
+            .otherwise(F.col("cur_b"))
+            .alias("cur"),
         )
 
-    done = lut.filter(F.col("dc").isNotNull()).select("node_id", "dc")
-    todo = lut.filter(F.col("dc").isNull()).select(
-        "node_id", F.col("child_id").alias("cur")
+    t1 = lut.select("node_id", "dc", F.col("child_id").alias("cur"))
+    total, power = None, t1
+    k = max_iter
+    first = True
+    while k:
+        if k & 1:
+            total = power if first else compose(total, power)
+            first = False
+        k >>= 1
+        if k:
+            power = compose(power, power)
+    # wrapper w scans its CHILD chain: look T_{max_iter} up at child_id
+    chain = total.select(
+        F.col("node_id").alias("child_id"), F.col("dc").alias("chain_dc")
     )
-    step = lut.select(
-        F.col("node_id").alias("cur"), "dc", F.col("child_id").alias("nxt")
+    out = lut.join(chain, "child_id", "left").select(
+        "node_id",
+        F.coalesce("dc", "chain_dc", F.lit("block")).alias("dc"),
     )
-    for _ in range(max_iter):
-        probed = todo.join(step, "cur")
-        done = done.unionByName(
-            probed.filter(F.col("dc").isNotNull()).select("node_id", "dc")
-        )
-        todo = probed.filter(F.col("dc").isNull()).select(
-            "node_id", F.col("nxt").alias("cur")
-        )
-    done = done.unionByName(todo.select("node_id", F.lit("block").alias("dc")))
-    # left join + coalesce: a dangling child pointer (chase row dropped by
-    # the inner probe join) classifies as block rather than vanishing
-    return nodes.join(done, "node_id", "left").select(
+    return nodes.join(out, "node_id", "left").select(
         *nodes.columns, F.coalesce("dc", F.lit("block")).alias("display_class")
     )
-
-
-def descendants_until_links(
-    edges: DataFrame,
-    roots: DataFrame,
-    *,
-    max_depth: int,
-    link_col: str = "is_link",
-    broadcast_frontier: bool = False,
-) -> DataFrame:
-    """Link-bounded transitive closure (``descendants_until_links``,
-    assemblage_db/src/lib.rs:695-797): a child reached through a link edge
-    IS included but never expanded — the reference stops descending at
-    block-inside-span boundaries. ``edges`` carries a boolean ``link_col``
-    per edge.
-
-    Same bounded-walk shape as :func:`descendants` (forest assumption, one
-    probe of the edge relation per level, frontiers eagerly materialized);
-    the only difference is the frontier filter ``NOT is_link``.
-    """
-    e = edges.select("parent_id", "child_id", F.col(link_col).alias("__link"))
-    frontier = roots.select("node_id").distinct()
-    out = frontier.withColumn("depth", F.lit(0))
-    for depth in range(1, max_depth + 1):
-        f = frontier.withColumnRenamed("node_id", "parent_id")
-        if broadcast_frontier:
-            f = F.broadcast(f)
-        step = e.join(f, "parent_id").localCheckpoint(eager=True)
-        out = out.unionByName(
-            step.select(F.col("child_id").alias("node_id")).withColumn(
-                "depth", F.lit(depth)
-            )
-        )
-        frontier = step.filter(~F.col("__link")).select(
-            F.col("child_id").alias("node_id")
-        )
-    return out

@@ -90,3 +90,63 @@ def py_cosine_topk(rows, query_ids, *, k):
                         for i, b in vecs.items() if i != q)
         out |= {(q, i, r) for r, (_, i) in enumerate(ranked[:k], 1)}
     return out
+
+
+# -- plain-Python reference for the display-class recursion -----------------
+
+
+def py_display_class(rows, *, max_iter):
+    """{node_id: 'span' | 'block'} by the literal per-hop chase of
+    ``is_span``/``is_block`` (lib.rs:347-380): a span-styled wrapper takes
+    the class of the first non-wrapper among its next ``max_iter``
+    children; a chain that does not reach one (a styled cycle, deeper
+    nesting) or that dangles is a block. ``rows`` are
+    (node_id, kind, child_id)."""
+    base = {"text": "span", "chain": "span", "page": "block", "block_styled": "block"}
+    kind = {n: k for n, k, _ in rows}
+    child = {n: c for n, _, c in rows}
+
+    def resolve(node):
+        if kind[node] in base:
+            return base[kind[node]]
+        cur = child[node]
+        for _ in range(max_iter):
+            if cur not in kind:
+                return "block"
+            if kind[cur] in base:
+                return base[kind[cur]]
+            cur = child[cur]
+        return "block"
+
+    return {n: resolve(n) for n in kind}
+
+
+# -- Spark-vs-DuckDB gate comparison ----------------------------------------
+
+
+def assert_matches_oracle(spark, sf_dir: str, name: str) -> None:
+    """Run gate ``name`` on Spark and its DuckDB oracle over the parquet
+    tables in ``sf_dir`` and compare the normalized frames by value."""
+    import duckdb
+    import pandas.testing as pdt
+
+    from assemblagedb_spark import harness as h
+    from assemblagedb_spark.sources.tpch import TABLES
+    from tools.check_oracles import normalize
+
+    sdf = h.SPARK_QUERIES[name](spark, sf_dir).toPandas()
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM "
+            f"read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    odf = con.execute(h.ORACLES[name]).fetchdf()
+    con.close()
+    assert sorted(sdf.columns) == sorted(odf.columns), name
+    assert len(sdf) == len(odf), f"{name}: spark={len(sdf)} oracle={len(odf)}"
+    if len(sdf):
+        # NaN-aware value compare (tolist() would make NaN != NaN)
+        pdt.assert_frame_equal(
+            normalize(sdf), normalize(odf), check_dtype=False
+        )

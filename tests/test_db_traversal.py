@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from assemblagedb_spark.db import AssemblageDb
 from assemblagedb_spark.model import CHAIN, PAGE, Child, Node
+from tests.conftest import py_display_class
 
 
 def build_five(db):
@@ -245,15 +246,15 @@ def test_display_class_resolution(spark):
         "y": "block",
         "d": "block",
     }
-    for strategy in ("chase", "doubling"):
-        got = {
-            r["node_id"]: r["display_class"]
-            for r in display_class(nodes, max_iter=8, strategy=strategy).collect()
-        }
-        assert got == want, strategy
+    assert py_display_class(rows, max_iter=8) == want
+    got = {
+        r["node_id"]: r["display_class"]
+        for r in display_class(nodes, max_iter=8).collect()
+    }
+    assert got == want
 
 
-def test_display_class_strategies_agree_on_functional_graph(spark):
+def test_display_class_matches_chase_reference_on_functional_graph(spark):
     # pseudo-random functional graph with long wrapper runs and cycles:
     # pointer doubling must agree with the literal chase at every bound,
     # including non-power-of-two bounds (exact binary decomposition)
@@ -270,12 +271,8 @@ def test_display_class_strategies_agree_on_functional_graph(spark):
     from assemblagedb_spark.operators.traversal import display_class
 
     for bound in (1, 3, 8):
-        a = {
+        got = {
             r["node_id"]: r["display_class"]
-            for r in display_class(nodes, max_iter=bound, strategy="chase").collect()
+            for r in display_class(nodes, max_iter=bound).collect()
         }
-        b = {
-            r["node_id"]: r["display_class"]
-            for r in display_class(nodes, max_iter=bound, strategy="doubling").collect()
-        }
-        assert a == b, bound
+        assert got == py_display_class(rows, max_iter=bound), bound

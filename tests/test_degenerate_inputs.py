@@ -56,12 +56,10 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import pytest
 
 from assemblagedb_spark import harness as h
-from assemblagedb_spark.sources.tpch import TABLES
-from tools.check_oracles import normalize
+from tests.conftest import assert_matches_oracle
 from tools.make_degenerate_data import write_degenerate
 
 # gates the sweep actually broke, by input class
@@ -152,55 +150,34 @@ def degenerate_dirs(tmp_path_factory):
     return write_degenerate(src, str(root))
 
 
-def _assert_matches_oracle(spark, sf_dir: str, name: str) -> None:
-    sdf = h.SPARK_QUERIES[name](spark, sf_dir).toPandas()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    odf = con.execute(h.ORACLES[name]).fetchdf()
-    con.close()
-    assert sorted(sdf.columns) == sorted(odf.columns), name
-    assert len(sdf) == len(odf), f"{name}: spark={len(sdf)} oracle={len(odf)}"
-    if len(sdf):
-        import pandas.testing as pdt
-
-        # NaN-aware value compare (tolist() would make NaN != NaN)
-        pdt.assert_frame_equal(
-            normalize(sdf), normalize(odf), check_dtype=False
-        )
-
-
 @pytest.mark.parametrize("name", EMPTY_GATES)
 def test_gate_on_empty_tables(spark, degenerate_dirs, name):
     empty_dir = degenerate_dirs[0]
-    _assert_matches_oracle(spark, empty_dir, name)
+    assert_matches_oracle(spark, empty_dir, name)
 
 
 @pytest.mark.parametrize("name", ONE_ROW_GATES)
 def test_gate_on_one_row_tables(spark, degenerate_dirs, name):
     one_dir = degenerate_dirs[1]
-    _assert_matches_oracle(spark, one_dir, name)
+    assert_matches_oracle(spark, one_dir, name)
 
 
 @pytest.mark.parametrize("name", NULL_CONTENT_GATES)
 def test_gate_on_null_content(spark, degenerate_dirs, name):
     nulls_dir = degenerate_dirs[2]
-    _assert_matches_oracle(spark, nulls_dir, name)
+    assert_matches_oracle(spark, nulls_dir, name)
 
 
 @pytest.mark.parametrize("name", NULL_VECTOR_GATES)
 def test_gate_on_null_embeddings(spark, degenerate_dirs, name):
     vecnulls_dir = degenerate_dirs[3]
-    _assert_matches_oracle(spark, vecnulls_dir, name)
+    assert_matches_oracle(spark, vecnulls_dir, name)
 
 
 @pytest.mark.parametrize("name", UNICODE_GATES)
 def test_gate_on_unicode_text(spark, degenerate_dirs, name):
     unicode_dir = degenerate_dirs[4]
-    _assert_matches_oracle(spark, unicode_dir, name)
+    assert_matches_oracle(spark, unicode_dir, name)
 
 
 def test_rollup_empty_emits_ansi_global_row(spark, degenerate_dirs):

@@ -5,14 +5,18 @@ empty subtrees, duplicate timestamps)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from assemblagedb_spark.operators.sessions import sessionize
 from assemblagedb_spark.operators.traversal import (
+    ancestors,
+    descendants,
     has_shared_descendants,
     preview_leaf,
     subtree_closure,
 )
+from tests.conftest import assert_matches_oracle
 
 EDGE_SCHEMA = "parent_id string, child_id string, idx int"
 
@@ -244,7 +248,6 @@ def test_siblings_escalated_minigraph(spark):
 def test_descendants_until_links_includes_but_does_not_expand(spark):
     # lib.rs:695-797 link boundary: the link child is in the closure, its
     # subtree is not
-    from assemblagedb_spark.operators.traversal import descendants_until_links
 
     edges = spark.createDataFrame(
         [
@@ -258,9 +261,49 @@ def test_descendants_until_links_includes_but_does_not_expand(spark):
     roots = spark.createDataFrame([("r",)], "node_id string")
     got = {
         (r["node_id"], r["depth"])
-        for r in descendants_until_links(edges, roots, max_depth=3).collect()
+        for r in descendants(edges, roots, max_depth=3, link_col="is_link").collect()
     }
     assert got == {("r", 0), ("a", 1), ("l", 1), ("a1", 2)}
+
+
+def test_descendants_forest_walk_is_bounded(spark):
+    # one row per reached node and level; nothing past max_depth
+    e = _edges(spark, [("r", "a", 0), ("r", "b", 1), ("a", "c", 0), ("c", "d", 0)])
+    got = {
+        (r["node_id"], r["depth"])
+        for r in descendants(e, _roots(spark, "r"), max_depth=2).collect()
+    }
+    assert got == {("r", 0), ("a", 1), ("b", 1), ("c", 2)}
+
+
+def test_ancestors_forest_walk(spark):
+    # depth 1 is the parent; a walk ends at the root or at the depth bound
+    e = _edges(spark, [("r", "a", 0), ("a", "b", 0), ("b", "c", 0), ("r", "x", 1)])
+    got = {
+        (r["start_id"], r["ancestor_id"], r["depth"])
+        for r in ancestors(e, _roots(spark, "c", "x"), depth=2).collect()
+    }
+    assert got == {("c", "b", 1), ("c", "a", 2), ("x", "r", 1)}
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "graph_descendants",
+        "graph_descendants_links",
+        "graph_orphans",
+        "graph_ancestor_path",
+        "view_lineage",
+        "graph_shared",
+        "graph_preview",
+        "graph_cyclic",
+        "graph_blank",
+        "export_incremental",
+        "display_class",
+    ],
+)
+def test_traversal_gate_matches_oracle(spark, sf_dir, name):
+    assert_matches_oracle(spark, sf_dir, name)
 
 
 def test_label_propagation_components(spark):
