@@ -1016,16 +1016,16 @@ O_DEDUP_LSH_CAPPED = (
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full near-dup pipeline ending: LSH candidate pairs → connected
-    components over the pair graph (convergence-probed min-label rounds —
-    exact components regardless of chain length) → every document mapped to
-    its cluster's canonical keeper (min doc_id); singletons keep themselves.
+    components over the pair graph → every document mapped to its
+    cluster's canonical keeper (min doc_id); singletons keep themselves.
     This is the operator a 100 TB dedup job actually runs — pair generation
     is candidate-bounded by the bands; clustering uses partition-local
     union-find contraction (components.contracted_components, parity-pinned
-    against the propagation loop) so the diameter-bound round count
-    collapses to two Arrow passes + a probe-exited finisher. The oracle
-    unrolls 24 label-propagation rounds — exact components either way, so
-    both sides agree on the labels with margin."""
+    against a plain-Python union-find) so the diameter-bound round count
+    collapses to two Arrow passes + a probe-exited finisher — exact
+    components regardless of chain length. The oracle unrolls 24
+    label-propagation rounds — exact components either way, so both sides
+    agree on the labels with margin."""
     from assemblagedb_spark.operators.components import contracted_components
     from assemblagedb_spark.operators.dedup import lsh_candidate_pairs
 
@@ -1236,7 +1236,7 @@ def q_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full embedding-dedup pipeline ending (the vector twin of
     dedup_clusters): banded near-dup pairs → union-find-contracted
     connected components (components.contracted_components, parity-pinned
-    against the propagation loop) → every subset vector mapped to its
+    against a plain-Python union-find) → every subset vector mapped to its
     cluster's canonical keeper (min vec_id); singletons keep themselves."""
     from assemblagedb_spark.operators.components import contracted_components
 
@@ -3019,17 +3019,15 @@ def _cyclic_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components (GraphX-style analytics per the north star) on
-    the cyclic supplier graph via convergence-probed synchronous min-label
-    propagation — exact on any diameter; this graph converges by round 4
-    (measured), and the oracle's 6 unrolled rounds are past convergence, so
-    results agree exactly. One |E| join + one |V| aggregate per round; no
-    closure materialization."""
-    from assemblagedb_spark.operators.components import (
-        label_propagation_components,
-    )
+    the cyclic supplier graph via components.contracted_components:
+    partition-local union-find passes, then min-label propagation probed
+    to its fixed point — exact on any diameter. The oracle unrolls 6
+    label-propagation rounds, past this graph's convergence (round 4,
+    measured), so results agree exactly."""
+    from assemblagedb_spark.operators.components import contracted_components
 
     e = _cyclic_graph_edges(spark, sf_dir)
-    return label_propagation_components(e, rounds=None)
+    return contracted_components(e)
 
 
 def _o_components(rounds: int) -> str:
@@ -3107,55 +3105,14 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pagerank_rounds(e, rounds=3)
 
 
-def _o_pagerank(rounds: int, scale: int = 1_000_000, damping_pct: int = 85) -> str:
+def _o_pagerank(rounds: int, seeds: tuple[str, ...] = ()) -> str:
+    """The unrolled rounds of components.pagerank_rounds (scale 1e6,
+    damping 85%); no ``seeds`` makes every node a seed (global PageRank)."""
+    scale, damping_pct = 1_000_000, 85
     base = (100 - damping_pct) * scale // 100
-    ctes = [
-        """e0 AS (
-  SELECT DISTINCT * FROM (
-    SELECT 'S' || s_suppkey AS src, 'N' || s_nationkey AS dst FROM supplier
-    UNION ALL SELECT 'N' || n_nationkey, 'R' || n_regionkey FROM nation
-    UNION ALL SELECT 'R' || n_regionkey, 'N' || n_nationkey FROM nation WHERE n_regionkey < 3
-  ))""",
-        "nodes AS (SELECT DISTINCT node_id FROM (SELECT src AS node_id FROM e0 UNION ALL SELECT dst FROM e0))",
-        "outdeg AS (SELECT src, COUNT(*)::BIGINT AS outdeg FROM e0 GROUP BY src)",
-        f"r0 AS MATERIALIZED (SELECT node_id, {scale}::BIGINT AS rank FROM nodes)",
-    ]
-    for k in range(1, rounds + 1):
-        ctes.append(
-            f"""r{k} AS MATERIALIZED (
-  SELECT n.node_id,
-         ({base} + ({damping_pct} * COALESCE(s.in_sum, 0)) // 100)::BIGINT AS rank
-  FROM nodes n LEFT JOIN (
-    SELECT e.dst AS node_id, SUM(r.rank // o.outdeg)::BIGINT AS in_sum
-    FROM e0 e JOIN r{k - 1} r ON r.node_id = e.src JOIN outdeg o ON o.src = e.src
-    GROUP BY e.dst
-  ) s ON s.node_id = n.node_id
-)"""
-        )
-    return "WITH " + ",\n".join(ctes) + f"\nSELECT node_id, rank FROM r{rounds}"
-
-
-O_GRAPH_PAGERANK = _o_pagerank(3)
-
-
-def q_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Personalized PageRank from the region nodes (random walk with
-    restart to seeds): 'which suppliers/nations does a walk from THESE
-    hubs keep reaching' — integer fixed-point, 3 rounds, seed set
-    broadcast."""
-    from assemblagedb_spark.operators.components import personalized_pagerank
-
-    e = _cyclic_graph_edges(spark, sf_dir)
-    seeds = (
-        load_table(spark, sf_dir, "region")
-        .filter(F.col("r_regionkey") < 3)
-        .select(F.concat(F.lit("R"), F.col("r_regionkey")).alias("node_id"))
+    is_seed = (
+        "node_id IN (" + ", ".join(f"'{s}'" for s in seeds) + ")" if seeds else "TRUE"
     )
-    return personalized_pagerank(e, seeds, rounds=3)
-
-
-def _o_ppr(rounds: int, scale: int = 1_000_000, damping_pct: int = 85) -> str:
-    base = (100 - damping_pct) * scale // 100
     ctes = [
         """e0 AS (
   SELECT DISTINCT * FROM (
@@ -3163,7 +3120,7 @@ def _o_ppr(rounds: int, scale: int = 1_000_000, damping_pct: int = 85) -> str:
     UNION ALL SELECT 'N' || n_nationkey, 'R' || n_regionkey FROM nation
     UNION ALL SELECT 'R' || n_regionkey, 'N' || n_nationkey FROM nation WHERE n_regionkey < 3
   ))""",
-        "nodes AS (SELECT DISTINCT node_id, (node_id IN ('R0','R1','R2')) AS is_seed "
+        f"nodes AS (SELECT DISTINCT node_id, ({is_seed}) AS is_seed "
         "FROM (SELECT src AS node_id FROM e0 UNION ALL SELECT dst FROM e0))",
         "outdeg AS (SELECT src, COUNT(*)::BIGINT AS outdeg FROM e0 GROUP BY src)",
         f"r0 AS MATERIALIZED (SELECT node_id, is_seed, "
@@ -3185,7 +3142,26 @@ def _o_ppr(rounds: int, scale: int = 1_000_000, damping_pct: int = 85) -> str:
     return "WITH " + ",\n".join(ctes) + f"\nSELECT node_id, rank FROM r{rounds}"
 
 
-O_GRAPH_PPR = _o_ppr(3)
+O_GRAPH_PAGERANK = _o_pagerank(3)
+
+
+def q_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Personalized PageRank from the region nodes (random walk with
+    restart to seeds): 'which suppliers/nations does a walk from THESE
+    hubs keep reaching' — components.pagerank_rounds with a broadcast seed
+    set, integer fixed-point, 3 rounds."""
+    from assemblagedb_spark.operators.components import pagerank_rounds
+
+    e = _cyclic_graph_edges(spark, sf_dir)
+    seeds = (
+        load_table(spark, sf_dir, "region")
+        .filter(F.col("r_regionkey") < 3)
+        .select(F.concat(F.lit("R"), F.col("r_regionkey")).alias("node_id"))
+    )
+    return pagerank_rounds(e, rounds=3, seeds=seeds)
+
+
+O_GRAPH_PPR = _o_pagerank(3, seeds=("R0", "R1", "R2"))
 
 
 def q_graph_cyclic(spark: SparkSession, sf_dir: str) -> DataFrame:

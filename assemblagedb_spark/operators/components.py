@@ -1,81 +1,77 @@
-"""Connected components via label propagation — the GraphX-style analytics
-layer over the engine's edge relation (BASELINE.json north star: "GraphX for
-analytics queries", re-expressed as DataFrame rounds).
+"""GraphX-style analytics over the engine's edge relation (BASELINE.json
+north star: "GraphX for analytics queries", re-expressed as DataFrame
+rounds). One operator per analytic:
 
-Each round every node takes the min label in its closed neighborhood; after
-``rounds`` ≥ graph diameter the labels are exactly the per-component minimum
-node id (classic synchronous label propagation — the Pregel loop GraphX
-ships, as a join + aggregate per round).
+- :func:`contracted_components`: connected components. Partition-local
+  union-find contraction, finished by min-label propagation run to its
+  fixed point.
+- :func:`pagerank_rounds`: integer fixed-point PageRank, global or
+  personalized to a seed set, for a fixed round count.
+- :func:`triangle_counts`, :func:`bfs_depth` and :func:`k_core_delta`.
 
-Scale design: per round the work is ONE |E| join + one |V| aggregate — no
-transitive closure is ever materialized, so hub nodes cause no row
-explosion. (Each round does pay its own exchanges: a checkpointed label
-relation exposes no partitioning for Catalyst to reuse — see the
-k_core_delta pin note.) With ``rounds=None`` the loop probes convergence
-instead of trusting a diameter guess: each round's labels are checkpointed
-anyway, so the changed-label count is one cheap job over in-memory blocks,
-and the loop exits the first round nothing changes — exact components on
-any graph, bounded by ``max_rounds`` as a runaway guard. Fixed ``rounds``
-remains for oracle replay (the DuckDB gate unrolls the same number of CTE
-rounds).
+Scale design: no operator materializes a transitive closure, so hub nodes
+cause no row explosion. A loop round is one join on the edge side plus one
+node aggregate, and its result is pinned by an eager ``localCheckpoint``
+so lineage never grows. (Each round still pays its own exchanges: a
+checkpointed relation exposes no partitioning for Catalyst to reuse; see
+the k_core_delta pin note.)
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+# union-find contraction budget: passes, and the partition coalesce factor
+# between consecutive passes (also the memory bound of a pass's dict; see
+# contracted_components)
+_CONTRACTION_LEVELS = 3
+_FANIN = 16
+# integer PageRank: ranks are BIGINT multiples of 1/_SCALE, damping in
+# percent
+_SCALE = 1_000_000
+_DAMPING_PCT = 85
 
-def label_propagation_components(
-    edges: DataFrame,
-    *,
-    rounds: int | None,
-    directed: bool = False,
-    max_rounds: int = 200,
-    probe_from: int = 2,
-    copartition: bool = True,
-) -> DataFrame:
-    """(node_id, component) labels from synchronous min-label propagation.
 
-    ``rounds``: fixed iteration count — component = min node id reachable
-    within that many hops, exact once ``rounds`` ≥ diameter (replayable by
-    an oracle that unrolls the same rounds). ``rounds=None``: iterate until
-    no label changes (exact components on any graph; stops after diameter+1
-    rounds, capped at ``max_rounds``).
+def _propagate_labels(stars: DataFrame) -> DataFrame:
+    """(node_id, component) by synchronous min-label propagation over a
+    (src, dst) relation taken as undirected, run to its fixed point: the
+    finisher of :func:`contracted_components`.
 
-    ``edges``: (parent_id, child_id); treated as undirected unless
-    ``directed`` (components of the underlying undirected graph is the
-    standard CC semantics). With ``directed=True`` labels only flow
-    edge-forward; nodes appearing solely as dst still get a label row.
+    Each round every node takes the min label in its closed neighborhood
+    (one |E| join + one |V| aggregate, the Pregel loop GraphX ships).
+    Labels only decrease, so within diameter + 1 rounds every label is its
+    component's min node id and a round changes nothing; the loop stops
+    there and needs no round cap. The input is the contracted star
+    relation, tiny by construction, so it is cached without a hash
+    partitioning: a defaultParallelism-wide exchange and as many tasks
+    per round on a few hundred edges is pure overhead (interleaved A/B on
+    dedup_clusters: ~0.3s slower with it).
+
+    The changed-label probe rides each round's checkpoint job via
+    observe(): one job per round, not a checkpoint plus a second count
+    scan. It is read from round 0, because on a contracted graph the
+    first round usually IS the fixed point. Retry safety: the session
+    runs ``local[N,2]``, so a task can run twice and its metrics can be
+    counted twice. An over-count only delays the exit by one round past
+    the fixed point, where propagation is the identity; an under-count
+    cannot happen, so the loop never exits before the fixed point.
     """
-    fwd = edges.select(
-        F.col("parent_id").alias("src"), F.col("child_id").alias("dst")
+    from pyspark.sql import Observation
+
+    und = (
+        stars.unionByName(
+            stars.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        .distinct()
+        .persist()
     )
-    und = fwd if directed else fwd.unionByName(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    labels = (
+        und.select(F.col("src").alias("node_id"))
+        .distinct()
+        .withColumn("component", F.col("node_id"))
     )
-    # ``copartition``: hash-partition on src before caching — the
-    # InMemoryRelation keeps its outputPartitioning, so every round's
-    # label join reuses the cached layout instead of re-shuffling |E|
-    # per round (same co-location move as pagerank_rounds; A/B-measured
-    # there). Callers feeding a provably-tiny relation (the union-find
-    # contraction finisher) pass False: a 32-way exchange + 32 tasks per
-    # round on a few hundred contracted edges is pure overhead
-    # (interleaved A/B on dedup_clusters: ~0.3s slower with it).
-    und = und.distinct()
-    if copartition:
-        parts = edges.sparkSession.sparkContext.defaultParallelism
-        und = und.repartition(parts, "src")
-    und = und.persist()
-    node_ids = und.select(F.col("src").alias("node_id"))
-    if directed:
-        # sink nodes appear only as dst — they still need label rows
-        node_ids = node_ids.unionByName(und.select(F.col("dst").alias("node_id")))
-    labels = node_ids.distinct().withColumn("component", F.col("node_id"))
-    probe = rounds is None
-    n_rounds = max_rounds if probe else rounds
-    for r in range(n_rounds):
-        # labels flow src -> dst (edge-forward); for the symmetrized
-        # undirected relation this is identical to the reverse orientation
+    changed = 1
+    while changed:
         neigh = (
             und.join(
                 labels.select(
@@ -87,7 +83,8 @@ def label_propagation_components(
             .agg(F.min("nl").alias("nl"))
             .withColumnRenamed("dst", "node_id")
         )
-        nxt = (
+        obs = Observation()
+        labels = (
             labels.join(neigh, "node_id", "left")
             .select(
                 "node_id",
@@ -96,53 +93,35 @@ def label_propagation_components(
                     "component", F.coalesce("nl", F.col("component"))
                 ).alias("component"),
             )
-        )
-        # labels virtually always change in the first rounds — skip those
-        # probe aggregates (exactness unaffected: propagation past
-        # convergence is the identity, the loop just exits at the next
-        # probe). ``probe_from`` lets callers that feed an already-
-        # contracted graph probe from round 0, where the first round
-        # usually IS the fixed point. The probe RIDES the checkpoint
-        # job via observe() (one job per round, not checkpoint + a
-        # second changed-count scan); an over-count under task retries
-        # only delays exit by a no-op round, an under-count cannot
-        # happen, so convergence stays exact.
-        do_probe = probe and r >= probe_from
-        if do_probe:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            nxt = nxt.observe(
+            .observe(
                 obs,
                 F.sum(
                     (F.col("component") != F.col("prev")).cast("long")
                 ).alias("changed"),
             )
-        nxt = nxt.localCheckpoint(eager=True)  # one round computed once
-        labels = nxt.select("node_id", "component")
-        if do_probe and (obs.get["changed"] or 0) == 0:
-            break
+            .localCheckpoint(eager=True)  # one round computed once
+            .select("node_id", "component")
+        )
+        changed = obs.get["changed"] or 0
     und.unpersist()
     return labels
 
 
 def pagerank_rounds(
-    edges: DataFrame,
-    *,
-    rounds: int | None,
-    scale: int = 1_000_000,
-    damping_pct: int = 85,
-    max_rounds: int = 200,
+    edges: DataFrame, *, rounds: int, seeds: DataFrame | None = None
 ) -> DataFrame:
-    """Fixed-point integer PageRank: synchronous iterations with ranks held
-    as BIGINT multiples of 1/``scale`` and integer-division contributions —
-    every engine computes bit-identical ranks (no float summation order),
-    which is what makes the result oracle-comparable.
+    """Fixed-point integer PageRank: ``rounds`` synchronous iterations with
+    ranks held as BIGINT multiples of 1/``_SCALE`` and integer-division
+    contributions — every engine computes bit-identical ranks (no float
+    summation order), which is what makes the result oracle-comparable
+    (the DuckDB gates unroll the same rounds).
 
-    ``rounds``: fixed iteration count (oracle-replayable). ``rounds=None``:
-    iterate until the integer ranks reach their exact fixed point (no rank
-    changes between rounds — integer arithmetic converges exactly, unlike
-    float PageRank), capped at ``max_rounds``.
+    ``seeds``: a (node_id) frame for personalized PageRank (random walk
+    with restart): the start mass and the teleport mass land ONLY on the
+    seeds — "which nodes does a walk from THESE nodes keep reaching", the
+    related-documents query over a near-dup or citation graph. The seed
+    set is broadcast into the node join. ``None`` makes every node a seed,
+    which is global PageRank.
 
     Per round: one |E| join (contribution = rank div out-degree), one |V|
     aggregate — same shuffle shape as the Pregel PageRank GraphX ships.
@@ -166,12 +145,23 @@ def pagerank_rounds(
         .unionByName(e.select(F.col("dst").alias("node_id")))
         .distinct()
     )
+    if seeds is None:
+        nodes = nodes.withColumn("is_seed", F.lit(True))
+    else:
+        seed_flag = seeds.select(F.col("node_id")).distinct().withColumn(
+            "__is_seed", F.lit(True)
+        )
+        nodes = nodes.join(F.broadcast(seed_flag), "node_id", "left").select(
+            "node_id", F.coalesce("__is_seed", F.lit(False)).alias("is_seed")
+        )
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    base = (100 - damping_pct) * scale // 100
-    ranks = nodes.withColumn("rank", F.lit(scale).cast("long"))
-    probe = rounds is None
-    n_rounds = max_rounds if probe else rounds
-    for _ in range(n_rounds):
+    base = (100 - _DAMPING_PCT) * _SCALE // 100
+    base_col = F.when(F.col("is_seed"), F.lit(base)).otherwise(F.lit(0))
+    ranks = nodes.withColumn(
+        "rank",
+        F.when(F.col("is_seed"), F.lit(_SCALE)).otherwise(F.lit(0)).cast("long"),
+    )
+    for _ in range(rounds):
         contrib = (
             e.join(ranks.withColumnRenamed("node_id", "src"), "src")
             .join(outdeg, "src")
@@ -180,36 +170,20 @@ def pagerank_rounds(
             .agg(F.sum("c").alias("in_sum"))
             .withColumnRenamed("dst", "node_id")
         )
-        nxt = (
-            ranks.join(contrib, "node_id", "left")
+        ranks = (
+            ranks.drop("rank")
+            .join(contrib, "node_id", "left")
             .select(
-                "node_id",
-                F.col("rank").alias("prev"),
+                "node_id", "is_seed",
                 (
-                    F.lit(base)
-                    + F.expr(f"({damping_pct} * coalesce(in_sum, 0)) div 100")
+                    base_col
+                    + F.expr(f"({_DAMPING_PCT} * coalesce(in_sum, 0)) div 100")
                 ).cast("long").alias("rank"),
             )
+            .localCheckpoint(eager=True)
         )
-        # the fixed-point probe rides the checkpoint job via observe()
-        # (one job per round; see label_propagation_components)
-        if probe:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            nxt = nxt.observe(
-                obs,
-                F.sum((F.col("rank") != F.col("prev")).cast("long")).alias(
-                    "changed"
-                ),
-            )
-        nxt = nxt.localCheckpoint(eager=True)
-        stable = probe and (obs.get["changed"] or 0) == 0
-        ranks = nxt.select("node_id", "rank")
-        if stable:
-            break
     e.unpersist()
-    return ranks
+    return ranks.select("node_id", "rank")
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:
@@ -333,65 +307,55 @@ def contraction_pass(rel: DataFrame) -> DataFrame:
     return rel.mapInPandas(_contract, schema=star_schema)
 
 
-def contracted_components(
-    edges: DataFrame,
-    *,
-    contraction_levels: int = 3,
-    fanin: int = 16,
-    max_rounds: int = 200,
-) -> DataFrame:
+def contracted_components(edges: DataFrame) -> DataFrame:
     """Connected components via partition-local union-find contraction —
     the "local sequential step" of large-scale CC systems (Kiveris et al.,
     SoCC'14 §4 use the same idea to cut rounds) — finished by
     convergence-probed min-label propagation on the contracted graph.
 
     Phase 1 (per level): ONE Arrow pass over the raw edge partitions —
-    union-find needs neither symmetry nor dedup, so unlike the
-    propagation loop the input is never shuffled first. Each partition
-    union-finds the edges it holds (min-id roots, path-compressed) and
-    emits its components as (root, node) stars. Replacing a partition's
-    edges by a star over the same nodes
+    union-find needs neither symmetry nor dedup, so the input is never
+    shuffled first. Each partition union-finds the edges it holds (min-id
+    roots, path-compressed) and emits its components as (root, node)
+    stars. Replacing a partition's edges by a star over the same nodes
     preserves connectivity, so the union of stars across partitions has
     exactly the input's components — but every within-partition path is
-    now ≤2 hops. Each level feeds its stars to the next with ``fanin``×
+    now ≤2 hops. Each level feeds its stars to the next with ``_FANIN``×
     fewer partitions (a shuffle-free ``coalesce``), so level 2 sees most
     of a component's stars in one task and collapses the cross-partition
-    chains as well.
+    chains as well; ``_CONTRACTION_LEVELS`` caps the pass count.
 
-    Phase 2: :func:`label_propagation_components` with ``rounds=None,
-    probe_from=0`` over the final star relation. On typical graphs the
-    contraction has already converged and the loop exits at the first
-    probe; on adversarial layouts (a chain whose every edge landed in a
-    different partition) it simply runs the remaining rounds — exactness
-    NEVER depends on the contraction having finished the job.
+    Phase 2: :func:`_propagate_labels` over the final star relation. On
+    typical graphs the contraction has already converged and the loop
+    exits at the first probe; on adversarial layouts (a chain whose every
+    edge landed in a different partition) it simply runs the remaining
+    rounds — exactness NEVER depends on the contraction having finished
+    the job.
 
-    Output: (node_id, component), component = global min node id —
-    identical to :func:`label_propagation_components` (roots are
-    per-partition minima; the finisher takes the global min). Undirected
-    semantics only.
+    Output: (node_id, component), component = the component's min node id
+    (roots are per-partition minima; the finisher takes the global min).
+    ``edges`` is (parent_id, child_id), read as undirected. A half-NULL
+    edge gives its real endpoint a row; an all-NULL edge gives none.
 
     Scale: union-find state is one dict entry per DISTINCT node in the
     task's input and never leaves the executor — no driver collect, no
     broadcast, no assumption the graph fits anywhere whole. Arrow
     batches stream through the pass; only the node dict is resident.
-    ``fanin`` is therefore a memory knob, not just a round knob: a
-    level-k task sees at most ``fanin`` level-(k-1) partitions' star
-    rows, so its dict is bounded by ``fanin`` × nodes-per-partition
-    (less when partitions share nodes, which is the whole point). Keep
-    it modest on node-dense graphs and let the probed finisher absorb
-    whatever the contraction didn't collapse — exactness never depends
-    on the contraction converging. Where min-label propagation pays
-    diameter rounds of |E| shuffle each, this pays 2 map-side passes +
-    the few rounds the contracted graph still needs.
+    ``_FANIN`` is therefore a memory bound, not just a round knob: a
+    level-k task sees at most ``_FANIN`` level-(k-1) partitions' star
+    rows, so its dict is bounded by ``_FANIN`` × nodes-per-partition
+    (less when partitions share nodes, which is the whole point). Where
+    plain min-label propagation pays diameter rounds of |E| shuffle each,
+    this pays the map-side passes + the few rounds the contracted graph
+    still needs (interleaved A/B on graph_components at sf0.1 in
+    SCALING_R10.md).
     """
     fwd = edges.select(
         F.col("parent_id").alias("src"), F.col("child_id").alias("dst")
     )
     # Python's None is not orderable inside the union-find: a half-null
     # edge collapses to a self-loop so its real endpoint still gets its
-    # singleton label row (matching the propagation loop, which keeps
-    # such nodes in the universe; only the degenerate all-null row —
-    # which propagation emits and contraction doesn't — differs)
+    # singleton label row; an all-null edge names no node and is dropped
     fwd = fwd.filter(
         F.col("src").isNotNull() | F.col("dst").isNotNull()
     ).select(
@@ -399,7 +363,7 @@ def contracted_components(
         F.coalesce("dst", "src").alias("dst"),
     )
     # level 0 runs on the input's own partitioning; each further level
-    # coalesces fanin× and re-contracts, STOPPING EARLY once the star
+    # coalesces _FANIN× and re-contracts, STOPPING EARLY once the star
     # relation fits one partition (that task union-finds the whole
     # contracted graph, so the finisher exits at its first probe). The
     # early exit matters both ways: a single-partition input skips the
@@ -409,115 +373,37 @@ def contracted_components(
     # fold went 32-wide) collapses fully instead of leaving
     # cross-partition chains to diameter-priced finisher rounds. The
     # localCheckpoint makes getNumPartitions a metadata read, and
-    # ``contraction_levels`` still caps the pass count at scale (a
+    # ``_CONTRACTION_LEVELS`` still caps the pass count at scale (a
     # 1000-partition corpus stops at 1000 → 63 → 4, each task's
-    # union-find dict fanin-bounded exactly as before).
-    cur = fwd
-    if contraction_levels > 0:
-        cur = contraction_pass(cur).localCheckpoint(eager=True)
-        for _ in range(1, contraction_levels):
-            n_parts = cur.rdd.getNumPartitions()
-            if n_parts <= 1:
-                break
-            cur = contraction_pass(
-                cur.coalesce(max(1, n_parts // fanin))
-            ).localCheckpoint(eager=True)
-        # Exactness shortcut: mapInPandas is partition-preserving, so the
-        # checkpointed star relation has exactly its pass's input
-        # partition count — if that is ONE, the last union-find task saw
-        # every edge of the (contracted) graph and its per-task min-id
-        # roots ARE the global components. The finisher would symmetrize,
-        # persist and probe one propagation round just to confirm the
-        # fixed point; skip it and emit the stars as labels directly
-        # ((root, node) rows cover every node exactly once, roots
-        # included). The condition is checked mechanically at runtime —
-        # a multi-partition relation still takes the probed finisher, so
-        # exactness never rests on the contraction having converged.
-        # Assumption (ADVICE r9): node ids must order identically under
-        # Python's `<` (the union-find's min-root choice) and Spark's
-        # ordering (the finisher's F.min) for the two branches to agree —
-        # true for the integral/string ids every caller feeds; a float
-        # graph with NaN ids or mixed-type ids is outside the contract.
-        if cur.rdd.getNumPartitions() == 1:
-            return cur.select(
-                F.col("dst").alias("node_id"), F.col("src").alias("component")
-            )
-    return label_propagation_components(
-        cur.select(
-            F.col("src").alias("parent_id"), F.col("dst").alias("child_id")
-        ),
-        rounds=None,
-        max_rounds=max_rounds,
-        probe_from=0,
-        copartition=False,  # contracted relation is tiny by construction
-    )
-
-
-def personalized_pagerank(
-    edges: DataFrame,
-    seeds: DataFrame,
-    *,
-    rounds: int,
-    scale: int = 1_000_000,
-    damping_pct: int = 85,
-) -> DataFrame:
-    """Random-walk-with-restart scores relative to a seed set: identical
-    loop to :func:`pagerank_rounds`, but the teleport mass lands ONLY on
-    the seeds — the similarity ranking "which nodes does a walk from THESE
-    nodes keep reaching" (recommendation / related-documents queries over
-    the near-dup or citation graph).
-
-    Integer fixed-point like the global variant (bit-identical on any
-    engine); ``seeds`` is a (node_id) frame, broadcast into the base-term
-    join. Fixed ``rounds`` for oracle replay. The edge cache is
-    hash-partitioned on ``src`` before persisting so each round's
-    contribution join reuses the cached layout (see
-    :func:`pagerank_rounds`).
-    """
-    parts = edges.sparkSession.sparkContext.defaultParallelism
-    e = edges.select(
-        F.col("parent_id").alias("src"), F.col("child_id").alias("dst")
-    ).distinct().repartition(parts, "src").persist()
-    nodes = (
-        e.select(F.col("src").alias("node_id"))
-        .unionByName(e.select(F.col("dst").alias("node_id")))
-        .distinct()
-    )
-    seed_flag = seeds.select(F.col("node_id")).distinct().withColumn(
-        "__is_seed", F.lit(True)
-    )
-    nodes = nodes.join(F.broadcast(seed_flag), "node_id", "left").select(
-        "node_id", F.coalesce("__is_seed", F.lit(False)).alias("is_seed")
-    )
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    base = (100 - damping_pct) * scale // 100
-    base_col = F.when(F.col("is_seed"), F.lit(base)).otherwise(F.lit(0))
-    ranks = nodes.withColumn(
-        "rank", F.when(F.col("is_seed"), F.lit(scale)).otherwise(F.lit(0)).cast("long")
-    )
-    for _ in range(rounds):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node_id", "src"), "src")
-            .join(outdeg, "src")
-            .select("dst", F.expr("rank div outdeg").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("in_sum"))
-            .withColumnRenamed("dst", "node_id")
+    # union-find dict _FANIN-bounded exactly as before).
+    cur = contraction_pass(fwd).localCheckpoint(eager=True)
+    for _ in range(1, _CONTRACTION_LEVELS):
+        n_parts = cur.rdd.getNumPartitions()
+        if n_parts <= 1:
+            break
+        cur = contraction_pass(
+            cur.coalesce(max(1, n_parts // _FANIN))
+        ).localCheckpoint(eager=True)
+    # Exactness shortcut: mapInPandas is partition-preserving, so the
+    # checkpointed star relation has exactly its pass's input partition
+    # count — if that is ONE, the last union-find task saw every edge of
+    # the (contracted) graph and its per-task min-id roots ARE the global
+    # components. The finisher would symmetrize, persist and probe one
+    # propagation round just to confirm the fixed point; skip it and emit
+    # the stars as labels directly ((root, node) rows cover every node
+    # exactly once, roots included). The condition is checked
+    # mechanically at runtime — a multi-partition relation still takes
+    # the probed finisher, so exactness never rests on the contraction
+    # having converged. Assumption (ADVICE r9): node ids must order
+    # identically under Python's `<` (the union-find's min-root choice)
+    # and Spark's ordering (the finisher's F.min) for the two branches to
+    # agree — true for the integral/string ids every caller feeds; a
+    # float graph with NaN ids or mixed-type ids is outside the contract.
+    if cur.rdd.getNumPartitions() == 1:
+        return cur.select(
+            F.col("dst").alias("node_id"), F.col("src").alias("component")
         )
-        ranks = (
-            ranks.drop("rank")
-            .join(contrib, "node_id", "left")
-            .select(
-                "node_id", "is_seed",
-                (
-                    base_col
-                    + F.expr(f"({damping_pct} * coalesce(in_sum, 0)) div 100")
-                ).cast("long").alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    e.unpersist()
-    return ranks.select("node_id", "rank")
+    return _propagate_labels(cur)
 
 
 def bfs_depth(
@@ -558,7 +444,7 @@ def bfs_depth(
 
     # the seed-count and new-row probes ride each checkpoint job via
     # observe() (one job per round instead of checkpoint + count; see
-    # label_propagation_components for the retry-safety argument)
+    # _propagate_labels for the retry-safety argument)
     obs = Observation()
     settled = (
         seeds.select("node_id").distinct()

@@ -121,6 +121,83 @@ def py_display_class(rows, *, max_iter):
     return {n: resolve(n) for n in kind}
 
 
+# -- plain-Python references for the graph analytics ------------------------
+
+
+def py_components(rows):
+    """Sorted (node_id, component) by union-find over (a, b) edges read as
+    undirected: component = the min node id of the node's connected
+    component. A half-NULL edge names only its real endpoint; an all-NULL
+    edge names no node."""
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in rows:
+        if a is None and b is None:
+            continue
+        a, b = (b if a is None else a), (a if b is None else b)
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return sorted((x, find(x)) for x in parent)
+
+
+def components_by_layout(edges):
+    """{layout: sorted (node_id, component)} from ``contracted_components``
+    over ``edges`` as given, scattered to 16 partitions, on one partition
+    (the finisher-free shortcut), and scattered to 12 partitions with one
+    contraction level and fan-in 1, where the probed finisher must finish
+    the job."""
+    from assemblagedb_spark.operators import components as C
+
+    def run(df):
+        return sorted(
+            (r["node_id"], r["component"])
+            for r in C.contracted_components(df).collect()
+        )
+
+    out = {
+        "input": run(edges),
+        "repartition(16)": run(edges.repartition(16)),
+        "repartition(1)": run(edges.repartition(1)),
+    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(C, "_CONTRACTION_LEVELS", 1)
+        mp.setattr(C, "_FANIN", 1)
+        out["repartition(12), one level"] = run(edges.repartition(12))
+    return out
+
+
+def py_pagerank(pairs, *, rounds, seeds=None):
+    """{node_id: rank} replaying ``pagerank_rounds``' integer arithmetic
+    over the distinct directed edges in ``pairs``: ranks in millionths,
+    85% damping, dangling mass dropped; the start and teleport mass land
+    only on ``seeds`` (every node when None)."""
+    scale, damping = 1_000_000, 85
+    pairs = set(pairs)
+    nodes = {n for p in pairs for n in p}
+    seeds = nodes if seeds is None else set(seeds)
+    out: dict = {}
+    for a, b in pairs:
+        out.setdefault(a, []).append(b)
+    base = (100 - damping) * scale // 100
+    rank = {n: scale if n in seeds else 0 for n in nodes}
+    for _ in range(rounds):
+        in_sum = dict.fromkeys(nodes, 0)
+        for src, dsts in out.items():
+            for d in dsts:
+                in_sum[d] += rank[src] // len(dsts)
+        rank = {
+            n: (base if n in seeds else 0) + damping * in_sum[n] // 100
+            for n in nodes
+        }
+    return rank
+
+
 # -- Spark-vs-DuckDB gate comparison ----------------------------------------
 
 

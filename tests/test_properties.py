@@ -12,6 +12,7 @@ from hypothesis import strategies as st
 from assemblagedb_spark.functions.core import index_text, trim_for_search
 from assemblagedb_spark.kvstore import KvStore
 from assemblagedb_spark.views.markup import block_to_markup, markup_to_block
+from tests.conftest import components_by_layout, py_components, py_pagerank
 
 markup_text = st.text(
     alphabet=string.ascii_letters + string.digits + " #>-,*_~`\\.!?",
@@ -157,43 +158,18 @@ def test_arrow_grams_equal_driver_grams(spark, texts):
     )
 )
 def test_label_propagation_matches_union_find(spark, pairs):
-    """Bounded label propagation with rounds >= diameter equals exact
-    union-find components on arbitrary random graphs (cycles, self-loops,
-    parallel edges included)."""
-    from assemblagedb_spark.operators.components import (
-        label_propagation_components,
-    )
-
+    """Connected components (union-find contraction, and the label
+    propagation finisher on the one-level layout) equal a plain-Python
+    union-find on arbitrary random graphs (cycles, self-loops, parallel
+    edges included), on every input layout."""
+    rows = [(f"n{a:02d}", f"n{b:02d}") for a, b in pairs]
     edges = spark.createDataFrame(
-        [(f"n{a:02d}", f"n{b:02d}", 0) for a, b in pairs],
+        [(a, b, 0) for a, b in rows],
         "parent_id string, child_id string, idx int",
     )
-    # rounds = node count bounds any diameter
-    got = {
-        r["node_id"]: r["component"]
-        for r in label_propagation_components(edges, rounds=15).collect()
-    }
-
-    parent: dict[str, str] = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        parent[find(f"n{a:02d}")] = find(f"n{b:02d}")
-    want = {}
-    comp_min: dict[str, str] = {}
-    for a, b in pairs:
-        for n in (f"n{a:02d}", f"n{b:02d}"):
-            root = find(n)
-            comp_min[root] = min(comp_min.get(root, n), n)
-    for a, b in pairs:
-        for n in (f"n{a:02d}", f"n{b:02d}"):
-            want[n] = comp_min[find(n)]
-    assert got == want
+    want = py_components(rows)
+    for layout, got in components_by_layout(edges).items():
+        assert got == want, layout
 
 
 @settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.too_slow])
@@ -202,37 +178,33 @@ def test_label_propagation_matches_union_find(spark, pairs):
         st.tuples(st.integers(0, 9), st.integers(0, 9)),
         min_size=1,
         max_size=25,
-    ).map(lambda ps: sorted(set(ps)))
+    ).map(lambda ps: sorted(set(ps))),
+    st.sets(st.integers(0, 9), max_size=3),
 )
-def test_pagerank_rounds_match_python_reference(spark, pairs):
-    """Integer fixed-point PageRank equals a pure-python replay of the same
-    arithmetic on arbitrary directed graphs."""
+def test_pagerank_rounds_match_python_reference(spark, pairs, seed_ids):
+    """Integer fixed-point PageRank, global and personalized to a seed
+    set, equals a pure-python replay of the same arithmetic on arbitrary
+    directed graphs."""
     from assemblagedb_spark.operators.components import pagerank_rounds
 
+    rows = [(f"n{a}", f"n{b}") for a, b in pairs]
     edges = spark.createDataFrame(
-        [(f"n{a}", f"n{b}", 0) for a, b in pairs],
+        [(a, b, 0) for a, b in rows],
         "parent_id string, child_id string, idx int",
     )
     got = {
         r["node_id"]: r["rank"]
         for r in pagerank_rounds(edges, rounds=3).collect()
     }
+    assert got == py_pagerank(rows, rounds=3)
 
-    scale, damping = 1_000_000, 85
-    nodes = {f"n{a}" for a, b in pairs} | {f"n{b}" for a, b in pairs}
-    out: dict[str, list[str]] = {}
-    for a, b in pairs:
-        out.setdefault(f"n{a}", []).append(f"n{b}")
-    rank = {n: scale for n in nodes}
-    base = (100 - damping) * scale // 100
-    for _ in range(3):
-        in_sum = {n: 0 for n in nodes}
-        for src, dsts in out.items():
-            c = rank[src] // len(dsts)
-            for d in dsts:
-                in_sum[d] += c
-        rank = {n: base + (damping * in_sum[n]) // 100 for n in nodes}
-    assert got == rank
+    seeds = [f"n{i}" for i in sorted(seed_ids)]
+    seed_df = spark.createDataFrame([(s,) for s in seeds], "node_id string")
+    got = {
+        r["node_id"]: r["rank"]
+        for r in pagerank_rounds(edges, rounds=3, seeds=seed_df).collect()
+    }
+    assert got == py_pagerank(rows, rounds=3, seeds=seeds)
 
 
 def test_hyperplane_sketch_matches_formula_replay(spark):

@@ -20,6 +20,7 @@ from assemblagedb_spark.operators.sketches import (
 from assemblagedb_spark.operators.textstats import tfidf_top_terms
 from assemblagedb_spark.operators.vectors import centroid_assign, label_centroids
 from assemblagedb_spark.sources.layout import zorder_key_col, zorder_key_sql
+from tests.conftest import components_by_layout, py_components
 
 
 def mix32_py(x: int, seed: int = 0) -> int:
@@ -394,126 +395,69 @@ def test_bloom_no_false_negatives_and_prefilter_exact(spark):
 
 
 # ---------------------------------------------------------------------------
-# convergence-probed label propagation on a long chain
+# connected components: union-find contraction + probed label propagation
 # ---------------------------------------------------------------------------
 
-def test_label_propagation_long_chain_converges(spark):
-    from assemblagedb_spark.operators.components import (
-        label_propagation_components,
-    )
+# chain longer than any reasonable fixed round budget + triangle + pair + a
+# node whose ONLY edge is a self-loop (must still get a label row)
+_CHAIN_ROWS = ([(i, i + 1) for i in range(80)]
+               + [(500, 501), (501, 502), (502, 500), (900, 901), (950, 950)])
 
-    # chain longer than any reasonable fixed round budget + triangle + pair
-    # + a node whose ONLY edge is a self-loop (must still get a label row)
-    rows = ([(i, i + 1) for i in range(80)]
-            + [(500, 501), (501, 502), (502, 500), (900, 901), (950, 950)])
-    e = spark.createDataFrame(rows, "parent_id long, child_id long")
-    prop = [(r["node_id"], r["component"])
-            for r in label_propagation_components(
-                e, rounds=None, max_rounds=200).collect()]
+
+def test_label_propagation_long_chain_converges(spark):
+    # the one-level layout scatters the chain over 12 partitions, so the
+    # probed finisher must run its label propagation to the fixed point
+    e = spark.createDataFrame(_CHAIN_ROWS, "parent_id long, child_id long")
     expected = {n: 0 for n in range(81)}
     expected.update({500: 500, 501: 500, 502: 500, 900: 900, 901: 900,
                      950: 950})
-    assert len(prop) == len(expected) and dict(prop) == expected
-    assert {c for _, c in prop} == {0, 500, 900, 950}
+    for layout, got in components_by_layout(e).items():
+        assert len(got) == len(expected) and dict(got) == expected, layout
+        assert got == py_components(_CHAIN_ROWS), layout
 
 
 def test_contracted_components_parity(spark):
-    from assemblagedb_spark.operators.components import (
-        contracted_components,
-        label_propagation_components,
-    )
-
-    # chain + triangle + pair + self-loop-only node, same fixture the
-    # long-chain label-propagation test uses; repartition(16) scatters the
-    # chain so the finisher, not just the contraction, is exercised
-    rows = ([(i, i + 1) for i in range(80)]
-            + [(500, 501), (501, 502), (502, 500), (900, 901), (950, 950)])
-    e = spark.createDataFrame(rows, "parent_id long, child_id long")
-    for arranged in (e, e.repartition(16), e.repartition(1)):
-        got = sorted((r["node_id"], r["component"])
-                     for r in contracted_components(arranged).collect())
-        ref = sorted((r["node_id"], r["component"])
-                     for r in label_propagation_components(
-                         arranged, rounds=None, max_rounds=200).collect())
-        assert got == ref
-    assert {c for _, c in got} == {0, 500, 900, 950}
-    assert (950, 950) in got
-
     # adversarial layout: one edge per partition (contraction alone cannot
-    # finish — exactness must come from the probed label-prop finisher),
-    # plus a single contraction level to force that path
+    # finish — exactness must come from the probed label-prop finisher);
+    # components_by_layout also runs one contraction level to force that
+    chain_rows = [(i, i + 1) for i in range(12)]
     chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(12)], "parent_id long, child_id long"
+        chain_rows, "parent_id long, child_id long"
     ).repartition(12)
-    got = sorted((r["node_id"], r["component"])
-                 for r in contracted_components(
-                     chain, contraction_levels=1, fanin=1).collect())
-    assert got == [(i, 0) for i in range(13)]
+    for layout, got in components_by_layout(chain).items():
+        assert got == [(i, 0) for i in range(13)], layout
 
     # string node ids (the db layer's uuid graphs)
-    se = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("x", "y"), ("z", "z")],
-        "parent_id string, child_id string",
-    )
-    got = sorted((r["node_id"], r["component"])
-                 for r in contracted_components(se).collect())
-    assert got == [("a", "a"), ("b", "a"), ("c", "a"),
-                   ("x", "x"), ("y", "x"), ("z", "z")]
+    se_rows = [("a", "b"), ("b", "c"), ("x", "y"), ("z", "z")]
+    se = spark.createDataFrame(se_rows, "parent_id string, child_id string")
+    assert py_components(se_rows) == [
+        ("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x"), ("z", "z")]
+    for layout, got in components_by_layout(se).items():
+        assert got == py_components(se_rows), layout
 
     # null endpoints: the union-find must not see an unorderable None, so
     # a half-null edge collapses to a self-loop (its real endpoint keeps
-    # its singleton row); label propagation additionally keeps a
-    # degenerate (None, None) label row (nulls survive the node-universe
-    # distinct but never propagate through the joins) — parity holds on
-    # every real node
-    ne = spark.createDataFrame(
-        [(1, 2), (2, None), (None, 5), (7, 8)],
-        "parent_id long, child_id long",
-    )
-    got = sorted((r["node_id"], r["component"])
-                 for r in contracted_components(ne).collect())
-    ref = sorted((r["node_id"], r["component"])
-                 for r in label_propagation_components(
-                     ne, rounds=None, max_rounds=50).collect()
-                 if r["node_id"] is not None)
-    assert got == ref == [(1, 1), (2, 1), (5, 5), (7, 7), (8, 7)]
+    # its singleton row) and an all-null edge names no node
+    ne_rows = [(1, 2), (2, None), (None, 5), (7, 8), (None, None)]
+    ne = spark.createDataFrame(ne_rows, "parent_id long, child_id long")
+    assert py_components(ne_rows) == [(1, 1), (2, 1), (5, 5), (7, 7), (8, 7)]
+    for layout, got in components_by_layout(ne).items():
+        assert got == py_components(ne_rows), layout
 
     # seeded random graphs: sparse (forest-heavy), near-critical, and
-    # dense regimes — union-find contraction must agree with label
-    # propagation on arbitrary component structure, verified against a
-    # driver-side union-find ground truth as well
+    # dense regimes — arbitrary component structure
     import random
 
     for seed, n, m in ((7, 120, 60), (11, 120, 130), (13, 80, 400)):
         rng = random.Random(seed)
         rows = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
         e = spark.createDataFrame(rows, "parent_id long, child_id long")
-        got = sorted((r["node_id"], r["component"])
-                     for r in contracted_components(e).collect())
-        ref = sorted((r["node_id"], r["component"])
-                     for r in label_propagation_components(
-                         e, rounds=None, max_rounds=200).collect())
-        assert got == ref, f"seed={seed}"
-        parent = {}
-
-        def find(x):
-            r = parent.setdefault(x, x)
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:
-                parent[x], x = r, parent[x]
-            return r
-
-        for a, b in rows:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        truth = sorted((x, find(x)) for x in parent)
-        assert got == truth, f"seed={seed}"
+        for layout, got in components_by_layout(e).items():
+            assert got == py_components(rows), f"seed={seed} {layout}"
 
 
 def test_personalized_pagerank_mass_concentrates_near_seeds(spark):
-    from assemblagedb_spark.operators.components import personalized_pagerank
+    from assemblagedb_spark.operators.components import pagerank_rounds
 
     # two disjoint cycles; seed only the first
     e = spark.createDataFrame(
@@ -522,7 +466,7 @@ def test_personalized_pagerank_mass_concentrates_near_seeds(spark):
     )
     seeds = spark.createDataFrame([(1,)], "node_id long")
     r = {row["node_id"]: row["rank"]
-         for row in personalized_pagerank(e, seeds, rounds=6).collect()}
+         for row in pagerank_rounds(e, rounds=6, seeds=seeds).collect()}
     # unreachable component gets zero mass; seed's component is positive
     assert r[10] == r[11] == r[12] == 0
     assert r[1] > 0 and r[2] > 0 and r[3] > 0
@@ -723,7 +667,7 @@ def test_contracted_components_single_partition_skips_finisher(spark, monkeypatc
     rows = [(i, i + 1) for i in range(40)] + [(90, 91), (95, 95)]
     e = spark.createDataFrame(rows, "parent_id long, child_id long")
 
-    monkeypatch.setattr(C, "label_propagation_components", boom)
+    monkeypatch.setattr(C, "_propagate_labels", boom)
     got = sorted((r["node_id"], r["component"])
                  for r in C.contracted_components(e.repartition(1)).collect())
     assert got == ([(i, 0) for i in range(41)]
@@ -732,10 +676,11 @@ def test_contracted_components_single_partition_skips_finisher(spark, monkeypatc
     # adversarial layout with the contraction budget exhausted before the
     # star relation fits one partition: the probed finisher is still the
     # exactness backstop — the shortcut must NOT fire there
-    monkeypatch.setattr(C, "label_propagation_components", boom)
+    monkeypatch.setattr(C, "_CONTRACTION_LEVELS", 1)
+    monkeypatch.setattr(C, "_FANIN", 1)
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "parent_id long, child_id long"
     ).repartition(12)
     import pytest as _pytest
     with _pytest.raises(AssertionError, match="finisher invoked"):
-        C.contracted_components(chain, contraction_levels=1, fanin=1)
+        C.contracted_components(chain)

@@ -26,7 +26,7 @@ PICKS = [
     ("overlaps_sparse", "open-vocabulary broadcast kernel: (gram,copy) binary expansion collected to CSR postings, per-block bincount gather inside MapInPandas — exact multiset intersections, no shuffle, no join"),
     ("overlaps_prefix", "fully distributed exact plan: prefix+positional-filtered candidate equi-join on (gram,copy) elements, per-pair compact map_zip_with verify — every step a key-partitioned join/aggregation"),
     ("overlaps_incremental", "incremental maintenance on the broadcast-CSR kernel: only changed block rows scanned against the broadcast postings (MapInPandas, no shuffle); the scan emits the reverse edges onto unscanned partners, so no mirror pass or distinct; untouched pairs never rescored"),
-    ("graph_components", "per-round |E| join + |V| aggregate; no transitive closure materialized"),
+    ("graph_components", "union-find-contracted components: the contraction passes run eagerly (shuffle-free MapInPandas, pinned); when the last star relation is one partition the frame is that pinned scan (SinglePartition) relabelled, with no propagation round; no transitive closure materialized"),
     ("embedding_neardup", "LSH band self equi-join generates candidates; exact cosine verifies; no CartesianProduct anywhere"),
     ("dedup_simhash_pairs", "banded fingerprint bucket join (pigeonhole recall 1.0 at hamming<=4); no CartesianProduct"),
     ("text_winnowing", "shuffle-free fingerprint build: scan -> Arrow winnowing kernel -> explode"),
