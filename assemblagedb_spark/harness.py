@@ -2850,8 +2850,7 @@ def q_graph_preview(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.concat(F.lit("C"), F.col("c_custkey")).alias("node_id"))
     )
     return preview_leaf(
-        o.unionByName(ol), roots, blanks, max_depth=2, assume_forest=True,
-        broadcast_frontier=True,
+        o.unionByName(ol), roots, blanks, max_depth=2, assume_forest=True
     )
 
 

@@ -14,12 +14,18 @@ cause no row explosion. A loop round is one join on the edge side plus one
 node aggregate, and its result is pinned by an eager ``localCheckpoint``
 so lineage never grows. (Each round still pays its own exchanges: a
 checkpointed relation exposes no partitioning for Catalyst to reuse; see
-the k_core_delta pin note.)
+the k_core_delta pin note.) Every probed round goes through :func:`_pin`,
+which reads the round's exit and guard counts off the pin job itself.
+
+:func:`frontier_walk` is the one cycle-safe BFS: ``bfs_depth`` runs it
+over one seed set, ``traversal.subtree_closure`` runs it per root.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, functions as F
 
 # union-find contraction budget: passes, and the partition coalesce factor
 # between consecutive passes (also the memory bound of a pass's dict; see
@@ -30,6 +36,49 @@ _FANIN = 16
 # percent
 _SCALE = 1_000_000
 _DAMPING_PCT = 85
+# frontier_walk: frontier and settled sides are broadcast while their
+# probed row counts stay within this bound (~tens of MB of node ids)
+_WALK_BROADCAST_ROWS = 500_000
+# zero-padded width of each child idx in a frontier_walk path string
+_PATH_PAD = 10
+# k_core_delta: peel-round budget, and the largest dead frontier whose
+# join side is broadcast
+_KCORE_MAX_ROUNDS = 100
+_KCORE_BROADCAST_MAX_DEAD = 2_000_000
+
+
+def _pin(df: DataFrame, **probes: Column) -> tuple[DataFrame, dict]:
+    """Pin ``df`` with an eager ``localCheckpoint`` and read each probe
+    (an aggregate Column, by name) off that same job via ``observe()``:
+    one job per loop round, not a checkpoint plus a second count scan. A
+    probe over no rows reads 0, not None.
+
+    Retry safety, the argument every probed loop exit rests on: the
+    session runs ``local[N,2]``, so a task can run twice and its metrics
+    can be counted twice. A probe may over-count; it never under-counts.
+    Every loop exits when the probe of the round just pinned reads 0, and
+    never compares counts taken by two different jobs. So an over-count
+    only adds one round past the fixed point, where a round is the
+    identity, or pushes a broadcast guard toward its shuffle branch,
+    which changes bytes moved, not output. ``Observation`` is looked up
+    at call time, so a test can patch ``pyspark.sql.Observation``.
+    """
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    pinned = df.observe(
+        obs, *(c.alias(name) for name, c in probes.items())
+    ).localCheckpoint(eager=True)
+    return pinned, {name: v or 0 for name, v in obs.get.items()}
+
+
+def child_path() -> Column:
+    """A child row's ordered-DFS path: its parent's ``path`` plus ``/``
+    and its zero-padded ``idx``, so string order is sibling order at
+    every level."""
+    return F.concat(
+        "path", F.lit("/"), F.lpad(F.col("idx").cast("string"), _PATH_PAD, "0")
+    )
 
 
 def _propagate_labels(stars: DataFrame) -> DataFrame:
@@ -47,17 +96,10 @@ def _propagate_labels(stars: DataFrame) -> DataFrame:
     per round on a few hundred edges is pure overhead (interleaved A/B on
     dedup_clusters: ~0.3s slower with it).
 
-    The changed-label probe rides each round's checkpoint job via
-    observe(): one job per round, not a checkpoint plus a second count
-    scan. It is read from round 0, because on a contracted graph the
-    first round usually IS the fixed point. Retry safety: the session
-    runs ``local[N,2]``, so a task can run twice and its metrics can be
-    counted twice. An over-count only delays the exit by one round past
-    the fixed point, where propagation is the identity; an under-count
-    cannot happen, so the loop never exits before the fixed point.
+    The changed-label probe rides each round's pin (:func:`_pin`). It is
+    read from round 0, because on a contracted graph the first round
+    usually IS the fixed point.
     """
-    from pyspark.sql import Observation
-
     und = (
         stars.unionByName(
             stars.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -83,26 +125,18 @@ def _propagate_labels(stars: DataFrame) -> DataFrame:
             .agg(F.min("nl").alias("nl"))
             .withColumnRenamed("dst", "node_id")
         )
-        obs = Observation()
-        labels = (
-            labels.join(neigh, "node_id", "left")
-            .select(
+        pinned, probe = _pin(
+            labels.join(neigh, "node_id", "left").select(
                 "node_id",
                 F.col("component").alias("prev"),
                 F.least(
                     "component", F.coalesce("nl", F.col("component"))
                 ).alias("component"),
-            )
-            .observe(
-                obs,
-                F.sum(
-                    (F.col("component") != F.col("prev")).cast("long")
-                ).alias("changed"),
-            )
-            .localCheckpoint(eager=True)  # one round computed once
-            .select("node_id", "component")
+            ),
+            changed=F.sum((F.col("component") != F.col("prev")).cast("long")),
         )
-        changed = obs.get["changed"] or 0
+        labels = pinned.select("node_id", "component")
+        changed = probe["changed"]
     und.unpersist()
     return labels
 
@@ -406,94 +440,94 @@ def contracted_components(edges: DataFrame) -> DataFrame:
     return _propagate_labels(cur)
 
 
-def bfs_depth(
+def frontier_walk(
     edges: DataFrame,
     seeds: DataFrame,
     *,
     max_depth: int,
-    broadcast_rows: int = 500_000,
+    keys: Sequence[str] = (),
+    with_path: bool = False,
 ) -> DataFrame:
-    """Multi-source BFS: (node_id, depth) = fewest hops from ANY seed,
-    following edges parent→child, for every node within ``max_depth``.
+    """Cycle-safe BFS over ``edges(parent_id, child_id[, idx])``, run
+    separately for each value of the ``keys`` columns of ``seeds``:
+    (*keys, node_id, depth[, path]) for every node within ``max_depth``
+    hops. The (*keys, node_id) rows of ``seeds`` report depth 0, and a node
+    reachable at several depths reports the smallest (BFS invariant: the
+    first visit is the shallowest). With ``keys=[]`` this is one walk
+    from a seed SET; ``keys=["root_id"]`` keeps one walk per root.
 
-    The frontier loop is the traversal primitive behind reachability
-    closures (reference `descendants`, assemblage_db/src/lib.rs:695-797)
-    generalized to shortest-hop depth over a seed SET. Per round: one
-    frontier⋈edges equi-join + an anti-join against the settled set
-    (cycle-safe — a revisited node is never re-expanded, ``lib.rs:703-707``
-    visited-set analogue), so round r costs |frontier_r ⋈ E|, never |V|².
-    Seeds report depth 0; a node reachable at several depths reports the
-    minimum (BFS invariant: first visit is shallowest).
+    The reference's ``descendants`` and ``is_cyclic``
+    (``assemblage_db/src/lib.rs:695-797, 424-442``) are one such walk: a
+    frontier plus a ``HashSet`` visited guard. Here each level is one
+    frontier⋈edges equi-join, a dedup, and an anti-join against the
+    settled set (the visited guard: a revisited node is never expanded
+    again), so level d costs |frontier_d ⋈ E|, never |V|².
 
-    Join strategy is chosen from the loop's OWN runtime statistics: the
-    round's new rows are counted anyway (the convergence probe), so the
-    exact frontier and settled sizes are known before each join is
-    planned. While they fit a broadcast (``broadcast_rows``, ~tens of MB
-    of node ids), the frontier side of the expansion join and the settled
-    side of the anti-join are broadcast — the edge relation is never
-    shuffled for a small frontier. Past the bound the hints are simply
-    not attached and both joins fall back to shuffles: the hub-explosion
-    regime keeps the shuffle plan, a thin frontier (the common BFS tail)
-    never pays it. Identical output either way — the hints move bytes,
+    With ``with_path`` each row also carries its :func:`child_path`
+    string; a node reached along several routes keeps the smallest path
+    of its shallowest level — the ordered-DFS position of its first
+    visit.
+
+    One pin per level: the settled ∪ new relation goes through
+    :func:`_pin`, the next frontier is a filter (depth == d-1) over its
+    in-memory blocks, and the level's new-row probe rides the pin job and
+    ends the walk when it reads 0. The join strategy comes from the same
+    probes: the frontier and settled counts are exact before each level
+    is planned, and while one fits ``_WALK_BROADCAST_ROWS`` its join side
+    is broadcast, so the edge relation is not shuffled for a small
+    frontier. Past the bound the hints are simply not attached and both
+    joins shuffle. Identical output either way — the hints move bytes,
     not semantics.
     """
+    ids = [*keys, "node_id"]
+    path = ["path"] if with_path else []
     fwd = edges.select(
-        F.col("parent_id").alias("src"), F.col("child_id").alias("dst")
+        F.col("parent_id").alias("src"),
+        F.col("child_id").alias("dst"),
+        *(["idx"] if with_path else []),
     )
-    from pyspark.sql import Observation
-
-    # the seed-count and new-row probes ride each checkpoint job via
-    # observe() (one job per round instead of checkpoint + count; see
-    # _propagate_labels for the retry-safety argument)
-    obs = Observation()
-    settled = (
-        seeds.select("node_id").distinct()
-        .withColumn("depth", F.lit(0).cast("long"))
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    n_settled = obs.get["n"] or 0
-    frontier_n = n_settled
+    start = seeds.select(*ids).distinct().withColumn("depth", F.lit(0).cast("long"))
+    if with_path:
+        start = start.withColumn("path", F.lit(""))
+    settled, probe = _pin(start, n=F.count(F.lit(1)))
+    n_settled = frontier_n = probe["n"]
     for d in range(1, max_depth + 1):
-        # one checkpoint per round: the settled∪frontier union is pinned
-        # and the next frontier is a cheap filter over its in-memory
-        # blocks (depth == d-1), so neither the frontier nor the union is
-        # ever recomputed from lineage
         frontier = settled.filter(F.col("depth") == d - 1).select(
-            F.col("node_id").alias("src")
+            *keys, F.col("node_id").alias("src"), *path
         )
-        if frontier_n <= broadcast_rows:
+        if frontier_n <= _WALK_BROADCAST_ROWS:
             frontier = F.broadcast(frontier)
-        anti = settled.select("node_id")
-        if n_settled <= broadcast_rows:
+        anti = settled.select(*ids)
+        if n_settled <= _WALK_BROADCAST_ROWS:
             anti = F.broadcast(anti)
-        nxt = (
-            fwd.join(frontier, "src")
-            .select(F.col("dst").alias("node_id"))
-            .distinct()
-            .join(anti, "node_id", "left_anti")
-            .withColumn("depth", F.lit(d).cast("long"))
-        )
-        # the probe counts THIS round's new depth-d rows inside the one
-        # pinned job, so the exit test never compares counts from two
-        # different jobs: an over-count only delays exit by one round
-        # over an empty frontier (the identity) or pushes a guard toward
-        # the shuffle branch; an under-count cannot happen
-        obs = Observation()
-        merged = (
-            settled.unionByName(nxt)
-            .observe(
-                obs, F.sum((F.col("depth") == d).cast("long")).alias("n_new")
+        step = fwd.join(frontier, "src")
+        if with_path:
+            nxt = step.groupBy(*keys, F.col("dst").alias("node_id")).agg(
+                F.min(child_path()).alias("path")
             )
-            .localCheckpoint(eager=True)
+        else:
+            nxt = step.select(*keys, F.col("dst").alias("node_id")).distinct()
+        nxt = nxt.join(anti, ids, "left_anti").withColumn(
+            "depth", F.lit(d).cast("long")
         )
-        n_new = obs.get["n_new"] or 0
-        if n_new == 0:
+        merged, probe = _pin(
+            settled.unionByName(nxt),
+            n_new=F.sum((F.col("depth") == d).cast("long")),
+        )
+        if probe["n_new"] == 0:
             break
-        frontier_n = n_new
-        n_settled += n_new
+        frontier_n = probe["n_new"]
+        n_settled += frontier_n
         settled = merged
     return settled
+
+
+def bfs_depth(edges: DataFrame, seeds: DataFrame, *, max_depth: int) -> DataFrame:
+    """Multi-source BFS: (node_id, depth) = fewest hops from ANY seed
+    (``seeds``: one column ``node_id``), following edges parent→child,
+    for every node within ``max_depth`` — :func:`frontier_walk` over one
+    seed set. Seeds report depth 0."""
+    return frontier_walk(edges, seeds, max_depth=max_depth)
 
 
 def _symmetrized(edges: DataFrame) -> DataFrame:
@@ -525,9 +559,7 @@ def k_core_delta(
     edges: DataFrame,
     k: int,
     *,
-    max_rounds: int = 100,
     assume_distinct: bool = False,
-    broadcast_max_dead: int = 2_000_000,
 ) -> DataFrame:
     """The k-core of the undirected simple graph: iteratively peel every
     node whose current degree is below ``k`` (all at once per round) until
@@ -544,7 +576,7 @@ def k_core_delta(
     (frontier-bounded, like BFS) plus one O(|V_alive|) degree-table
     rewrite — vs a simultaneous peel's O(|E_alive|) rescan. The loop
     convergence-probes (a round that kills nobody ends it), bounded by
-    ``max_rounds``; the SQL oracle unrolls a fixed round count past
+    ``_KCORE_MAX_ROUNDS``; the SQL oracle unrolls a fixed round count past
     measured convergence, which matches because peeling is monotone
     (once stable, further rounds are identity). Parity against a
     plain-Python peel is pinned in tests/test_round3_ops.py.
@@ -559,9 +591,9 @@ def k_core_delta(
     parent and child id spaces are disjoint) — skips the symmetrized
     distinct, otherwise the single most expensive shuffle of the job.
 
-    ``broadcast_max_dead``: each round's probe counts the next dead
-    frontier, so the frontier join broadcasts the dead side only while
-    ``n_front <= broadcast_max_dead`` (~2M ids ≈ tens of MB) and
+    Broadcast guard: each round's probe counts the next dead frontier, so
+    the frontier join broadcasts the dead side only while
+    ``n_front <= _KCORE_BROADCAST_MAX_DEAD`` (~2M ids ≈ tens of MB) and
     otherwise lets the planner shuffle. Without the hint the checkpointed
     edge blocks expose no partitioning, so the round-0 frontier join (the
     one big frontier: every initially-under-k node) re-shuffles the FULL
@@ -586,26 +618,16 @@ def k_core_delta(
     def _pin_e() -> DataFrame:
         return sym.repartition(parts, "v").localCheckpoint(eager=True)
 
-    from pyspark.sql import Observation
-
     dead, alive = F.col("deg") < k, F.col("deg") >= k
+    # the dead-frontier probe is both the broadcast guard and the exit
+    n_dead = F.sum(dead.cast("long"))
 
-    def _pin_deg(src: DataFrame, obs: Observation) -> DataFrame:
-        # the frontier count (the broadcast guard and the exit test)
-        # rides the pin job via observe() — no separate probe scan. A
-        # retry over-count only pushes the guard toward the shuffle
-        # branch or adds one round over an empty frontier, the identity
-        return src.observe(
-            obs, F.sum(dead.cast("long")).alias("n_front")
-        ).localCheckpoint(eager=True)
-
-    def _pin_base(src: DataFrame, obs: Observation) -> DataFrame:
-        return _pin_deg(
+    def _pin_base(src: DataFrame) -> tuple[DataFrame, dict]:
+        return _pin(
             src.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("deg")),
-            obs,
+            n_front=n_dead,
         )
 
-    obs = Observation()
     if assume_distinct:
         # the two setup pins are independent jobs over the same input —
         # overlap them (guide §2.6) instead of serializing two full
@@ -615,28 +637,27 @@ def k_core_delta(
 
         with ThreadPoolExecutor(max_workers=2) as pool:
             f_e = pool.submit(_pin_e)
-            f_base = pool.submit(_pin_base, sym, obs)
-            e, base = f_e.result(), f_base.result()
+            f_base = pool.submit(_pin_base, sym)
+            e, (base, probe) = f_e.result(), f_base.result()
     else:
         e = _pin_e()
-        base = _pin_base(e, obs)
-    n_front = obs.get["n_front"] or 0
-    for _ in range(max_rounds):
+        base, probe = _pin_base(e)
+    n_front = probe["n_front"]
+    for _ in range(_KCORE_MAX_ROUNDS):
         if n_front == 0:
             break
         # decrements: surviving neighbors of the nodes that died last
         # round (round 0: initial degree below k), a lazy filter over the
         # pinned degree table
         front_v = base.filter(dead).select(F.col("u").alias("v"))
-        if n_front <= broadcast_max_dead:
+        if n_front <= _KCORE_BROADCAST_MAX_DEAD:
             front_v = F.broadcast(front_v)
         dec = (
             e.join(front_v, "v")
             .groupBy("u")
             .agg(F.count(F.lit(1)).cast("long").alias("dec"))
         )
-        obs = Observation()
-        base = _pin_deg(
+        base, probe = _pin(
             base.filter(alive)
             .join(dec, "u", "left")
             .select(
@@ -644,17 +665,17 @@ def k_core_delta(
                 (F.col("deg") - F.coalesce(F.col("dec"), F.lit(0)))
                 .alias("deg"),
             ),
-            obs,
+            n_front=n_dead,
         )
-        n_front = obs.get["n_front"] or 0
+        n_front = probe["n_front"]
     if n_front > 0:
         # a pending dead frontier means surviving degrees were never
         # decremented for those deaths — returning would be silently
         # wrong; fail loudly
         raise RuntimeError(
-            f"k_core_delta: peeling did not stabilize within max_rounds="
-            f"{max_rounds}; raise max_rounds (each round peels at least "
-            "one node, so |V| rounds always suffice)"
+            f"k_core_delta: peeling did not stabilize within "
+            f"_KCORE_MAX_ROUNDS={_KCORE_MAX_ROUNDS} (each round peels at "
+            "least one node, so |V| rounds always suffice)"
         )
     return base.filter(alive).select(
         F.col("u").alias("node_id"), F.col("deg").alias("degree")

@@ -19,11 +19,12 @@ key, one join per level. ``descendants`` and ``ancestors`` are point walks
 from a handful of roots: each level's frontier is broadcast, so the edge
 relation is only scanned, never shuffled, and pinned with an eager
 ``localCheckpoint``, so level d is one probe of the edge relation instead
-of a re-derivation of levels 1..d (O(d²/2) scans). A shallow
-``subtree_closure`` over a forest stays one lazy plan; otherwise its levels
-are persisted and every few rounds checkpointed, with cycle safety from an
-anti-join against the per-root visited set — the DataFrame equivalent of
-the reference's ``HashSet`` guard.
+of a re-derivation of levels 1..d (O(d²/2) scans). ``subtree_closure``
+runs ``components.frontier_walk`` per root — one pinned level per job,
+cycle safety from an anti-join against the per-root visited set (the
+DataFrame equivalent of the reference's ``HashSet`` guard) and an exit
+probe on the pin job — except a shallow forest walk, which stays one lazy
+plan.
 
 Side effect of the eager pins: these calls run Spark jobs while the
 DataFrame is built, and checkpointed blocks are not recomputable if an
@@ -35,11 +36,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-# zero-padded width of each child idx in a subtree_closure path string
-_PATH_PAD = 10
-# subtree_closure: levels between lineage-truncating checkpoints, and the
-# deepest forest walk left as one lazy plan
-_CHECKPOINT_EVERY = 4
+from assemblagedb_spark.operators.components import child_path, frontier_walk
+
+# subtree_closure: the deepest forest walk left as one lazy plan
+_LAZY_MAX_DEPTH = 4
 
 
 def descendants(
@@ -120,9 +120,9 @@ def subtree_closure(
     max_depth: int,
     with_path: bool = False,
     assume_forest: bool = False,
-    broadcast_frontier: bool = False,
 ) -> DataFrame:
-    """Per-root downward closure: (root_id, node_id, depth[, path]).
+    """Per-root downward closure: (root_id, node_id, depth[, path]), the
+    roots themselves excluded.
 
     Unlike :func:`descendants` (which collapses all roots into one visited
     set), this keeps subtree membership per root — the relation behind
@@ -133,84 +133,36 @@ def subtree_closure(
     string, lexicographically ordered exactly like the reference's ordered
     DFS — the distributed substitute for recursive descent. A node reachable
     along several routes keeps the lexicographically smallest path of its
-    first (shallowest) level. Cycle-safe via the per-root visited anti-join;
-    ``assume_forest`` (caller guarantees single-path reachability) drops the
-    dedup + anti-join shuffles and reduces each level to one join.
-    ``broadcast_frontier`` (caller guarantees small frontiers) broadcasts
-    each level's frontier so the edge relation is never shuffled.
+    first (shallowest) level.
+
+    The walk is ``components.frontier_walk`` keyed on ``root_id``: cycle-safe
+    through its per-root visited anti-join, one pinned, probed job per
+    level. ``assume_forest`` (the caller guarantees single-path
+    reachability) with ``max_depth <= _LAZY_MAX_DEPTH`` instead builds one
+    lazy plan of plain level joins: on a forest the dedup and the visited
+    anti-join are no-ops, and a shallow lineage needs no pins or probe.
     """
-    # a shallow forest walk has a shallow lineage and needs no probe: one
-    # lazy plan, no per-level caching or checkpoint copies
-    lazy = assume_forest and max_depth <= _CHECKPOINT_EVERY
+    # max_depth 0 goes to the walk too: it has no level for a lazy union
+    if not (assume_forest and 1 <= max_depth <= _LAZY_MAX_DEPTH):
+        seeds = roots.select(F.col("node_id").alias("root_id"), "node_id")
+        return frontier_walk(
+            edges, seeds, max_depth=max_depth, keys=["root_id"], with_path=with_path
+        ).filter(F.col("depth") > 0)
     e = edges.select("parent_id", "child_id", *(["idx"] if with_path else []))
-    persisted = []
-    if not lazy:
-        if not broadcast_frontier:
-            # each level sort-merge-joins on parent_id: co-partition the
-            # edge cache once — an InMemoryRelation keeps its
-            # outputPartitioning, so only the frontier side shuffles per level
-            parts = edges.sparkSession.sparkContext.defaultParallelism
-            e = e.repartition(parts, "parent_id")
-        e = e.persist()
-        persisted.append(e)
     frontier = roots.select(F.col("node_id").alias("root_id"), F.col("node_id"))
     if with_path:
         frontier = frontier.withColumn("path", F.lit(""))
-    visited = frontier.select("root_id", "node_id")
     out = None
     for depth in range(1, max_depth + 1):
-        f = frontier.withColumnRenamed("node_id", "parent_id")
-        nxt = e.join(F.broadcast(f) if broadcast_frontier else f, "parent_id")
-        if with_path:
-            nxt = nxt.select(
-                "root_id",
-                F.col("child_id").alias("node_id"),
-                F.concat(
-                    "path", F.lit("/"), F.lpad(F.col("idx").cast("string"), _PATH_PAD, "0")
-                ).alias("path"),
-            )
-            if not assume_forest:
-                nxt = nxt.groupBy("root_id", "node_id").agg(F.min("path").alias("path"))
-        else:
-            nxt = nxt.select("root_id", F.col("child_id").alias("node_id"))
-            if not assume_forest:
-                nxt = nxt.distinct()
-        # assume_forest: caller guarantees one path per (root, node) — the
-        # per-level dedup and the visited anti-join (two shuffles per level)
-        # are then provably no-ops and the BFS is just the level joins
-        if not assume_forest:
-            nxt = nxt.join(visited, ["root_id", "node_id"], "left_anti")
-        # each frontier is read three ways (next join, level union, visited
-        # union) — persist so a level computes once. Periodically ALSO
-        # truncate lineage: the per-root plan references ALL prior levels
-        # through `visited`, so the logical plan doubles per iteration —
-        # unchecked, the driver OOMs just printing it by depth ~10. Every
-        # checkpoint buys a cheap empty-frontier probe (early exit once a
-        # cycle closes).
-        if not lazy and depth % _CHECKPOINT_EVERY == 0:
-            nxt = nxt.localCheckpoint(eager=True)
-            if nxt.isEmpty():
-                break
-        elif not lazy:
-            nxt = nxt.persist()
-            persisted.append(nxt)
-        level = nxt.withColumn("depth", F.lit(depth))
-        out = level if out is None else out.unionByName(level)
-        if not assume_forest:
-            visited = visited.unionByName(nxt.select("root_id", "node_id"))
-        frontier = nxt
-    if out is None:
-        schema = "root_id string, node_id string, depth int" + (
-            ", path string" if with_path else ""
+        nxt = e.join(frontier.withColumnRenamed("node_id", "parent_id"), "parent_id")
+        nxt = nxt.select(
+            "root_id",
+            F.col("child_id").alias("node_id"),
+            *([child_path().alias("path")] if with_path else []),
         )
-        for df in persisted:
-            df.unpersist()
-        return roots.sparkSession.createDataFrame([], schema)
-    if lazy:
-        return out
-    out = out.localCheckpoint(eager=True)
-    for df in persisted:
-        df.unpersist()
+        level = nxt.withColumn("depth", F.lit(depth).cast("long"))
+        out = level if out is None else out.unionByName(level)
+        frontier = nxt
     return out
 
 
@@ -253,7 +205,6 @@ def preview_leaf(
     *,
     max_depth: int,
     assume_forest: bool = False,
-    broadcast_frontier: bool = False,
 ) -> DataFrame:
     """First non-blank leaf in ordered-DFS order per root — the distributed
     form of the reference's ``preview`` (``assemblage_db/src/lib.rs:462-509``:
@@ -272,7 +223,6 @@ def preview_leaf(
         max_depth=max_depth,
         with_path=True,
         assume_forest=assume_forest,
-        broadcast_frontier=broadcast_frontier,
     )
     first = (
         sub.join(blanks, "node_id")

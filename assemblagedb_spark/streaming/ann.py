@@ -17,8 +17,7 @@ riding in the task closure: no join, no aggregate, no exchange.
 
 Stateless ⇒ append-mode safe with no watermark or state store, and the
 sink can write straight into the cell-partitioned code table (bucketed by
-cell at scale — sources/layout.py::write_bucketed), where the serving join
-partition-prunes probes. Batch and streaming encode the same rows to the
+cell at scale), where the serving join partition-prunes probes. Batch and streaming encode the same rows to the
 same codes by construction (pinned by tests/test_streaming_ann.py, and
 gate-checked against the DuckDB oracle via `streaming_ivfpq_ingest`).
 """

@@ -198,6 +198,31 @@ def py_pagerank(pairs, *, rounds, seeds=None):
     return rank
 
 
+def py_closure(edges, roots, max_depth):
+    """{(root, node): (depth, path)} by a plain per-root BFS over
+    (parent, child, idx) ``edges``, each root at (0, ""): a node keeps
+    its shallowest depth and, among its routes at that depth, the
+    smallest path of ``/``-joined 10-digit zero-padded idx values."""
+    children: dict = {}
+    for p, c, i in edges:
+        children.setdefault(p, []).append((c, i))
+    out = {}
+    for root in set(roots):
+        out[(root, root)] = (0, "")
+        seen, frontier = {root}, {root: ""}
+        for depth in range(1, max_depth + 1):
+            nxt: dict = {}
+            for p, path in frontier.items():
+                for c, i in children.get(p, ()):
+                    cand = f"{path}/{i:010d}"
+                    if c not in seen and (c not in nxt or cand < nxt[c]):
+                        nxt[c] = cand
+            seen |= nxt.keys()
+            out.update({(root, c): (depth, path) for c, path in nxt.items()})
+            frontier = nxt
+    return out
+
+
 # -- Spark-vs-DuckDB gate comparison ----------------------------------------
 
 

@@ -37,9 +37,6 @@ KEEP = {
     "harness._capped_corpus": "reference: tests compare the capped gate corpus against it",
     "sources.tpch.register_views": "reference: tests run Spark SQL over the registered views",
     "plans.explain": "reference: the plan-property tests inspect plans with it",
-    "sources.layout.write_bucketed": "storage layout the operators' scale design cites",
-    "sources.layout.drop_table": "storage layout the operators' scale design cites",
-    "sources.layout.write_zordered": "storage layout the operators' scale design cites",
 }
 
 

@@ -314,41 +314,63 @@ def test_k_core_delta_parity(spark, sf_dir):
             assert _py_k_core(rows, k) == b, f"seed={seed} k={k}"
 
 
-def test_k_core_delta_mode_parity(spark):
+def _count_broadcast_hints(monkeypatch) -> list:
+    """Record every ``F.broadcast`` hint attached from here on: a guard
+    that reads its constant attaches none once the constant is 0."""
+    import pyspark.sql.functions as PF
+
+    made = []
+    real = PF.broadcast
+
+    def counting(df):
+        made.append(df)
+        return real(df)
+
+    monkeypatch.setattr(PF, "broadcast", counting)
+    return made
+
+
+def test_k_core_delta_mode_parity(spark, monkeypatch):
     # the frontier join's broadcast is chosen from the probe's runtime
-    # frontier count; broadcast_max_dead=0 turns it off (shuffle joins
-    # every round) — both plans must emit identical cores across the
-    # full seeded sweep
+    # frontier count; _KCORE_BROADCAST_MAX_DEAD=0 turns it off (shuffle
+    # joins every round) — both plans must emit identical cores across
+    # the full seeded sweep
     import random
 
-    from assemblagedb_spark.operators.components import k_core_delta
+    from assemblagedb_spark.operators import components as C
 
+    hints = _count_broadcast_hints(monkeypatch)
     for seed, n, m in ((3, 60, 50), (5, 60, 90), (9, 40, 200)):
         rng = random.Random(seed)
         rows = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
         e = spark.createDataFrame(rows, "parent_id long, child_id long")
         for k in (2, 3):
-            default = sorted(map(tuple, k_core_delta(e, k=k).collect()))
-            no_broadcast = sorted(
-                map(tuple, k_core_delta(e, k=k, broadcast_max_dead=0).collect())
-            )
+            default = sorted(map(tuple, C.k_core_delta(e, k=k).collect()))
+            with monkeypatch.context() as mp:
+                mp.setattr(C, "_KCORE_BROADCAST_MAX_DEAD", 0)
+                before = len(hints)
+                no_broadcast = sorted(map(tuple, C.k_core_delta(e, k=k).collect()))
+                assert len(hints) == before, "guard constant not read"
             assert default == no_broadcast, f"seed={seed} k={k}"
+    assert hints, "the default guard never broadcast"
 
 
-def test_k_core_raises_on_nonconvergence(spark):
+def test_k_core_raises_on_nonconvergence(spark, monkeypatch):
     # an exhausted round budget with peeling still in flight must raise,
     # not silently return a superset core with sub-k degrees
     import pytest as _pytest
 
-    from assemblagedb_spark.operators.components import k_core_delta
+    from assemblagedb_spark.operators import components as C
 
     e = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "parent_id long, child_id long"
     )
+    monkeypatch.setattr(C, "_KCORE_MAX_ROUNDS", 2)
     with _pytest.raises(RuntimeError, match="did not stabilize"):
-        k_core_delta(e, k=2, max_rounds=2)
+        C.k_core_delta(e, k=2)
     # with budget, the acyclic path peels fully to an empty core
-    assert k_core_delta(e, k=2, max_rounds=50).count() == 0
+    monkeypatch.setattr(C, "_KCORE_MAX_ROUNDS", 50)
+    assert C.k_core_delta(e, k=2).count() == 0
 
 
 def test_weighted_sample_per_row_rates(spark):
@@ -418,22 +440,27 @@ def test_candidate_verify_equals_allpairs_restricted(spark):
         assert r["containment_b"] == inter / nb
 
 
-def test_bfs_depth_broadcast_guard_parity(spark):
+def test_bfs_depth_broadcast_guard_parity(spark, monkeypatch):
     # round-9 optimization pin: the frontier/settled broadcast hints are
     # a join-strategy choice driven by the loop's own runtime counts —
-    # disabling them (broadcast_rows=0) must yield the identical depth
-    # map on a graph whose frontier is revisited across rounds
-    from assemblagedb_spark.operators.components import bfs_depth
+    # disabling them (_WALK_BROADCAST_ROWS=0) must attach no hint and
+    # yield the identical depth map on a graph whose frontier is
+    # revisited across rounds
+    from assemblagedb_spark.operators import components as C
 
     e = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (1, 5), (5, 6), (6, 5), (4, 1)],
         "parent_id long, child_id long",
     )
     seeds = spark.createDataFrame([(1,), (3,)], "node_id long")
+    hints = _count_broadcast_hints(monkeypatch)
     with_bcast = {(r["node_id"], r["depth"])
-                  for r in bfs_depth(e, seeds, max_depth=10).collect()}
+                  for r in C.bfs_depth(e, seeds, max_depth=10).collect()}
+    assert hints, "the default guard never broadcast"
+    monkeypatch.setattr(C, "_WALK_BROADCAST_ROWS", 0)
+    del hints[:]
     no_bcast = {(r["node_id"], r["depth"])
-                for r in bfs_depth(
-                    e, seeds, max_depth=10, broadcast_rows=0).collect()}
+                for r in C.bfs_depth(e, seeds, max_depth=10).collect()}
+    assert not hints, "guard constant not read"
     assert with_bcast == no_bcast
     assert dict(with_bcast) == {1: 0, 3: 0, 2: 1, 5: 1, 4: 1, 6: 2}

@@ -5,6 +5,8 @@ empty subtrees, duplicate timestamps)."""
 
 from __future__ import annotations
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,6 +21,7 @@ from assemblagedb_spark.operators.traversal import (
 from tests.conftest import (
     assert_matches_oracle,
     components_by_layout,
+    py_closure,
     py_components,
 )
 
@@ -47,6 +50,37 @@ def test_subtree_closure_multi_root_membership(spark):
     out = subtree_closure(e, _roots(spark, "r1", "r2"), max_depth=3)
     rows = {(r.root_id, r.node_id) for r in out.collect()}
     assert rows == {("r1", "s"), ("r2", "s"), ("r1", "t"), ("r2", "t")}
+
+
+@pytest.mark.parametrize("seed,max_depth", [(1, 6), (2, 2), (3, 12)])
+def test_frontier_walks_match_python_bfs(spark, seed, max_depth):
+    # seeded random graphs with cycles, self-loops, duplicate edges (one
+    # with a second idx) and a repeated root: subtree_closure with and
+    # without paths and bfs_depth all equal the plain per-root BFS
+    from assemblagedb_spark.operators.components import bfs_depth
+
+    rng = random.Random(seed)
+    rows = [(rng.randrange(25), rng.randrange(25), rng.randrange(6)) for _ in range(60)]
+    rows += rows[:6] + [(rows[0][0], rows[0][1], rows[0][2] + 1)]
+    roots = [rng.randrange(25) for _ in range(5)]
+    roots.append(roots[0])
+    want = py_closure(rows, roots, max_depth)
+    e = spark.createDataFrame(rows, "parent_id long, child_id long, idx int")
+    r = spark.createDataFrame([(x,) for x in roots], "node_id long")
+
+    with_path = subtree_closure(e, r, max_depth=max_depth, with_path=True).collect()
+    assert len(with_path) == len({(x.root_id, x.node_id) for x in with_path})
+    assert {(x.root_id, x.node_id): (x.depth, x.path) for x in with_path} == {
+        k: v for k, v in want.items() if v[0] > 0
+    }
+    plain = subtree_closure(e, r, max_depth=max_depth).collect()
+    assert sorted((x.root_id, x.node_id, x.depth) for x in plain) == sorted(
+        (root, node, d) for (root, node), (d, _) in want.items() if d > 0
+    )
+    shallowest: dict = {}
+    for (_, node), (d, _) in want.items():
+        shallowest[node] = min(d, shallowest.get(node, d))
+    assert {x.node_id: x.depth for x in bfs_depth(e, r, max_depth=max_depth).collect()} == shallowest
 
 
 def test_has_shared_descendants_diamond(spark):
