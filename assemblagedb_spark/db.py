@@ -1,12 +1,10 @@
 """AssemblageDb: the versioned document/graph database API.
 
 Write-path semantics mirror the reference's ``assemblage_db`` crate
-(citations inline); the write path is driver-side (single-writer OLTP, as in
-the reference), while every analytical surface — similarity search, overlap
-materialization, bulk traversal — runs as Spark DataFrame jobs over the
-store's exported columnar tables. ``to_tables()`` produces the nodes/edges
-DataFrames of schema.py; the inverted gram index is derived from block texts
-with operators/grams.py.
+(citations inline). Writes, reads, ``search`` and ``overlaps`` run on the
+driver (single-writer OLTP, as in the reference); the corpus-scale operators
+run as Spark jobs over the store's exported columnar tables. ``to_tables()``
+produces the nodes/edges DataFrames of schema.py.
 
 Graph edits are hand-sized (a page, a section); 100 TB scale lives in the
 *corpus* of blocks, which is exactly what the exported tables + Spark
@@ -16,10 +14,13 @@ operators handle.
 from __future__ import annotations
 
 import uuid
+from collections import Counter
 from typing import Callable, Iterable
 
+from assemblagedb_spark.functions.core import index_text, trim_for_search
 from assemblagedb_spark.kvstore import KvStore, Snapshot
 from assemblagedb_spark.model import CHAIN, PAGE, Child, Node
+from assemblagedb_spark.operators.search import OVERLAP_MIN_SCORE, SEARCH_MIN_SCORE, find_local
 
 NODE_SLOT = 0  # reference lib.rs:190-198
 PARENTS_SLOT = 1
@@ -55,7 +56,7 @@ def _deser(d: dict) -> Node:
 
 
 class AssemblageDb:
-    """Driver-side handle over the MVCC store + Spark analytics."""
+    """Driver-side handle over the MVCC store; ``spark`` serves ``to_tables``."""
 
     def __init__(self, spark=None, store: KvStore | None = None) -> None:
         self.spark = spark
@@ -71,8 +72,8 @@ class AssemblageDb:
         ``Parents`` slot (a derived back-edge index in the reference,
         data.rs:492-508) is re-derived from the current edge rows, the same
         way the reference rebuilds its in-memory key directory on ``open``
-        (kv lib.rs:602-652). The gram index needs no replay: it derives
-        from current blocks on demand.
+        (kv lib.rs:602-652). The gram index needs no replay: ``search``
+        and ``overlaps`` derive it from the current blocks per call.
 
         This materializes the whole store on the driver — the reference's
         single-user OLTP model, sane for tile/episode-sized graphs only.
@@ -572,7 +573,7 @@ class AssemblageDb:
         return siblings
 
     # ------------------------------------------------------------------
-    # block indexing + Spark analytics surface
+    # block indexing + driver-side search and overlaps
     # ------------------------------------------------------------------
 
     def blocks(self) -> dict[str, str]:
@@ -627,62 +628,30 @@ class AssemblageDb:
         # Page lists / block-styled: children are their own blocks
         return ""
 
-    def _blocks_df(self):
-        assert self.spark is not None, "analytics need a SparkSession"
-        rows = [(bid, text) for bid, text in self.blocks().items()]
-        return self.spark.createDataFrame(rows or [("", "")], "node_id string, text string").filter(
-            "node_id <> ''"
-        )
+    def _gram_index(self) -> dict[str, Counter]:
+        """Gram multiset of every block of the current snapshot."""
+        return {bid: Counter(index_text(text)) for bid, text in self.blocks().items()}
 
-    def search(self, term: str):
-        """Scored similarity search over the block index (index.rs:174-184),
-        as the Spark pipeline of operators/search.py."""
-        from assemblagedb_spark.operators.grams import block_grams
-        from assemblagedb_spark.operators.search import search as spark_search
+    def search(self, term: str) -> list[dict]:
+        """Scored similarity search over the block index (index.rs:174-184):
+        end-trimmed term grams, asymmetric mode, score >= 0.3, Overlap
+        order; an all-zero term matches nothing."""
+        q = trim_for_search(index_text(term))
+        if not any(q):
+            return []
+        rows = find_local(self._gram_index(), Counter(q))
+        return [r for r in rows if r["score"] >= SEARCH_MIN_SCORE]
 
-        grams = block_grams(self._blocks_df())
-        rows = spark_search(self.spark, grams, term).collect()
-        return [
-            {
-                "id": r["node_id"],
-                "a": r["a"],
-                "b": r["b"],
-                "intersection": r["intersection"],
-                "score": r["score"],
-            }
-            for r in rows
-        ]
-
-    def overlaps(self, id: str):
-        """Materialized symmetric overlaps of a block (index.rs:187-192,
-        302-347), recomputed through the ``store_overlaps`` front door for
-        this one block's row, in the reference's total Overlap order:
-        (intersection, a, b) DESC (data.rs:588-596), partner id ascending
-        on a full tie."""
-        from pyspark.sql import functions as F
-
-        from assemblagedb_spark.operators.grams import block_grams
-        from assemblagedb_spark.operators.overlaps import store_overlaps
-
-        g = block_grams(self._blocks_df())
-        changed = self.spark.createDataFrame([(id,)], "node_id string")
-        rows = (
-            store_overlaps(g, changed=changed, both_directions=False)
-            .orderBy(
-                F.desc("intersection"), F.desc("a"), F.desc("b"), F.asc("dst_id")
-            )
-            .collect()
-        )
-        return [
-            {
-                "id": r["dst_id"],
-                "a": r["a"],
-                "b": r["b"],
-                "intersection": r["intersection"],
-                "score": r["score"],
-            }
-            for r in rows
-        ]
+    def overlaps(self, id: str) -> list[dict]:
+        """Symmetric overlaps of a block (index.rs:187-192, 302-347): the
+        block's own gram count is the match count, self excluded, score >
+        0.5, in the reference's total Overlap order: (intersection, a, b)
+        DESC (data.rs:588-596), partner id ascending on a full tie."""
+        index = self._gram_index()
+        if id not in index:
+            return []
+        rows = find_local(index, index[id], symmetric=True)
+        return [r for r in rows if r["id"] != id and r["score"] > OVERLAP_MIN_SCORE]
 
     # ------------------------------------------------------------------
     # columnar export (schema.py tables)

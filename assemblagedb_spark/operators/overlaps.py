@@ -476,7 +476,6 @@ def store_overlaps(
     min_score: float = OVERLAP_MIN_SCORE,
     changed: DataFrame | None = None,
     excluded_pairs: DataFrame | None = None,
-    both_directions: bool = True,
     max_sparse_nnz: int = 64_000_000,
     dispatch_out: dict | None = None,
 ) -> DataFrame:
@@ -511,16 +510,13 @@ def store_overlaps(
     ``dispatch_out`` (optional dict) receives ``{"route": <name>}`` —
     the branch-vacuity hook (tests pin that the budget moves the route).
 
-    ``excluded_pairs`` and ``both_directions`` are applied HERE, after the
-    chosen kernel, never inside it: the kernels differ in which
-    orientation they compute first (the sparse kernel emits both
-    directions, the join plans mirror a canonical half), so a kernel-side
-    anti-join would make exclusion orientation-sensitive per route — the
-    front door's route-invariance contract forbids that. Post-kernel,
-    exclusion removes exactly the listed (src, dst) orientations on every
-    route, and ``both_directions=False`` keeps the same canonical half on
-    every route (src < dst for the full self-join; the changed-side
-    orientation in incremental mode).
+    ``excluded_pairs`` is applied HERE, after the chosen kernel, never
+    inside it: the kernels differ in which orientation they compute first
+    (the sparse kernel emits both directions, the join plans mirror a
+    canonical half), so a kernel-side anti-join would make exclusion
+    orientation-sensitive per route — the front door's route-invariance
+    contract forbids that. Post-kernel, exclusion removes exactly the
+    listed (src, dst) orientations on every route.
     """
     out = overlap_pairs_sparse(
         grams, min_score=min_score, max_sparse_nnz=max_sparse_nnz, changed=changed
@@ -540,14 +536,4 @@ def store_overlaps(
         dispatch_out["route"] = route
     if excluded_pairs is not None:
         out = out.join(excluded_pairs, ["src_id", "dst_id"], "left_anti")
-    if not both_directions:
-        if changed is None:
-            out = out.filter(F.col("src_id") < F.col("dst_id"))
-        else:
-            out = out.join(
-                F.broadcast(
-                    changed.select(F.col("node_id").alias("src_id"))
-                ).distinct(),
-                "src_id",
-            )
     return out

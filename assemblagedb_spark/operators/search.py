@@ -11,6 +11,10 @@ Reference pipeline (``assemblage_db/src/index.rs:174-240``):
    (``data.rs:521-529``), score = intersection/min(a,b) (``data.rs:566-568``);
 6. filter score ≥ 0.3, order by (intersection, a, b) DESC (``data.rs:588-596``).
 
+:func:`find` is the Spark plan of the corpus path; :func:`find_local` is the
+same arithmetic in plain Python, which ``AssemblageDb.search``/``overlaps``
+run on the driver as the reference's single-writer store does.
+
 Scale design: the query gram multiset is tiny (term length + 3), so it is a
 *broadcast* hash join against the postings table — the postings side streams,
 nothing shuffles except the final per-node aggregation, which is map-side
@@ -84,6 +88,27 @@ def find(
         inter = inter.withColumn("match_count", F.lit(source_count).cast("long"))
     scored = overlap_columns(inter.withColumn("source_count", F.lit(source_count).cast("long")))
     return scored.select("node_id", "a", "b", "intersection", "score")
+
+
+def find_local(
+    index: dict[str, Counter], query: Counter, *, symmetric: bool = False
+) -> list[dict]:
+    """:func:`find` in plain Python over ``{block id: gram multiset}``: one
+    {id, a, b, intersection, score} row per block sharing a gram with
+    ``query``, in Overlap order ((intersection, a, b) DESC, then id). A zero
+    ``min(a, b)`` scores NULL in :func:`overlap_columns`, so that block is
+    dropped. An all-zero query is not rejected here: ``store_overlaps``
+    scores empty-text blocks too."""
+    source_count = sum(query.values())
+    rows = []
+    for id, grams in index.items():
+        raw = sum(min(n, grams[g]) for g, n in query.items() if g in grams)
+        match_count = sum(grams.values()) if symmetric else source_count
+        mx = max(source_count, match_count)
+        a, b, inter = (255 * x // mx for x in (source_count, match_count, raw))
+        if raw and min(a, b):
+            rows.append({"id": id, "a": a, "b": b, "intersection": inter, "score": inter / min(a, b)})
+    return sorted(rows, key=lambda r: (-r["intersection"], -r["a"], -r["b"], r["id"]))
 
 
 def search(

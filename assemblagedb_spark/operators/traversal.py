@@ -254,12 +254,13 @@ def is_cyclic(edges: DataFrame, roots: DataFrame, *, max_depth: int) -> DataFram
     bounded BFS for all roots plus one aggregated join — no per-root
     recursion. ``max_depth`` must cover the closure diameter.
     """
+    # ``sub`` is the walk's pinned relation, so the two reads of
+    # ``closure`` below need no cache of their own
     sub = subtree_closure(edges, roots, max_depth=max_depth)
     r = roots.select(F.col("node_id").alias("root_id")).distinct()
     closure = sub.select("root_id", "node_id").unionByName(
         r.select("root_id", F.col("root_id").alias("node_id"))
     )
-    closure = closure.persist()
     sizes = closure.groupBy("root_id").agg(F.count(F.lit(1)).alias("n_nodes"))
     # both endpoints must be inside the closure: with a truncated (bounded-
     # depth) closure, an edge leading past the depth bound is not a revisit

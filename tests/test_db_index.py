@@ -10,15 +10,15 @@ from assemblagedb_spark.db import AssemblageDb
 from assemblagedb_spark.model import CHAIN, PAGE, Child, Node
 
 
-def test_only_block_registered_text_is_searchable(spark):
+def test_only_block_registered_text_is_searchable():
     # index_add.rs:14-36 (fixture F3): text under a chain is not a block
-    db = AssemblageDb(spark)
+    db = AssemblageDb()
     foo = db.add(Node.text_node("foo"))
     bar = db.add(Node.text_node("bar"))
     db.add(Node.list(CHAIN, [Child.lazy(foo), Child.lazy(bar)]))
     assert db.search("foo") == []
 
-    db2 = AssemblageDb(spark)
+    db2 = AssemblageDb()
     foo2 = db2.add(Node.text_node("foo"))
     db2.add(Node.list(PAGE, [Child.lazy(foo2)]))
     res = db2.search("foo")
@@ -26,9 +26,9 @@ def test_only_block_registered_text_is_searchable(spark):
     assert res[0]["score"] == pytest.approx(1.0)
 
 
-def test_fuzzy_search_ordering(spark):
+def test_fuzzy_search_ordering():
     # index_add.rs:38-77
-    db = AssemblageDb(spark)
+    db = AssemblageDb()
     foo = db.add(Node.text_node("This is the text foo"))
     bar = db.add(Node.text_node("This is the text bar"))
     db.add(Node.list(PAGE, [Child.lazy(foo)]))
@@ -46,9 +46,9 @@ def test_fuzzy_search_ordering(spark):
     assert res[1]["score"] < 1.0
 
 
-def test_chain_concatenation_indexed_as_one_block(spark):
+def test_chain_concatenation_indexed_as_one_block():
     # index_add.rs:149-165: "foo"+"bar"+"baz" chain matches "foobarbaz"
-    db = AssemblageDb(spark)
+    db = AssemblageDb()
     chain_id = db.add(
         Node.list(CHAIN, [Node.text_node("foo"), Node.text_node("bar"), Node.text_node("baz")])
     )
@@ -58,9 +58,9 @@ def test_chain_concatenation_indexed_as_one_block(spark):
     assert res[0]["score"] == pytest.approx(1.0)
 
 
-def test_parent_chains_of_text(spark):
+def test_parent_chains_of_text():
     # index_add.rs:80-124: shared prefix chain, suffix variants
-    db = AssemblageDb(spark)
+    db = AssemblageDb()
     prefix = db.add(Node.text_node("This is t"))
     foo_sfx = db.add(Node.text_node("he text foo"))
     bar_sfx = db.add(Node.text_node("he text bar"))
@@ -78,9 +78,9 @@ def test_parent_chains_of_text(spark):
     assert all(r["score"] == pytest.approx(1.0) for r in hi)
 
 
-def test_index_both_direct_and_linked_children(spark):
+def test_index_both_direct_and_linked_children():
     # index_add.rs:126-147
-    db = AssemblageDb(spark)
+    db = AssemblageDb()
     foo1 = db.add(Node.text_node("foo"))
     foo2 = db.add(Node.text_node("foo"))
     page_foo1 = db.add(Node.list(PAGE, [Child.lazy(foo1)]))
@@ -94,9 +94,9 @@ def test_index_both_direct_and_linked_children(spark):
     assert {r["id"] for r in res} == {foo1, foo2}
 
 
-def test_index_after_swap_edits(spark):
+def test_index_after_swap_edits():
     # index_swap.rs: the index follows edits
-    db = AssemblageDb(spark)
+    db = AssemblageDb()
     page = db.add(Node.list(PAGE, [Node.text_node("hello world")]))
     hello = db.get(page).children[0].id
     assert {r["id"] for r in db.search("hello world")} == {hello}
@@ -106,9 +106,9 @@ def test_index_after_swap_edits(spark):
     assert {r["id"] for r in db.search("goodbye moon")} == {new_id}
 
 
-def test_overlaps_symmetric(spark):
+def test_overlaps_symmetric():
     # overlap_add.rs:13-64 (fixture F4)
-    db = AssemblageDb(spark)
+    db = AssemblageDb()
     foo = db.add(Node.text_node("This is a sentence about foo."))
     bar = db.add(Node.text_node("This is a sentence about bar."))
     db.add(Node.list(PAGE, [Child.lazy(foo)]))
@@ -122,13 +122,13 @@ def test_overlaps_symmetric(spark):
     assert bar_overlaps[0]["score"] == pytest.approx(foo_overlaps[0]["score"])
 
 
-def test_overlaps_total_order_on_tied_intersection(spark, monkeypatch):
+def test_overlaps_total_order_on_tied_intersection(monkeypatch):
     # data.rs:588-596: partners sharing an intersection order by (a, b)
     # DESC, and identical partners by id. Ids count down, so every partner
     # is added in reverse of its expected position.
     ids = iter(range(1000, 0, -1))
     monkeypatch.setattr(uuid, "uuid4", lambda: uuid.UUID(int=next(ids)))
-    db = AssemblageDb(spark)
+    db = AssemblageDb()
     src = db.add(Node.text_node("This is a sentence about foo."))
     # (intersection, a, b) vs src: fo (215, 255, 239), ff. (215, 255, 247),
     # fff. (215, 255, 255)
@@ -144,8 +144,8 @@ def test_overlaps_total_order_on_tied_intersection(spark, monkeypatch):
     assert [o["id"] for o in got] == [fff, ff, fo1, fo2]
 
 
-def test_overlaps_identical_text_score_one(spark):
-    db = AssemblageDb(spark)
+def test_overlaps_identical_text_score_one():
+    db = AssemblageDb()
     a = db.add(Node.text_node("exactly the same text"))
     b = db.add(Node.text_node("exactly the same text"))
     db.add(Node.list(PAGE, [Child.lazy(a)]))
@@ -154,10 +154,10 @@ def test_overlaps_identical_text_score_one(spark):
     assert db.overlaps(b)[0]["score"] == pytest.approx(1.0)
 
 
-def test_no_overlap_between_ancestor_and_descendant(spark):
+def test_no_overlap_between_ancestor_and_descendant():
     # overlap_add.rs:65-115: block granularity prevents ancestor/descendant
     # overlaps (the page contributes no text of its own)
-    db = AssemblageDb(spark)
+    db = AssemblageDb()
     text = db.add(Node.text_node("some unique enough sentence here"))
     inner_page = db.add(Node.list(PAGE, [Child.lazy(text)]))
     chain_link = db.add(Node.list(CHAIN, [Child.lazy(inner_page)]))
@@ -166,9 +166,9 @@ def test_no_overlap_between_ancestor_and_descendant(spark):
         assert o["id"] not in (inner_page, chain_link)
 
 
-def test_asymmetric_sizes(spark):
+def test_asymmetric_sizes():
     # overlap_add.rs:117-192: long vs short block
-    db = AssemblageDb(spark)
+    db = AssemblageDb()
     long_id = db.add(
         Node.text_node("This is a longer text that happens to mention that it contains foo")
     )

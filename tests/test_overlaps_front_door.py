@@ -104,18 +104,14 @@ def test_exclusion_applied_on_every_route(spark, grams):
         assert out.join(mirror, ["src_id", "dst_id"]).count() == 1
 
 
-def test_changed_single_direction_and_exclusion_are_route_invariant(spark, grams):
-    # the post-kernel branch COMBINATIONS on the incremental path: with a
-    # changed set, both_directions=False must keep exactly the
-    # changed-side orientation (the broadcast semi-join branch, otherwise
-    # untested) and exclusion must stay orientation-exact — on every
-    # route that accepts a changed set
+def test_changed_exclusion_is_route_invariant(spark, grams):
+    # the post-kernel exclusion on the incremental path: with a changed
+    # set, exclusion must stay orientation-exact and the result equal on
+    # every route that accepts a changed set
     counts = h.gram_counts(grams)
     changed = grams.select("node_id").filter(F.col("node_id") % 20 == 0).distinct()
-    ch_ids = {r["node_id"] for r in changed.collect()}
     base = store_overlaps(grams, counts, changed=changed)
-    # pick an excluded pair the single-direction filter would KEEP (src in
-    # changed), so the exclusion assertion below is non-vacuous
+    # exclude a pair whose source is changed, so the scan itself emits it
     one = base.join(
         changed.withColumnRenamed("node_id", "src_id"), "src_id"
     ).limit(1).collect()
@@ -128,31 +124,14 @@ def test_changed_single_direction_and_exclusion_are_route_invariant(spark, grams
         ("sparse-incremental", {"max_sparse_nnz": 0}),
     ):
         out = store_overlaps(
-            grams, counts, changed=changed, both_directions=False,
-            excluded_pairs=excl, **kwargs,
+            grams, counts, changed=changed, excluded_pairs=excl, **kwargs,
         )
         rows = out.collect()
-        assert all(r["src_id"] in ch_ids for r in rows), name
         assert all((r["src_id"], r["dst_id"]) != (s, d) for r in rows), name
+        assert any((r["src_id"], r["dst_id"]) == (d, s) for r in rows), name
         frames[name] = _frame(out)
     assert len(frames["sparse"]) > 0
     pd.testing.assert_frame_equal(frames["sparse"], frames["sparse-incremental"])
-
-
-def test_single_direction_is_route_invariant(spark, grams):
-    # both_directions=False returns the SAME canonical half (src < dst)
-    # on every route, even though the sparse kernel natively emits both
-    counts = h.gram_counts(grams)
-    frames = {}
-    for name, kwargs in (
-        ("sparse", {}),
-        ("prefix", {"max_sparse_nnz": 0}),
-    ):
-        out = store_overlaps(grams, counts, both_directions=False, **kwargs)
-        assert out.filter(F.col("src_id") >= F.col("dst_id")).count() == 0
-        frames[name] = _frame(out)
-    assert len(frames["sparse"]) > 0
-    pd.testing.assert_frame_equal(frames["sparse"], frames["prefix"])
 
 
 def test_sparse_kernel_multiset_exactness(spark):

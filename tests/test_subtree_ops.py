@@ -183,6 +183,18 @@ def test_is_cyclic_depth_truncation_no_false_positive(spark):
     assert out[0].is_cyclic is False
 
 
+def test_is_cyclic_leaves_no_cached_relation(spark):
+    # the closure is read from the walk's pinned relation: nothing may stay
+    # registered in the session's CacheManager after the call
+    from assemblagedb_spark.operators.traversal import is_cyclic
+
+    spark.catalog.clearCache()
+    e = _edges(spark, [("r", "a", 0), ("a", "b", 0), ("b", "a", 0), ("r", "b", 1)])
+    for _ in range(3):
+        assert is_cyclic(e, _roots(spark, "r"), max_depth=4).collect()[0].is_cyclic
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_is_blank_roots(spark):
     from assemblagedb_spark.operators.traversal import is_blank_roots
 
