@@ -2493,7 +2493,7 @@ def q_multimodal_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     media = synthetic_y4m_media(load_table(spark, sf_dir, "documents"))
-    return sample_video_frames(media, every_n=2, max_frames=8)
+    return sample_video_frames(media)
 
 
 # luma(x, y, t) = (x + 3y + 7t + id) mod 256 over W = 8+id%5, H = 8+(id·3)%5,
@@ -2536,7 +2536,7 @@ def q_multimodal_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     media = synthetic_gif_media(load_table(spark, sf_dir, "documents"))
-    return sample_video_frames(media, every_n=2, max_frames=8)
+    return sample_video_frames(media)
 
 
 # luma(x, y, t) = (x + 5y + 11t + id) mod 256 over W = 6+id%5, H = 6+(id·7)%5,

@@ -6,6 +6,14 @@ and every transform is an Arrow-batched function over ``mapInPandas`` so
 bytes stream through Python in columnar batches without JVM round-trips
 per row.
 
+Every kernel runs through one of two Arrow loops, so a worker-side rule
+(a thread cap, a partition count) lands in one place: :func:`_build_media`
+spreads the bare ``doc_id`` column and builds ``(media_id, payload)`` per
+id — the five ``synthetic_*_media`` builders — and :func:`_map_payloads`
+maps each payload to zero or more output rows — the seven readers. Each
+public function keeps only its per-row codec call and its own NULL /
+bad-payload contract.
+
 Codec status: ``decode_image`` — the (width, height, channels) metadata
 path every gate and feature extractor here uses — is REAL for PNG, GIF
 and JPEG payloads via a pure-stdlib header parser (the same lazy-header
@@ -27,6 +35,12 @@ from typing import Iterator
 from pyspark.sql import DataFrame, functions as F
 
 FRAME_SAMPLE_SCHEMA = "media_id long, frame_idx int, frame_sha256 string"
+# frame sampling: sample_video_frames takes every VIDEO_FRAME_STRIDE-th
+# decoded frame, sample_frames one FRAME_WINDOW_BYTES window per frame;
+# both stop at MAX_FRAMES per payload
+VIDEO_FRAME_STRIDE = 2
+FRAME_WINDOW_BYTES = 64
+MAX_FRAMES = 8
 
 
 try:  # optional wider-format codec, used when the environment provides it
@@ -36,6 +50,59 @@ try:  # optional wider-format codec, used when the environment provides it
 except ImportError:  # this container ships no PIL; header parser still works
     _PILImage = None
     HAS_IMAGE_CODEC = False
+
+
+def _build_media(docs: DataFrame, payload_of) -> DataFrame:
+    """(media_id, payload) with ``payload_of(id) -> bytes`` per ``doc_id``
+    — the Arrow loop of every payload builder.
+
+    The bare id column is spread across the session's full parallelism
+    first. Synthetic media corpora inherit the input file's split count —
+    one split for a small parquet — which would serialize the codec work
+    no matter how many cores exist; at 100 TB the same holds whenever
+    per-row compute, not scan bytes, is the bottleneck. Only the id column
+    (a long per row) crosses the exchange: payloads are built AFTER it, so
+    payload bytes never cross the network
+    (tests/test_plan_properties.py pins exactly this shape)."""
+
+    def build(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
+        import pandas as pd
+
+        for pdf in batches:
+            ids = pdf["doc_id"].to_numpy()
+            yield pd.DataFrame({
+                "media_id": ids.astype("int64"),
+                "payload": [payload_of(int(mid)) for mid in ids],
+            })
+
+    sc = docs.sparkSession.sparkContext
+    return (
+        docs.select(F.col("doc_id"))
+        .repartition(sc.defaultParallelism)
+        .mapInPandas(build, "media_id long, payload binary")
+    )
+
+
+def _map_payloads(media: DataFrame, schema: str, rows_of) -> DataFrame:
+    """``schema`` rows ``(media_id, *row)`` for every ``row`` that
+    ``rows_of(payload)`` returns, with ``payload`` as ``bytes`` or
+    ``None`` — the Arrow loop of every payload reader. ``rows_of`` owns
+    the reader's NULL and bad-payload contract: a NULL-stats row, a row
+    that keeps its fixed columns, or no row at all."""
+    columns = [field.split()[0] for field in schema.split(",")]
+
+    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
+        import pandas as pd
+
+        for pdf in batches:
+            rows = [
+                (media_id, *row)
+                for media_id, payload in zip(pdf["media_id"], pdf["payload"])
+                for row in rows_of(None if payload is None else bytes(payload))
+            ]
+            yield pd.DataFrame(rows, columns=columns)
+
+    return media.select("media_id", "payload").mapInPandas(run, schema)
 
 
 _PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
@@ -115,7 +182,7 @@ def decode_image(payload: bytes) -> tuple[int, int, int]:
     )
 
 
-def png_media_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def png_media_table(docs: DataFrame) -> DataFrame:
     """(media_id, kind, payload): a media table whose payloads are REAL
     PNG signatures + IHDR chunks, constructed JVM-side from the row id
     (width = 16 + id % 240, height = 16 + (id * 7) % 240, color type
@@ -124,18 +191,18 @@ def png_media_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     in, parser-extracted dimensions out — so an oracle predicting the
     dimensions arithmetically pins the parser, not a stub. Pure binary
     concat/unhex projection: zero Python, zero shuffle."""
-    cts = "element_at(array(0, 2, 3, 4, 6), CAST(pmod({id}, 5) AS INT) + 1)"
+    cts = "element_at(array(0, 2, 3, 4, 6), CAST(pmod(doc_id, 5) AS INT) + 1)"
     payload = (
         "concat("
         "unhex('89504E470D0A1A0A'), "            # PNG signature
         "unhex('0000000D49484452'), "            # IHDR length + type
-        "unhex(lpad(hex(16 + pmod({id}, 240)), 8, '0')), "
-        "unhex(lpad(hex(16 + pmod({id} * 7, 240)), 8, '0')), "
+        "unhex(lpad(hex(16 + pmod(doc_id, 240)), 8, '0')), "
+        "unhex(lpad(hex(16 + pmod(doc_id * 7, 240)), 8, '0')), "
         "unhex(concat('08', lpad(hex(" + cts + "), 2, '0'), '000000')), "
         "unhex('00000000'))"                     # CRC (not read by header)
-    ).format(id=id_col)
+    )
     return docs.select(
-        F.col(id_col).cast("long").alias("media_id"),
+        F.col("doc_id").cast("long").alias("media_id"),
         F.lit("image").alias("kind"),
         F.expr(payload).alias("payload"),
     )
@@ -148,28 +215,17 @@ def decode_image_features(media: DataFrame) -> DataFrame:
     Unrecognized payloads surface as NULL dims rather than failing the
     batch (scan-time tolerance a 100 TB ingest needs)."""
 
-    def extract(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
+    def rows_of(payload):
+        try:
+            # OSError covers PIL.UnidentifiedImageError (its subclass)
+            # when the wider-codec fallback is present; ValueError covers
+            # malformed recognized formats
+            return [decode_image(payload or b"")]
+        except (NotImplementedError, ValueError, OSError):
+            return [(None, None, None)]
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    # OSError covers PIL.UnidentifiedImageError (its
-                    # subclass) when the wider-codec fallback is present;
-                    # ValueError covers malformed recognized formats
-                    w, h, c = decode_image(
-                        bytes(payload) if payload is not None else b""
-                    )
-                except (NotImplementedError, ValueError, OSError):
-                    w = h = c = None
-                rows.append((media_id, w, h, c))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "n_channels"]
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        extract, "media_id long, width int, height int, n_channels int"
+    return _map_payloads(
+        media, "media_id long, width int, height int, n_channels int", rows_of
     )
 
 
@@ -213,48 +269,20 @@ def wav_decode(payload: bytes):
         )
 
 
-def _parallel_ids(docs: "DataFrame", id_col: str) -> "DataFrame":
-    """Spread the bare id column across the session's full parallelism
-    before a payload-builder kernel. Synthetic media corpora inherit the
-    input file's split count — one split for a small parquet — which
-    would serialize the codec work no matter how many cores exist; at
-    100 TB the same holds whenever per-row compute, not scan bytes, is
-    the bottleneck. Only the id column (a long per row) crosses the
-    exchange: payloads are built AFTER it, so the media plans' property
-    that payload bytes never cross the network is preserved
-    (tests/test_plan_properties.py pins exactly this shape)."""
-    sc = docs.sparkSession.sparkContext
-    return docs.select(F.col(id_col)).repartition(sc.defaultParallelism)
-
-
-def synthetic_wav_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synthetic_wav_media(docs: DataFrame) -> DataFrame:
     """(media_id, payload): REAL RIFF/WAVE payloads built per row in the
     Arrow kernel — n_samples = 64 + id % 129, sample_rate = 8000 +
     (id % 3)·4000, sample(t) = ((id·31 + t·7) mod 65536) − 32768 — an
     audio corpus whose waveform is a pure function of the id, so a SQL
     oracle can predict any sample statistic the decode path extracts."""
     import numpy as np
-    import pandas as pd
 
-    def build(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            payloads = []
-            for mid in ids:
-                mid = int(mid)
-                n = 64 + mid % 129
-                t = np.arange(n, dtype=np.int64)
-                samples = ((mid * 31 + t * 7) % 65536) - 32768
-                payloads.append(
-                    wav_encode(samples, 8000 + (mid % 3) * 4000)
-                )
-            yield pd.DataFrame(
-                {"media_id": ids.astype("int64"), "payload": payloads}
-            )
+    def payload_of(mid: int) -> bytes:
+        t = np.arange(64 + mid % 129, dtype=np.int64)
+        samples = ((mid * 31 + t * 7) % 65536) - 32768
+        return wav_encode(samples, 8000 + (mid % 3) * 4000)
 
-    return _parallel_ids(docs, id_col).mapInPandas(
-        build, "media_id long, payload binary"
-    )
+    return _build_media(docs, payload_of)
 
 
 def audio_features(media: DataFrame) -> DataFrame:
@@ -263,52 +291,38 @@ def audio_features(media: DataFrame) -> DataFrame:
     materialized, an exact integer waveform statistic emitted (abs_sum =
     Σ|sample|, the replayable stand-in for RMS energy, which a SQL
     oracle cannot compute exactly in floats)."""
-    import pandas as pd
+    import wave
 
-    def extract(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import wave
+    def rows_of(payload):
+        try:
+            if payload is None:
+                raise ValueError("NULL payload")
+            sr, ch, samples = wav_decode(payload)
+        except (wave.Error, ValueError, EOFError):
+            # NULL or unparseable payload -> NULL stats, not a dead task
+            # (the same scan-time tolerance as decode_image_features)
+            return [(None, None, None, None)]
+        return [(sr, ch, len(samples), int(abs(samples.astype("int64")).sum()))]
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    if payload is None:
-                        raise ValueError("NULL payload")
-                    sr, ch, samples = wav_decode(bytes(payload))
-                except (wave.Error, ValueError, EOFError):
-                    # NULL or unparseable payload -> NULL stats, not a
-                    # dead task (the same scan-time tolerance as
-                    # decode_image_features)
-                    rows.append((media_id, None, None, None, None))
-                    continue
-                rows.append(
-                    (media_id, sr, ch, len(samples),
-                     int(abs(samples.astype("int64")).sum()))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "sample_rate", "n_channels",
-                         "n_samples", "abs_sum"],
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        extract,
+    return _map_payloads(
+        media,
         "media_id long, sample_rate int, n_channels int, "
         "n_samples long, abs_sum long",
+        rows_of,
     )
 
 
-def media_table(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def media_table(docs: DataFrame) -> DataFrame:
     """Synthesize a media table from a text corpus (payload = utf-8 bytes):
     the harness stand-in for an ingested image dataset — schema and byte
     handling identical to the real thing."""
     return docs.select(
-        F.col(id_col).alias("media_id"),
+        F.col("doc_id").alias("media_id"),
         F.lit("image").alias("kind"),
-        F.encode(F.col(text_col), "utf-8").alias("payload"),
+        F.encode(F.col("text"), "utf-8").alias("payload"),
         F.struct(
             F.lit("image/fake").alias("mime"),
-            F.length(F.encode(F.col(text_col), "utf-8")).cast("long").alias("n_bytes"),
+            F.length(F.encode(F.col("text"), "utf-8")).cast("long").alias("n_bytes"),
             F.lit("synthetic").alias("source"),
         ).alias("meta"),
     )
@@ -335,40 +349,31 @@ def resize_images(media: DataFrame, width: int, height: int, codec: str) -> Data
     integer map, and re-encodes — decode, transform, re-encode inside one
     Arrow batch loop, the shape every pixel-level training transform takes
     at scale."""
+    from assemblagedb_spark.functions.png import resize_nearest
+
     decode, encode, mime = _pixel_codec(codec)
 
-    def resize(batches):
-        import pandas as pd
-
-        from assemblagedb_spark.functions.png import resize_nearest
-
-        for pdf in batches:
-            out = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    if payload is None:
-                        raise ValueError("NULL payload")
-                    arr = resize_nearest(
-                        decode(bytes(payload)), width=width, height=height
-                    )
-                    resized = encode(arr)
-                except ValueError:
-                    # NULL or undecodable payload passes through as a NULL
-                    # payload row — schema kept, task alive
-                    resized = None
-                out.append((media_id, resized, mime, width, height))
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "payload", "meta_mime", "width", "height"],
+    def rows_of(payload):
+        try:
+            if payload is None:
+                raise ValueError("NULL payload")
+            resized = encode(
+                resize_nearest(decode(payload), width=width, height=height)
             )
+        except ValueError:
+            # NULL or undecodable payload passes through as a NULL payload
+            # row — schema kept, task alive
+            resized = None
+        return [(resized, mime, width, height)]
 
-    return media.select("media_id", "payload").mapInPandas(
-        resize,
+    return _map_payloads(
+        media,
         "media_id long, payload binary, meta_mime string, width int, height int",
+        rows_of,
     )
 
 
-def synthetic_png_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synthetic_png_media(docs: DataFrame) -> DataFrame:
     """(media_id, payload): REAL grayscale PNG payloads built per row in
     the Arrow kernel — W = 8 + id % 9, H = 8 + (id·3) % 9, pixel(x, y) =
     (x + 7y + id) % 256 — i.e. an image corpus whose pixel content is a
@@ -376,58 +381,35 @@ def synthetic_png_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     statistic downstream transforms produce. The payloads are genuine
     zlib-compressed PNGs (functions/png.py), not header shells."""
     import numpy as np
-    import pandas as pd
 
     from assemblagedb_spark.functions.png import png_encode
 
-    def build(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            payloads = []
-            for mid in ids:
-                mid = int(mid)
-                w, h = 8 + mid % 9, 8 + (mid * 3) % 9
-                arr = (
-                    (np.arange(w)[None, :] + 7 * np.arange(h)[:, None] + mid)
-                    % 256
-                ).astype(np.uint8)
-                payloads.append(png_encode(arr))
-            yield pd.DataFrame(
-                {"media_id": ids.astype("int64"), "payload": payloads}
-            )
+    def payload_of(mid: int) -> bytes:
+        w, h = 8 + mid % 9, 8 + (mid * 3) % 9
+        arr = (np.arange(w)[None, :] + 7 * np.arange(h)[:, None] + mid) % 256
+        return png_encode(arr.astype(np.uint8))
 
-    return _parallel_ids(docs, id_col).mapInPandas(
-        build, "media_id long, payload binary"
-    )
+    return _build_media(docs, payload_of)
 
 
 def pixel_sums(media: DataFrame) -> DataFrame:
     """(media_id, pixel_sum): sum of all decoded pixel values per payload
     — the integer pixel statistic the resize gate compares against its
     arithmetic oracle (REAL decode path, no stub)."""
-    import pandas as pd
-
     from assemblagedb_spark.functions.png import png_decode
 
-    def sums(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    if payload is None:
-                        raise ValueError("NULL payload")
-                    s = int(png_decode(bytes(payload)).sum())
-                except ValueError:
-                    s = None  # NULL/undecodable -> NULL stat, task alive
-                rows.append((media_id, s))
-            yield pd.DataFrame(rows, columns=["media_id", "pixel_sum"])
+    def rows_of(payload):
+        try:
+            if payload is None:
+                raise ValueError("NULL payload")
+            return [(int(png_decode(payload).sum()),)]
+        except ValueError:
+            return [(None,)]  # NULL/undecodable -> NULL stat, task alive
 
-    return media.select("media_id", "payload").mapInPandas(
-        sums, "media_id long, pixel_sum long"
-    )
+    return _map_payloads(media, "media_id long, pixel_sum long", rows_of)
 
 
-def synthetic_jpeg_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synthetic_jpeg_media(docs: DataFrame) -> DataFrame:
     """(media_id, payload): REAL baseline JPEG payloads built per row in
     the Arrow kernel — block-flat images W = 8·(1 + id%3), H = 8·(1 +
     (id÷3)%3) whose 8×8 block at (bx, by) is the flat value
@@ -441,36 +423,23 @@ def synthetic_jpeg_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     quantized coefficients, so one arithmetic oracle pins BOTH decode
     paths."""
     import numpy as np
-    import pandas as pd
 
     from assemblagedb_spark.functions.jpeg import (
         jpeg_encode,
         jpeg_encode_progressive,
     )
 
-    def build(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        ones = np.ones((8, 8), dtype=np.int64)
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            payloads = []
-            for mid in ids:
-                mid = int(mid)
-                bw, bh = 1 + mid % 3, 1 + (mid // 3) % 3
-                vals = (
-                    mid
-                    + 13 * np.arange(bw)[None, :]
-                    + 29 * np.arange(bh)[:, None]
-                ) % 256
-                img = np.kron(vals, ones).astype(np.uint8)
-                enc = jpeg_encode_progressive if mid % 2 else jpeg_encode
-                payloads.append(enc(img, quality=50))
-            yield pd.DataFrame(
-                {"media_id": ids.astype("int64"), "payload": payloads}
-            )
+    ones = np.ones((8, 8), dtype=np.int64)
 
-    return _parallel_ids(docs, id_col).mapInPandas(
-        build, "media_id long, payload binary"
-    )
+    def payload_of(mid: int) -> bytes:
+        bw, bh = 1 + mid % 3, 1 + (mid // 3) % 3
+        vals = (
+            mid + 13 * np.arange(bw)[None, :] + 29 * np.arange(bh)[:, None]
+        ) % 256
+        enc = jpeg_encode_progressive if mid % 2 else jpeg_encode
+        return enc(np.kron(vals, ones).astype(np.uint8), quality=50)
+
+    return _build_media(docs, payload_of)
 
 
 def jpeg_pixel_stats(media: DataFrame) -> DataFrame:
@@ -479,74 +448,50 @@ def jpeg_pixel_stats(media: DataFrame) -> DataFrame:
     pixel statistics the lossy-codec gate compares against its
     arithmetic oracle. NULL/undecodable payloads yield NULL stats, task
     alive."""
-    import pandas as pd
-
     from assemblagedb_spark.functions.jpeg import jpeg_decode
 
-    def stats(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    if payload is None:
-                        raise ValueError("NULL payload")
-                    arr = jpeg_decode(bytes(payload))
-                    rows.append(
-                        (media_id, int(arr.shape[1]), int(arr.shape[0]),
-                         int(arr.astype("int64").sum()))
-                    )
-                except ValueError:
-                    rows.append((media_id, None, None, None))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "pixel_sum"]
-            )
+    def rows_of(payload):
+        try:
+            if payload is None:
+                raise ValueError("NULL payload")
+            arr = jpeg_decode(payload)
+        except ValueError:
+            return [(None, None, None)]
+        return [(int(arr.shape[1]), int(arr.shape[0]), int(arr.astype("int64").sum()))]
 
-    return media.select("media_id", "payload").mapInPandas(
-        stats, "media_id long, width int, height int, pixel_sum long"
+    return _map_payloads(
+        media, "media_id long, width int, height int, pixel_sum long", rows_of
     )
 
 
-def synthetic_y4m_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synthetic_y4m_media(docs: DataFrame) -> DataFrame:
     """(media_id, payload): genuine YUV4MPEG2 Cmono streams — T = 1+id%4
     frames of W = 8+id%5 × H = 8+(id·3)%5 with luma(x, y, t) =
     (x + 3y + 7t + id) mod 256 — a video corpus whose every pixel is a
     pure function of the id, so a SQL oracle can predict any per-frame
     statistic downstream sampling produces."""
     import numpy as np
-    import pandas as pd
 
     from assemblagedb_spark.functions.y4m import y4m_encode
 
-    def build(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            payloads = []
-            for mid in ids:
-                mid = int(mid)
-                t, w, h = 1 + mid % 4, 8 + mid % 5, 8 + (mid * 3) % 5
-                frames = (
-                    np.arange(w)[None, None, :]
-                    + 3 * np.arange(h)[None, :, None]
-                    + 7 * np.arange(t)[:, None, None]
-                    + mid
-                ) % 256
-                payloads.append(y4m_encode(frames.astype(np.uint8)))
-            yield pd.DataFrame(
-                {"media_id": ids.astype("int64"), "payload": payloads}
-            )
+    def payload_of(mid: int) -> bytes:
+        t, w, h = 1 + mid % 4, 8 + mid % 5, 8 + (mid * 3) % 5
+        frames = (
+            np.arange(w)[None, None, :]
+            + 3 * np.arange(h)[None, :, None]
+            + 7 * np.arange(t)[:, None, None]
+            + mid
+        ) % 256
+        return y4m_encode(frames.astype(np.uint8))
 
-    return _parallel_ids(docs, id_col).mapInPandas(
-        build, "media_id long, payload binary"
-    )
+    return _build_media(docs, payload_of)
 
 
-def sample_video_frames(
-    media: DataFrame, every_n: int = 2, max_frames: int = 8
-) -> DataFrame:
+def sample_video_frames(media: DataFrame) -> DataFrame:
     """REAL animation/video frame sampling: sniff each payload's magic
     and parse it as a YUV4MPEG2 container (functions/y4m.py) or an
     animated GIF (functions/gif.py — LZW decode + disposal compositing),
-    take every ``every_n``-th frame up to ``max_frames``, and emit
+    take every ``VIDEO_FRAME_STRIDE``-th frame up to ``MAX_FRAMES``, and emit
     (media_id, frame_idx, width, height, luma_sum) — the exploded
     (media, frame) shape a training pipeline feeds to a vision encoder,
     with frame boundaries from each container's own geometry rather than
@@ -555,54 +500,40 @@ def sample_video_frames(
     is exactly the gray value for grayscale palettes. NULL/unparseable
     payloads sample nothing (missing media has no frames); the task
     stays alive."""
-    import pandas as pd
+    import numpy as np
 
     from assemblagedb_spark.functions.gif import gif_decode
     from assemblagedb_spark.functions.y4m import y4m_decode
 
-    def sample(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import numpy as np
+    def rows_of(data):
+        try:
+            if data is None:
+                return []
+            if data[:9] == b"YUV4MPEG2":
+                luma, w, h, t = y4m_decode(data)
+            elif data[:4] == b"GIF8":
+                rgb, w, h, t = gif_decode(data)
+                rgb = rgb.astype(np.int64)
+                luma = (
+                    299 * rgb[..., 0] + 587 * rgb[..., 1] + 114 * rgb[..., 2]
+                ) // 1000
+            else:
+                return []
+        except ValueError:
+            return []
+        return [
+            (idx, w, h, int(luma[idx].astype("int64").sum()))
+            for idx in range(0, t, VIDEO_FRAME_STRIDE)[:MAX_FRAMES]
+        ]
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                data = bytes(payload)
-                try:
-                    if data[:9] == b"YUV4MPEG2":
-                        luma, w, h, t = y4m_decode(data)
-                    elif data[:4] == b"GIF8":
-                        rgb, w, h, t = gif_decode(data)
-                        rgb = rgb.astype(np.int64)
-                        luma = (
-                            299 * rgb[..., 0]
-                            + 587 * rgb[..., 1]
-                            + 114 * rgb[..., 2]
-                        ) // 1000
-                    else:
-                        continue
-                except ValueError:
-                    continue
-                for idx in range(0, t, every_n):
-                    if idx // every_n >= max_frames:
-                        break
-                    rows.append(
-                        (media_id, idx, w, h,
-                         int(luma[idx].astype("int64").sum()))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "width", "height", "luma_sum"],
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        sample,
+    return _map_payloads(
+        media,
         "media_id long, frame_idx int, width int, height int, luma_sum long",
+        rows_of,
     )
 
 
-def synthetic_gif_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synthetic_gif_media(docs: DataFrame) -> DataFrame:
     """(media_id, payload): genuine animated GIF89a streams — T = 1+id%3
     full-canvas frames of W = 6+id%5 × H = 6+(id·7)%5 grayscale pixels
     luma(x, y, t) = (x + 5y + 11t + id) mod 256, LZW-compressed against
@@ -610,60 +541,42 @@ def synthetic_gif_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     is a pure function of the id, so a SQL oracle can predict any
     per-frame statistic downstream sampling produces."""
     import numpy as np
-    import pandas as pd
 
     from assemblagedb_spark.functions.gif import gif_encode
 
-    def build(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            payloads = []
-            for mid in ids:
-                mid = int(mid)
-                t, w, h = 1 + mid % 3, 6 + mid % 5, 6 + (mid * 7) % 5
-                frames = (
-                    np.arange(w)[None, None, :]
-                    + 5 * np.arange(h)[None, :, None]
-                    + 11 * np.arange(t)[:, None, None]
-                    + mid
-                ) % 256
-                payloads.append(gif_encode(frames.astype(np.uint8)))
-            yield pd.DataFrame(
-                {"media_id": ids.astype("int64"), "payload": payloads}
-            )
+    def payload_of(mid: int) -> bytes:
+        t, w, h = 1 + mid % 3, 6 + mid % 5, 6 + (mid * 7) % 5
+        frames = (
+            np.arange(w)[None, None, :]
+            + 5 * np.arange(h)[None, :, None]
+            + 11 * np.arange(t)[:, None, None]
+            + mid
+        ) % 256
+        return gif_encode(frames.astype(np.uint8))
 
-    return _parallel_ids(docs, id_col).mapInPandas(
-        build, "media_id long, payload binary"
-    )
+    return _build_media(docs, payload_of)
 
 
-def sample_frames(media: DataFrame, every_n_bytes: int = 64, max_frames: int = 8) -> DataFrame:
+def sample_frames(media: DataFrame) -> DataFrame:
     """Frame sampling for video payloads: emit one row per sampled frame —
     the (media_id, frame_idx) exploded shape downstream training pipelines
-    expect. The stub samples byte windows; a real impl samples decoded
-    frames at timestamps."""
+    expect. The stub samples ``FRAME_WINDOW_BYTES`` byte windows, at most
+    ``MAX_FRAMES`` per payload; a real impl samples decoded frames at
+    timestamps."""
 
-    def sample(batches):
-        import pandas as pd
+    def rows_of(data):
+        if data is None:
+            # a MISSING payload samples nothing — unlike an empty payload,
+            # which keeps its designed minimum one frame
+            return []
+        # fingerprint the LOWERCASE-HEX rendering of each window, not the
+        # raw bytes: the portable exact form (an SQL oracle cannot slice
+        # or sha256 BLOBs, and a byte window of UTF-8 text is not
+        # generally a valid string)
+        w = FRAME_WINDOW_BYTES
+        return [
+            (i, hashlib.sha256(data[i * w : (i + 1) * w].hex().encode()).hexdigest())
+            for i in range(min(MAX_FRAMES, max(1, len(data) // w)))
+        ]
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    # a MISSING payload samples nothing — unlike an empty
-                    # payload, which keeps its designed minimum one frame
-                    continue
-                data = bytes(payload)
-                for i in range(min(max_frames, max(1, len(data) // every_n_bytes))):
-                    window = data[i * every_n_bytes : (i + 1) * every_n_bytes]
-                    # fingerprint the LOWERCASE-HEX rendering of the window,
-                    # not the raw bytes: the portable exact form (an SQL
-                    # oracle cannot slice or sha256 BLOBs, and a byte window
-                    # of UTF-8 text is not generally a valid string)
-                    rows.append(
-                        (media_id, i,
-                         hashlib.sha256(window.hex().encode()).hexdigest())
-                    )
-            yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "frame_sha256"])
-
-    return media.select("media_id", "payload").mapInPandas(sample, FRAME_SAMPLE_SCHEMA)
+    return _map_payloads(media, FRAME_SAMPLE_SCHEMA, rows_of)

@@ -54,10 +54,9 @@ def overlap_pairs(
     grams: DataFrame,
     counts: DataFrame,
     *,
-    min_score: float = OVERLAP_MIN_SCORE,
     changed: DataFrame | None = None,
 ) -> DataFrame:
-    """All block pairs with overlap score > ``min_score``, both directions,
+    """All block pairs with score > ``OVERLAP_MIN_SCORE``, both directions,
     from the postings self-join on ``gram``.
 
     grams: (node_id, gram, occurrences); counts: (node_id, gram_count).
@@ -103,7 +102,7 @@ def overlap_pairs(
     ca = counts.select(F.col("node_id").alias("src_id"), F.col("gram_count").alias("source_count"))
     cb = counts.select(F.col("node_id").alias("dst_id"), F.col("gram_count").alias("match_count"))
     scored = overlap_columns(inter.join(ca, "src_id").join(cb, "dst_id")).filter(
-        F.col("score") > min_score
+        F.col("score") > OVERLAP_MIN_SCORE
     )
     out = scored.select("src_id", "dst_id", "a", "b", "intersection", "score")
     return _mirror(out, distinct=changed is not None)
@@ -112,7 +111,6 @@ def overlap_pairs(
 def overlap_pairs_sparse(
     grams: DataFrame,
     *,
-    min_score: float = OVERLAP_MIN_SCORE,
     max_sparse_nnz: int = 64_000_000,
     changed: DataFrame | None = None,
 ) -> DataFrame | None:
@@ -227,7 +225,7 @@ def overlap_pairs_sparse(
                     inter = 255 * i_raw[d] // mx
                     mn = np.minimum(a, b)
                     score = inter / np.where(mn == 0, 1, mn)
-                    k = (mn > 0) & (score > min_score)
+                    k = (mn > 0) & (score > OVERLAP_MIN_SCORE)
                     if k.any():
                         acc.append(
                             (np.full(k.sum(), i), d[k], a[k], b[k], inter[k], score[k])
@@ -265,7 +263,6 @@ def overlap_pairs_prefix(
     grams: DataFrame,
     counts: DataFrame | None = None,
     *,
-    min_score: float = OVERLAP_MIN_SCORE,
     both_directions: bool = True,
 ) -> DataFrame:
     """EXACT symmetric overlaps via prefix-filtered candidates — the plan
@@ -461,7 +458,7 @@ def overlap_pairs_prefix(
             ),
         )
     )
-    out = overlap_columns(scored).filter(F.col("score") > min_score).select(
+    out = overlap_columns(scored).filter(F.col("score") > OVERLAP_MIN_SCORE).select(
         "src_id", "dst_id", "a", "b", "intersection", "score"
     )
     if both_directions:
@@ -473,7 +470,6 @@ def store_overlaps(
     grams: DataFrame,
     counts: DataFrame | None = None,
     *,
-    min_score: float = OVERLAP_MIN_SCORE,
     changed: DataFrame | None = None,
     excluded_pairs: DataFrame | None = None,
     max_sparse_nnz: int = 64_000_000,
@@ -518,20 +514,18 @@ def store_overlaps(
     contract forbids that. Post-kernel, exclusion removes exactly the
     listed (src, dst) orientations on every route.
     """
-    out = overlap_pairs_sparse(
-        grams, min_score=min_score, max_sparse_nnz=max_sparse_nnz, changed=changed
-    )
+    out = overlap_pairs_sparse(grams, max_sparse_nnz=max_sparse_nnz, changed=changed)
     route = "sparse"
     if out is None and changed is None:
         route = "prefix"
-        out = overlap_pairs_prefix(grams, counts, min_score=min_score)
+        out = overlap_pairs_prefix(grams, counts)
     elif out is None:
         route = "sparse-incremental"
         if counts is None:
             counts = grams.groupBy("node_id").agg(
                 F.sum("occurrences").cast("long").alias("gram_count")
             )
-        out = overlap_pairs(grams, counts, min_score=min_score, changed=changed)
+        out = overlap_pairs(grams, counts, changed=changed)
     if dispatch_out is not None:
         dispatch_out["route"] = route
     if excluded_pairs is not None:

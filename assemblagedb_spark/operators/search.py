@@ -111,17 +111,11 @@ def find_local(
     return sorted(rows, key=lambda r: (-r["intersection"], -r["a"], -r["b"], r["id"]))
 
 
-def search(
-    spark: SparkSession,
-    grams_index: DataFrame,
-    term: str,
-    *,
-    min_score: float = SEARCH_MIN_SCORE,
-) -> DataFrame:
+def search(spark: SparkSession, grams_index: DataFrame, term: str) -> DataFrame:
     """Ad-hoc similarity search (``index.rs:174-184``): end-trimmed grams,
-    asymmetric mode, score ≥ 0.3, Overlap ordering."""
+    asymmetric mode, score ≥ ``SEARCH_MIN_SCORE``, Overlap ordering."""
     q = trim_for_search(index_text(term))
     out = find(spark, grams_index, q, symmetric=False)
-    return out.filter(F.col("score") >= min_score).orderBy(
+    return out.filter(F.col("score") >= SEARCH_MIN_SCORE).orderBy(
         F.desc("intersection"), F.desc("a"), F.desc("b"), F.asc("node_id")
     )

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from assemblagedb_spark.operators.multimodal import (
+    MAX_FRAMES,
     decode_image,
     media_table,
     resize_images,
@@ -47,10 +48,10 @@ def test_resize_and_frame_sampling_shapes(spark, sf_dir):
     assert (r["width"], r["height"]) == (224, 224)
     assert r["payload"] is not None and r["meta_mime"] == "image/png"
 
-    frames = sample_frames(m, every_n_bytes=64, max_frames=4)
+    frames = sample_frames(m)
     pdf = frames.toPandas()
     assert set(pdf.columns) == {"media_id", "frame_idx", "frame_sha256"}
-    assert pdf.groupby("media_id").frame_idx.max().max() <= 3
+    assert pdf.groupby("media_id").frame_idx.max().max() <= MAX_FRAMES - 1
     assert (pdf.groupby("media_id").frame_idx.min() == 0).all()
 
 
@@ -176,7 +177,7 @@ def test_resize_jpeg_codec_end_to_end(spark, sf_dir):
     # the codec="jpeg" resize path: decode -> nearest map -> lossy
     # re-encode per Arrow batch; outputs must be REAL baseline streams at
     # the target dims. The chained plan's single exchange is the
-    # id-column repartition inside synthetic_jpeg_media (_parallel_ids);
+    # id-column repartition inside synthetic_jpeg_media (_build_media);
     # resize_images itself adds none — payload bytes never shuffle.
     from assemblagedb_spark.functions.jpeg import jpeg_decode
     from assemblagedb_spark.operators.multimodal import (

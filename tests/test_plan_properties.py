@@ -287,7 +287,7 @@ def test_grouping_sets_single_expand_single_scan(spark, sf_dir):
 def test_multimodal_codec_gates_shuffle_only_bare_ids(spark, sf_dir):
     # the real-codec gates are chained Arrow kernels whose ONE exchange
     # is the id-column repartition BEFORE the payload builder
-    # (multimodal._parallel_ids): compute parallelism must not inherit
+    # (multimodal._build_media): compute parallelism must not inherit
     # the input's split count, but payload bytes must never cross the
     # network. In the formatted plan the tree prints parents first, so
     # every MapInPandas (downstream of the exchange in dataflow) must

@@ -182,12 +182,17 @@ def test_wav_decode_refusals():
 
 def test_kernels_tolerate_null_and_garbage_payloads(spark):
     # every real-codec Arrow kernel must survive NULL and undecodable
-    # payloads with NULL stats (scan-time tolerance), never a dead task
+    # payloads under its own contract (scan-time tolerance), never a dead
+    # task: the stat readers emit NULL stats, resize keeps its fixed
+    # columns, the frame samplers emit no frames
     from assemblagedb_spark.operators.multimodal import (
         audio_features,
         decode_image_features,
+        jpeg_pixel_stats,
         pixel_sums,
         resize_images,
+        sample_frames,
+        sample_video_frames,
         wav_encode,
     )
 
@@ -204,9 +209,28 @@ def test_kernels_tolerate_null_and_garbage_payloads(spark):
     sums = {r["media_id"]: r["pixel_sum"] for r in pixel_sums(media).collect()}
     assert sums == {1: 0, 2: None, 3: None}
 
-    rs = {r["media_id"]: r["payload"]
+    rs = {r["media_id"]: r
           for r in resize_images(media, 4, 4, codec="png").collect()}
-    assert rs[1] is not None and rs[2] is None and rs[3] is None
+    assert rs[1]["payload"] is not None
+    assert rs[2]["payload"] is None and rs[3]["payload"] is None
+    for r in rs.values():
+        assert (r["meta_mime"], r["width"], r["height"]) == ("image/png", 4, 4)
+
+    jp = {r["media_id"]: r for r in jpeg_pixel_stats(media).collect()}
+    assert set(jp) == {1, 2, 3}
+    for mid in (2, 3):
+        assert (jp[mid]["width"], jp[mid]["height"], jp[mid]["pixel_sum"]) == (
+            None, None, None
+        )
+
+    # neither NULL nor garbage (nor a PNG) is a video container
+    assert sample_video_frames(media).collect() == []
+
+    empty = spark.createDataFrame(
+        [(1, None), (2, b"")], "media_id long, payload binary"
+    )
+    frames = sample_frames(empty).collect()
+    assert [(r["media_id"], r["frame_idx"]) for r in frames] == [(2, 0)]
 
     audio = spark.createDataFrame(
         [(1, ok_wav), (2, None), (3, b"garbage")],
