@@ -154,14 +154,15 @@ def trim_for_search(grams: list[int]) -> list[int]:
 # Mersenne prime 2^31 - 1: universal-hash modulus small enough that
 # a*x+b stays within int64 for 32-bit gram inputs in both engines.
 MINHASH_PRIME = 2147483647
+MINHASH_SEED = 42  # start state of the coefficient LCG
 
 
-def minhash_coeffs(k: int, seed: int = 42) -> list[tuple[int, int]]:
+def minhash_coeffs(k: int) -> list[tuple[int, int]]:
     """Deterministic (a, b) coefficients for k universal hash functions
     h_j(x) = (a_j * x + b_j) mod P. A fixed LCG keeps this reproducible
     without RNG (portable to SQL literal lists)."""
     coeffs = []
-    state = seed
+    state = MINHASH_SEED
     for _ in range(k):
         state = (state * 1103515245 + 12345) % (1 << 31)
         a = state % (MINHASH_PRIME - 1) + 1
@@ -171,12 +172,12 @@ def minhash_coeffs(k: int, seed: int = 42) -> list[tuple[int, int]]:
     return coeffs
 
 
-def universal_hash_sql(x: str, a: int, b: int, prime: int = MINHASH_PRIME) -> str:
+def universal_hash_sql(x: str, a: int, b: int) -> str:
     """(a·(x mod P) + b) mod P — identical int64 arithmetic in Spark and
     DuckDB. ``x`` reduces mod P FIRST: byte grams reach 2^32-1, and
     (2^32)·a would overflow int64; (P-1)·(P-1) stays under 2^62. For
     ASCII grams (always < P) the reduction is the identity."""
-    return f"(((CAST({x} AS BIGINT) % {prime}) * {a} + {b}) % {prime})"
+    return f"(((CAST({x} AS BIGINT) % {MINHASH_PRIME}) * {a} + {b}) % {MINHASH_PRIME})"
 
 
 # ---------------------------------------------------------------------------

@@ -196,11 +196,14 @@ def _block_split(data: bytes) -> bytes:
     return bytes(out)
 
 
-def gif_encode(frames, delay_cs: int = 4) -> bytes:
+GIF_DELAY_CS = 4  # gif_encode's frame delay, hundredths of a second
+
+
+def gif_encode(frames) -> bytes:
     """Encode (H, W) or (T, H, W) uint8 GRAYSCALE frames as a GIF89a with
     a global 256-entry gray palette (index == luma — lossless for gray
     inputs). Multi-frame input becomes an animation of full-canvas
-    frames at ``delay_cs`` hundredths of a second."""
+    frames at ``GIF_DELAY_CS`` hundredths of a second."""
     import numpy as np
 
     a = np.asarray(frames, dtype=np.uint8)
@@ -223,7 +226,7 @@ def gif_encode(frames, delay_cs: int = 4) -> bytes:
         if t > 1:
             # graphic control: disposal 1 (leave), no transparency
             out += b"\x21\xf9" + _block_split(
-                struct.pack("<BHB", 0x04, delay_cs, 0)
+                struct.pack("<BHB", 0x04, GIF_DELAY_CS, 0)
             )
         out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)  # no LCT
         out.append(8)  # LZW min code size

@@ -6,10 +6,10 @@ uniform quantization, zigzag run-length coding and static Huffman tables
 — all of it exact integer/float math numpy expresses directly. This
 module implements:
 
-- ``jpeg_encode``: grayscale or RGB baseline JFIF streams — YCbCr 4:4:4
-  by default, 4:2:0 (2×2-mean chroma downsample) with ``subsample=True``
-  — using the Annex K quantization tables (libjpeg quality scaling) and
-  the Annex K "typical" Huffman tables.
+- ``jpeg_encode``: grayscale or RGB baseline JFIF streams — YCbCr 4:4:4,
+  or 4:2:0 (2×2-mean chroma downsample) with ``JPEG_SUBSAMPLE`` on —
+  using the Annex K quantization tables scaled to ``JPEG_QUALITY``
+  (libjpeg quality scaling) and the Annex K "typical" Huffman tables.
 - ``jpeg_decode``: baseline (SOF0/1) AND progressive (SOF2, T.81
   Annex G: spectral selection + successive approximation with EOB runs)
   streams at any sampling-factor combination in {1, 2, 4} with integer
@@ -43,6 +43,9 @@ entropy-layer exactness through a hand-assembled coefficient stream).
 from __future__ import annotations
 
 import struct
+
+JPEG_QUALITY = 50  # libjpeg quality of the encoders; 50 = the unscaled tables
+JPEG_SUBSAMPLE = False  # jpeg_encode's color chroma: 4:4:4, or 4:2:0 when on
 
 # --------------------------------------------------------------------------
 # Tables (ITU-T T.81 Annex K — the interchange-format defaults)
@@ -834,12 +837,12 @@ def _pack_entropy(codes, lens) -> bytes:
     return by.tobytes()
 
 
-def jpeg_encode(arr, quality: int = 50, subsample: bool = False) -> bytes:
+def jpeg_encode(arr) -> bytes:
     """Encode a uint8 array as baseline JFIF: (H, W) / (H, W, 1) →
-    grayscale single-scan; (H, W, 3) → YCbCr interleaved, 4:4:4 by
-    default or 4:2:0 (2×2-mean chroma downsample, the shape virtually
-    every camera/web JPEG uses) with ``subsample=True``. Annex K tables
-    scaled by libjpeg quality (50 = unscaled — the gate's choice)."""
+    grayscale single-scan; (H, W, 3) → YCbCr interleaved, 4:4:4, or
+    4:2:0 (2×2-mean chroma downsample, the shape virtually every
+    camera/web JPEG uses) with ``JPEG_SUBSAMPLE`` on. Annex K tables
+    scaled by libjpeg quality ``JPEG_QUALITY``."""
     import numpy as np
 
     a = np.asarray(arr, dtype=np.uint8)
@@ -851,10 +854,10 @@ def jpeg_encode(arr, quality: int = 50, subsample: bool = False) -> bytes:
     h, w = a.shape[0], a.shape[1]
     if h == 0 or w == 0:
         raise ValueError("empty image")
-    subsample = subsample and not gray
+    subsample = JPEG_SUBSAMPLE and not gray
 
-    qluma = quality_scale(QUANT_LUMA, quality)
-    qchroma = quality_scale(QUANT_CHROMA, quality)
+    qluma = quality_scale(QUANT_LUMA, JPEG_QUALITY)
+    qchroma = quality_scale(QUANT_CHROMA, JPEG_QUALITY)
     out = bytearray(b"\xff\xd8")  # SOI
     # JFIF APP0 (1:1 aspect, no thumbnail)
     out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
@@ -1037,7 +1040,7 @@ def _emit_ac_refine(writer, zz, ac_codes, ss, se, al):
             writer.write(b, 1)
 
 
-def jpeg_encode_progressive(arr, quality: int = 50) -> bytes:
+def jpeg_encode_progressive(arr) -> bytes:
     """Encode a uint8 array as a PROGRESSIVE (SOF2) JFIF stream at 1x1
     sampling — grayscale or YCbCr 4:4:4 — with the scan script
     DC(Al=1) → DC refine → per-component AC 1..63 (Al=1) → AC refine.
@@ -1057,8 +1060,8 @@ def jpeg_encode_progressive(arr, quality: int = 50) -> bytes:
     if h == 0 or w == 0:
         raise ValueError("empty image")
 
-    qluma = quality_scale(QUANT_LUMA, quality)
-    qchroma = quality_scale(QUANT_CHROMA, quality)
+    qluma = quality_scale(QUANT_LUMA, JPEG_QUALITY)
+    qchroma = quality_scale(QUANT_CHROMA, JPEG_QUALITY)
     # the SAME shared pipeline jpeg_encode uses — the byte-identical
     # coefficient invariant is structural, not two copies kept in sync
     planes = _color_planes(a, gray)
@@ -1454,7 +1457,7 @@ def _jpeg_decode(payload: bytes):
     return np.clip(_round_half_away(rgb), 0, 255).astype(np.uint8)
 
 
-def flat_gray_roundtrip_value(v: int, quality: int = 50) -> int:
+def flat_gray_roundtrip_value(v: int) -> int:
     """The exact arithmetic the DuckDB gate replays: a flat grayscale
     image of value v encodes to DC-only blocks, so the decode is
     clamp(round_half_away(round_half_away(8·(v−128)/Q₀₀)·Q₀₀/8 + 128)).
@@ -1465,7 +1468,7 @@ def flat_gray_roundtrip_value(v: int, quality: int = 50) -> int:
         m = abs(t) + Fraction(1, 2)
         return (1 if t >= 0 else -1) * (m.numerator // m.denominator)
 
-    q00 = int(quality_scale(QUANT_LUMA, quality)[0])
+    q00 = int(quality_scale(QUANT_LUMA, JPEG_QUALITY)[0])
     qdc = half_away(Fraction(8 * (v - 128), q00))
     # round AFTER the +128 level shift, exactly as the decoder does —
     # half-away rounding is not translation-invariant (reconstruction

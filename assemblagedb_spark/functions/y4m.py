@@ -36,16 +36,16 @@ _CHROMA_FRACTION = {
 _FRAME_MAGIC = b"FRAME"
 
 
-def y4m_encode(frames, rate=(25, 1)) -> bytes:
-    """Encode a (T, H, W) uint8 luma array as a Cmono y4m stream —
-    genuine container bytes any y4m reader accepts."""
+def y4m_encode(frames) -> bytes:
+    """Encode a (T, H, W) uint8 luma array as a Cmono y4m stream at 25
+    frames per second — genuine container bytes any y4m reader accepts."""
     import numpy as np
 
     a = np.asarray(frames, dtype=np.uint8)
     if a.ndim != 3 or a.shape[0] == 0:
         raise ValueError(f"expected (T, H, W) frames, got shape {a.shape}")
     t, h, w = a.shape
-    head = f"YUV4MPEG2 W{w} H{h} F{rate[0]}:{rate[1]} Ip A1:1 Cmono\n".encode()
+    head = f"YUV4MPEG2 W{w} H{h} F25:1 Ip A1:1 Cmono\n".encode()
     parts = [head]
     for i in range(t):
         parts.append(b"FRAME\n")

@@ -238,7 +238,7 @@ def _events_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_mvcc_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Latest version per key incl. tombstones (get_unremoved path)."""
     ev = _events_versioned(spark, sf_dir)
-    return mvcc.latest(ev, ["user_id"], ts="ts", tiebreak=["event_id"]).select(*_EV_COLS)
+    return mvcc.latest(ev, ["user_id"], tiebreak=["event_id"]).select(*_EV_COLS)
 
 
 O_MVCC_LATEST = """
@@ -252,7 +252,7 @@ SELECT user_id, event_id, event_type, value FROM (
 def q_mvcc_current(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Live current state: latest per key, tombstoned keys absent (get)."""
     ev = _events_versioned(spark, sf_dir)
-    return mvcc.current(ev, ["user_id"], ts="ts", tiebreak=["event_id"]).select(*_EV_COLS)
+    return mvcc.current(ev, ["user_id"], tiebreak=["event_id"]).select(*_EV_COLS)
 
 
 O_MVCC_CURRENT = """
@@ -267,7 +267,7 @@ def q_mvcc_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot-isolation read as of a fixed timestamp (kv lib.rs:585-591)."""
     ev = _events_versioned(spark, sf_dir)
     return mvcc.as_of(
-        ev, SNAPSHOT_NS, ["user_id"], ts="ts", tiebreak=["event_id"]
+        ev, SNAPSHOT_NS, ["user_id"], tiebreak=["event_id"]
     ).select(*_EV_COLS)
 
 
@@ -282,7 +282,7 @@ SELECT user_id, event_id, event_type, value FROM (
 def q_mvcc_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full version history of one key (kv lib.rs:411-431)."""
     ev = _events_versioned(spark, sf_dir).filter(F.col("user_id") == 7)
-    return mvcc.versions(ev, ["user_id"], ts="ts", tiebreak=["event_id"]).select(
+    return mvcc.versions(ev, ["user_id"], tiebreak=["event_id"]).select(
         "user_id",
         "event_id",
         F.expr("ts div 1000").alias("ts"),  # µs: the oracle's ts precision
@@ -302,7 +302,7 @@ FROM events WHERE user_id = 7
 def q_mvcc_live_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keys whose latest version is live (kv lib.rs:449-465)."""
     ev = _events_versioned(spark, sf_dir)
-    return mvcc.live_keys(ev, ["user_id"], ts="ts", tiebreak=["event_id"])
+    return mvcc.live_keys(ev, ["user_id"], tiebreak=["event_id"])
 
 
 O_MVCC_LIVE_KEYS = """
@@ -317,7 +317,7 @@ def q_mvcc_last_updated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Max commit timestamp (kv lib.rs:435-443). Emitted at µs granularity:
     the oracle engine truncates the parquet ns timestamps to µs, so raw-ns
     output would hash-mismatch on sub-µs digits."""
-    out = mvcc.last_updated(load_table(spark, sf_dir, "events"), ts="ts")
+    out = mvcc.last_updated(load_table(spark, sf_dir, "events"))
     return out.select(F.expr("last_updated div 1000").alias("last_updated"))
 
 
@@ -330,7 +330,7 @@ def q_mvcc_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-appends to resurrect the key."""
     ev = _events_versioned(spark, sf_dir)
     out = mvcc.restore_candidates(
-        ev, ["user_id"], ts="ts", tiebreak=["event_id"]
+        ev, ["user_id"], tiebreak=["event_id"]
     )
     return out.select(*_EV_COLS)
 
@@ -1090,7 +1090,7 @@ O_DEDUP_CLUSTERS = _o_dedup_clusters(24)
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from assemblagedb_spark.operators.dedup import simhash_fingerprints
 
-    return simhash_fingerprints(load_table(spark, sf_dir, "documents"), bits=32)
+    return simhash_fingerprints(load_table(spark, sf_dir, "documents"))
 
 
 O_DEDUP_SIMHASH = f"""
@@ -1147,7 +1147,7 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    return cosine_topk_arrow(emb, queries, k=10).select(
+    return cosine_topk_arrow(emb, queries).select(
         "query_id", "neighbor_id", F.col("rank").cast("long")
     )
 
@@ -2104,7 +2104,7 @@ def q_display_class(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id") % 5 >= 3, (F.col("doc_id") * 2 + 1) % n_docs
         ).alias("child_id"),
     )
-    classes = display_class(nodes, max_iter=8)
+    classes = display_class(nodes)
     child_class = classes.select(
         F.col("node_id").alias("child_id"),
         F.col("display_class").alias("child_class"),
@@ -2201,7 +2201,7 @@ def q_reindex_parents(spark: SparkSession, sf_dir: str) -> DataFrame:
     affected = (
         d.join(F.broadcast(changed), "grp").groupBy("grp").agg(chain.alias("text"))
     )
-    return block_grams(affected, id_col="grp", text_col="text").select(
+    return block_grams(affected, id_col="grp").select(
         F.col("node_id").cast("long"), "gram", F.col("occurrences").cast("long")
     )
 
@@ -2660,8 +2660,8 @@ def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
-    fp = simhash_fingerprints(docs, bits=32).localCheckpoint(eager=False)
-    cand = simhash_band_candidates(fp, bits=32, bands=_SIMHASH_BANDS)
+    fp = simhash_fingerprints(docs).localCheckpoint(eager=False)
+    cand = simhash_band_candidates(fp, bands=_SIMHASH_BANDS)
     return simhash_near_pairs(
         fp, max_hamming=_SIMHASH_MAX_HAMMING, candidates=cand
     ).select("id_a", "id_b", F.col("hamming").cast("long"))
@@ -2918,7 +2918,7 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
     return lsh_bucketed_topk(
-        emb, queries, k=10, bits=_LSH_ANN_BITS, bands=_LSH_ANN_BANDS,
+        emb, queries, bits=_LSH_ANN_BITS, bands=_LSH_ANN_BANDS,
         corpus_bands=_ann_corpus_bands(spark, sf_dir),
     ).select("query_id", "neighbor_id", F.col("rank").cast("long"))
 
@@ -2966,7 +2966,7 @@ def q_mvcc_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     version rows exist and how many the latest-only rewrite reclaims (all
     but one for live keys, all for tombstoned keys)."""
     ev = _events_versioned(spark, sf_dir)
-    live = mvcc.current(ev, ["user_id"], ts="ts", tiebreak=["event_id"]).select(
+    live = mvcc.current(ev, ["user_id"], tiebreak=["event_id"]).select(
         "user_id", F.lit(1).alias("kept")
     )
     per_key = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_versions"))
@@ -3624,7 +3624,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
     return ivf_topk(
-        emb, queries, k=10, nlist=_IVF_NLIST, nprobe=_IVF_NPROBE,
+        emb, queries, nlist=_IVF_NLIST, nprobe=_IVF_NPROBE,
         corpus_assign=_ivf_corpus_assign(spark, sf_dir),
     ).select("query_id", "neighbor_id", F.col("rank").cast("long"))
 
@@ -3713,9 +3713,9 @@ def q_sample_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
     unlike df.sample()'s per-partition RNG."""
     from assemblagedb_spark.operators.sampling import hash_sample
 
-    return hash_sample(
-        load_table(spark, sf_dir, "documents"), rate_permille=100
-    ).select("doc_id", "source", "lang")
+    return hash_sample(load_table(spark, sf_dir, "documents")).select(
+        "doc_id", "source", "lang"
+    )
 
 
 def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4206,7 +4206,7 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-lexicographic tf-idf ordering, one tokenize pass."""
     from assemblagedb_spark.operators.textstats import tfidf_top_terms
 
-    return tfidf_top_terms(load_table(spark, sf_dir, "documents"), k=3)
+    return tfidf_top_terms(load_table(spark, sf_dir, "documents"))
 
 
 O_TEXT_TFIDF = f"""
@@ -4650,7 +4650,7 @@ def q_mvcc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events_versioned(spark, sf_dir)
     return mvcc.snapshot_diff(
         ev, SNAPSHOT_NS, _SNAPSHOT2_NS, ["user_id"],
-        ts="ts", tiebreak=["event_id"],
+        tiebreak=["event_id"],
     ).select(
         "user_id", "change",
         F.expr("old_ts div 1000").alias("old_ts"),
@@ -4722,7 +4722,7 @@ def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = _trained_kmeans(spark, sf_dir, _IVT_K, 2)
     queries = emb.filter(F.col("vec_id") % 50 == 0)
     return ivf_topk(
-        emb, queries, k=10, nprobe=_IVT_PROBE, centroids=state
+        emb, queries, nprobe=_IVT_PROBE, centroids=state
     ).select("query_id", "neighbor_id", F.col("rank").cast("long"))
 
 
@@ -5514,7 +5514,7 @@ def q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    return weighted_sample(docs, F.col("n_chars") * 4, seed=4)
+    return weighted_sample(docs, F.col("n_chars") * 4)
 
 
 def _o_sample_weighted() -> str:

@@ -18,8 +18,6 @@ from pyspark.sql import DataFrame, functions as F
 def chunk_documents(
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     chunk_tokens: int = 64,
     overlap: int = 8,
 ) -> DataFrame:
@@ -35,9 +33,7 @@ def chunk_documents(
     if not 0 <= overlap < chunk_tokens:
         raise ValueError("require 0 <= overlap < chunk_tokens")
     step = chunk_tokens - overlap
-    toks_sql = (
-        f"filter(split(trim(coalesce({text_col}, '')), ' +'), t -> t <> '')"
-    )
+    toks_sql = "filter(split(trim(coalesce(text, '')), ' +'), t -> t <> '')"
     chunks = (
         f"transform(array({toks_sql}), toks -> "
         f"transform(sequence(0, size(toks) - 1, {step}), s -> named_struct("
@@ -48,7 +44,7 @@ def chunk_documents(
     return (
         docs.filter(F.expr(f"size({toks_sql})") > 0)
         .select(
-            F.col(id_col).alias("doc_id"),
+            "doc_id",
             F.posexplode(F.expr(chunks)).alias("chunk_idx", "c"),
         )
         .select(

@@ -12,11 +12,7 @@ Scale shape (100 TB corpus, benchmark sets are tiny by construction):
   with NO shuffle of the training table;
 - training grams are generated inline with Catalyst higher-order functions
   (split → slice → array_join) inside whole-stage codegen, then exploded;
-  nothing is ever materialized per-gram except the matched survivors;
-- with ``hashed=True`` grams travel as xxhash64 int64s instead of strings
-  (8 bytes vs ~100), trading exact equality for a 2^-64 collision rate —
-  the right default at petabyte scale, off here so the DuckDB oracle can
-  replay the join exactly.
+  nothing is ever materialized per-gram except the matched survivors.
 """
 
 from __future__ import annotations
@@ -53,44 +49,25 @@ def word_ngrams(words_col: str, n: int) -> F.Column:
     )
 
 
-def exploded_ngrams(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int,
-) -> DataFrame:
+def exploded_ngrams(docs: DataFrame, *, n: int) -> DataFrame:
     """(doc_id, gram) — one row per word n-gram INSTANCE. Tokenizes in its
     own projection so the split evaluates once per row."""
     return (
-        docs.select(F.col(id_col).alias("doc_id"), tokens_expr(text_col).alias("__w"))
+        docs.select("doc_id", tokens_expr("text").alias("__w"))
         .select("doc_id", F.explode(word_ngrams("__w", n)).alias("gram"))
     )
 
 
-def gram_set(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 13,
-    hashed: bool = False,
-) -> DataFrame:
+def gram_set(docs: DataFrame, *, n: int = 13) -> DataFrame:
     """Distinct (doc_id, gram) pairs for every word ``n``-gram."""
-    g = exploded_ngrams(docs, id_col=id_col, text_col=text_col, n=n).distinct()
-    if hashed:
-        g = g.select("doc_id", F.xxhash64("gram").alias("gram"))
-    return g
+    return exploded_ngrams(docs, n=n).distinct()
 
 
 def decontaminate(
     train: DataFrame,
     benchmark: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 13,
-    hashed: bool = False,
 ) -> DataFrame:
     """(doc_id, n_shared_grams) for every TRAINING document sharing at least
     one word ``n``-gram with the benchmark set.
@@ -103,9 +80,9 @@ def decontaminate(
     relation is never shuffled; the only aggregation is over matched rows
     (a vanishingly small fraction of the corpus).
     """
-    t = gram_set(train, id_col=id_col, text_col=text_col, n=n, hashed=hashed)
+    t = gram_set(train, n=n)
     b = (
-        gram_set(benchmark, id_col=id_col, text_col=text_col, n=n, hashed=hashed)
+        gram_set(benchmark, n=n)
         .select("gram")
         .distinct()
     )

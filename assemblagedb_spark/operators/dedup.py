@@ -21,8 +21,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from assemblagedb_spark.functions.core import MINHASH_PRIME, minhash_coeffs
-from assemblagedb_spark.operators.grams import grams_array
+from assemblagedb_spark.functions.core import (
+    MINHASH_PRIME,
+    minhash_coeffs,
+    spark_grams_array_expr,
+)
+
+SIMHASH_BITS = 32
+SIMHASH_SEED = 12345  # the gram hash mix32(g, SIMHASH_SEED)
+
 
 def _spread_for_fold(docs: DataFrame, key_col: str) -> DataFrame:
     """Spread a narrow scan before a CPU-heavy per-row fold: a corpus file
@@ -52,13 +59,13 @@ def normalized_text(text_col: str) -> F.Column:
     return F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
 
 
-def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """Exact dedup groups: (text_hash, keeper_id, n_copies), keeper = min id.
 
     One hash + one groupBy — the canonical first pass at any scale.
     """
     return (
-        docs.select(F.col(id_col).alias("doc_id"), F.md5(normalized_text(text_col)).alias("text_hash"))
+        docs.select("doc_id", F.md5(normalized_text("text")).alias("text_hash"))
         .groupBy("text_hash")
         .agg(
             F.min("doc_id").alias("keeper_id"),
@@ -75,10 +82,7 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
 def minhash_signatures(
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 16,
-    seed: int = 42,
 ) -> DataFrame:
     """(doc_id, sig ARRAY<BIGINT> of length k) — minhash over the distinct
     byte-4-gram shingle set, h_j(g) = (a_j*g + b_j) mod P.
@@ -87,7 +91,7 @@ def minhash_signatures(
     per-row array, each permutation is an array_min over a transform —
     no explode, no shuffle until the band grouping.
     """
-    coeffs = minhash_coeffs(k, seed)
+    coeffs = minhash_coeffs(k)
     arr_a = "array(" + ", ".join(str(a) for a, _ in coeffs) + ")"
     arr_b = "array(" + ", ".join(str(b) for _, b in coeffs) + ")"
     # Single fold over the shingle set: the (expensive) gram array is
@@ -97,7 +101,7 @@ def minhash_signatures(
     # overflow int64; for ASCII grams (always < P) the reduction is the
     # identity, so driver-data signatures are unchanged
     sig = F.expr(
-        f"aggregate(array_distinct({_grams_sql(text_col)}), "
+        f"aggregate(array_distinct({spark_grams_array_expr('text')}), "
         f"transform(sequence(1, {k}), i -> CAST({MINHASH_PRIME} AS BIGINT)), "
         f"(acc, g) -> zip_with(acc, sequence(0, {k - 1}), (m, i) -> "
         f"least(m, ((g % {MINHASH_PRIME}) * element_at({arr_a}, i + 1) "
@@ -113,14 +117,8 @@ def minhash_signatures(
     # NULL text has no shingle set: no signature row, never a candidate
     # (the SQL twin's gram CTE unnests nothing for it) — filtered BEFORE
     # the spread so dropped rows are never shuffled (round-8 advice item)
-    docs = _spread_for_fold(docs.filter(F.col(text_col).isNotNull()), id_col)
-    return docs.select(F.col(id_col).alias("doc_id"), sig.alias("sig"))
-
-
-def _grams_sql(text_col: str) -> str:
-    from assemblagedb_spark.functions.core import spark_grams_array_expr
-
-    return spark_grams_array_expr(text_col)
+    docs = _spread_for_fold(docs.filter(F.col("text").isNotNull()), "doc_id")
+    return docs.select("doc_id", sig.alias("sig"))
 
 
 def lsh_candidate_pairs(
@@ -199,13 +197,7 @@ def minhash_jaccard_estimate(signatures: DataFrame, pairs: DataFrame) -> DataFra
 # ---------------------------------------------------------------------------
 
 
-def ngram_overlap_pairs(
-    docs: DataFrame,
-    candidates: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def ngram_overlap_pairs(docs: DataFrame, candidates: DataFrame) -> DataFrame:
     """The shared exact-verification core of candidate-bounded jaccard
     and containment: ``(id_a, id_b, inter, n_a, n_b)`` — per candidate
     pair, the distinct-4-gram intersection size and both shingle-set
@@ -230,10 +222,10 @@ def ngram_overlap_pairs(
     # spread the scan before the gram derivation: a corpus file small in
     # bytes but large in gram expansion can land the whole stage in ONE
     # task; guarded so a large input never pays a raw-text shuffle
-    docs = _spread_for_fold(docs, id_col)
+    docs = _spread_for_fold(docs, "doc_id")
     gram_sets = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.array_distinct(grams_array(text_col)).alias("gs"),
+        "doc_id",
+        F.array_distinct(F.expr(spark_grams_array_expr("text"))).alias("gs"),
     )
     ga = gram_sets.select(
         F.col("doc_id").alias("id_a"), F.col("gs").alias("gs_a")
@@ -286,45 +278,19 @@ def containment_from_overlap(overlap: DataFrame) -> DataFrame:
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_jaccard: float = 0.5,
-    candidates: DataFrame | None = None,
-) -> DataFrame:
-    """Exact jaccard over distinct 4-gram shingle sets.
-
-    Without ``candidates`` this is an all-pairs postings join (harness scale
-    only). With candidates (from LSH) the intersection is computed ONLY for
-    those pairs — the candidate join sits BELOW the gram join: the pair
-    list joins each side's shingles on its own id, then the two sides
-    equi-join on gram. Work is Σ over candidate pairs of the pair's gram
-    overlap, never Σ over grams of df(gram)² — joining candidates after a
-    full postings self-join would still execute the quadratic join (an
-    optimizer cannot push a join below an aggregation), which is exactly
-    the all-pairs blowup the LSH stage exists to avoid. That ordering bug
-    is what made the sf0.1 verify gate crawl; this shape is the 100 TB
-    path.
-
-    ``candidates`` must be DISTINCT (id_a, id_b) pairs (LSH generators
-    here emit distinct pairs by construction): a duplicated candidate row
-    would double-count its gram matches rather than duplicate an output
-    row, silently inflating ``inter``.
+def ngram_jaccard_pairs(docs: DataFrame, *, min_jaccard: float = 0.5) -> DataFrame:
+    """Exact jaccard over distinct 4-gram shingle sets: an all-pairs
+    postings join (harness scale only). The 100 TB path verifies LSH
+    candidates instead: ``jaccard_from_overlap(ngram_overlap_pairs(docs,
+    candidates))``, which never runs the quadratic postings self-join.
     """
-    if candidates is not None:
-        overlap = ngram_overlap_pairs(
-            docs, candidates, id_col=id_col, text_col=text_col
-        )
-        return jaccard_from_overlap(overlap, min_jaccard=min_jaccard)
     # spread the scan before the shingle explode: a corpus file small in
     # bytes but large in gram expansion can land the whole explode in ONE
     # task; guarded so a large input never pays a raw-text shuffle
-    docs = _spread_for_fold(docs, id_col)
+    docs = _spread_for_fold(docs, "doc_id")
     shingles = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(grams_array(text_col))).alias("gram"),
+        "doc_id",
+        F.explode(F.array_distinct(F.expr(spark_grams_array_expr("text")))).alias("gram"),
     )
     sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("n"))
     a = shingles.select(F.col("doc_id").alias("id_a"), "gram")
@@ -350,18 +316,12 @@ def ngram_jaccard_pairs(
 # ---------------------------------------------------------------------------
 
 
-def simhash_fingerprints(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 32,
-    seed: int = 12345,
-) -> DataFrame:
+def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash BIGINT): bit i is set iff the sum over distinct
-    shingles g of sign(bit_i(h(g))) is positive, h(g) = mix32(g, seed).
+    shingles g of sign(bit_i(h(g))) is positive, h(g) = mix32(g,
+    SIMHASH_SEED).
 
-    h must fill all ``bits`` with decorrelated bits: the previous affine
+    h must fill all ``SIMHASH_BITS`` with decorrelated bits: the previous affine
     (a·g+b) mod (2^31−1) left bit 31 permanently zero (a dead band slice)
     and fed structured low bits; the avalanche mixer fixes both.
 
@@ -380,15 +340,16 @@ def simhash_fingerprints(
     # gram CTE unnests nothing for it; empty text '' keeps its 3
     # padding shingles in both engines) — filtered BEFORE the spread so
     # dropped rows are never shuffled, per _spread_for_fold's policy
-    docs = docs.filter(F.col(text_col).isNotNull())
+    docs = docs.filter(F.col("text").isNotNull())
     # spread the scan before the per-row gram/hash work (same guard as
     # ngram_overlap_pairs): a corpus file small in bytes parks the whole
     # CPU-bound projection in ONE task otherwise
-    docs = _spread_for_fold(docs, id_col)
+    docs = _spread_for_fold(docs, "doc_id")
     from assemblagedb_spark.functions.core import mix32_spark_text
 
-    h = mix32_spark_text("g", seed)
-    hashed = f"transform(array_distinct({_grams_sql(text_col)}), g -> ({h}))"
+    bits = SIMHASH_BITS
+    h = mix32_spark_text("g", SIMHASH_SEED)
+    hashed = f"transform(array_distinct({spark_grams_array_expr('text')}), g -> ({h}))"
     # Single fold: votes[i] = sum over shingles of ±1 by bit i of h(g);
     # simhash bit i = votes[i] > 0.
     votes = (
@@ -402,12 +363,10 @@ def simhash_fingerprints(
         f"(v, i) -> CASE WHEN v > 0 THEN shiftleft(CAST(1 AS BIGINT), i) ELSE CAST(0 AS BIGINT) END), "
         f"CAST(0 AS BIGINT), (acc, x) -> acc + x)"
     )
-    return docs.select(F.col(id_col).alias("doc_id"), F.expr(expr).alias("simhash"))
+    return docs.select("doc_id", F.expr(expr).alias("simhash"))
 
 
-def simhash_band_candidates(
-    fingerprints: DataFrame, *, bits: int = 32, bands: int = 4
-) -> DataFrame:
+def simhash_band_candidates(fingerprints: DataFrame, *, bands: int = 4) -> DataFrame:
     """Banded candidate pairs for simhash: split each fingerprint into
     ``bands`` contiguous bit-bands and bucket-join on any equal band.
 
@@ -415,15 +374,15 @@ def simhash_band_candidates(
     ``bands - 1`` differ in at most ``bands - 1`` bits, so at least one band
     is bit-identical — recall is exactly 1.0 for ``max_hamming <= bands - 1``
     (the Manku et al. WWW'07 construction). Candidate volume for random
-    pairs is ~``bands / 2^(bits/bands)`` of the cross join (4×8-bit bands:
+    pairs is ~``bands / 2^(SIMHASH_BITS/bands)`` of the cross join (4×8-bit bands:
     ~1.6%), and the join is a bucket equi-join — the 100 TB plan.
 
-    ``bits`` need not divide evenly: the fingerprint is partitioned into
+    ``SIMHASH_BITS`` need not divide evenly: the fingerprint is partitioned into
     contiguous bands whose widths differ by at most one bit (e.g. 32 bits /
     5 bands -> widths 7,7,6,6,6); the pigeonhole argument only needs a
     partition, not equal widths.
     """
-    base, extra = divmod(bits, bands)
+    base, extra = divmod(SIMHASH_BITS, bands)
     widths = [base + (1 if b < extra else 0) for b in range(bands)]
     offsets = [sum(widths[:b]) for b in range(bands)]
     banded = fingerprints.select(
@@ -499,7 +458,6 @@ def lsh_incremental_pairs(
     *,
     bands: int = 4,
     rows_per_band: int = 4,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """Incremental near-dup ingest: candidate (new_id, corpus_id) pairs
     between a NEW batch and the stored corpus band table, without touching
@@ -510,23 +468,9 @@ def lsh_incremental_pairs(
     batch explodes its own bands (tiny) and broadcast-joins them against
     the stored table — the corpus is scanned but never shuffled, and work
     is proportional to the batch, not the corpus. Feed the pairs to
-    ``minhash_jaccard_estimate`` / ``ngram_jaccard(candidates=...)`` to
-    verify, then to the components keeper to merge into clusters.
-
-    ``max_bucket`` mirrors :func:`lsh_candidate_pairs`: corpus buckets
-    larger than the cap are excluded before the join, bounding the
-    fan-out a single new document can trigger against a near-identical
-    mega-cluster (a steady-state pipeline would fold this count into the
-    stored band table instead of re-aggregating per batch).
+    ``minhash_jaccard_estimate`` / ``ngram_overlap_pairs`` to verify,
+    then to the components keeper to merge into clusters.
     """
-    if max_bucket is not None:
-        small = (
-            corpus_bands.groupBy("band", "band_sig")
-            .count()
-            .filter(F.col("count") <= max_bucket)
-            .select("band", "band_sig")
-        )
-        corpus_bands = corpus_bands.join(small, ["band", "band_sig"])
     nb = band_split(
         new_signatures, bands=bands, rows_per_band=rows_per_band
     ).select(F.col("doc_id").alias("new_id"), "band", "band_sig")
@@ -542,8 +486,6 @@ def lsh_incremental_pairs(
 def fingerprint_near_pairs(
     fingerprints: DataFrame,
     *,
-    id_col: str = "doc_id",
-    fp_col: str = "fingerprint",
     min_shared: int = 2,
     max_df: int = 50,
 ) -> DataFrame:
@@ -560,7 +502,7 @@ def fingerprint_near_pairs(
     then an equi-join on fingerprint with bucket sizes ≤ max_df.
     """
     fps = fingerprints.select(
-        F.col(id_col).alias("doc_id"), F.col(fp_col).alias("fp")
+        "doc_id", F.col("fingerprint").alias("fp")
     ).distinct()
     keep = (
         fps.groupBy("fp")

@@ -12,15 +12,10 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+DAY_NS = 86_400_000_000_000  # cohort_retention's day bucket
 
-def funnel_stages(
-    events: DataFrame,
-    stages: Sequence[str],
-    *,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+
+def funnel_stages(events: DataFrame, stages: Sequence[str]) -> DataFrame:
     """Ordered funnel: per user, the earliest time each stage was reached
     AFTER the previous stage (strict event-time order).
 
@@ -36,9 +31,9 @@ def funnel_stages(
     # so the pinned blocks are GC-reclaimed once the result is dropped
     # rather than accumulating in the CacheManager across calls
     ev = events.select(
-        F.col(user_col).alias("user_id"),
-        F.col(type_col).alias("etype"),
-        F.col(ts_col).cast("long").alias("ts"),
+        "user_id",
+        F.col("event_type").alias("etype"),
+        F.col("ts").cast("long").alias("ts"),
     ).localCheckpoint(eager=True)
 
     cur = (
@@ -61,23 +56,17 @@ def funnel_stages(
     return cur.withColumn("funnel_stage", stage_num.cast("long"))
 
 
-def cohort_retention(
-    events: DataFrame,
-    *,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    bucket_ns: int = 86_400_000_000_000,
-) -> DataFrame:
+def cohort_retention(events: DataFrame) -> DataFrame:
     """Cohort retention matrix: users grouped by their first-active day
     (cohort), counted per day-offset they return.
 
     Output: (cohort_day, day_offset, n_users) with day = floor(ts /
-    bucket_ns) and offset ≥ 0. Two groupBys (first-seen per user; distinct
+    DAY_NS) and offset ≥ 0. Two groupBys (first-seen per user; distinct
     user-day activity) + one user-keyed join.
     """
     days = events.select(
-        F.col(user_col).alias("user_id"),
-        F.expr(f"CAST({ts_col} AS BIGINT) div {bucket_ns}").alias("day"),
+        "user_id",
+        F.expr(f"CAST(ts AS BIGINT) div {DAY_NS}").alias("day"),
     )
     active = days.distinct()
     first = active.groupBy("user_id").agg(F.min("day").alias("cohort_day"))

@@ -20,13 +20,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
-from assemblagedb_spark.functions.core import spark_grams_array_expr
-
-
-def grams_array(text_col: str) -> Column:
-    """ARRAY<BIGINT> gram column for a string column (JVM-side)."""
-    return F.expr(spark_grams_array_expr(text_col))
-
 
 def gram_multiset_arrow(text_col: str) -> Column:
     """STRUCT<grams ARRAY<BIGINT>, counts ARRAY<INT>> of per-text distinct
@@ -69,11 +62,7 @@ def gram_multiset_arrow(text_col: str) -> Column:
     return _gram_multiset(text_col)
 
 
-def block_grams(
-    blocks: DataFrame,
-    id_col: str = "node_id",
-    text_col: str = "text",
-) -> DataFrame:
+def block_grams(blocks: DataFrame, id_col: str = "node_id") -> DataFrame:
     """(block_id, text) → inverted index rows (node_id, gram, occurrences).
 
     One row per distinct gram per block; ``occurrences`` is the multiset
@@ -93,7 +82,7 @@ def block_grams(
     return (
         blocks.select(
             F.col(id_col).alias("node_id"),
-            gram_multiset_arrow(text_col).alias("m"),
+            gram_multiset_arrow("text").alias("m"),
         )
         .select(
             "node_id", F.explode(F.arrays_zip("m.grams", "m.counts")).alias("z")

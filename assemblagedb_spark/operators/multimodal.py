@@ -339,7 +339,7 @@ def _pixel_codec(codec: str):
     if codec == "jpeg":
         from assemblagedb_spark.functions.jpeg import jpeg_decode, jpeg_encode
 
-        return jpeg_decode, lambda arr: jpeg_encode(arr, quality=50), "image/jpeg"
+        return jpeg_decode, jpeg_encode, "image/jpeg"
     raise ValueError(f"unknown pixel codec {codec!r}")
 
 
@@ -437,7 +437,7 @@ def synthetic_jpeg_media(docs: DataFrame) -> DataFrame:
             mid + 13 * np.arange(bw)[None, :] + 29 * np.arange(bh)[:, None]
         ) % 256
         enc = jpeg_encode_progressive if mid % 2 else jpeg_encode
-        return enc(np.kron(vals, ones).astype(np.uint8), quality=50)
+        return enc(np.kron(vals, ones).astype(np.uint8))
 
     return _build_media(docs, payload_of)
 

@@ -11,9 +11,11 @@ local and no exchange is needed. Snapshot reads (``as_of``) push the
 ``ts <= snapshot`` predicate into the parquet scan (partition-prune on a
 date-derived partition column in a real deployment).
 
-All functions are generic over (key columns, ts column, tombstone column) so
-they serve both the engine's own ``nodes``/``edges`` tables and arbitrary
-user tables (the harness's ``events`` stream).
+Every function reads the commit timestamp from ``ts`` and the tombstone
+flag from ``is_removed``, and is generic over the key columns (and an
+optional version tiebreak), so it serves both the engine's own
+``nodes``/``edges`` tables and arbitrary user tables (the harness's
+``events`` stream).
 """
 
 from __future__ import annotations
@@ -23,20 +25,19 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def _version_window(keys: Sequence[str], ts: str, tiebreak: Sequence[str] = ()):
-    order = [F.desc(ts)] + [F.desc(c) for c in tiebreak]
+def _version_window(keys: Sequence[str], tiebreak: Sequence[str] = ()):
+    order = [F.desc("ts")] + [F.desc(c) for c in tiebreak]
     return Window.partitionBy(*keys).orderBy(*order)
 
 
 def latest(
     df: DataFrame,
     keys: Sequence[str],
-    ts: str = "ts",
     tiebreak: Sequence[str] = (),
 ) -> DataFrame:
     """Latest version per key, tombstones included (``get_unremoved`` path,
     kv lib.rs:355-363 reads this then checks the flag)."""
-    w = _version_window(keys, ts, tiebreak)
+    w = _version_window(keys, tiebreak)
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -47,61 +48,52 @@ def latest(
 def current(
     df: DataFrame,
     keys: Sequence[str],
-    ts: str = "ts",
-    removed: str = "is_removed",
     tiebreak: Sequence[str] = (),
 ) -> DataFrame:
     """Live current state: latest version per key, then drop tombstoned keys
     (``Snapshot::get``, kv lib.rs:337-344 — a key whose latest version is
     removed reads as absent)."""
-    return latest(df, keys, ts, tiebreak).filter(~F.col(removed))
+    return latest(df, keys, tiebreak).filter(~F.col("is_removed"))
 
 
 def as_of(
     df: DataFrame,
     snapshot_ts,
     keys: Sequence[str],
-    ts: str = "ts",
-    removed: str = "is_removed",
     tiebreak: Sequence[str] = (),
 ) -> DataFrame:
     """Snapshot-isolation read: only versions with ts <= snapshot are visible
     (kv lib.rs:585-591, 690-703). The filter is applied *before* the rank so
     it pushes into the scan."""
-    return current(df.filter(F.col(ts) <= F.lit(snapshot_ts)), keys, ts, removed, tiebreak)
+    return current(df.filter(F.col("ts") <= F.lit(snapshot_ts)), keys, tiebreak)
 
 
 def versions(
     df: DataFrame,
     keys: Sequence[str],
-    ts: str = "ts",
     tiebreak: Sequence[str] = (),
 ) -> DataFrame:
     """Full ordered version history (kv lib.rs:411-431)."""
-    return df.orderBy(*[F.col(k) for k in keys], F.asc(ts), *[F.asc(c) for c in tiebreak])
+    return df.orderBy(*[F.col(k) for k in keys], F.asc("ts"), *[F.asc(c) for c in tiebreak])
 
 
 def live_keys(
     df: DataFrame,
     keys: Sequence[str],
-    ts: str = "ts",
-    removed: str = "is_removed",
     tiebreak: Sequence[str] = (),
 ) -> DataFrame:
     """All keys whose latest version is not a tombstone (kv lib.rs:449-465)."""
-    return current(df, keys, ts, removed, tiebreak).select(*keys)
+    return current(df, keys, tiebreak).select(*keys)
 
 
-def last_updated(df: DataFrame, ts: str = "ts") -> DataFrame:
+def last_updated(df: DataFrame) -> DataFrame:
     """Max commit timestamp (kv lib.rs:435-443)."""
-    return df.agg(F.max(ts).alias("last_updated"))
+    return df.agg(F.max("ts").alias("last_updated"))
 
 
 def restore_candidates(
     df: DataFrame,
     keys: Sequence[str],
-    ts: str = "ts",
-    removed: str = "is_removed",
     tiebreak: Sequence[str] = (),
 ) -> DataFrame:
     """Un-tombstone payloads (``restore``, assemblage_db/src/core.rs:552-594,
@@ -114,13 +106,13 @@ def restore_candidates(
     broadcast semi-join when small (the common case: restores touch few
     keys).
     """
-    w = _version_window(keys, ts, tiebreak)
+    w = _version_window(keys, tiebreak)
     ranked = df.withColumn("__rn", F.row_number().over(w))
     trashed = (
-        ranked.filter((F.col("__rn") == 1) & F.col(removed)).select(*keys)
+        ranked.filter((F.col("__rn") == 1) & F.col("is_removed")).select(*keys)
     )
     live = (
-        df.filter(~F.col(removed))
+        df.filter(~F.col("is_removed"))
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
@@ -133,8 +125,6 @@ def snapshot_diff(
     t1,
     t2,
     keys: Sequence[str],
-    ts: str = "ts",
-    removed: str = "is_removed",
     tiebreak: Sequence[str] = (),
 ) -> DataFrame:
     """Visible-state delta between two snapshots (the replication question
@@ -147,12 +137,12 @@ def snapshot_diff(
     version is identical at both snapshots are excluded. Both sides are
     one rank-per-key pass; the comparison is a single full-outer key join.
     """
-    a = as_of(df, t1, keys, ts, removed, tiebreak).select(
-        *keys, F.col(ts).alias("__ts_a"),
+    a = as_of(df, t1, keys, tiebreak).select(
+        *keys, F.col("ts").alias("__ts_a"),
         *[F.col(c).alias(f"__tb_a_{c}") for c in tiebreak],
     )
-    b = as_of(df, t2, keys, ts, removed, tiebreak).select(
-        *keys, F.col(ts).alias("__ts_b"),
+    b = as_of(df, t2, keys, tiebreak).select(
+        *keys, F.col("ts").alias("__ts_b"),
         *[F.col(c).alias(f"__tb_b_{c}") for c in tiebreak],
     )
     joined = a.join(b, list(keys), "full_outer")

@@ -29,6 +29,9 @@ from pyspark.sql import DataFrame, functions as F
 from assemblagedb_spark.operators.search import OVERLAP_MIN_SCORE, overlap_columns
 
 _SCAN_CHUNK = 8  # rows per work unit; chunking amortizes Arrow round-trips
+# the sparse kernel's broadcast budget in expanded (gram, copy) elements
+# (~8 bytes each); store_overlaps routes to a distributed plan beyond it
+MAX_SPARSE_NNZ = 64_000_000
 
 
 def _mirror(out: DataFrame, *, distinct: bool) -> DataFrame:
@@ -109,10 +112,7 @@ def overlap_pairs(
 
 
 def overlap_pairs_sparse(
-    grams: DataFrame,
-    *,
-    max_sparse_nnz: int = 64_000_000,
-    changed: DataFrame | None = None,
+    grams: DataFrame, *, changed: DataFrame | None = None
 ) -> DataFrame | None:
     """Broadcast-CSR strategy for the symmetric overlap self-join: the
     postings are collected and broadcast like the build side of a
@@ -133,7 +133,7 @@ def overlap_pairs_sparse(
     gather). On the closed-vocabulary gate corpus it also beats a dense
     count-matrix L1 kernel at sf0.1 and sf1-class (SCALING_R10.md).
 
-    Returns ``None`` when the expanded postings exceed ``max_sparse_nnz``
+    Returns ``None`` when the expanded postings exceed ``MAX_SPARSE_NNZ``
     (broadcast budget ~8 bytes/element); callers fall back to the
     distributed plans. Emits both directions, u8-floored scores;
     ``changed`` (column ``node_id``) restricts the scanned rows — the
@@ -147,7 +147,7 @@ def overlap_pairs_sparse(
     expanded = grams.agg(
         F.sum("occurrences").cast("long").alias("n")
     ).collect()[0]["n"]
-    if expanded is not None and expanded > max_sparse_nnz:
+    if expanded is not None and expanded > MAX_SPARSE_NNZ:
         return None
     spark = grams.sparkSession
     id_type = dict(grams.dtypes)["node_id"]
@@ -163,7 +163,7 @@ def overlap_pairs_sparse(
     occ = pdf["occurrences"].to_numpy()
     # expand to (block, element) incidence: element = (gram, copy) —
     # vectorized (cumsum offsets, no per-row arange): the expansion runs
-    # on the driver for up to max_sparse_nnz elements
+    # on the driver for up to MAX_SPARSE_NNZ elements
     rep = np.repeat(np.arange(len(pdf)), occ)
     starts = np.cumsum(occ) - occ
     copy = np.arange(rep.size, dtype=np.int64) - starts[rep]  # 0-based
@@ -259,12 +259,7 @@ def overlap_pairs_sparse(
     return idx.repartition(par).mapInPandas(kernel, out_schema)
 
 
-def overlap_pairs_prefix(
-    grams: DataFrame,
-    counts: DataFrame | None = None,
-    *,
-    both_directions: bool = True,
-) -> DataFrame:
+def overlap_pairs_prefix(grams: DataFrame, counts: DataFrame | None = None) -> DataFrame:
     """EXACT symmetric overlaps via prefix-filtered candidates — the plan
     for corpora whose postings are too large for any broadcast and whose
     Zipf head makes the naive postings self-join ~B² (every pair shares
@@ -323,6 +318,13 @@ def overlap_pairs_prefix(
     maintenance through ``changed`` (incremental) or the candidate-
     bounded LSH family instead.
     """
+    return _mirror(_prefix_half(grams, counts), distinct=False)
+
+
+def _prefix_half(grams: DataFrame, counts: DataFrame | None) -> DataFrame:
+    """:func:`overlap_pairs_prefix` before its mirror pass: each passing
+    pair in one orientation. Plan inspection reads this frame (the
+    mirror's union hides the candidate pipeline)."""
     if counts is None:
         counts = grams.groupBy("node_id").agg(
             F.sum("occurrences").cast("long").alias("gram_count")
@@ -458,12 +460,9 @@ def overlap_pairs_prefix(
             ),
         )
     )
-    out = overlap_columns(scored).filter(F.col("score") > OVERLAP_MIN_SCORE).select(
+    return overlap_columns(scored).filter(F.col("score") > OVERLAP_MIN_SCORE).select(
         "src_id", "dst_id", "a", "b", "intersection", "score"
     )
-    if both_directions:
-        out = _mirror(out, distinct=False)
-    return out
 
 
 def store_overlaps(
@@ -472,8 +471,6 @@ def store_overlaps(
     *,
     changed: DataFrame | None = None,
     excluded_pairs: DataFrame | None = None,
-    max_sparse_nnz: int = 64_000_000,
-    dispatch_out: dict | None = None,
 ) -> DataFrame:
     """THE front door for materialized overlaps (round-8 verdict #3): one
     entry with the reference's exact semantics (score > 0.5, reverse
@@ -484,7 +481,7 @@ def store_overlaps(
 
     - ``sparse`` — the broadcast-CSR bincount kernel
       (:func:`overlap_pairs_sparse`), whenever the expanded postings fit
-      ``max_sparse_nnz``: the single-machine-index regime, closed or open
+      ``MAX_SPARSE_NNZ``: the single-machine-index regime, closed or open
       vocabulary — the round-8 50k-doc open corpus, a structural DNF for
       the exact postings JOIN, computes here in seconds because the same
       pair-sharing mass is an integer gather instead of a shuffle.
@@ -503,9 +500,6 @@ def store_overlaps(
       given and the broadcast does not fit: only changed-block postings
       probe the index.
 
-    ``dispatch_out`` (optional dict) receives ``{"route": <name>}`` —
-    the branch-vacuity hook (tests pin that the budget moves the route).
-
     ``excluded_pairs`` is applied HERE, after the chosen kernel, never
     inside it: the kernels differ in which orientation they compute first
     (the sparse kernel emits both directions, the join plans mirror a
@@ -514,20 +508,15 @@ def store_overlaps(
     contract forbids that. Post-kernel, exclusion removes exactly the
     listed (src, dst) orientations on every route.
     """
-    out = overlap_pairs_sparse(grams, max_sparse_nnz=max_sparse_nnz, changed=changed)
-    route = "sparse"
+    out = overlap_pairs_sparse(grams, changed=changed)
     if out is None and changed is None:
-        route = "prefix"
         out = overlap_pairs_prefix(grams, counts)
     elif out is None:
-        route = "sparse-incremental"
         if counts is None:
             counts = grams.groupBy("node_id").agg(
                 F.sum("occurrences").cast("long").alias("gram_count")
             )
         out = overlap_pairs(grams, counts, changed=changed)
-    if dispatch_out is not None:
-        dispatch_out["route"] = route
     if excluded_pairs is not None:
         out = out.join(excluded_pairs, ["src_id", "dst_id"], "left_anti")
     return out

@@ -33,12 +33,7 @@ IP_TOKEN = "<IP>"
 NUMBER_TOKEN = "<NUMBER>"
 
 
-def pii_scrub(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def pii_scrub(docs: DataFrame) -> DataFrame:
     """(doc_id, n_emails, n_ips, n_digit_runs, clean_text).
 
     Counts are detections in the ORIGINAL text; ``clean_text`` has each
@@ -47,7 +42,7 @@ def pii_scrub(
     text propagates: NULL counts and NULL clean_text (the SQL twin's
     regexp functions over NULL), not zeros-for-missing.
     """
-    txt = F.col(text_col)
+    txt = F.col("text")
     n_email = F.size(F.regexp_extract_all(txt, F.lit(EMAIL_RE), F.lit(0)))
     after_email = F.regexp_replace(txt, EMAIL_RE, EMAIL_TOKEN)
     # IP/digit counts are measured on the email-scrubbed text (an email's
@@ -55,7 +50,7 @@ def pii_scrub(
     # replacement chain, replayable in SQL.
     return (
         docs.select(
-            F.col(id_col).alias("doc_id"),
+            "doc_id",
             n_email.cast("long").alias("n_emails"),
             after_email.alias("_t1"),
         )

@@ -21,7 +21,7 @@ one scan of the (vec_id, subspace, code) table against a broadcast
 distance table with a (query, vec) partial-sum aggregate, and IVFADC
 (:func:`ivfpq_adc_topk_residual`) restricts that scan to the probed
 cells' residual codes. All arithmetic runs on the quantized
-integer grid (floor(v * scale)), so codes and ADC scores are bit-identical
+integer grid (floor(v * QUANT_SCALE)), so codes and ADC scores are bit-identical
 on any engine/partitioning — the same oracle-parity discipline as
 kmeans_train (vectors.py).
 """
@@ -29,6 +29,8 @@ kmeans_train (vectors.py).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from assemblagedb_spark.operators.vectors import QUANT_SCALE
 
 
 def _qv_body(scale: int | None) -> str:
@@ -84,25 +86,18 @@ def _codebook_literal(codebook: DataFrame) -> dict[int, list[list[int]]]:
 
 
 def _adc_distance_table(
-    codebook: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str,
-    vec_col: str,
-    m: int,
-    sub_dim: int,
-    scale: int,
+    codebook: DataFrame, queries: DataFrame, *, m: int, sub_dim: int
 ) -> DataFrame:
     """(query_id, subspace, code, d): each query's integer squared distance
     to every subspace centroid — the |Q| × m × k ADC lookup table, the
     broadcast side of every PQ serving join."""
-    qsub = queries.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("query_id"),
+    qsub = queries.filter(F.col("embedding").isNotNull()).select(
+        F.col("vec_id").alias("query_id"),
         F.posexplode(
             F.expr(
                 f"transform(sequence(0, {m - 1}), s -> "
-                f"transform(slice({vec_col}, s * {sub_dim} + 1, {sub_dim}), "
-                f"v -> {_qv_body(scale)}))"
+                f"transform(slice(embedding, s * {sub_dim} + 1, {sub_dim}), "
+                f"v -> {_qv_body(QUANT_SCALE)}))"
             )
         ).alias("subspace", "qvec"),
     ).withColumn("subspace", F.col("subspace").cast("long"))
@@ -140,11 +135,8 @@ def pq_adc_topk(
     queries: DataFrame,
     *,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     m: int = 8,
     sub_dim: int = 8,
-    scale: int | None = 1000,
 ) -> DataFrame:
     """Asymmetric-distance top-k: per query, distances to each subspace
     centroid are computed once (|Q| × m × k rows, broadcast); each corpus
@@ -154,10 +146,7 @@ def pq_adc_topk(
     self excluded, ties broken by ascending neighbor id. The scan of the
     code table is the only big input; scoring shuffles (query, vec) partial
     sums, never raw vectors."""
-    dtable = _adc_distance_table(
-        codebook, queries, id_col=id_col, vec_col=vec_col,
-        m=m, sub_dim=sub_dim, scale=scale,
-    )
+    dtable = _adc_distance_table(codebook, queries, m=m, sub_dim=sub_dim)
     scored = (
         codes.join(F.broadcast(dtable), ["subspace", "code"])
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -221,9 +210,8 @@ def pq_encode_arrow(
     *,
     m: int = 8,
     sub_dim: int = 8,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scale: int | None = 1000,
+    scale: int | None = QUANT_SCALE,
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Encode every vector as ``m`` codes: (vec_id, subspace, code).
@@ -242,7 +230,7 @@ def pq_encode_arrow(
     import numpy as np
     import pandas as pd
 
-    id_type = embeddings.schema[id_col].dataType.simpleString()
+    id_type = embeddings.schema["vec_id"].dataType.simpleString()
     carry_schema = "".join(
         f", {c} {dict(embeddings.dtypes)[c]}" for c in carry_cols
     )
@@ -276,7 +264,7 @@ def pq_encode_arrow(
             yield pd.DataFrame(out)
 
     return embeddings.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("vec_id"),
+        "vec_id",
         F.col(vec_col).alias("__vec"),
         *[F.col(c) for c in carry_cols],
     ).mapInPandas(kernel, out_schema)
@@ -306,13 +294,9 @@ def residual_vectors(
     embeddings: DataFrame,
     assign: DataFrame,
     coarse: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 1000,
 ) -> DataFrame:
     """(vec_id, cell, rvec): each vector's integer residual against its
-    coarse cell centroid — rvec = floor(v·scale) − cvec[cell], the
+    coarse cell centroid — rvec = floor(v·QUANT_SCALE) − cvec[cell], the
     quantity IVFADC quantizes instead of the raw vector (Jégou et al.
     TPAMI'11 §V: PQ codebooks trained on residuals capture the
     within-cell geometry the coarse quantizer already removed).
@@ -323,11 +307,9 @@ def residual_vectors(
     residual grid replays in any engine. One corpus scan; both joins
     broadcast (assign is corpus-sized but 2 columns — callers that
     already carry the cell on the row pass it through instead)."""
-    qvec = F.expr(
-        f"transform({vec_col}, v -> {_qv_body(scale)})"
-    )
+    qvec = F.expr(f"transform(embedding, v -> {_qv_body(QUANT_SCALE)})")
     return (
-        embeddings.select(F.col(id_col).alias("vec_id"), qvec.alias("qvec"))
+        embeddings.select("vec_id", qvec.alias("qvec"))
         .join(assign, "vec_id")
         .join(F.broadcast(coarse), "cell")
         .select(
@@ -342,19 +324,15 @@ def query_residuals(
     queries: DataFrame,
     probes: DataFrame,
     coarse: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 1000,
 ) -> DataFrame:
     """(query_id, cell, rvec): one residual row per (query, PROBED cell)
     — the query side of residual IVFADC, where the distance table is
     per probed cell (the query's residual differs in every cell it
     probes, unlike the raw-vector layout's single table).
     |Q| × nprobe rows — broadcast-sized by construction."""
-    qvec = F.expr(f"transform({vec_col}, v -> {_qv_body(scale)})")
+    qvec = F.expr(f"transform(embedding, v -> {_qv_body(QUANT_SCALE)})")
     return (
-        queries.select(F.col(id_col).alias("query_id"), qvec.alias("qvec"))
+        queries.select(F.col("vec_id").alias("query_id"), qvec.alias("qvec"))
         .join(probes.withColumnRenamed("q_id", "query_id"), "query_id")
         .join(F.broadcast(coarse), "cell")
         .select(
@@ -425,9 +403,8 @@ def pq_train_arrow(
     sub_dim: int = 8,
     k: int = 8,
     iters: int = 2,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scale: int | None = 1000,
+    scale: int | None = QUANT_SCALE,
 ) -> DataFrame:
     """Train ``m`` independent subspace codebooks: subspace s covers
     components [s*sub_dim, (s+1)*sub_dim). Returns the per-subspace
@@ -450,7 +427,7 @@ def pq_train_arrow(
     spark = embeddings.sparkSession
     seed_rows = (
         embeddings.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("vec_id"), F.col(vec_col))
+        .select("vec_id", F.col(vec_col))
         .orderBy("vec_id").limit(k).collect()
     )
     if not seed_rows:
@@ -509,7 +486,7 @@ def pq_train_arrow(
         return kernel
 
     src = embeddings.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__vec")
+        "vec_id", F.col(vec_col).alias("__vec")
     )
     state_df = None
     for _ in range(iters):

@@ -26,12 +26,13 @@ NUMERIC = (T.LongType, T.IntegerType, T.ShortType, T.ByteType,
 # columns) vs branch count (each branch is a stage whose fixed overhead
 # lands on count()-style actions). 4 measured best on both paths.
 _DISTINCT_GROUP = 4
+CENTS = 100  # numeric extremes are floor(value * CENTS)
 
 
-def table_profile(df: DataFrame, *, scale: int = 100) -> DataFrame:
+def table_profile(df: DataFrame) -> DataFrame:
     """(col_name, n_rows, n_nulls, n_distinct, min_num, max_num, min_str,
     max_str): numeric/timestamp extremes as floor-scaled BIGINT (value *
-    scale for numerics, epoch microseconds for timestamps), string extremes
+    CENTS for numerics, epoch microseconds for timestamps), string extremes
     verbatim, NULL for the non-applicable pair."""
     reg_aggs: list[F.Column] = [F.count(F.lit(1)).alias("__n")]
     dist_aggs: list[F.Column] = []
@@ -41,7 +42,7 @@ def table_profile(df: DataFrame, *, scale: int = 100) -> DataFrame:
         reg_aggs.append(F.sum(c.isNull().cast("long")).alias(f"{name}__nulls"))
         dist_aggs.append(F.count_distinct(c).alias(f"{name}__dist"))
         if isinstance(f.dataType, NUMERIC):
-            num = F.floor(c.cast("double") * scale).cast("long")
+            num = F.floor(c.cast("double") * CENTS).cast("long")
             kind = "num"
         elif isinstance(f.dataType, T.TimestampType):
             num = F.unix_micros(c)

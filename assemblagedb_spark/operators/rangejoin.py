@@ -27,17 +27,14 @@ def range_pairs(
     ts: str,
     max_gap: int,
     id_col: str,
-    payload: tuple[str, ...] = (),
 ) -> DataFrame:
     """Ordered same-key pairs (a before b, a != b) with ``ts_b - ts_a <=
     max_gap``. Ordering is (ts, id) lexicographic so duplicate timestamps
-    pair deterministically. Returns (key, id_a, id_b, ts_a, ts_b, gap
-    [, payload_a..., payload_b...])."""
+    pair deterministically. Returns (key, id_a, id_b, ts_a, ts_b, gap)."""
     base = df.select(
         F.col(key).alias("k"),
         F.col(ts).alias("t"),
         F.col(id_col).alias("i"),
-        *[F.col(p).alias(f"p_{p}") for p in payload],
     )
     left = base.select(
         "*", F.explode(F.array(F.expr(f"t div {max_gap}"), F.expr(f"t div {max_gap} + 1"))).alias("bin")
@@ -46,12 +43,10 @@ def range_pairs(
     l = left.select(
         F.col("k"), F.col("bin"),
         F.col("t").alias("ts_a"), F.col("i").alias("id_a"),
-        *[F.col(f"p_{p}").alias(f"{p}_a") for p in payload],
     )
     r = right.select(
         F.col("k"), F.col("bin"),
         F.col("t").alias("ts_b"), F.col("i").alias("id_b"),
-        *[F.col(f"p_{p}").alias(f"{p}_b") for p in payload],
     )
     return (
         l.join(r, ["k", "bin"])
@@ -66,7 +61,5 @@ def range_pairs(
             F.col("k").alias(key),
             "id_a", "id_b", "ts_a", "ts_b",
             (F.col("ts_b") - F.col("ts_a")).alias("gap"),
-            *[F.col(f"{p}_a") for p in payload],
-            *[F.col(f"{p}_b") for p in payload],
         )
     )

@@ -22,8 +22,6 @@ def rollup_cascade(
     value: Column,
     *,
     bucket_ns: Sequence[tuple[str, int]],
-    group_cols: Sequence[str] = ("event_type",),
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Cascaded time-bucket aggregates: ``bucket_ns`` is a FINEST-FIRST
     list of (level_name, bucket_width_ns); each coarser level is computed
@@ -31,8 +29,9 @@ def rollup_cascade(
     Every coarser width must be a multiple of the finest width (the usual
     minute/hour/day ladder) so bucket starts nest exactly.
 
-    Output: (level, bucket_start, *group_cols, n, sum_value) — the union
-    of all levels; bucket_start is the epoch-ns start of the bucket.
+    Output: (level, bucket_start, event_type, n, sum_value) — the union
+    of all levels, grouped by ``event_type``; bucket_start is the epoch-ns
+    start of the bucket (of ``ts``).
     """
     if not bucket_ns:
         raise ValueError("bucket_ns must list at least the finest level")
@@ -45,9 +44,9 @@ def rollup_cascade(
     base = (
         events.withColumn(
             "bucket_start",
-            (F.col(ts_col).cast("long") - F.pmod(F.col(ts_col).cast("long"), F.lit(ns0))),
+            (F.col("ts").cast("long") - F.pmod(F.col("ts").cast("long"), F.lit(ns0))),
         )
-        .groupBy("bucket_start", *group_cols)
+        .groupBy("bucket_start", "event_type")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
             F.sum(value).cast("long").alias("sum_value"),
@@ -61,11 +60,11 @@ def rollup_cascade(
                 "bucket_start",
                 F.col("bucket_start") - F.pmod(F.col("bucket_start"), F.lit(ns)),
             )
-            .groupBy("bucket_start", *group_cols)
+            .groupBy("bucket_start", "event_type")
             .agg(
                 F.sum("n").cast("long").alias("n"),
                 F.sum("sum_value").cast("long").alias("sum_value"),
             )
         )
         out = out.unionByName(prev.withColumn("level", F.lit(name)))
-    return out.select("level", "bucket_start", *group_cols, "n", "sum_value")
+    return out.select("level", "bucket_start", "event_type", "n", "sum_value")

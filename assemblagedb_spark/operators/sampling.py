@@ -23,6 +23,13 @@ from assemblagedb_spark.functions.core import MINHASH_PRIME
 # (a, b) works, these are the repo-wide defaults so splits are stable
 SAMPLE_A = 2654435761
 SAMPLE_B = 97531
+BERNOULLI_PERMILLE = 100  # hash_sample keeps 10%
+MAX_REPEAT = 10  # repeat_to_mixture's cap on one row's repeats
+# per-operator hash seeds (sample_bucket's default seed 1 serves
+# hash_sample, stratified_sample and mixture_sample)
+FIXED_SIZE_SEED = 0
+REPEAT_SEED = 2
+WEIGHTED_SEED = 4
 
 
 def snap_weight(w: float) -> Fraction:
@@ -78,17 +85,11 @@ def bucket_sql(key_col: str, seed: int = 1) -> str:
     return f"((({key_col} * {SAMPLE_A} + {SAMPLE_B * seed}) % {MINHASH_PRIME}) % 1000)"
 
 
-def hash_sample(
-    df: DataFrame,
-    *,
-    key_col: str = "doc_id",
-    rate_permille: int = 100,
-    seed: int = 1,
-) -> DataFrame:
-    """Deterministic Bernoulli sample: keep rows whose key bucket falls
-    below ``rate_permille`` (100 = 10%). Same key + seed → same decision
-    on any cluster, any partitioning, any engine."""
-    return df.filter(sample_bucket(key_col, seed) < rate_permille)
+def hash_sample(df: DataFrame) -> DataFrame:
+    """Deterministic Bernoulli sample: keep rows whose ``doc_id`` bucket
+    falls below ``BERNOULLI_PERMILLE``. Same key → same decision on any
+    cluster, any partitioning, any engine."""
+    return df.filter(sample_bucket("doc_id") < BERNOULLI_PERMILLE)
 
 
 def stratified_sample(
@@ -97,16 +98,14 @@ def stratified_sample(
     strata_col: str,
     rates_permille: dict[str, int],
     key_col: str = "doc_id",
-    default_permille: int = 0,
-    seed: int = 1,
 ) -> DataFrame:
     """Per-stratum deterministic rates (e.g. downsample boilerplate-heavy
     sources, keep all rare ones): membership = bucket < rate(stratum).
-    Strata not listed get ``default_permille``."""
-    rate = F.lit(default_permille)
+    Strata not listed are dropped."""
+    rate = F.lit(0)
     for value, permille in sorted(rates_permille.items()):
         rate = F.when(F.col(strata_col) == value, F.lit(permille)).otherwise(rate)
-    return df.filter(sample_bucket(key_col, seed) < rate)
+    return df.filter(sample_bucket(key_col) < rate)
 
 
 def fixed_size_sample(
@@ -114,7 +113,6 @@ def fixed_size_sample(
     n: int,
     *,
     key_col: str,
-    seed: int = 0,
 ) -> DataFrame:
     """Deterministic fixed-SIZE sample: the ``n`` rows whose mixed key hash
     is lowest (ties impossible for distinct keys; key breaks any residual
@@ -125,12 +123,12 @@ def fixed_size_sample(
     depends on encounter order. ``orderBy(hash).limit(n)`` compiles to
     TakeOrderedAndProject — each partition keeps its local top-n and only
     n*partitions candidate rows reach the driver-side merge; no global
-    sort, no full shuffle. Same seed → same sample, any partitioning.
+    sort, no full shuffle. Same keys → same sample, any partitioning.
     """
     from assemblagedb_spark.functions.core import mix32_col
 
     return (
-        df.withColumn("__sk", mix32_col(F.col(key_col).cast("long"), seed))
+        df.withColumn("__sk", mix32_col(F.col(key_col).cast("long"), FIXED_SIZE_SEED))
         .orderBy(F.col("__sk").asc(), F.col(key_col).asc())
         .limit(n)
         .drop("__sk")
@@ -142,8 +140,6 @@ def mixture_sample(
     weights: dict[str, float],
     *,
     domain_col: str = "source",
-    key_col: str = "doc_id",
-    seed: int = 1,
 ) -> DataFrame:
     """Deterministic resampling to a target DOMAIN MIXTURE (DoReMi-style
     static mixing): given target proportions per domain, down-sample
@@ -173,7 +169,7 @@ def mixture_sample(
     if not permille:
         return df.filter(F.lit(False))
     gate = None
-    bucket = sample_bucket(key_col, seed)
+    bucket = sample_bucket("doc_id")
     for d, p in permille.items():
         cond = (F.col(domain_col) == d) & (bucket < p)
         gate = cond if gate is None else (gate | cond)
@@ -186,7 +182,6 @@ def group_fixed_size_sample(
     *,
     group_cols: list[str],
     key_col: str,
-    seed: int = 0,
 ) -> DataFrame:
     """Deterministic fixed-size sample PER GROUP: the ``n_per_group``
     lowest-mixed-hash keys within each group (a balanced per-domain /
@@ -194,7 +189,7 @@ def group_fixed_size_sample(
     ``stratified_sample``).
 
     One shuffle on the group key; the rank window sorts only within each
-    group's partition. Same seed → same rows, any layout.
+    group's partition. Same keys → same rows, any layout.
     """
     from pyspark.sql import Window
 
@@ -204,7 +199,7 @@ def group_fixed_size_sample(
         F.col("__sk").asc(), F.col(key_col).asc()
     )
     return (
-        df.withColumn("__sk", mix32_col(F.col(key_col).cast("long"), seed))
+        df.withColumn("__sk", mix32_col(F.col(key_col).cast("long"), FIXED_SIZE_SEED))
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= n_per_group)
         .drop("__sk", "__rn")
@@ -216,9 +211,6 @@ def repeat_to_mixture(
     weights: dict[str, float],
     *,
     domain_col: str = "source",
-    key_col: str = "doc_id",
-    max_repeat: int = 10,
-    seed: int = 2,
 ) -> DataFrame:
     """Deterministic UP-sampling to a target mixture: each row of an
     under-represented domain is emitted ``floor(r_d)`` or ``ceil(r_d)``
@@ -228,7 +220,7 @@ def repeat_to_mixture(
     multiple times per epoch; nothing is ever dropped).
 
     Output adds ``epoch`` (0-based repeat index) so downstream shuffling
-    can interleave repeats. Rates are clamped to ``max_repeat`` (beyond
+    can interleave repeats. Rates are clamped to ``MAX_REPEAT`` (beyond
     ~4 epochs repetition stops helping and starts memorizing). One count
     aggregate; the corpus scans once, the explode is per-row local.
     """
@@ -244,9 +236,9 @@ def repeat_to_mixture(
     # ("nothing is ever dropped" holds by exact rational arithmetic, not
     # by a float round-trip landing on the right side of 1000)
     permille = exact_permille(
-        counts, weights, binding="max", cap=max_repeat * 1000
+        counts, weights, binding="max", cap=MAX_REPEAT * 1000
     )
-    bucket = sample_bucket(key_col, seed)
+    bucket = sample_bucket("doc_id", REPEAT_SEED)
     reps = None
     for d, p in permille.items():
         r = F.lit(p // 1000) + (bucket < (p % 1000)).cast("int")
@@ -265,7 +257,6 @@ def repeat_to_mixture(
 def split_assign(
     df: DataFrame,
     *,
-    key_col: str = "doc_id",
     val_permille: int = 10,
     test_permille: int = 10,
     seed: int = 3,
@@ -278,7 +269,7 @@ def split_assign(
     leaks documents across sets every rerun. Adds a ``split`` column; no
     shuffle (per-row hash gate), so it composes with any downstream scan.
     """
-    bucket = sample_bucket(key_col, seed)
+    bucket = sample_bucket("doc_id", seed)
     return df.withColumn(
         "split",
         F.when(bucket < val_permille, F.lit("val"))
@@ -290,9 +281,6 @@ def split_assign(
 def weighted_sample(
     df: DataFrame,
     weight_permille: F.Column,
-    *,
-    key_col: str = "doc_id",
-    seed: int = 4,
 ) -> DataFrame:
     """Deterministic PER-ROW weighted sampling: keep a row iff its permille
     hash bucket falls below its own ``weight_permille`` column (0..1000,
@@ -300,9 +288,9 @@ def weighted_sample(
     keep probability (e.g. a quality score), the per-row generalization of
     :func:`stratified_sample`'s per-stratum rates.
 
-    Same key + seed → same decision on any partitioning or engine; rows
+    Same key → same decision on any partitioning or engine; rows
     with weight ≥ 1000 are always kept, ≤ 0 never. Pure per-row gate — no
     shuffle, composes with any scan.
     """
     w = F.greatest(F.lit(0), F.least(F.lit(1000), weight_permille.cast("long")))
-    return df.filter(sample_bucket(key_col, seed) < w)
+    return df.filter(sample_bucket("doc_id", WEIGHTED_SEED) < w)

@@ -28,18 +28,14 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 _PID = "__pid"
 _LOCAL = "__local"
 _OFFSET = "__offset"
+IQR_WHISKER = 3  # Tukey fences sit this many IQRs outside the quartiles
 
-def _two_phase_prefix(
-    df: DataFrame,
-    order: Sequence[Column],
-    value: Column,
-    out_col: str,
-    num_partitions: int | None,
-    pin: bool = True,
+
+def _local_prefix(
+    df: DataFrame, order: Sequence[Column], value: Column, parts: int
 ) -> DataFrame:
-    """Global inclusive running SUM of ``value`` in ``order`` — distributed
-    two-phase plan (see module docstring)."""
-    parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    """Phases 1-2 as a lazy plan: ``parts`` range partitions on ``order``,
+    each with its LOCAL inclusive running sum of ``value``."""
     ranged = df.repartitionByRange(parts, *order).withColumn(
         _PID, F.spark_partition_id()
     )
@@ -48,19 +44,28 @@ def _two_phase_prefix(
         .orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
+    return ranged.withColumn(_LOCAL, F.sum(value).over(w))
+
+
+def _two_phase_prefix(
+    df: DataFrame,
+    order: Sequence[Column],
+    value: Column,
+    out_col: str,
+    parts: int,
+) -> DataFrame:
+    """Global inclusive running SUM of ``value`` in ``order`` over ``parts``
+    range partitions — distributed two-phase plan (see module docstring)."""
     # Pin the sorted local prefix: the totals collect below and the final
     # join both consume it, and without pinning, the range shuffle +
     # per-partition sort would execute twice. localCheckpoint (not
     # persist) so the blocks are ContextCleaner-reclaimed when the result
     # goes out of scope — persist() registers in the SQL CacheManager and
     # accumulates forever in a long-lived session.
-    # ``pin=False`` is for plan inspection only (localCheckpoint truncates
-    # the visible plan); production callers keep the default. A keyword
-    # argument, not a module global: no cross-thread or failed-test leak
-    # can change production plan shape.
-    local = ranged.withColumn(_LOCAL, F.sum(value).over(w))
-    if pin:
-        local = local.localCheckpoint(eager=True)
+    # The lazy plan lives in ``_local_prefix`` so that plan inspection
+    # (localCheckpoint truncates the visible plan) reads it directly: no
+    # flag or module global exists that could change a production plan.
+    local = _local_prefix(df, order, value, parts).localCheckpoint(eager=True)
     totals = {
         r[_PID]: r["t"]
         for r in local.groupBy(_PID).agg(F.sum(value).alias("t")).collect()
@@ -79,49 +84,34 @@ def _two_phase_prefix(
     )
 
 
+def _parallelism(df: DataFrame) -> int:
+    return df.sparkSession.sparkContext.defaultParallelism
+
+
 def global_row_number(
-    df: DataFrame,
-    order: Sequence[Column],
-    out_col: str = "row_idx",
-    num_partitions: int | None = None,
-    pin: bool = True,
+    df: DataFrame, order: Sequence[Column], out_col: str = "row_idx"
 ) -> DataFrame:
     """1-based global row number over the total order (running count)."""
-    return _two_phase_prefix(df, order, F.lit(1), out_col, num_partitions, pin)
+    return _two_phase_prefix(df, order, F.lit(1), out_col, _parallelism(df))
 
 
-def select_token_budget(
-    docs: DataFrame,
-    budget: int,
-    *,
-    id_col: str = "doc_id",
-    score_col: str = "score",
-    token_col: str = "n_tokens",
-    num_partitions: int | None = None,
-    pin: bool = True,
-) -> DataFrame:
+def select_token_budget(docs: DataFrame, budget: int) -> DataFrame:
     """Greedy quality-ordered selection: keep documents in descending
-    ``score_col`` (ties broken by ascending id) while the INCLUSIVE
-    cumulative ``token_col`` stays ≤ ``budget``.
+    ``score`` (ties broken by ascending ``doc_id``) while the INCLUSIVE
+    cumulative ``n_tokens`` stays ≤ ``budget``.
 
     The standard "best N tokens" curation step: rank the corpus by a quality
     score and cut at the training-token budget. Output is the kept set with
     its cumulative position, so the caller can audit the cut point.
     """
-    order = [F.col(score_col).desc(), F.col(id_col).asc()]
+    order = [F.col("score").desc(), F.col("doc_id").asc()]
     ranked = _two_phase_prefix(
-        docs, order, F.col(token_col), "cum_tokens", num_partitions, pin
+        docs, order, F.col("n_tokens"), "cum_tokens", _parallelism(docs)
     )
     return ranked.filter(F.col("cum_tokens") <= budget)
 
 
-def training_order(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    seed: int = 0,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def training_order(docs: DataFrame, *, seed: int = 0) -> DataFrame:
     """Deterministic global shuffle for training: each document gets a
     pseudorandom ``shuffle_key`` (Knuth multiplicative hash of its id
     followed by an xorshift finalizer — an explicit arithmetic formula any
@@ -142,21 +132,16 @@ def training_order(
     from assemblagedb_spark.functions.core import mix32_col
 
     keyed = docs.withColumn(
-        "shuffle_key", mix32_col(F.col(id_col), seed).cast("long")
+        "shuffle_key", mix32_col(F.col("doc_id"), seed).cast("long")
     )
     return global_row_number(
-        keyed,
-        [F.col("shuffle_key").asc(), F.col(id_col).asc()],
-        "order_idx",
-        num_partitions,
+        keyed, [F.col("shuffle_key").asc(), F.col("doc_id").asc()], "order_idx"
     )
 
 
 def boilerplate_ngram_stats(
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 8,
     df_threshold: int = 2,
 ) -> DataFrame:
@@ -186,9 +171,9 @@ def boilerplate_ngram_stats(
     # partitions and must NOT eat a full shuffle of its raw text.
     parallelism = docs.sparkSession.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < parallelism // 2:
-        docs = docs.repartition(parallelism, id_col)
+        docs = docs.repartition(parallelism, "doc_id")
     counts = (
-        exploded_ngrams(docs, id_col=id_col, text_col=text_col, n=n)
+        exploded_ngrams(docs, n=n)
         .groupBy("doc_id", "gram")
         .agg(F.count(F.lit(1)).alias("cnt"))
         # consumed twice (doc-frequency derivation + final join);
@@ -212,14 +197,7 @@ def boilerplate_ngram_stats(
     )
 
 
-def exact_quantiles(
-    df: DataFrame,
-    value: Column,
-    qs: Sequence[float],
-    *,
-    tiebreak: Sequence[Column] = (),
-    num_partitions: int | None = None,
-) -> list[int]:
+def exact_quantiles(df: DataFrame, value: Column, qs: Sequence[float]) -> list[int]:
     """EXACT discrete quantiles of ``value`` at 100 TB: global rank via the
     two-phase range-partitioned row number (no single-node sort), then one
     tiny lookup of the order-statistic positions ceil(q * n).
@@ -228,13 +206,8 @@ def exact_quantiles(
     FILTER (outlier fences, budget cuts) the error compounds downstream —
     this is the exact path. Returns driver-side values (len(qs) numbers).
     """
-    projected = df.select(
-        value.alias("__v"), *[c.alias(f"__t{i}") for i, c in enumerate(tiebreak)]
-    )
-    order = [F.col("__v").asc()] + [
-        F.col(f"__t{i}").asc() for i in range(len(tiebreak))
-    ]
-    ranked = global_row_number(projected, order, "__r", num_partitions).persist()
+    projected = df.select(value.alias("__v"))
+    ranked = global_row_number(projected, [F.col("__v").asc()], "__r").persist()
     try:
         n = ranked.count()
         if n == 0:
@@ -253,38 +226,30 @@ def exact_quantiles(
         ranked.unpersist()
 
 
-def iqr_outliers(
-    docs: DataFrame,
-    value: Column,
-    *,
-    id_col: str = "doc_id",
-    whisker: int = 3,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def iqr_outliers(docs: DataFrame, value: Column) -> DataFrame:
     """Tukey-fence outlier flags on an integer metric: rows outside
-    [q1 - whisker*IQR, q3 + whisker*IQR] of the EXACT discrete quartiles.
+    [q1 - IQR_WHISKER*IQR, q3 + IQR_WHISKER*IQR] of the EXACT discrete
+    quartiles.
 
     The quantile pass costs one two-phase rank; the flag pass is a pure
     scan with the fences as literals — the standard length/garbage filter
     in a curation pipeline, with no approximation in the cut.
     """
-    q1, q3 = exact_quantiles(
-        docs, value, [0.25, 0.75], num_partitions=num_partitions
-    )
+    q1, q3 = exact_quantiles(docs, value, [0.25, 0.75])
     if q1 is None:
         # empty input: no quartiles, no fences, no rows (the SQL twin's
         # final cross join against the empty metric relation)
         return docs.select(
-            F.col(id_col).alias("doc_id"),
+            "doc_id",
             value.cast("long").alias("metric"),
             F.lit(None).cast("long").alias("is_outlier"),
             F.lit(None).cast("long").alias("fence_lo"),
             F.lit(None).cast("long").alias("fence_hi"),
         ).where(F.lit(False))
     iqr = q3 - q1
-    lo, hi = q1 - whisker * iqr, q3 + whisker * iqr
+    lo, hi = q1 - IQR_WHISKER * iqr, q3 + IQR_WHISKER * iqr
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         value.cast("long").alias("metric"),
         ((value < lo) | (value > hi)).cast("long").alias("is_outlier"),
         F.lit(lo).cast("long").alias("fence_lo"),
@@ -298,7 +263,6 @@ def grouped_iqr_outliers(
     group_cols: Sequence[str],
     *,
     id_col: str = "doc_id",
-    whisker: int = 3,
 ) -> DataFrame:
     """Per-GROUP Tukey fences on exact discrete quartiles: each group's
     rows ranked within the group (ONE shuffle on the group key — the
@@ -347,12 +311,12 @@ def grouped_iqr_outliers(
             "doc_id",
             F.col("__v").cast("long").alias("metric"),
             (
-                (F.col("__v") < F.col("q1") - whisker * (F.col("q3") - F.col("q1")))
-                | (F.col("__v") > F.col("q3") + whisker * (F.col("q3") - F.col("q1")))
+                (F.col("__v") < F.col("q1") - IQR_WHISKER * (F.col("q3") - F.col("q1")))
+                | (F.col("__v") > F.col("q3") + IQR_WHISKER * (F.col("q3") - F.col("q1")))
             ).cast("long").alias("is_outlier"),
-            (F.col("q1") - whisker * (F.col("q3") - F.col("q1")))
+            (F.col("q1") - IQR_WHISKER * (F.col("q3") - F.col("q1")))
             .cast("long").alias("fence_lo"),
-            (F.col("q3") + whisker * (F.col("q3") - F.col("q1")))
+            (F.col("q3") + IQR_WHISKER * (F.col("q3") - F.col("q1")))
             .cast("long").alias("fence_hi"),
         )
     )

@@ -11,37 +11,29 @@ a single exchange. State per key is O(1); no driver-side iteration.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def sessionize(
-    events: DataFrame,
-    *,
-    gap: int,
-    key: str = "user_id",
-    ts: str = "ts",
-    tiebreak: Sequence[str] = ("event_id",),
-) -> DataFrame:
-    """(key, session_idx, n_events, start_ts, end_ts), session_idx 1-based in
-    timestamp order. ``gap`` is in the units of ``ts`` (here: nanoseconds).
+def sessionize(events: DataFrame, *, gap: int) -> DataFrame:
+    """(user_id, session_idx, n_events, start_ts, end_ts), session_idx
+    1-based in ``ts`` order. ``gap`` is in the units of ``ts`` (here:
+    nanoseconds).
 
     Session boundaries depend only on timestamp gaps, so the result is
-    deterministic even with duplicate timestamps (the tiebreak fixes lag
-    order; same-ts events always share a session).
+    deterministic even with duplicate timestamps (the ``event_id``
+    tiebreak fixes lag order; same-ts events always share a session).
     """
-    w = Window.partitionBy(key).orderBy(ts, *tiebreak)
-    prev = F.lag(ts).over(w)
-    is_new = (prev.isNull() | ((F.col(ts) - prev) > gap)).cast("long")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    prev = F.lag("ts").over(w)
+    is_new = (prev.isNull() | ((F.col("ts") - prev) > gap)).cast("long")
     run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return (
         events.withColumn("__new", is_new)
         .withColumn("session_idx", F.sum("__new").over(run))
-        .groupBy(key, "session_idx")
+        .groupBy("user_id", "session_idx")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.min(ts).alias("start_ts"),
-            F.max(ts).alias("end_ts"),
+            F.min("ts").alias("start_ts"),
+            F.max("ts").alias("end_ts"),
         )
     )

@@ -26,6 +26,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.functions import pandas_udf
 
+from assemblagedb_spark.operators.vectors import QUANT_SCALE
+
+TOPK = 10  # neighbors per query of cosine_topk_arrow, ivf_topk, lsh_bucketed_topk
+HYPERPLANE_SEED = 7  # the mixer seed of the LSH hyperplanes
+
 
 def _dot(a: str, b: str) -> F.Column:
     return F.expr(
@@ -43,9 +48,9 @@ def _norm(a: str) -> F.Column:
     )
 
 
-def with_cosine(pairs: DataFrame, vec_a: str = "vec_a", vec_b: str = "vec_b") -> DataFrame:
+def with_cosine(pairs: DataFrame) -> DataFrame:
     return pairs.withColumn(
-        "cosine", _dot(vec_a, vec_b) / (_norm(vec_a) * _norm(vec_b))
+        "cosine", _dot("vec_a", "vec_b") / (_norm("vec_a") * _norm("vec_b"))
     )
 
 
@@ -53,19 +58,16 @@ def cosine_topk_arrow(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_queries: int = 10_000,
 ) -> DataFrame:
-    """Exact brute-force cosine top-k, Arrow/numpy execution path.
+    """Exact brute-force cosine top-``TOPK``, Arrow/numpy execution path.
 
     Self excluded, rank 1 = nearest, ties broken by ascending neighbor
     id; NULL vectors neither query nor match. The scoring runs as a
     vectorized ``mapInPandas`` stage: the query matrix rides along in the
     task closure, each corpus partition is scored with one BLAS matmul, and
-    only each partition's local top-k survives to the shuffle — the global
-    window then merges ≤ (partitions × |Q| × k) rows instead of |Q| × |C|.
+    only each partition's local top-TOPK survives to the shuffle — the global
+    window then merges ≤ (partitions × |Q| × TOPK) rows instead of |Q| × |C|.
     This is the 100 TB plan: per-partition dense math, bounded shuffle,
     no cross join ever materialized.
 
@@ -79,8 +81,8 @@ def cosine_topk_arrow(
     # an opaque >2 GiB task-binary error — cap it with a clear one instead
     # (same guard discipline as Db.from_tables, db.py:66-91)
     qrows = (
-        queries.filter(F.col(vec_col).isNotNull())
-        .select(id_col, vec_col).limit(max_queries + 1).collect()
+        queries.filter(F.col("embedding").isNotNull())
+        .select("vec_id", "embedding").limit(max_queries + 1).collect()
     )
     if len(qrows) > max_queries:
         raise ValueError(
@@ -89,7 +91,7 @@ def cosine_topk_arrow(
             f"Partition the query set, raise max_queries deliberately, or "
             f"use lsh_topk/ivf_topk for large query sets."
         )
-    id_type = corpus.schema[id_col].dataType.simpleString()
+    id_type = corpus.schema["vec_id"].dataType.simpleString()
     out_schema = f"query_id {id_type}, neighbor_id {id_type}, cosine double"
     if not qrows:
         return corpus.sparkSession.createDataFrame([], out_schema).select(
@@ -103,14 +105,14 @@ def cosine_topk_arrow(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            C = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col].values])
-            cids = pdf[id_col].to_numpy()
+            C = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"].values])
+            cids = pdf["vec_id"].to_numpy()
             cos = (Q @ C.T) / np.outer(qn, np.sqrt((C * C).sum(1)))
             qs, cs, ss = [], [], []
             for i in range(len(qids)):
                 mask = cids != qids[i]
                 rc, rs = cids[mask], cos[i][mask]
-                idx = np.lexsort((rc, -rs))[:k]  # cosine desc, id asc
+                idx = np.lexsort((rc, -rs))[:TOPK]  # cosine desc, id asc
                 qs.append(np.full(len(idx), qids[i], dtype=qids.dtype))
                 cs.append(rc[idx])
                 ss.append(rs[idx])
@@ -123,13 +125,13 @@ def cosine_topk_arrow(
             )
 
     part = (
-        corpus.filter(F.col(vec_col).isNotNull())
-        .select(id_col, vec_col).mapInPandas(score, out_schema)
+        corpus.filter(F.col("embedding").isNotNull())
+        .select("vec_id", "embedding").mapInPandas(score, out_schema)
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         part.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
         .select("query_id", "neighbor_id", "rank")
     )
 
@@ -139,8 +141,6 @@ def exact_rerank_topk(
     vectors: DataFrame,
     *,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact-cosine refinement of an approximate shortlist — the FAISS
     ``IndexRefineFlat`` step layered over any ANN leg (Jégou et al.
@@ -163,11 +163,11 @@ def exact_rerank_topk(
     """
     pairs = shortlist.select("query_id", "neighbor_id")
     nb = vectors.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("vec_b")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("vec_b")
     )
     fetched = F.broadcast(pairs).join(nb, "neighbor_id")
     qv = vectors.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("vec_a")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("vec_a")
     )
     scored = with_cosine(qv.join(F.broadcast(fetched), "query_id"))
     w = Window.partitionBy("query_id").orderBy(
@@ -223,14 +223,7 @@ def _mix_hyperplanes(bits: int, dim: int, seed: int):
     return np.where(mix32_py(i * HYP_DIM_STRIDE + d, seed) % 2 == 0, 1.0, -1.0)
 
 
-def hyperplane_sketch_arrow(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bits: int = 16,
-    seed: int = 7,
-) -> DataFrame:
+def hyperplane_sketch_arrow(df: DataFrame, *, bits: int = 16) -> DataFrame:
     """Random-hyperplane sign sketch: bit i = (v · h_i) > 0 with the
     pseudo-random ±1 hyperplanes of :func:`_mix_hyperplanes` — no stored
     hyperplane matrix, reproducible everywhere. One matmul per Arrow
@@ -242,22 +235,22 @@ def hyperplane_sketch_arrow(
     @pandas_udf("bigint")
     def sk(v: pd.Series) -> pd.Series:
         V = np.stack([np.asarray(x, dtype=np.float64) for x in v.values])
-        H = _mix_hyperplanes(bits, V.shape[1], seed)
+        H = _mix_hyperplanes(bits, V.shape[1], HYPERPLANE_SEED)
         return pd.Series(((V @ H.T) > 0) @ weights)
 
-    return df.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col), sk(vec_col).alias("sketch")
+    return df.filter(F.col("embedding").isNotNull()).select(
+        "vec_id", "embedding", sk("embedding").alias("sketch")
     )
 
 
-def _ivf_centroids(corpus: DataFrame, nlist: int, id_col: str, vec_col: str):
+def _ivf_centroids(corpus: DataFrame, nlist: int):
     """Deterministic coarse quantizer: the nlist lowest-id corpus vectors.
     Centroids are nlist rows of metadata — collected once and reused as a
     local relation (otherwise every downstream reference re-runs the
     TakeOrdered job and re-broadcasts its own copy)."""
     cent_rows = (
-        corpus.filter(F.col(vec_col).isNotNull())
-        .orderBy(id_col).limit(nlist).select(id_col, vec_col).collect()
+        corpus.filter(F.col("embedding").isNotNull())
+        .orderBy("vec_id").limit(nlist).select("vec_id", "embedding").collect()
     )
     if not cent_rows:
         # empty corpus: zero cells (shaped empties — a bare np.array([])
@@ -268,20 +261,18 @@ def _ivf_centroids(corpus: DataFrame, nlist: int, id_col: str, vec_col: str):
     return cent_ids, CM, np.sqrt((CM * CM).sum(1))
 
 
-
-
-def centroid_matrix(state, *, scale: int = 1000):
+def centroid_matrix(state):
     """Convert a k-means centroid MERGE STATE (label, pos, sum_q, n_vecs —
     :func:`assemblagedb_spark.operators.vectors.kmeans_train` output) into
     the (ids, matrix, norms) triple the IVF probe kernels ride: component =
-    floor(sum_q / n_vecs) / scale, the same quantized value the trainer's
+    floor(sum_q / n_vecs) / QUANT_SCALE, the same quantized value the trainer's
     oracle replays. k x dim rows — driver-side by design."""
     import math
 
     by_label: dict[int, dict[int, float]] = {}
     for r in state.collect():
         by_label.setdefault(r["label"], {})[r["pos"]] = (
-            math.floor(r["sum_q"] / r["n_vecs"]) / scale
+            math.floor(r["sum_q"] / r["n_vecs"]) / QUANT_SCALE
         )
     if not by_label:
         # untrained/empty state (empty corpus): zero cells, shaped so the
@@ -294,9 +285,7 @@ def centroid_matrix(state, *, scale: int = 1000):
     return ids, CM, np.sqrt((CM * CM).sum(1))
 
 
-def _nearest_cells(
-    df: DataFrame, side: str, n: int, cents, id_col: str, vec_col: str
-) -> DataFrame:
+def _nearest_cells(df: DataFrame, side: str, n: int, cents) -> DataFrame:
     """(side_id, cell) rows: each vector's n nearest centroid cells. The
     centroid matrix rides in the task closure: one matmul per Arrow batch
     replaces the (rows × nlist) cross join + rank window."""
@@ -325,8 +314,8 @@ def _nearest_cells(
     # that collapse/pushdown; row values are unchanged (oracle-pinned).
     cells = cells.asNondeterministic()
 
-    return df.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias(f"{side}_id"), cells(vec_col).alias("cells")
+    return df.filter(F.col("embedding").isNotNull()).select(
+        F.col("vec_id").alias(f"{side}_id"), cells("embedding").alias("cells")
     ).select(f"{side}_id", F.explode("cells").alias("cell"))
 
 
@@ -334,8 +323,6 @@ def ivf_assign(
     corpus: DataFrame,
     *,
     nlist: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """(c_id, cell) corpus cell assignment — the materializable IVF index
@@ -348,9 +335,9 @@ def ivf_assign(
     cents = (
         centroid_matrix(centroids)
         if centroids is not None
-        else _ivf_centroids(corpus, nlist, id_col, vec_col)
+        else _ivf_centroids(corpus, nlist)
     )
-    return _nearest_cells(corpus, "c", 1, cents, id_col, vec_col)
+    return _nearest_cells(corpus, "c", 1, cents)
 
 
 def ivf_probes(
@@ -358,30 +345,23 @@ def ivf_probes(
     *,
     nprobe: int = 2,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(q_id, cell) probe list: each query's ``nprobe`` nearest trained
     cells by cosine (ties cell-asc) — |Q| × nprobe rows, the broadcastable
     side of every IVF serving join."""
-    return _nearest_cells(
-        queries, "q", nprobe, centroid_matrix(centroids), id_col, vec_col
-    )
+    return _nearest_cells(queries, "q", nprobe, centroid_matrix(centroids))
 
 
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    k: int = 10,
     nlist: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     corpus_assign: DataFrame | None = None,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF-style approximate top-k: a coarse quantizer partitions the corpus
+    """IVF-style approximate top-``TOPK``: a coarse quantizer partitions the corpus
     into ``nlist`` cells; each query exactly re-ranks only the vectors in its
     ``nprobe`` nearest cells.
 
@@ -399,16 +379,12 @@ def ivf_topk(
     cents = (
         centroid_matrix(centroids)
         if centroids is not None
-        else _ivf_centroids(corpus, nlist, id_col, vec_col)
+        else _ivf_centroids(corpus, nlist)
     )
-
-    def nearest_cells(df: DataFrame, side: str, n: int) -> DataFrame:
-        return _nearest_cells(df, side, n, cents, id_col, vec_col)
-
-    assign = corpus_assign if corpus_assign is not None else nearest_cells(corpus, "c", 1)
-    probes = nearest_cells(queries, "q", nprobe)
-    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("vec_q"))
-    c = corpus.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("vec_c"))
+    assign = corpus_assign if corpus_assign is not None else _nearest_cells(corpus, "c", 1, cents)
+    probes = _nearest_cells(queries, "q", nprobe, cents)
+    q = queries.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("vec_q"))
+    c = corpus.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("vec_c"))
     cos = _cosine_pair_udf()
     cand = (
         # probe list is |Q|×nprobe rows — broadcast it against the corpus
@@ -425,7 +401,7 @@ def ivf_topk(
     w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
     return (
         cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
         .select(F.col("q_id").alias("query_id"), F.col("c_id").alias("neighbor_id"), "rank")
     )
 
@@ -434,8 +410,6 @@ def band_table(
     df: DataFrame,
     *,
     side: str = "c",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     bits: int = 16,
     bands: int = 4,
 ) -> DataFrame:
@@ -447,7 +421,7 @@ def band_table(
     through the band join."""
     rows = bits // bands
     mask = (1 << rows) - 1
-    s = hyperplane_sketch_arrow(df, id_col=id_col, vec_col=vec_col, bits=bits)
+    s = hyperplane_sketch_arrow(df, bits=bits)
     return s.select(
         F.col("vec_id").alias(f"{side}_id"),
         F.posexplode(
@@ -465,14 +439,11 @@ def lsh_bucketed_topk(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     bits: int = 16,
     bands: int = 4,
     corpus_bands: DataFrame | None = None,
 ) -> DataFrame:
-    """Approximate top-k: score only corpus vectors sharing at least one
+    """Approximate top-``TOPK``: score only corpus vectors sharing at least one
     sketch band with the query. Bucket equi-join instead of cross join —
     the shuffle is on (band, band_bits), cost proportional to bucket sizes.
     ``corpus_bands``: precomputed :func:`band_table` of the corpus (side
@@ -480,14 +451,12 @@ def lsh_bucketed_topk(
     """
 
     def banded(df: DataFrame, side: str) -> DataFrame:
-        return band_table(
-            df, side=side, id_col=id_col, vec_col=vec_col, bits=bits, bands=bands
-        )
+        return band_table(df, side=side, bits=bits, bands=bands)
 
     def sides(df: DataFrame, side: str) -> DataFrame:
         return df.select(
-            F.col(id_col).alias(f"{side}_id"),
-            F.col(vec_col).alias(f"vec_{side}"),
+            F.col("vec_id").alias(f"{side}_id"),
+            F.col("embedding").alias(f"vec_{side}"),
         )
 
     q = banded(queries, "q")
@@ -508,6 +477,6 @@ def lsh_bucketed_topk(
     w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
     return (
         cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
         .select(F.col("q_id").alias("query_id"), F.col("c_id").alias("neighbor_id"), "rank")
     )

@@ -17,7 +17,7 @@ sketch never exists as a driver-side object, only as rows.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from assemblagedb_spark.functions.core import mix32_col
 
@@ -28,7 +28,6 @@ def hll_registers(
     group_cols: list[str] | None = None,
     *,
     m: int = 256,
-    seed: int = 0,
 ) -> DataFrame:
     """HyperLogLog register table: per group and bucket, the max over keys
     of rho = 1 + trailing-zero count of the mixed hash's remaining bits.
@@ -43,7 +42,7 @@ def hll_registers(
     string-length-of-binary is integer-exact in both engines.
     """
     group_cols = group_cols or []
-    h = mix32_col(F.col(key_col).cast("long"), seed)
+    h = mix32_col(F.col(key_col).cast("long"))
     bucket = F.pmod(h, F.lit(m)).cast("int")
     rest = (h / F.lit(m)).cast("long")  # floor-div: drop bucket bits
     rho = (
@@ -64,7 +63,6 @@ def linear_counting(
     group_cols: list[str] | None = None,
     *,
     m: int = 4096,
-    seed: int = 0,
 ) -> DataFrame:
     """Linear-counting state: per group, how many of the m hash buckets are
     occupied (estimate = -m * ln(1 - filled/m), left to the caller).
@@ -73,7 +71,7 @@ def linear_counting(
     second aggregate; preferable to HLL when cardinality ≲ m.
     """
     group_cols = group_cols or []
-    bucket = F.pmod(mix32_col(F.col(key_col).cast("long"), seed), F.lit(m))
+    bucket = F.pmod(mix32_col(F.col(key_col).cast("long")), F.lit(m))
     return (
         df.select(*group_cols, bucket.alias("bucket"))
         .distinct()
@@ -89,10 +87,9 @@ def countmin_counters(
     *,
     d: int = 2,
     w: int = 1024,
-    weight_col: Column | None = None,
 ) -> DataFrame:
     """Count-min sketch state over a STRING item stream: for each of ``d``
-    hash rows, the total weight landing in each of ``w`` columns.
+    hash rows, the item count landing in each of ``w`` columns.
 
     Output: (row, col, counter) — d*w rows max, merged with SUM (map-side
     partial). Point estimate for an item = min over rows of its counter;
@@ -105,7 +102,7 @@ def countmin_counters(
 
     base = items.select(
         F.expr(strhash_spark_sql(item_col)).alias("__h"),
-        (weight_col if weight_col is not None else F.lit(1)).alias("__wt"),
+        F.lit(1).alias("__wt"),
     )
     # One explode (not a d-way union, which would re-run the string fold
     # once per branch): each item emits its d (row, col) cells inline.
@@ -136,7 +133,6 @@ def bloom_bits(
     *,
     m: int = 8192,
     n_hashes: int = 3,
-    seed: int = 0,
 ) -> DataFrame:
     """Bloom-filter state as rows: the distinct set bit positions per group
     (k = ``n_hashes`` mix32 probes per key, bit = hash % m).
@@ -150,7 +146,7 @@ def bloom_bits(
     probes = F.explode(
         F.array(
             *[
-                F.pmod(mix32_col(key, seed=seed + r), F.lit(m)).cast("long")
+                F.pmod(mix32_col(key, seed=r), F.lit(m)).cast("long")
                 for r in range(n_hashes)
             ]
         )
@@ -165,7 +161,6 @@ def bloom_prefilter(
     *,
     m: int = 8192,
     n_hashes: int = 3,
-    seed: int = 0,
 ) -> DataFrame:
     """Keep only probe rows whose key passes the Bloom filter (every one of
     its ``n_hashes`` bit positions is set in ``bits``).
@@ -209,7 +204,7 @@ def bloom_prefilter(
     )
     probes = F.array(
         *[
-            F.pmod(mix32_col(key, seed=seed + r), F.lit(m)).cast("long")
+            F.pmod(mix32_col(key, seed=r), F.lit(m)).cast("long")
             for r in range(n_hashes)
         ]
     )
@@ -252,7 +247,6 @@ def hll_rollup(
     levels: list[list[str]],
     *,
     m: int = 256,
-    seed: int = 0,
 ) -> DataFrame:
     """Sketch ROLLUP: build the HLL register table once at the finest
     grouping, then derive every coarser level by MAX-merging the previous
@@ -272,7 +266,7 @@ def hll_rollup(
         if not set(cur) <= set(prev):
             raise ValueError("each coarser level must drop columns, not add")
     finest = levels[0]
-    base = hll_registers(df, key_col, finest, m=m, seed=seed)
+    base = hll_registers(df, key_col, finest, m=m)
     out = base.withColumn("level", F.lit(0).cast("long"))
     prev = base
     for i, cols in enumerate(levels[1:], start=1):

@@ -29,29 +29,26 @@ def tokens(text_col: str) -> F.Column:
     )
 
 
-def token_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def token_stats(docs: DataFrame) -> DataFrame:
     """(doc_id, n_chars, n_tokens, n_distinct_tokens)."""
-    t = tokens(text_col)
+    t = tokens("text")
     return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.length(F.coalesce(F.col(text_col), F.lit(""))).cast("long").alias("n_chars"),
+        "doc_id",
+        F.length(F.coalesce(F.col("text"), F.lit(""))).cast("long").alias("n_chars"),
         F.size(t).cast("long").alias("n_tokens"),
         F.size(F.array_distinct(t)).cast("long").alias("n_distinct_tokens"),
     )
 
 
-def quality_cols(
-    text_col: str = "text", stopwords: list[str] | None = None
-) -> dict[str, F.Column]:
+def quality_cols() -> dict[str, F.Column]:
     """The quality-feature expressions as reusable Columns — shared by
     :func:`quality_scores` and fused pipelines that want the score inline
     without a join."""
-    stop = stopwords or LANG_STOPWORDS["en"]
-    stop_arr = "array(" + ", ".join(f"'{s}'" for s in stop) + ")"
-    t = tokens(text_col)
+    stop_arr = "array(" + ", ".join(f"'{s}'" for s in LANG_STOPWORDS["en"]) + ")"
+    t = tokens("text")
     n_tok = F.size(t).cast("long")
     n_stop = F.size(F.expr(
-        f"filter(filter(split(trim(coalesce({text_col}, '')), ' +'), t -> t <> ''), "
+        "filter(filter(split(trim(coalesce(text, '')), ' +'), t -> t <> ''), "
         f"t -> array_contains({stop_arr}, lower(t)))"
     )).cast("long")
     length_score = F.least(n_tok / F.lit(100.0), F.lit(1.0))
@@ -69,12 +66,7 @@ def quality_cols(
     }
 
 
-def quality_scores(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    stopwords: list[str] | None = None,
-) -> DataFrame:
+def quality_scores(docs: DataFrame) -> DataFrame:
     """Heuristic quality features + a combined score in [0, 1]:
 
     - length_score: min(n_tokens / 100, 1)
@@ -82,20 +74,20 @@ def quality_scores(
     - stopword_ratio: stopword tokens / total (natural text has some)
     - score = (length_score + diversity + least(stopword_ratio * 4, 1)) / 3
     """
-    cols = quality_cols(text_col, stopwords)
+    cols = quality_cols()
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         *[c.alias(name) for name, c in cols.items()],
     )
 
 
-def lang_hit_cols(text_col: str = "text") -> dict[str, F.Column]:
+def lang_hit_cols() -> dict[str, F.Column]:
     """Per-language stopword hit counts as reusable Columns."""
     hit_cols = {}
     for lang, words in LANG_STOPWORDS.items():
         arr = "array(" + ", ".join(f"'{w}'" for w in words) + ")"
         hit_cols[lang] = F.size(F.expr(
-            f"filter(filter(split(trim(coalesce({text_col}, '')), ' +'), t -> t <> ''), "
+            "filter(filter(split(trim(coalesce(text, '')), ' +'), t -> t <> ''), "
             f"t -> array_contains({arr}, lower(t)))"
         )).cast("long")
     return hit_cols
@@ -115,13 +107,12 @@ def lang_guess_col(hit_cols: dict[str, F.Column]) -> F.Column:
     return F.when(best_hits > 0, best).otherwise(F.lit("und"))
 
 
-def language_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def language_id(docs: DataFrame) -> DataFrame:
     """Stopword-vote language ID: count per-language stopword hits, argmax
     with fixed tiebreak order (the LANG_STOPWORDS key order)."""
-    hit_cols = lang_hit_cols(text_col)
-    langs = list(LANG_STOPWORDS)
+    hit_cols = lang_hit_cols()
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         *[c.alias(f"hits_{lang}") for lang, c in hit_cols.items()],
         lang_guess_col(hit_cols).alias("lang_guess"),
     )
@@ -143,17 +134,13 @@ LANG_TRIGRAMS: dict[str, list[str]] = {
     "zh": ["shi", " bu", "zai", "you", " wo", " ta", "ang", "eng", "ian",
            "ong", "ao ", " zh"],
 }
+STOPWORD_WEIGHT = 4  # one stopword hit counts as this many trigram hits
 
 
-def language_id_ngram(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    stopword_weight: int = 4,
-) -> DataFrame:
+def language_id_ngram(docs: DataFrame) -> DataFrame:
     """Combined trigram-profile + stopword-vote language ID.
 
-    score_L = stopword_hits_L * ``stopword_weight`` + Σ_t occurrences(t)
+    score_L = stopword_hits_L * ``STOPWORD_WEIGHT`` + Σ_t occurrences(t)
     over L's trigram profile. Occurrences are counted by length difference
     after ``replace(s, t, '')`` — leftmost non-overlapping semantics,
     identical in Spark and DuckDB, so the whole scorer is a pure-integer
@@ -168,12 +155,12 @@ def language_id_ngram(
     # `transform(array(x), v -> body)[0]` evaluates x exactly once and
     # exposes it to the body as `v` — the standard Spark CSE workaround.
     s_sql = (
-        f"concat(' ', regexp_replace(lower(trim(coalesce({text_col}, ''))), "
-        f"'\\\\s+', ' '), ' ')"
+        "concat(' ', regexp_replace(lower(trim(coalesce(text, ''))), "
+        "'\\\\s+', ' '), ' ')"
     )
     toks_sql = (
-        f"transform(filter(split(trim(coalesce({text_col}, '')), ' +'), "
-        f"t -> t <> ''), t -> lower(t))"
+        "transform(filter(split(trim(coalesce(text, '')), ' +'), "
+        "t -> t <> ''), t -> lower(t))"
     )
     fields = []
     for lang in LANG_TRIGRAMS:
@@ -181,7 +168,7 @@ def language_id_ngram(
         tri_arr = "array(" + ", ".join(f"'{t}'" for t in LANG_TRIGRAMS[lang]) + ")"
         fields.append(
             f"'{lang}', CAST(size(filter(toks, t -> array_contains({stop_arr}, t)))"
-            f" * {stopword_weight}"
+            f" * {STOPWORD_WEIGHT}"
             f" + aggregate({tri_arr}, CAST(0 AS BIGINT), (acc, t) -> acc"
             f" + CAST((length(s) - length(replace(s, t, ''))) div 3 AS BIGINT))"
             f" AS BIGINT)"
@@ -195,7 +182,7 @@ def language_id_ngram(
         f"(s, toks) -> named_struct({', '.join(fields)}))"
     )
     out = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.explode(F.expr(scores_expr)).alias("__scores"),
     ).select(
         "doc_id",
@@ -216,21 +203,19 @@ def language_id_ngram(
     ).select("doc_id", *[f"score_{lang}" for lang in langs], "lang_guess")
 
 
-def fingerprints(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def fingerprints(docs: DataFrame) -> DataFrame:
     """Canonical-text fingerprint: md5 of the whitespace-normalized,
     lower-cased text (stable across engines); NULL text fingerprints to
     NULL — a missing document must not share d41d8cd9... with genuinely
     empty ones. For shift-tolerant fingerprinting use the minhash/simhash
     operators (dedup.py)."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
-    return docs.select(F.col(id_col).alias("doc_id"), F.md5(norm).alias("fingerprint"))
+    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
+    return docs.select("doc_id", F.md5(norm).alias("fingerprint"))
 
 
 def winnowing_fingerprints(
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 5,
     window: int = 4,
     base: int = 257,
@@ -264,7 +249,7 @@ def winnowing_fingerprints(
     from numpy.lib.stride_tricks import sliding_window_view
 
     norm = F.trim(
-        F.regexp_replace(F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"\s+", " ")
+        F.regexp_replace(F.lower(F.coalesce(F.col("text"), F.lit(""))), r"\s+", " ")
     )
 
     def fp(batches):
@@ -283,31 +268,28 @@ def winnowing_fingerprints(
             yield pd.DataFrame({"doc_id": ids, "fingerprint": fps})
 
     return (
-        docs.select(F.col(id_col).alias("doc_id"), norm.alias("__s"))
+        docs.select("doc_id", norm.alias("__s"))
         .filter(F.length("__s") >= k + window - 1)
         .mapInPandas(fp, "doc_id long, fingerprint long")
     )
 
 
-def repetition_stats(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    top_n: int = 2,
-    dup_n: int = 3,
-) -> DataFrame:
+TOP_GRAM_N = 2  # repetition_stats: the most-common-gram signal's n
+DUP_GRAM_N = 3  # repetition_stats: the duplicate-gram signal's n
+
+
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher-style within-document repetition signals (Rae et al. 2021,
     §A1.1 repetition filters): documents dominated by a single repeated
     phrase or by duplicated n-grams are low-quality training data.
 
     Output per document (integer-exact, one row per input doc):
     - ``n_top_grams`` / ``top_gram_count`` / ``top_gram_chars``: total
-      ``top_n``-gram instances, occurrences of the MOST frequENT one (ties
+      ``TOP_GRAM_N``-gram instances, occurrences of the MOST frequENT one (ties
       broken by lexicographically smallest gram), and characters covered by
       those occurrences (count × gram length) — the "fraction of characters
       in the most common n-gram" signal as a ratio of integers.
-    - ``n_dup_grams`` / ``dup_gram_instances``: total ``dup_n``-gram
+    - ``n_dup_grams`` / ``dup_gram_instances``: total ``DUP_GRAM_N``-gram
       instances and how many of them belong to a gram occurring ≥ 2 times
       in the document — the "fraction of characters in duplicate n-grams"
       numerator, in instance units.
@@ -320,18 +302,18 @@ def repetition_stats(
 
     from assemblagedb_spark.operators.decontam import exploded_ngrams
 
-    base = docs.select(F.col(id_col).alias("doc_id"))
+    base = docs.select("doc_id")
 
     def gram_counts(n: int) -> DataFrame:
         return (
-            exploded_ngrams(docs, id_col=id_col, text_col=text_col, n=n)
+            exploded_ngrams(docs, n=n)
             .groupBy("doc_id", "gram")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
 
     w = Window.partitionBy("doc_id").orderBy(F.desc("cnt"), F.asc("gram"))
     top = (
-        gram_counts(top_n)
+        gram_counts(TOP_GRAM_N)
         .withColumn("__rn", F.row_number().over(w))
         .groupBy("doc_id")
         .agg(
@@ -344,7 +326,7 @@ def repetition_stats(
             ).cast("long").alias("top_gram_chars"),
         )
     )
-    dup = gram_counts(dup_n).groupBy("doc_id").agg(
+    dup = gram_counts(DUP_GRAM_N).groupBy("doc_id").agg(
         F.sum("cnt").cast("long").alias("n_dup_grams"),
         F.sum(F.when(F.col("cnt") >= 2, F.col("cnt")).otherwise(F.lit(0)))
         .cast("long")
@@ -358,20 +340,17 @@ def repetition_stats(
     )
 
 
-def tfidf_top_terms(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-) -> DataFrame:
-    """Top-``k`` most distinctive terms per document: rank by term
+TFIDF_TOP_K = 3  # tfidf_top_terms keeps this many terms per document
+
+
+def tfidf_top_terms(docs: DataFrame) -> DataFrame:
+    """Top-``TFIDF_TOP_K`` most distinctive terms per document: rank by term
     frequency DESC, document frequency ASC, term ASC.
 
     The integer-lexicographic rank is the deterministic core of tf-idf
     ordering (a document-local frequent term that is corpus-rare wins)
     without a float idf whose ``ln`` differs across engines in the last
-    ulp. Output: (doc_id, term, tf, df, rnk ≤ k).
+    ulp. Output: (doc_id, term, tf, df, rnk ≤ TFIDF_TOP_K).
 
     Plan: ONE tokenize+explode → (doc, term, tf) groupBy; df falls out of
     that counts table (each row is one containing document) with a second
@@ -388,9 +367,9 @@ def tfidf_top_terms(
     # pays a raw-text shuffle for it
     parallelism = docs.sparkSession.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < parallelism // 2:
-        docs = docs.repartition(parallelism, id_col)
+        docs = docs.repartition(parallelism, "doc_id")
     counts = (
-        docs.select(F.col(id_col).alias("doc_id"), tokens_expr(text_col).alias("__w"))
+        docs.select("doc_id", tokens_expr("text").alias("__w"))
         .select("doc_id", F.explode("__w").alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -406,7 +385,7 @@ def tfidf_top_terms(
     return (
         counts.join(df_tbl, "term")
         .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
+        .filter(F.col("rnk") <= TFIDF_TOP_K)
         .select(
             "doc_id", "term",
             F.col("tf").cast("long").alias("tf"),
@@ -419,8 +398,6 @@ def tfidf_top_terms(
 def chunk_dedup(
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     chunk_words: int = 8,
     df_threshold: int = 2,
 ) -> DataFrame:
@@ -445,9 +422,7 @@ def chunk_dedup(
 
     cw = int(chunk_words)
     chunks = (
-        docs.select(
-            F.col(id_col).alias("doc_id"), tokens_expr(text_col).alias("__w")
-        )
+        docs.select("doc_id", tokens_expr("text").alias("__w"))
         .select(
             "doc_id",
             F.expr(
@@ -486,7 +461,7 @@ def chunk_dedup(
     # docs with zero tokens produce zero chunk rows but still belong in the
     # output (clean_text = '')
     return (
-        docs.select(F.col(id_col).alias("doc_id"))
+        docs.select("doc_id")
         .join(per_doc, "doc_id", "left")
         .select(
             "doc_id",
@@ -497,12 +472,7 @@ def chunk_dedup(
     )
 
 
-def unigram_surprisal(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def unigram_surprisal(docs: DataFrame) -> DataFrame:
     """Corpus-unigram-LM quality score with EXACT integer semantics: each
     token's surprisal proxy is the decimal digit count of
     ``total_tokens // corpus_freq(token)`` — a monotone stand-in for
@@ -522,8 +492,8 @@ def unigram_surprisal(
     from assemblagedb_spark.operators.decontam import tokens_expr
 
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tokens_expr(text_col)).alias("term"),
+        "doc_id",
+        F.explode(tokens_expr("text")).alias("term"),
     )
     freq = toks.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     total = freq.agg(F.sum("cnt").cast("long").alias("total"))
@@ -540,7 +510,7 @@ def unigram_surprisal(
         F.sum("surp").cast("long").alias("surprisal_sum"),
     )
     return (
-        docs.select(F.col(id_col).alias("doc_id"))
+        docs.select("doc_id")
         .join(per_doc, "doc_id", "left")
         .select(
             "doc_id",

@@ -40,6 +40,7 @@ from assemblagedb_spark.operators.components import child_path, frontier_walk
 
 # subtree_closure: the deepest forest walk left as one lazy plan
 _LAZY_MAX_DEPTH = 4
+DISPLAY_CLASS_DEPTH = 8  # display_class scans this many wrappers, then says block
 
 
 def descendants(
@@ -420,7 +421,7 @@ def siblings_escalated(
     )
 
 
-def display_class(nodes: DataFrame, *, max_iter: int = 8) -> DataFrame:
+def display_class(nodes: DataFrame) -> DataFrame:
     """Resolve the reference's display-class recursion (``is_span`` /
     ``is_block``, assemblage_db/src/lib.rs:347-380) over a node relation
     ``(node_id, kind, child_id)``.
@@ -430,13 +431,13 @@ def display_class(nodes: DataFrame, *, max_iter: int = 8) -> DataFrame:
     lists render as spans, page lists and block-styled wrappers as blocks;
     a span-styled wrapper takes the class of its child — a recursion the
     reference guards with a visited set. A wrapper whose chain has no
-    non-wrapper within ``max_iter`` children (a styled cycle, or deeper
+    non-wrapper within ``DISPLAY_CLASS_DEPTH`` children (a styled cycle, or deeper
     nesting than the bound) falls back to block, matching the reference's
     cycle guard. A dangling child pointer also classifies as block.
 
     Pointer doubling / path compression: compose the one-step relation
-    with itself, so a ``max_iter`` of 2^k costs k+1 joins instead of 2^k —
-    ceil(log2) shuffle rounds at 100 TB. ``max_iter`` is decomposed in
+    with itself, so a bound of 2^k costs k+1 joins instead of 2^k —
+    ceil(log2) shuffle rounds at 100 TB. The bound is decomposed in
     binary, so any bound is scanned EXACTLY (no overshoot past the cycle
     guard).
     """
@@ -465,7 +466,7 @@ def display_class(nodes: DataFrame, *, max_iter: int = 8) -> DataFrame:
 
     t1 = lut.select("node_id", "dc", F.col("child_id").alias("cur"))
     total, power = None, t1
-    k = max_iter
+    k = DISPLAY_CLASS_DEPTH
     first = True
     while k:
         if k & 1:
@@ -474,7 +475,7 @@ def display_class(nodes: DataFrame, *, max_iter: int = 8) -> DataFrame:
         k >>= 1
         if k:
             power = compose(power, power)
-    # wrapper w scans its CHILD chain: look T_{max_iter} up at child_id
+    # wrapper w scans its CHILD chain: look T_{DISPLAY_CLASS_DEPTH} up at child_id
     chain = total.select(
         F.col("node_id").alias("child_id"), F.col("dc").alias("chain_dc")
     )

@@ -7,35 +7,33 @@ only viable plan is dimension-exploded aggregation: posexplode the
 partial sums mean each executor contributes m*dim rows no matter how many
 vectors it scanned. Driver never sees a vector.
 
-Sums are integer-quantized (``floor(value * scale)`` on the float64
+Sums are integer-quantized (``floor(value * QUANT_SCALE)`` on the float64
 promotion of the float32 input) so the compared state is exact: float
 summation ORDER is engine- and partitioning-dependent, integers commute.
-The float centroid is ``sum_q / (scale * n)`` — caller-side, like any
-fixed-point store.
+The float centroid is ``sum_q / (QUANT_SCALE * n)`` — caller-side, like
+any fixed-point store.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+# the fixed-point grid of every quantized vector in the package (vectors,
+# pq, similarity, streaming.ann): component q = floor(v * QUANT_SCALE)
+QUANT_SCALE = 1000
 
-def label_centroids(
-    embeddings: DataFrame,
-    *,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-    scale: int = 1000,
-) -> DataFrame:
+
+def label_centroids(embeddings: DataFrame) -> DataFrame:
     """(label, pos, sum_q, n_vecs): quantized component sums + counts per
     label — the exact merge state of a distributed mean."""
     return (
         embeddings.select(
-            F.col(label_col).alias("label"),
-            F.posexplode(vec_col).alias("pos", "v"),
+            "label",
+            F.posexplode("embedding").alias("pos", "v"),
         )
         .groupBy("label", "pos")
         .agg(
-            F.sum(F.floor(F.col("v").cast("double") * scale))
+            F.sum(F.floor(F.col("v").cast("double") * QUANT_SCALE))
             .cast("long")
             .alias("sum_q"),
             F.count(F.lit(1)).cast("long").alias("n_vecs"),
@@ -46,11 +44,6 @@ def label_centroids(
 def centroid_assign(
     embeddings: DataFrame,
     centroids: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    scale: int = 1000,
-    pre_quantized: bool = False,
 ) -> DataFrame:
     """Nearest-centroid assignment (one k-means E-step): broadcast the
     (tiny) centroid table, compute quantized squared distance per pair with
@@ -75,18 +68,13 @@ def centroid_assign(
             ).alias("cvec"),
         )
     )
-    qvec = (
-        F.col(vec_col)
-        if pre_quantized
-        else F.expr(
-            f"transform({vec_col}, v -> "
-            f"CAST(floor(CAST(v AS DOUBLE) * {scale}) AS BIGINT))"
-        )
+    qvec = F.expr(
+        f"transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * {QUANT_SCALE}) AS BIGINT))"
     )
     # a NULL vector has no nearest centroid: its NULL distance would
     # still win a min-struct tie — exclude it like the SQL twin does
-    pairs = embeddings.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("vec_id"), qvec.alias("qvec")
+    pairs = embeddings.filter(F.col("embedding").isNotNull()).select(
+        "vec_id", qvec.alias("qvec")
     ).crossJoin(F.broadcast(cent))
     dist = F.expr(
         "aggregate(zip_with(qvec, cvec, (a, b) -> (a - b) * (a - b)), "
@@ -106,16 +94,14 @@ def kmeans_train(
     *,
     k: int = 8,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 1000,
 ) -> DataFrame:
     """Distributed Lloyd's k-means on the quantized integer grid:
     deterministic init (the ``k`` lowest-id vectors), then ``iters`` rounds
     of literal-folded assign → merge-state recompute.
 
     Returns the final centroid MERGE STATE (label, pos, sum_q, n_vecs) —
-    the exact, engine-replayable form (float centroid = sum_q/(scale*n)).
+    the exact, engine-replayable form (float centroid =
+    sum_q/(QUANT_SCALE*n)).
     Clusters that lose all members drop out (deterministically), matching
     the SQL oracle's unrolled iteration chain.
 
@@ -136,12 +122,12 @@ def kmeans_train(
     ``similarity.ivf_topk`` as its coarse quantizer.
     """
     qvec = F.expr(
-        f"transform({vec_col}, v -> CAST(floor(CAST(v AS DOUBLE) * {scale}) AS BIGINT))"
+        f"transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * {QUANT_SCALE}) AS BIGINT))"
     )
     # NULL vectors train nothing (and a NULL seed would break the
     # centroid literals) — excluded like every other vector consumer
-    quant = embeddings.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("vec_id"), qvec.alias("qvec")
+    quant = embeddings.filter(F.col("embedding").isNotNull()).select(
+        "vec_id", qvec.alias("qvec")
     )
     # guarded repartition (the byte-small-file trap): Spark splits scans
     # by bytes, so a small parquet parks the whole per-row distance fold
@@ -238,12 +224,7 @@ def kmeans_train(
                         "sum_q", "n_vecs")
 
 
-def quantize_int8(
-    embeddings: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def quantize_int8(embeddings: DataFrame) -> DataFrame:
     """Per-vector symmetric int8 post-training quantization: each vector's
     scale is its abs-max component, components map to
     ``floor(x * 127 / amax + 0.5)`` ∈ [-127, 127] (half-up via the floor
@@ -259,12 +240,12 @@ def quantize_int8(
     no Python; quantizing 100 TB of vectors is a map-only job.
     """
     amax = F.expr(
-        f"array_max(transform({vec_col}, v -> abs(CAST(v AS DOUBLE))))"
+        "array_max(transform(embedding, v -> abs(CAST(v AS DOUBLE))))"
     )
     rows = embeddings.select(
-        F.col(id_col).alias("vec_id"),
+        "vec_id",
         amax.alias("__amax"),
-        F.posexplode(vec_col).alias("pos", "__x"),
+        F.posexplode("embedding").alias("pos", "__x"),
     )
     return rows.select(
         "vec_id",

@@ -171,10 +171,11 @@ class BroadcastHub:
       deleted (Workers KV TTL): reads and writes see "not found".
     """
 
-    def __init__(self, spark, base_dir: str, expiry_ms: int = 24 * 3600 * 1000) -> None:
+    EXPIRY_MS = 24 * 3600 * 1000  # lib.rs:110
+
+    def __init__(self, spark, base_dir: str) -> None:
         self.spark = spark
         self.base_dir = base_dir
-        self.expiry_ms = expiry_ms
 
     def _now_ms(self) -> int:
         return int(time.time() * 1000)
@@ -225,7 +226,7 @@ class BroadcastHub:
         if manifest is None:
             minted = str(uuid.uuid4())
             tokens[broadcast_id] = minted
-            since, expiration, tok = 0, now + self.expiry_ms, minted
+            since, expiration, tok = 0, now + self.EXPIRY_MS, minted
         else:
             presented = token or tokens.get(broadcast_id)
             if presented != manifest["token"]:
@@ -306,10 +307,10 @@ class BroadcastHub:
             imported += 1
         return imported
 
-    def list_broadcasts(self, exported_id: str, now: int | None = None) -> list[dict]:
+    def list_broadcasts(self, exported_id: str) -> list[dict]:
         """Non-expired broadcasts whose exported set contains the id
         (index.rs:88-112)."""
-        now = now or self._now_ms()
+        now = self._now_ms()
         out = []
         if not os.path.isdir(self.base_dir):
             return out

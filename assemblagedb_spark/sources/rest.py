@@ -50,10 +50,10 @@ _EXPIRY_S = 60 * 60 * 24
 class _Kv:
     """Workers-KV-shaped store: values disappear once their TTL passes."""
 
-    def __init__(self, clock=time.time) -> None:
+    def __init__(self) -> None:
         self._d: dict[str, tuple[bytes, float]] = {}
         self._lock = threading.Lock()
-        self.clock = clock
+        self.clock = time.time
 
     def put(self, key: str, value: bytes, expiration: float) -> None:
         with self._lock:
@@ -71,8 +71,8 @@ class _Kv:
 class BroadcastRestService:
     """In-process broadcast service; ``base_url`` after :meth:`start`."""
 
-    def __init__(self, clock=time.time) -> None:
-        self.kv = _Kv(clock)
+    def __init__(self) -> None:
+        self.kv = _Kv()
         self._httpd: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
 

@@ -58,8 +58,8 @@ def load_tables(spark: SparkSession, sf_dir: str, names=TABLES) -> dict[str, Dat
     return {n: load_table(spark, sf_dir, n) for n in names}
 
 
-def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:
-    for n in names:
+def register_views(spark: SparkSession, sf_dir: str) -> None:
+    for n in TABLES:
         load_table(spark, sf_dir, n).createOrReplaceTempView(n)
 
 

@@ -10,7 +10,7 @@ previously stored code).
 
 All three steps — coarse-cell assignment (matmul + lexsort against the
 k × dim centroid matrix, the `similarity._nearest_cells` math), integer
-residualization (floor(v·scale) − ccent[cell]), and PQ encoding
+residualization (floor(v·QUANT_SCALE) − ccent[cell]), and PQ encoding
 (`pq.pq_encode_arrow`'s vectorized argmin) — run in ONE fused Arrow
 kernel per micro-batch, a stateless projection with the trained states
 riding in the task closure: no join, no aggregate, no exchange.
@@ -34,6 +34,7 @@ from assemblagedb_spark.operators.pq import (
     _codebook_matrices,
 )
 from assemblagedb_spark.operators.similarity import centroid_matrix
+from assemblagedb_spark.operators.vectors import QUANT_SCALE
 
 
 def ivfpq_ingest(
@@ -43,9 +44,6 @@ def ivfpq_ingest(
     *,
     m: int = 8,
     sub_dim: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 1000,
 ) -> DataFrame:
     """(vec_id, subspace, code, cell) RESIDUAL inverted-list rows for
     every arriving vector — assign the coarse cell, residualize against
@@ -66,14 +64,14 @@ def ivfpq_ingest(
     # encode matrices (an eager count() job here would block the
     # streaming setup path for information the literal already carries)
     cb = _codebook_literal(codebook)
-    id_type = stream.schema[id_col].dataType.simpleString()
+    id_type = stream.schema["vec_id"].dataType.simpleString()
     out_schema = f"vec_id {id_type}, subspace long, code long, cell long"
     if not cb:
         # NEVER-trained states (empty offline corpus): nothing can be
         # encoded or cell-assigned — an empty streaming projection with
         # the output schema (still a stream transformation, append-safe)
         return stream.select(
-            F.col(id_col).alias("vec_id"),
+            "vec_id",
             F.lit(None).cast("long").alias("subspace"),
             F.lit(None).cast("long").alias("code"),
             F.lit(None).cast("long").alias("cell"),
@@ -86,8 +84,8 @@ def ivfpq_ingest(
     labs, mats = _codebook_matrices(cb, m)
     # ONE centroid collect serves both the float cosine matrix (cell
     # assignment) and the integer centroid rows (residual grid)
-    cent_ids, CM, cnorm = centroid_matrix(centroids, scale=scale)
-    CINT = np.rint(CM * scale).astype(np.int64)  # floor(sum/n) ints exact
+    cent_ids, CM, cnorm = centroid_matrix(centroids)
+    CINT = np.rint(CM * QUANT_SCALE).astype(np.int64)  # floor(sum/n) ints exact
 
     def kernel(batches):
         for pdf in batches:
@@ -102,7 +100,7 @@ def ivfpq_ingest(
                 [np.lexsort((cent_ids, -row))[0] for row in cos]
             )  # cos desc, cell asc — similarity._nearest_cells order
             cells = cent_ids[picks]
-            R = np.floor(V * scale).astype(np.int64) - CINT[picks]
+            R = np.floor(V * QUANT_SCALE).astype(np.int64) - CINT[picks]
             codes = _argmin_codes(R, labs, mats, m, sub_dim)
             yield pd.DataFrame(
                 {
@@ -115,6 +113,6 @@ def ivfpq_ingest(
 
     # NULL vectors ingest nothing (same exclusion as the batch build) —
     # a plain filter, so the stream stays append-mode stateless
-    return stream.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__vec")
+    return stream.filter(F.col("embedding").isNotNull()).select(
+        "vec_id", F.col("embedding").alias("__vec")
     ).mapInPandas(kernel, out_schema)

@@ -34,7 +34,6 @@ class RollupStore:
         spark: SparkSession,
         *,
         bucket_ns: Sequence[tuple[str, int]],
-        group_cols: Sequence[str] = ("event_type",),
     ):
         for _, ns in bucket_ns[1:]:
             if ns % bucket_ns[0][1] != 0:
@@ -43,18 +42,17 @@ class RollupStore:
                 )
         self.spark = spark
         self.bucket_ns = list(bucket_ns)
-        self.group_cols = list(group_cols)
         self._fine: DataFrame | None = None
 
     def merge(self, batch_fine: DataFrame) -> None:
-        """Fold a micro-batch's finest-level (bucket_start, *group, n,
+        """Fold a micro-batch's finest-level (bucket_start, event_type, n,
         sum_value) rows into the stored state with key-wise SUM."""
         if self._fine is None:
             merged = batch_fine
         else:
             merged = (
                 self._fine.unionByName(batch_fine)
-                .groupBy("bucket_start", *self.group_cols)
+                .groupBy("bucket_start", "event_type")
                 .agg(
                     F.sum("n").cast("long").alias("n"),
                     F.sum("sum_value").cast("long").alias("sum_value"),
@@ -77,7 +75,7 @@ class RollupStore:
                     F.col("bucket_start")
                     - F.pmod(F.col("bucket_start"), F.lit(ns)),
                 )
-                .groupBy("bucket_start", *self.group_cols)
+                .groupBy("bucket_start", "event_type")
                 .agg(
                     F.sum("n").cast("long").alias("n"),
                     F.sum("sum_value").cast("long").alias("sum_value"),
@@ -85,16 +83,11 @@ class RollupStore:
             )
             out = out.unionByName(prev.withColumn("level", F.lit(name)))
         return out.select(
-            "level", "bucket_start", *self.group_cols, "n", "sum_value"
+            "level", "bucket_start", "event_type", "n", "sum_value"
         )
 
 
-def rollup_sink(
-    store: RollupStore,
-    value: Column,
-    *,
-    ts_col: str = "ts",
-):
+def rollup_sink(store: RollupStore, value: Column):
     """foreachBatch function maintaining the cascade over a stream:
     ``stream.writeStream.foreachBatch(rollup_sink(store, F.lit(1)))``."""
 
@@ -103,10 +96,10 @@ def rollup_sink(
         fine = (
             batch_df.withColumn(
                 "bucket_start",
-                F.col(ts_col).cast("long")
-                - F.pmod(F.col(ts_col).cast("long"), F.lit(ns0)),
+                F.col("ts").cast("long")
+                - F.pmod(F.col("ts").cast("long"), F.lit(ns0)),
             )
-            .groupBy("bucket_start", *store.group_cols)
+            .groupBy("bucket_start", "event_type")
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n"),
                 F.sum(value).cast("long").alias("sum_value"),

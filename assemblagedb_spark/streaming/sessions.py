@@ -49,7 +49,7 @@ STATE_SCHEMA = StructType(
 )
 
 
-def _session_fn(gap: int, timeout_ms: int | None):
+def _session_fn(gap: int):
     def fn(
         key: tuple,
         pdfs: Iterable[pd.DataFrame],
@@ -57,13 +57,6 @@ def _session_fn(gap: int, timeout_ms: int | None):
     ) -> Iterator[pd.DataFrame]:
         (user_id,) = key
         closed: list[tuple[Any, ...]] = []
-        if state.hasTimedOut:
-            if state.exists:
-                idx, start, end, cnt = state.get
-                closed.append((user_id, idx, cnt, start, end))
-                state.remove()
-            yield pd.DataFrame(closed, columns=[f.name for f in OUTPUT_SCHEMA])
-            return
         if state.exists:
             idx, start, end, cnt = state.get
         else:
@@ -81,33 +74,22 @@ def _session_fn(gap: int, timeout_ms: int | None):
                 end, cnt = t, cnt + 1
         if start is not None:
             state.update((idx, start, end, cnt))
-            if timeout_ms is not None:
-                # close the open session once the gap passes in proc time
-                state.setTimeoutDuration(timeout_ms)
         yield pd.DataFrame(closed, columns=[f.name for f in OUTPUT_SCHEMA])
 
     return fn
 
 
-def sessionize_stream(
-    events: DataFrame, *, gap: int, timeout_ms: int | None = None
-) -> DataFrame:
+def sessionize_stream(events: DataFrame, *, gap: int) -> DataFrame:
     """events(user_id, event_id, ts[ns]) stream -> closed sessions stream.
 
     Emits (user_id, session_idx, n_events, start_ts, end_ts) in append mode;
     the open session per key lives in the state store until a later event
-    closes it — or, with ``timeout_ms``, until that much processing time
-    passes with no events for the key (the production finalizer; leave it
-    off for deterministic drains and close open sessions downstream).
+    closes it (deterministic drains close open sessions downstream).
     """
     return events.groupBy("user_id").applyInPandasWithState(
-        _session_fn(gap, timeout_ms),
+        _session_fn(gap),
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if timeout_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )

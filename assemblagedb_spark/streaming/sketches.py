@@ -21,15 +21,14 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
 class SketchStore:
-    """In-memory (or parquet-backed) merge target for streaming sketches.
+    """In-memory merge target for streaming sketches.
 
     ``merge_hll`` is idempotence-friendly: replaying a batch can only
     re-assert the same MAX (HLL is replay-safe).
     """
 
-    def __init__(self, spark: SparkSession, path: str | None = None):
+    def __init__(self, spark: SparkSession):
         self.spark = spark
-        self.path = path
         self._hll: DataFrame | None = None
 
     def merge_hll(self, batch_regs: DataFrame) -> None:
@@ -59,7 +58,6 @@ def hll_sink(
     group_cols: list[str] | None = None,
     *,
     m: int = 256,
-    seed: int = 0,
 ):
     """foreachBatch function maintaining HLL registers over a stream:
     ``stream.writeStream.foreachBatch(hll_sink(store, "user_id", ...))``."""
@@ -67,7 +65,7 @@ def hll_sink(
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         store.merge_hll(
-            hll_registers(batch_df, key_col, group_cols, m=m, seed=seed)
+            hll_registers(batch_df, key_col, group_cols, m=m)
         )
 
     return sink

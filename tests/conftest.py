@@ -226,6 +226,27 @@ def py_closure(edges, roots, max_depth):
 # -- Spark-vs-DuckDB gate comparison ----------------------------------------
 
 
+def jpeg_encoded(img, quality=50, *, subsample=False, progressive=False):
+    """A JPEG stream of ``img`` at a given encoder quality and chroma
+    subsampling (the codec reads both from module constants)."""
+    from unittest import mock
+
+    from assemblagedb_spark.functions import jpeg as J
+
+    with mock.patch.multiple(J, JPEG_QUALITY=quality, JPEG_SUBSAMPLE=subsample):
+        return (J.jpeg_encode_progressive if progressive else J.jpeg_encode)(img)
+
+
+def flat_gray_at(v, quality):
+    """``flat_gray_roundtrip_value(v)`` at encoder quality ``quality``."""
+    from unittest import mock
+
+    from assemblagedb_spark.functions import jpeg as J
+
+    with mock.patch.object(J, "JPEG_QUALITY", quality):
+        return J.flat_gray_roundtrip_value(v)
+
+
 def assert_matches_oracle(spark, sf_dir: str, name: str) -> None:
     """Run gate ``name`` on Spark and its DuckDB oracle over the parquet
     tables in ``sf_dir`` and compare the normalized frames by value."""

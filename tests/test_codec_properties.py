@@ -13,13 +13,9 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from assemblagedb_spark.functions.gif import gif_decode, gif_encode, lzw_decode, lzw_encode
-from assemblagedb_spark.functions.jpeg import (
-    flat_gray_roundtrip_value,
-    jpeg_decode,
-    jpeg_encode,
-    jpeg_encode_progressive,
-)
+from assemblagedb_spark.functions.jpeg import jpeg_decode
 from assemblagedb_spark.functions.y4m import y4m_decode, y4m_encode
+from tests.conftest import flat_gray_at, jpeg_encoded
 
 _settings = settings(
     max_examples=150, suppress_health_check=[HealthCheck.too_slow], deadline=None
@@ -88,8 +84,8 @@ def test_progressive_decode_equals_baseline_property(h, w, color, quality, seed)
     rng = np.random.RandomState(seed)
     shape = (h, w, 3) if color else (h, w)
     img = rng.randint(0, 256, size=shape, dtype=np.uint8)
-    base = jpeg_decode(jpeg_encode(img, quality=quality))
-    prog = jpeg_decode(jpeg_encode_progressive(img, quality=quality))
+    base = jpeg_decode(jpeg_encoded(img, quality))
+    prog = jpeg_decode(jpeg_encoded(img, quality, progressive=True))
     assert (base == prog).all()
 
 
@@ -100,8 +96,8 @@ def test_progressive_decode_equals_baseline_property(h, w, color, quality, seed)
 @_settings
 def test_flat_field_closed_form_property(v, quality):
     img = np.full((8, 8), v, dtype=np.uint8)
-    out = jpeg_decode(jpeg_encode(img, quality=quality))
-    assert (out == flat_gray_roundtrip_value(v, quality=quality)).all()
+    out = jpeg_decode(jpeg_encoded(img, quality))
+    assert (out == flat_gray_at(v, quality)).all()
 
 
 @given(

@@ -249,12 +249,12 @@ def test_display_class_resolution(spark):
     assert py_display_class(rows, max_iter=8) == want
     got = {
         r["node_id"]: r["display_class"]
-        for r in display_class(nodes, max_iter=8).collect()
+        for r in display_class(nodes).collect()
     }
     assert got == want
 
 
-def test_display_class_matches_chase_reference_on_functional_graph(spark):
+def test_display_class_matches_chase_reference_on_functional_graph(spark, monkeypatch):
     # pseudo-random functional graph with long wrapper runs and cycles:
     # pointer doubling must agree with the literal chase at every bound,
     # including non-power-of-two bounds (exact binary decomposition)
@@ -268,11 +268,13 @@ def test_display_class_matches_chase_reference_on_functional_graph(spark):
         for i in range(n)
     ]
     nodes = spark.createDataFrame(rows, "node_id string, kind string, child_id string")
+    from assemblagedb_spark.operators import traversal
     from assemblagedb_spark.operators.traversal import display_class
 
     for bound in (1, 3, 8):
+        monkeypatch.setattr(traversal, "DISPLAY_CLASS_DEPTH", bound)
         got = {
             r["node_id"]: r["display_class"]
-            for r in display_class(nodes, max_iter=bound).collect()
+            for r in display_class(nodes).collect()
         }
         assert got == py_display_class(rows, max_iter=bound), bound

@@ -223,11 +223,12 @@ def test_broadcast_token_auth(spark, tmp_path):
     assert listed and all("token" not in m for m in listed)
 
 
-def test_broadcast_expiry(spark, tmp_path):
+def test_broadcast_expiry(spark, tmp_path, monkeypatch):
     # lib.rs:110: expiration fixed at creation (+expiry); expired broadcasts
     # read as deleted (KV TTL), and re-publish after expiry mints a fresh
     # broadcast lifetime + token
-    hub = BroadcastHub(spark, str(tmp_path / "bc"), expiry_ms=1)
+    monkeypatch.setattr(BroadcastHub, "EXPIRY_MS", 1)
+    hub = BroadcastHub(spark, str(tmp_path / "bc"))
     db = AssemblageDb(spark)
     page, chain, nested = build_exportable(db)
     m1 = hub.publish(db, "b1", page)
@@ -245,7 +246,7 @@ def test_broadcast_expiry(spark, tmp_path):
         hub.fetch(db2, "b1")
 
     # expired entry is gone -> publish recreates with a fresh token/lifetime
-    hub.expiry_ms = 24 * 3600 * 1000
+    monkeypatch.setattr(BroadcastHub, "EXPIRY_MS", 24 * 3600 * 1000)
     m2 = hub.publish(db, "b1", page)
     assert m2["token"] != m1["token"]
     assert m2["expiration"] > m1["expiration"]

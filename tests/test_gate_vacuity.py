@@ -319,8 +319,8 @@ def test_simhash_candidate_stage_not_vacuous(spark, sf_dir):
     )
 
     docs = h.load_table(spark, sf_dir, "documents")
-    fp = simhash_fingerprints(docs, bits=32)
-    cand = simhash_band_candidates(fp, bands=5, bits=32)
+    fp = simhash_fingerprints(docs)
+    cand = simhash_band_candidates(fp, bands=5)
     assert cand.count() >= 20
     assert _rows(spark, sf_dir, "dedup_simhash_pairs") >= 1
 

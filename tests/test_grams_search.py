@@ -9,8 +9,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from assemblagedb_spark.functions.core import index_text, trim_for_search
-from assemblagedb_spark.operators.grams import block_grams, gram_counts, grams_array
+from assemblagedb_spark.functions.core import index_text, spark_grams_array_expr, trim_for_search
+from assemblagedb_spark.operators.grams import block_grams, gram_counts
 from assemblagedb_spark.operators.search import find, search
 
 
@@ -45,7 +45,7 @@ def test_spark_grams_match_driver_index_text(spark):
     df = blocks_df(spark, [(f"n{i}", t) for i, t in enumerate(texts)])
     got = {
         r["node_id"]: r["g"]
-        for r in df.select("node_id", grams_array("text").alias("g")).collect()
+        for r in df.select("node_id", F.expr(spark_grams_array_expr("text")).alias("g")).collect()
     }
     for i, t in enumerate(texts):
         assert got[f"n{i}"] == index_text(t), t
@@ -236,8 +236,10 @@ def test_merge_overlaps_equals_full_recompute_after_edit(spark):
     assert recomputed != stale
 
 
-def test_overlap_pairs_sparse_guard_returns_none(spark):
+def test_overlap_pairs_sparse_guard_returns_none(spark, monkeypatch):
+    from assemblagedb_spark.operators import overlaps
     from assemblagedb_spark.operators.overlaps import overlap_pairs_sparse
 
+    monkeypatch.setattr(overlaps, "MAX_SPARSE_NNZ", 1)
     g = block_grams(blocks_df(spark, [("a", "foo"), ("b", "bar")]))
-    assert overlap_pairs_sparse(g, max_sparse_nnz=1) is None
+    assert overlap_pairs_sparse(g) is None

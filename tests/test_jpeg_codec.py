@@ -33,6 +33,7 @@ from assemblagedb_spark.functions.jpeg import (
     jpeg_encode,
     quality_scale,
 )
+from tests.conftest import flat_gray_at, jpeg_encoded
 
 
 # ---------------------------------------------------------------------------
@@ -45,8 +46,8 @@ def test_flat_gray_matches_closed_form(quality):
     # every value class: extremes, mid, both rounding parities
     for v in [0, 1, 37, 127, 128, 129, 200, 254, 255]:
         img = np.full((24, 16), v, dtype=np.uint8)
-        out = jpeg_decode(jpeg_encode(img, quality=quality))
-        expect = flat_gray_roundtrip_value(v, quality=quality)
+        out = jpeg_decode(jpeg_encoded(img, quality))
+        expect = flat_gray_at(v, quality)
         assert out.shape == (24, 16)
         assert (out == expect).all(), (v, quality, np.unique(out), expect)
 
@@ -119,7 +120,7 @@ def _error_ceiling(quality: int) -> float:
 def test_random_gray_roundtrip_within_quant_bound(quality):
     rng = np.random.RandomState(42)
     img = rng.randint(0, 256, size=(40, 56), dtype=np.uint8)
-    out = jpeg_decode(jpeg_encode(img, quality=quality))
+    out = jpeg_decode(jpeg_encoded(img, quality))
     assert out.shape == img.shape
     err = np.abs(out.astype(np.int64) - img.astype(np.int64)).max()
     assert err <= _error_ceiling(quality), (err, _error_ceiling(quality))
@@ -130,7 +131,7 @@ def test_smooth_gradient_high_quality_is_close():
     # gross scaling errors the analytic ceiling would let through
     y, x = np.mgrid[0:32, 0:32]
     img = ((x * 3 + y * 2) % 200 // 4 + 20).astype(np.uint8)
-    out = jpeg_decode(jpeg_encode(img, quality=95))
+    out = jpeg_decode(jpeg_encoded(img, 95))
     err = np.abs(out.astype(np.int64) - img.astype(np.int64))
     assert err.mean() < 3.0 and err.max() <= 20
 
@@ -138,7 +139,7 @@ def test_smooth_gradient_high_quality_is_close():
 def test_rgb_roundtrip_flat_color_and_shape():
     img = np.zeros((16, 16, 3), dtype=np.uint8)
     img[..., 0], img[..., 1], img[..., 2] = 200, 80, 40
-    out = jpeg_decode(jpeg_encode(img, quality=90))
+    out = jpeg_decode(jpeg_encoded(img, 90))
     assert out.shape == (16, 16, 3)
     err = np.abs(out.astype(np.int64) - img.astype(np.int64)).max()
     assert err <= 6  # color transform rounding + DC quantization only
@@ -188,7 +189,7 @@ def test_byte_stuffing_and_restart_reader():
     # probe with many blocks to make raw 0xFF output bytes likely
     rng = np.random.RandomState(3)
     img = rng.randint(0, 256, size=(64, 64), dtype=np.uint8)
-    payload = jpeg_encode(img, quality=10)  # coarse -> dense 1-bits
+    payload = jpeg_encoded(img, 10)  # coarse -> dense 1-bits
     body = payload[2:-2]
     # every 0xFF in the entropy segment must be followed by 0x00 or a marker
     sos = body.find(b"\xff\xda")
@@ -260,7 +261,7 @@ def test_restart_markers_decode_with_predictor_reset():
     img = rng.randint(0, 256, size=(16, 40), dtype=np.uint8)
     assert (
         jpeg_decode(_build_rst_stream(img, 3))
-        == jpeg_decode(jpeg_encode(img, quality=50))
+        == jpeg_decode(jpeg_encode(img))
     ).all()
 
 
@@ -273,8 +274,8 @@ def test_jpeg_resize_transform_pure_path():
 
     v = 90
     img = np.full((24, 24), v, dtype=np.uint8)
-    once = jpeg_decode(jpeg_encode(img, quality=50))
-    resized = jpeg_encode(resize_nearest(once, width=16, height=16), quality=50)
+    once = jpeg_decode(jpeg_encode(img))
+    resized = jpeg_encode(resize_nearest(once, width=16, height=16))
     out = jpeg_decode(resized)
     assert out.shape == (16, 16)
     # f is idempotent on its own fixed points: f(f(v)) == f(v)
@@ -293,7 +294,7 @@ def test_420_flat_color_tight():
     # and color-transform rounding remain
     img = np.zeros((20, 28, 3), dtype=np.uint8)
     img[...] = (200, 80, 40)
-    out = jpeg_decode(jpeg_encode(img, quality=90, subsample=True))
+    out = jpeg_decode(jpeg_encoded(img, 90, subsample=True))
     assert out.shape == (20, 28, 3)
     assert np.abs(out.astype(int) - img.astype(int)).max() <= 6
 
@@ -304,13 +305,13 @@ def test_420_smooth_image_close_and_odd_dims_crop():
         [(xx * 2 + 10) % 200 + 20, (yy * 3) % 180 + 30, (xx + yy) % 150 + 50],
         -1,
     ).astype(np.uint8)
-    out = jpeg_decode(jpeg_encode(smooth, quality=95, subsample=True))
+    out = jpeg_decode(jpeg_encoded(smooth, 95, subsample=True))
     err = np.abs(out.astype(int) - smooth.astype(int))
     assert err.mean() < 8
     # odd dims exercise the 16-multiple padding + final crop
     rng = np.random.RandomState(9)
     img = rng.randint(0, 256, size=(17, 19, 3), dtype=np.uint8)
-    assert jpeg_decode(jpeg_encode(img, subsample=True)).shape == (17, 19, 3)
+    assert jpeg_decode(jpeg_encoded(img, subsample=True)).shape == (17, 19, 3)
 
 
 def test_420_mcu_interleave_is_positionally_correct():
@@ -321,7 +322,7 @@ def test_420_mcu_interleave_is_positionally_correct():
     img[:16, 16:] = (10, 250, 10)
     img[16:, :16] = (10, 10, 250)
     img[16:, 16:] = (240, 240, 20)
-    out = jpeg_decode(jpeg_encode(img, quality=90, subsample=True))
+    out = jpeg_decode(jpeg_encoded(img, 90, subsample=True))
     for sl, color in [
         ((slice(2, 14), slice(2, 14)), (250, 10, 10)),
         ((slice(2, 14), slice(18, 30)), (10, 250, 10)),
@@ -359,28 +360,24 @@ def test_420_restart_markers_via_dri():
      ((16, 16, 3), 50), ((9, 7, 3), 75), ((48, 32, 3), 95)],
 )
 def test_progressive_decode_equals_baseline(shape, quality):
-    from assemblagedb_spark.functions.jpeg import jpeg_encode_progressive
-
     rng = np.random.RandomState(sum(shape) + quality)
     img = rng.randint(0, 256, size=shape, dtype=np.uint8)
-    base = jpeg_decode(jpeg_encode(img, quality=quality))
-    prog = jpeg_decode(jpeg_encode_progressive(img, quality=quality))
+    base = jpeg_decode(jpeg_encoded(img, quality))
+    prog = jpeg_decode(jpeg_encoded(img, quality, progressive=True))
     assert (base == prog).all()
 
 
 def test_progressive_fuzz_small_images():
     # the AC refinement bit-sequencing (ZRL spans, buffered correction
     # bits, EOB folding) has many interacting paths — fuzz them
-    from assemblagedb_spark.functions.jpeg import jpeg_encode_progressive
-
     rng = np.random.RandomState(77)
     for _ in range(25):
         hh, ww = rng.randint(1, 40), rng.randint(1, 40)
         shape = (hh, ww) if rng.randint(2) == 0 else (hh, ww, 3)
         q = int(rng.choice([10, 25, 50, 75, 90, 95]))
         img = rng.randint(0, 256, size=shape, dtype=np.uint8)
-        b = jpeg_decode(jpeg_encode(img, quality=q))
-        p = jpeg_decode(jpeg_encode_progressive(img, quality=q))
+        b = jpeg_decode(jpeg_encoded(img, q))
+        p = jpeg_decode(jpeg_encoded(img, q, progressive=True))
         assert (b == p).all(), (shape, q)
 
 

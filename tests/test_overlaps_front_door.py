@@ -19,12 +19,32 @@ import pytest
 from pyspark.sql import functions as F
 
 from assemblagedb_spark import harness as h
+from assemblagedb_spark.operators import overlaps
 from assemblagedb_spark.operators.overlaps import (
     overlap_pairs,
     overlap_pairs_prefix,
     overlap_pairs_sparse,
     store_overlaps,
 )
+
+# the kernel store_overlaps falls back to, by route
+FALLBACKS = {"overlap_pairs_prefix": "prefix", "overlap_pairs": "sparse-incremental"}
+
+
+def _routed(monkeypatch, *args, budget=None, **kwargs):
+    """(store_overlaps(*args, **kwargs), the route it took) with the
+    broadcast budget ``MAX_SPARSE_NNZ`` set to ``budget``; the route is
+    read from which fallback kernel store_overlaps called."""
+    taken = ["sparse"]
+    with monkeypatch.context() as m:
+        if budget is not None:
+            m.setattr(overlaps, "MAX_SPARSE_NNZ", budget)
+        for name, route in FALLBACKS.items():
+            kernel = getattr(overlaps, name)
+            m.setattr(overlaps, name,
+                      lambda *a, _k=kernel, _r=route, **kw: taken.append(_r) or _k(*a, **kw))
+        out = store_overlaps(*args, **kwargs)
+    return out, taken[-1]
 
 
 def _frame(df):
@@ -43,17 +63,12 @@ def grams(spark, sf_dir):
     yield g
 
 
-def test_route_invariance(spark, grams):
+def test_route_invariance(spark, grams, monkeypatch):
     counts = h.gram_counts(grams)
     routes = {}
     frames = {}
-    for name, kwargs in (
-        ("sparse", {}),
-        ("prefix", {"max_sparse_nnz": 0}),
-    ):
-        disp = {}
-        out = store_overlaps(grams, counts, dispatch_out=disp, **kwargs)
-        routes[name] = disp["route"]
+    for name, budget in (("sparse", None), ("prefix", 0)):
+        out, routes[name] = _routed(monkeypatch, grams, counts, budget=budget)
         frames[name] = _frame(out)
     assert routes == {"sparse": "sparse", "prefix": "prefix"}
     assert len(frames["sparse"]) > 0, "vacuous fixture: no overlapping pairs"
@@ -67,25 +82,19 @@ def test_route_invariance(spark, grams):
     pd.testing.assert_frame_equal(frames["sparse"], naive)
 
 
-def test_route_invariance_changed(spark, grams):
+def test_route_invariance_changed(spark, grams, monkeypatch):
     counts = h.gram_counts(grams)
     changed = grams.select("node_id").filter(F.col("node_id") % 20 == 0).distinct()
     outs = {}
-    for name, kwargs in (
-        ("sparse", {}),
-        ("sparse-incremental", {"max_sparse_nnz": 0}),
-    ):
-        disp = {}
-        out = store_overlaps(
-            grams, counts, changed=changed, dispatch_out=disp, **kwargs
-        )
-        assert disp["route"] == name
+    for name, budget in (("sparse", None), ("sparse-incremental", 0)):
+        out, route = _routed(monkeypatch, grams, counts, changed=changed, budget=budget)
+        assert route == name
         outs[name] = _frame(out)
     assert len(outs["sparse"]) > 0
     pd.testing.assert_frame_equal(outs["sparse"], outs["sparse-incremental"])
 
 
-def test_exclusion_applied_on_every_route(spark, grams):
+def test_exclusion_applied_on_every_route(spark, grams, monkeypatch):
     # exclusion is ORIENTATION-EXACT and route-invariant: excluding one
     # (src, dst) removes exactly that orientation on every route — the
     # mirror row survives (the kernels differ in which orientation they
@@ -98,13 +107,13 @@ def test_exclusion_applied_on_every_route(spark, grams):
     s, d = one[0]["src_id"], one[0]["dst_id"]
     excl = spark.createDataFrame([(s, d)], "src_id long, dst_id long")
     mirror = spark.createDataFrame([(d, s)], "src_id long, dst_id long")
-    for kwargs in ({}, {"max_sparse_nnz": 0}):
-        out = store_overlaps(grams, counts, excluded_pairs=excl, **kwargs)
+    for budget in (None, 0):
+        out, _ = _routed(monkeypatch, grams, counts, excluded_pairs=excl, budget=budget)
         assert out.join(excl, ["src_id", "dst_id"]).count() == 0
         assert out.join(mirror, ["src_id", "dst_id"]).count() == 1
 
 
-def test_changed_exclusion_is_route_invariant(spark, grams):
+def test_changed_exclusion_is_route_invariant(spark, grams, monkeypatch):
     # the post-kernel exclusion on the incremental path: with a changed
     # set, exclusion must stay orientation-exact and the result equal on
     # every route that accepts a changed set
@@ -119,13 +128,11 @@ def test_changed_exclusion_is_route_invariant(spark, grams):
     s, d = one[0]["src_id"], one[0]["dst_id"]
     excl = spark.createDataFrame([(s, d)], "src_id long, dst_id long")
     frames = {}
-    for name, kwargs in (
-        ("sparse", {}),
-        ("sparse-incremental", {"max_sparse_nnz": 0}),
-    ):
-        out = store_overlaps(
-            grams, counts, changed=changed, excluded_pairs=excl, **kwargs,
+    for name, budget in (("sparse", None), ("sparse-incremental", 0)):
+        out, route = _routed(
+            monkeypatch, grams, counts, changed=changed, excluded_pairs=excl, budget=budget,
         )
+        assert route == name
         rows = out.collect()
         assert all((r["src_id"], r["dst_id"]) != (s, d) for r in rows), name
         assert any((r["src_id"], r["dst_id"]) == (d, s) for r in rows), name
@@ -159,7 +166,7 @@ def test_sparse_kernel_multiset_exactness(spark):
     assert set(pf) == set(got)
 
 
-def test_dispatcher_budget_is_density_not_rowcount(spark, grams):
+def test_dispatcher_budget_is_density_not_rowcount(spark, grams, monkeypatch):
     # the broadcast budget counts EXPANDED (gram, copy) elements, not
     # postings rows: the SAME postings with the budget one element below
     # the fixture's footprint must route away from the kernel, and at the
@@ -168,9 +175,5 @@ def test_dispatcher_budget_is_density_not_rowcount(spark, grams):
     counts = h.gram_counts(grams)
     expanded = grams.agg(F.sum("occurrences").alias("n")).collect()[0]["n"]
     assert expanded > grams.count(), "vacuous fixture: no repeated gram"
-    disp = {}
-    store_overlaps(grams, counts, max_sparse_nnz=expanded - 1, dispatch_out=disp)
-    assert disp["route"] == "prefix"
-    disp2 = {}
-    store_overlaps(grams, counts, max_sparse_nnz=expanded, dispatch_out=disp2)
-    assert disp2["route"] == "sparse"
+    assert _routed(monkeypatch, grams, counts, budget=expanded - 1)[1] == "prefix"
+    assert _routed(monkeypatch, grams, counts, budget=expanded)[1] == "sparse"

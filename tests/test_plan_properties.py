@@ -155,11 +155,11 @@ def test_decontam_broadcasts_benchmark_grams(spark, sf_dir):
 def test_select_budget_avoids_single_partition_sort(spark, sf_dir):
     # the two-phase prefix must range-partition, never collapse the
     # relation into one task the way a global Window.orderBy would. The
-    # local-prefix stage is normally localCheckpoint-ed (cache-leak fix),
-    # which truncates the visible plan — pin=False (a per-call kwarg, no
-    # module-global mutation) keeps the full two-phase plan inspectable
-    # on the same harness inputs the gated query uses.
-    from assemblagedb_spark.operators.selection import select_token_budget
+    # local-prefix stage is localCheckpoint-ed (cache-leak fix), which
+    # truncates the visible plan, so this reads the lazy stage it pins,
+    # in select_token_budget's order, on the same harness inputs the gated
+    # query uses.
+    from assemblagedb_spark.operators.selection import _local_prefix
     from assemblagedb_spark.operators.textstats import token_stats
     from pyspark.sql import functions as F
 
@@ -168,7 +168,9 @@ def test_select_budget_avoids_single_partition_sort(spark, sf_dir):
         F.col("n_tokens"),
         F.col("n_distinct_tokens").alias("score"),
     )
-    plan = formatted_plan(select_token_budget(stats, 10_000, pin=False))
+    order = [F.col("score").desc(), F.col("doc_id").asc()]
+    plan = formatted_plan(_local_prefix(
+        stats, order, F.col("n_tokens"), spark.sparkContext.defaultParallelism))
     assert "rangepartitioning" in plan.lower()
     assert "singlepartition" not in plan.lower()
 
@@ -406,12 +408,12 @@ def test_prefix_candidates_spread_before_verify(spark, sf_dir):
     # into the distinct's identical exchange whenever the partition
     # counts match, and AQE never coalesces an explicit numPartitions.
     # The gate's own returned frame is the post-checkpoint mirror (its
-    # plan is just the ExistingRDD union), so pin the live pipeline via
-    # both_directions=False.
-    from assemblagedb_spark.operators.overlaps import overlap_pairs_prefix
+    # plan is just the ExistingRDD union), so pin the live pipeline before
+    # its mirror pass.
+    from assemblagedb_spark.operators.overlaps import _prefix_half
 
     g = h._doc_gram_index(spark, sf_dir).filter(F.col("node_id") % 20 == 0)
-    plan = formatted_plan(overlap_pairs_prefix(g, both_directions=False))
+    plan = formatted_plan(_prefix_half(g, None))
     assert "REPARTITION_BY_NUM" in plan, plan
     assert "roundrobinpartitioning" in plan.lower(), plan
 
@@ -445,5 +447,5 @@ def test_ivf_probe_kernel_evaluated_once_per_side(spark, sf_dir):
 
     emb = h.load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    plan = formatted_plan(ivf_topk(emb, queries, k=10, nlist=16, nprobe=4))
+    plan = formatted_plan(ivf_topk(emb, queries, nlist=16, nprobe=4))
     assert plan.count("cells(") == 2, plan

@@ -111,12 +111,13 @@ def test_spark_grams_equal_driver_grams(spark, texts):
     codepoint and was only correct for ASCII)."""
     from pyspark.sql import functions as F
 
-    from assemblagedb_spark.operators.grams import grams_array
+    from assemblagedb_spark.functions.core import spark_grams_array_expr
 
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "i int, text string"
     )
-    got = {r["i"]: r["g"] for r in df.select("i", grams_array("text").alias("g")).collect()}
+    got = {r["i"]: r["g"]
+           for r in df.select("i", F.expr(spark_grams_array_expr("text")).alias("g")).collect()}
     for i, t in enumerate(texts):
         assert got[i] == index_text(t), repr(t)
 
@@ -282,7 +283,7 @@ def test_simhash_matches_gate_oracle(spark):
 
     docs, want = _edge_docs_vs_oracle(spark, harness.O_DEDUP_SIMHASH)
     got = {(r["doc_id"], r["simhash"])
-           for r in simhash_fingerprints(docs, bits=32).collect()}
+           for r in simhash_fingerprints(docs).collect()}
     assert got == want and len(got) == len(_EDGE_TEXTS) - 1  # NULL: no row
 
 
@@ -309,7 +310,7 @@ def test_simhash_banding_recall_guarantee(spark, fps, bands):
     max_h = bands - 1
     cand = {
         (r["id_a"], r["id_b"])
-        for r in simhash_band_candidates(df, bits=32, bands=bands).collect()
+        for r in simhash_band_candidates(df, bands=bands).collect()
     }
     want = {
         (a, b)
@@ -322,7 +323,7 @@ def test_simhash_banding_recall_guarantee(spark, fps, bands):
     got = {
         (r["id_a"], r["id_b"])
         for r in simhash_near_pairs(
-            df, max_hamming=max_h, candidates=simhash_band_candidates(df, bits=32, bands=bands)
+            df, max_hamming=max_h, candidates=simhash_band_candidates(df, bands=bands)
         ).collect()
     }
     assert got == want
@@ -518,31 +519,31 @@ def test_packing_invariants(spark):
             total += r["n_tokens"]
 
 
-def test_hash_sampling_determinism_and_consistency(spark):
+def test_hash_sampling_determinism_and_consistency(spark, monkeypatch):
     """Hash sampling is partitioning-invariant (same keys selected at any
     repartition) and cross-table consistent (a key samples identically
     wherever it appears); stratified rates apply per stratum."""
     from pyspark.sql import functions as F
 
+    from assemblagedb_spark.operators import sampling
     from assemblagedb_spark.operators.sampling import (
         hash_sample,
         stratified_sample,
     )
 
     df = spark.range(0, 2000).withColumnRenamed("id", "doc_id")
-    a = {r["doc_id"] for r in hash_sample(df, rate_permille=100).collect()}
-    b = {
-        r["doc_id"]
-        for r in hash_sample(df.repartition(13), rate_permille=100).collect()
-    }
+    a = {r["doc_id"] for r in hash_sample(df).collect()}
+    b = {r["doc_id"] for r in hash_sample(df.repartition(13)).collect()}
     assert a == b and 120 <= len(a) <= 280  # ~10% of 2000, hash-spread
-    # nested rates: a 5% sample is a subset of the 10% sample (same seed)
-    c = {r["doc_id"] for r in hash_sample(df, rate_permille=50).collect()}
-    assert c <= a
     # cross-table consistency: the same keys survive in a different table
     other = df.withColumn("payload", F.col("doc_id") * 2)
-    d = {r["doc_id"] for r in hash_sample(other, rate_permille=100).collect()}
+    d = {r["doc_id"] for r in hash_sample(other).collect()}
     assert d == a
+    # nested rates: a 5% sample is a subset of the 10% sample (same seed)
+    monkeypatch.setattr(sampling, "BERNOULLI_PERMILLE", 50)
+    c = {r["doc_id"] for r in hash_sample(df).collect()}
+    monkeypatch.undo()
+    assert c <= a
 
     strat = df.withColumn(
         "grp", F.when(F.col("doc_id") % 2 == 0, "keep").otherwise("drop")
@@ -789,7 +790,7 @@ def test_merge_compact_keeps_latest_drops_tombstoned(spark):
 def test_register_views_enables_spark_sql(spark, sf_dir):
     from assemblagedb_spark.sources.tpch import register_views
 
-    register_views(spark, sf_dir, names=["region", "nation"])
+    register_views(spark, sf_dir)
     n = spark.sql(
         "SELECT COUNT(*) AS c FROM nation JOIN region "
         "ON n_regionkey = r_regionkey"

@@ -92,7 +92,8 @@ def test_http_expiry_reads_as_deleted():
     # fake clock: the broadcast record's TTL lapses -> 404, fetch raises;
     # episode blobs outlive the record by the 12h keep-alive (lib.rs:188)
     now = [1_000_000.0]
-    svc = BroadcastRestService(clock=lambda: now[0])
+    svc = BroadcastRestService()
+    svc.kv.clock = lambda: now[0]
     url = svc.start()
     try:
         db = AssemblageDb()

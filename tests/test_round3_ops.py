@@ -176,13 +176,12 @@ def test_rollup_cascade_matches_direct(spark):
     from assemblagedb_spark.operators.rollup import rollup_cascade
 
     rows = [(i, i % 3, (i * 7919) % 100_000_000_000) for i in range(200)]
-    ev = spark.createDataFrame(rows, "event_id long, grp long, ts long")
+    ev = spark.createDataFrame(rows, "event_id long, event_type long, ts long")
     out = rollup_cascade(
         ev, F.lit(1),
         bucket_ns=[("10s", 10_000_000_000), ("1m", 60_000_000_000)],
-        group_cols=["grp"],
     )
-    got = {(r["level"], r["bucket_start"], r["grp"]): r["n"]
+    got = {(r["level"], r["bucket_start"], r["event_type"]): r["n"]
            for r in out.collect()}
     # direct aggregation at the coarse level must equal the cascaded one
     direct = {}
@@ -198,8 +197,7 @@ def test_rollup_cascade_matches_direct(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError):
         rollup_cascade(ev, F.lit(1),
-                       bucket_ns=[("7s", 7_000_000_000), ("10s", 10_000_000_000)],
-                       group_cols=["grp"])
+                       bucket_ns=[("7s", 7_000_000_000), ("10s", 10_000_000_000)])
 
 
 def test_quantize_int8_range_and_roundtrip(spark):
@@ -380,7 +378,7 @@ def test_weighted_sample_per_row_rates(spark):
             + [(1000 + i, 0) for i in range(100)]    # never kept
             + [(2000 + i, 500) for i in range(2000)])  # ~half kept
     df = spark.createDataFrame(rows, "doc_id long, w long")
-    out = weighted_sample(df, F.col("w"), key_col="doc_id")
+    out = weighted_sample(df, F.col("w"))
     kept = {r["doc_id"] for r in out.collect()}
     assert all(i in kept for i in range(100))
     assert not any(1000 + i in kept for i in range(100))
@@ -388,21 +386,21 @@ def test_weighted_sample_per_row_rates(spark):
     assert 850 <= mid <= 1150
     # deterministic under repartitioning
     again = {r["doc_id"] for r in
-             weighted_sample(df.repartition(9), F.col("w"),
-                             key_col="doc_id").collect()}
+             weighted_sample(df.repartition(9), F.col("w")).collect()}
     assert kept == again
     # clamping: weights beyond [0, 1000] behave as the bounds
     wild = spark.createDataFrame(
         [(1, 99999), (2, -50)], "doc_id long, w long"
     )
     got = {r["doc_id"] for r in
-           weighted_sample(wild, F.col("w"), key_col="doc_id").collect()}
+           weighted_sample(wild, F.col("w")).collect()}
     assert got == {1}
 
 
 def test_candidate_verify_equals_allpairs_restricted(spark):
     from assemblagedb_spark.operators.dedup import (
         containment_from_overlap,
+        jaccard_from_overlap,
         ngram_jaccard_pairs,
         ngram_overlap_pairs,
     )
@@ -421,8 +419,8 @@ def test_candidate_verify_equals_allpairs_restricted(spark):
         "id_a long, id_b long",
     )
     fast = {(r["id_a"], r["id_b"]): (r["inter"], r["n_a"], r["n_b"])
-            for r in ngram_jaccard_pairs(
-                docs, min_jaccard=0.0, candidates=cand).collect()}
+            for r in jaccard_from_overlap(
+                ngram_overlap_pairs(docs, cand), min_jaccard=0.0).collect()}
     slow_all = ngram_jaccard_pairs(docs, min_jaccard=0.0)
     slow = {(r["id_a"], r["id_b"]): (r["inter"], r["n_a"], r["n_b"])
             for r in slow_all.join(cand, ["id_a", "id_b"]).collect()}

@@ -4,6 +4,7 @@ paths return well-formed per-query rankings."""
 
 from __future__ import annotations
 
+from assemblagedb_spark.operators import similarity
 from assemblagedb_spark.operators.similarity import (
     ivf_topk,
     lsh_bucketed_topk,
@@ -40,7 +41,8 @@ def _ids(df):
     return [r["vec_id"] for r in df.collect()]
 
 
-def test_ivf_full_probe_equals_exact(spark):
+def test_ivf_full_probe_equals_exact(spark, monkeypatch):
+    monkeypatch.setattr(similarity, "TOPK", 5)
     emb = _emb(spark)
     queries = emb.filter("vec_id % 4 = 0")
     exact = {
@@ -48,15 +50,16 @@ def test_ivf_full_probe_equals_exact(spark):
     }
     ivf = {
         (r.query_id, r.rank): r.neighbor_id
-        for r in ivf_topk(emb, queries, k=5, nlist=4, nprobe=4).collect()
+        for r in ivf_topk(emb, queries, nlist=4, nprobe=4).collect()
     }
     assert ivf == exact
 
 
-def test_ivf_partial_probe_subset_of_corpus(spark):
+def test_ivf_partial_probe_subset_of_corpus(spark, monkeypatch):
+    monkeypatch.setattr(similarity, "TOPK", 5)
     emb = _emb(spark)
     queries = emb.filter("vec_id % 4 = 0")
-    rows = ivf_topk(emb, queries, k=5, nlist=4, nprobe=1).collect()
+    rows = ivf_topk(emb, queries, nlist=4, nprobe=1).collect()
     by_q: dict = {}
     for r in rows:
         by_q.setdefault(r.query_id, []).append((r.rank, r.neighbor_id))
@@ -66,10 +69,11 @@ def test_ivf_partial_probe_subset_of_corpus(spark):
         assert ranks == list(range(1, len(rs) + 1))  # dense ranks from 1
 
 
-def test_lsh_ranks_dense_and_self_excluded(spark):
+def test_lsh_ranks_dense_and_self_excluded(spark, monkeypatch):
+    monkeypatch.setattr(similarity, "TOPK", 5)
     emb = _emb(spark)
     queries = emb.filter("vec_id % 4 = 0")
-    rows = lsh_bucketed_topk(emb, queries, k=5, bits=8, bands=4).collect()
+    rows = lsh_bucketed_topk(emb, queries, bits=8, bands=4).collect()
     by_q: dict = {}
     for r in rows:
         assert r.neighbor_id != r.query_id
@@ -78,7 +82,7 @@ def test_lsh_ranks_dense_and_self_excluded(spark):
         assert sorted(ranks) == list(range(1, len(ranks) + 1))
 
 
-def test_ivf_topk_with_trained_centroids(spark):
+def test_ivf_topk_with_trained_centroids(spark, monkeypatch):
     from assemblagedb_spark.operators.vectors import kmeans_train
 
     # three well-separated direction clusters; within-cluster neighbors are
@@ -92,12 +96,13 @@ def test_ivf_topk_with_trained_centroids(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     state = kmeans_train(emb, k=3, iters=3)
     queries = emb.filter("vec_id % 8 = 0")
-    ivf = ivf_topk(emb, queries, k=3, nprobe=1, centroids=state)
+    monkeypatch.setattr(similarity, "TOPK", 3)
+    ivf = ivf_topk(emb, queries, nprobe=1, centroids=state)
     got = {(r["query_id"], r["neighbor_id"], r["rank"]) for r in ivf.collect()}
     assert got == py_cosine_topk(_rows(emb), _ids(queries), k=3)
 
 
-def test_cosine_topk_arrow_query_cap_raises(spark):
+def test_cosine_topk_arrow_query_cap_raises(spark, monkeypatch):
     import pytest as _pytest
 
     from assemblagedb_spark.operators.similarity import cosine_topk_arrow
@@ -108,10 +113,11 @@ def test_cosine_topk_arrow_query_cap_raises(spark):
     )
     # the query matrix rides in every task closure — an over-cap query set
     # must fail fast with a clear error, not a late task-binary blowup
+    monkeypatch.setattr(similarity, "TOPK", 2)
     with _pytest.raises(ValueError, match="max_queries"):
-        cosine_topk_arrow(emb, emb, k=2, max_queries=3)
+        cosine_topk_arrow(emb, emb, max_queries=3)
     # at/below the cap still works
-    assert cosine_topk_arrow(emb, emb.limit(3), k=2, max_queries=3).count() == 6
+    assert cosine_topk_arrow(emb, emb.limit(3), max_queries=3).count() == 6
 
 
 def test_pq_adc_recovers_separated_clusters(spark):

@@ -17,6 +17,7 @@ from assemblagedb_spark.operators.sketches import (
     hll_registers,
     linear_counting,
 )
+from assemblagedb_spark.operators import textstats
 from assemblagedb_spark.operators.textstats import tfidf_top_terms
 from assemblagedb_spark.operators.vectors import centroid_assign, label_centroids
 from assemblagedb_spark.sources.layout import zorder_key_col, zorder_key_sql
@@ -212,7 +213,7 @@ def test_label_centroids_quantized_sums(spark):
         "label int, embedding array<float>",
     )
     got = {(r["label"], r["pos"]): (r["sum_q"], r["n_vecs"])
-           for r in label_centroids(df, scale=1000).collect()}
+           for r in label_centroids(df).collect()}
     assert got == {
         (1, 0): (4000, 2), (1, 1): (6000, 2),
         (2, 0): (10000, 1), (2, 1): (-1500, 1),
@@ -240,7 +241,7 @@ def test_centroid_assign_recovers_separated_labels(spark):
 # tf-idf ranking
 # ---------------------------------------------------------------------------
 
-def test_tfidf_rank_prefers_rare_frequent_terms(spark):
+def test_tfidf_rank_prefers_rare_frequent_terms(spark, monkeypatch):
     docs = spark.createDataFrame(
         [
             (1, "common zebra zebra zebra common"),
@@ -249,8 +250,8 @@ def test_tfidf_rank_prefers_rare_frequent_terms(spark):
         ],
         "doc_id long, text string",
     )
-    top = {r["doc_id"]: r["term"]
-           for r in tfidf_top_terms(docs, k=1).collect()}
+    monkeypatch.setattr(textstats, "TFIDF_TOP_K", 1)
+    top = {r["doc_id"]: r["term"] for r in tfidf_top_terms(docs).collect()}
     # doc 1: zebra (tf=3, df=1) beats common (tf=2, df=3)
     assert top[1] == "zebra"
     # doc 2: plain (df=2) beats common (df=3) at equal tf; "only"/"words"

@@ -22,7 +22,7 @@ def test_streaming_rollup_equals_batch_cascade(spark, tmp_path):
     for b in (b1, b2):
         _events(spark, b).coalesce(1).write.mode("append").parquet(src)
 
-    store = RollupStore(spark, bucket_ns=LEVELS, group_cols=["event_type"])
+    store = RollupStore(spark, bucket_ns=LEVELS)
     stream = spark.readStream.schema("ts long, event_type string, v long").parquet(src)
     q = (
         stream.writeStream.foreachBatch(rollup_sink(store, F.col("v")))
@@ -35,7 +35,7 @@ def test_streaming_rollup_equals_batch_cascade(spark, tmp_path):
     got = sorted(map(tuple, store.levels().collect()))
     want = sorted(map(tuple, rollup_cascade(
         _events(spark, b1 + b2), F.col("v"),
-        bucket_ns=LEVELS, group_cols=["event_type"],
+        bucket_ns=LEVELS,
     ).collect()))
     assert got == want
 

@@ -65,9 +65,9 @@ def candidate_count(spark, sf_dir: str, key: str, n: int, q: int) -> int:
             _nearest_cells,
         )
 
-        cents = _ivf_centroids(emb, h._IVF_NLIST, "vec_id", "embedding")
-        assign = _nearest_cells(emb, "c", 1, cents, "vec_id", "embedding")
-        probes = _nearest_cells(queries, "q", h._IVF_NPROBE, cents, "vec_id", "embedding")
+        cents = _ivf_centroids(emb, h._IVF_NLIST)
+        assign = _nearest_cells(emb, "c", 1, cents)
+        probes = _nearest_cells(queries, "q", h._IVF_NPROBE, cents)
         return (
             probes.join(assign, "cell")
             .filter(F.col("q_id") != F.col("c_id"))
@@ -122,7 +122,7 @@ def probe_sweep(spark, sf_dir: str, exact_by_q: dict, n: int, q: int):
         # rerank depth is bounded by at this probe width
         got: dict = {}
         df = ivf_topk(
-            emb, queries, k=10, nprobe=nprobe,
+            emb, queries, nprobe=nprobe,
             corpus_assign=assign, centroids=state,
         )
         for qid, nid in _pairs(df):
@@ -223,7 +223,7 @@ def nlist_sweep_mode(sf_dir: str, out_md: str) -> None:
                     h.SPARK_QUERIES["ann_ivfpq_rerank"](spark, sf_dir)
                 )
                 r_ceil = recall_of(ivf_topk(
-                    emb, queries, k=10, nprobe=nprobe,
+                    emb, queries, nprobe=nprobe,
                     corpus_assign=assign, centroids=state,
                 ))
                 rows.append((nlist, nprobe, cands, r_adc, r_rr, r_ceil))

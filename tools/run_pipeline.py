@@ -105,7 +105,7 @@ def main() -> int:
     # 5. domain mixture toward 50/30/20 en/fr/de over the GUESSED language
     docs = mixture_sample(
         docs, {"en": 0.5, "fr": 0.3, "de": 0.2},
-        domain_col="lang_guess", key_col="doc_id",
+        domain_col="lang_guess",
     )
     report["after_mixture"] = docs.count()
 
